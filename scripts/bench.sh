@@ -5,11 +5,4 @@
 #     scripts/bench.sh [extra JVM args...]
 cd "$(dirname "$0")/.."
 source scripts/_jvmflags.sh
-# Bounded streaming sink for BENCH runs (r15): emitted batches go to
-# the noop batch sink (all columns computed distributed, nothing
-# serialized to the driver) so the timing measures the streaming
-# operators, not the O(emitted-rows) driver buffer the correctness
-# harness needs. Verify does NOT set this — oracle rows ride the full
-# sink. Override with GRAFT_STREAM_SINK=driver to A/B the old sink.
-export GRAFT_STREAM_SINK="${GRAFT_STREAM_SINK:-noop}"
 exec java $ADD_OPENS $JVM_FLAGS "$@" -cp "$CP" graft.Bench

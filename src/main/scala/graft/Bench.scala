@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.OutputMode
+
+import graft.streaming.MicroBatchHarness
+import graft.streaming.MicroBatchHarness.Feed
 
 /** Driver-run benchmark: every registered query, timed individually at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -11,45 +15,37 @@ import org.apache.spark.sql.SparkSession
   * absorbs session/codegen startup so the first query isn't charged
   * ~5 s of JVM warmup. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The bench's per-query step, shared with Probe's `time:` mode: runs
+    * `fn` into the `noop` sink and returns its wall seconds, or the
+    * error it threw. Afterwards it drops the query's residual cached
+    * state so no query taxes the next: clearCache covers SQL-cached
+    * relations; localCheckpoint blocks (Checkpoints.cut, the
+    * prefix/range-sort kernels) are plain persisted RDDs the
+    * ContextCleaner only reaps at GC time — at the 10x tree they are
+    * 10x bigger and were observed lingering across dozens of queries
+    * (storage pressure + old-gen growth taxing mid-suite queries with
+    * multi-second GC pauses), so they are unpersisted explicitly. */
+  def runIsolated(spark: SparkSession, sfDir: String, fn: Query)
+      : Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val r = try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e) }
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    r
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // BENCH defaults the streaming sink to noop (the honest-timing
-    // sink scripts/bench.sh has exported since r15) even when the env
-    // var is absent — the r16 round artifact was recorded by a caller
-    // that did NOT source bench.sh, ran on the driver sink, and so
-    // could not pool with any of the six same-sha noop samples in
-    // BENCH_LOG (a 1-sample certification). The sink mode is a
-    // property of the BENCHMARK, not of the caller's environment; an
-    // explicit GRAFT_STREAM_SINK=driver still A/Bs the old sink.
-    // Verify is untouched — oracle rows always ride the driver sink.
-    sys.env.get("GRAFT_STREAM_SINK") match {
-      case Some(v) => SparkEntry.streamNoopSink = v == "noop"
-      case None    => SparkEntry.streamNoopSink = true
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming checkpoint logs (offset/commit WAL, state-store
-      // metadata) ride the FileContext API; its default local impl
-      // shadows every write with a .crc file — measured ~30 ms per
-      // walCommit/commitOffsets ON TMPFS. RawLocalFs drops the
-      // checksum shadow for FileContext users ONLY (parquet and all
-      // data IO use the FileSystem API, untouched); harness
-      // checkpoints are deleted-after-run scratch, and production
-      // points checkpoints at durable storage with its own integrity.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      // streaming state store: default HDFS-backed map;
-      // GRAFT_STATE_STORE=rocksdb switches the whole streaming family
-      // to the disk-bounded RocksDB provider (see StateStores)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.StateStores.providerClass)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the streaming rows run on the noop sink: the benchmark times
+    // the streaming operators, while Verify's oracle rows need the
+    // driver sink
+    val spark = Session.local(Session.cpus, MicroBatchHarness.SinkConf -> "noop")
     // warmup: touch the parquet read path + exercise codegen once
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -64,27 +60,13 @@ object Bench {
     // (absent in the driver environment — full set runs there)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
 
-    def timeOne(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+    def timeOne(name: String, fn: Query): Option[Double] =
+      runIsolated(spark, sfDir, fn) match {
+        case Right(dt) => Some(dt)
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // isolation: no query's residual cached state may tax the next.
-      // clearCache covers SQL-cached relations; localCheckpoint blocks
-      // (Checkpoints.cut, the prefix/range-sort kernels) are plain
-      // persisted RDDs the ContextCleaner only reaps at GC time — at
-      // the 10x tree they are 10x bigger and were observed lingering
-      // across dozens of queries (storage pressure + old-gen growth
-      // taxing mid-suite queries with multi-second GC pauses), so they
-      // are unpersisted explicitly
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
-    }
 
     // Historical per-query medians from BENCH_LOG.jsonl: the committed
     // run log doubles as the noise reference. Five same-host full runs
@@ -112,28 +94,18 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
 
-    // Code-version key: the git TREE hash of src/main/scala (not HEAD
-    // — committing bench logs or docs must not orphan same-code
-    // samples). Same-key runs only may join the certified median: a
-    // log sample taken on older code must not mask a genuine
-    // per-query regression or speedup in the current tree.
-    val gitSha: String = try {
-      val base = scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD:src/main/scala")).!!.trim
-      // a dirty source tree runs code the committed hash doesn't
-      // describe — such samples must never join a clean-tree median
-      val dirty = scala.sys.process.Process(
-        Seq("git", "status", "--porcelain", "src/main/scala")).!!.trim.nonEmpty
-      if (dirty) s"$base-dirty" else base
-    } catch { case _: Throwable => "unknown" }
+    // Code-version key (Session.sha): same-key runs only may join the
+    // certified median — a log sample taken on older code must not
+    // mask a genuine per-query regression or speedup in the current
+    // tree.
+    val gitSha = Session.sha
 
     // Effective streaming-sink / state-store modes for this run —
     // recorded in every BENCH_LOG line (r15 advice: pre-r16 rows carry
     // no field and are admitted as-is; from r16 on, a row RECORDED
     // under a different sink or store mode can never pool with this
     // run as like-for-like).
-    val curStreamSink =
-      if (SparkEntry.streamNoopSink) "noop" else "driver"
+    val curStreamSink = "noop"
     val curStateStore = graft.streaming.StateStores.tag
 
     // (sha, modeOk, query->seconds) per log run; pre-sha log lines
@@ -185,17 +157,19 @@ object Bench {
 
 
     import scala.jdk.CollectionConverters._
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // per query: its seconds, or None when any sample threw — a failed
+    // query is reported by name and never timed as if it had run
+    val measured: Seq[(String, Option[Double])] = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
       .map { case (name, fn) =>
       val first = timeOne(name, fn)
       val hist = histMedian.get(name)
-      val noisy = hist.exists(h => first > math.max(1.2 * h, h + 0.3))
+      val noisy = first.exists(f => hist.exists(h => f > math.max(1.2 * h, h + 0.3)))
       val dt = if (!noisy) first else {
-        val reps = Seq(first, timeOne(name, fn), timeOne(name, fn)).sorted
+        val reps = Seq(first, timeOne(name, fn), timeOne(name, fn))
         System.err.println(f"[bench] $name rerun (hist ${hist.get}%.2f): " +
-          reps.map(r => f"$r%.2f").mkString(" "))
-        reps(1)
+          reps.map(_.fold("failed")(r => f"$r%.2f")).mkString(" "))
+        if (reps.contains(None)) None else Some(reps.flatten.sorted.apply(1))
       }
       // code-cache telemetry (stderr): this bench has saturated the JIT
       // code cache twice (240 MB at 34 queries, 1 g at 51 — late
@@ -212,10 +186,14 @@ object Bench {
         .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
       val heapMb = java.lang.management.ManagementFactory.getMemoryMXBean
         .getHeapMemoryUsage.getUsed / (1 << 20)
+      val sec = dt.fold("FAILED")(d => f"$d%7.2f s")
       System.err.println(
-        f"[bench] $name%-28s $dt%7.2f s  gc=${gcMs}ms heap=${heapMb}MB  $cc")
+        f"[bench] $name%-28s $sec  gc=${gcMs}ms heap=${heapMb}MB  $cc")
       name -> dt
     }
+    val results = measured.collect { case (n, Some(dt)) => n -> dt }
+    val failed = measured.collect { case (n, None) => n }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def jsonLine(rs: Seq[(String, Double)]): String = {
       val qs = rs.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
@@ -260,7 +238,9 @@ object Bench {
     val certified =
       if (only.nonEmpty) results
       else {
-        val names = results.map(_._1).toSet
+        // the selected suite, failed queries included: a history run
+        // that lost a query never pools with a run that has it
+        val names = measured.map(_._1).toSet
         // same-SHA, same-suite runs only — ALL of them, not a recency
         // window: a log sample from an older code version must never
         // join the median (it would under-report a genuine regression
@@ -322,39 +302,18 @@ object Bench {
         cert
       }
     // Driver contract: the driver certifies a 2,000-char stdout TAIL
-    // (measured: BENCH_r08.json "tail" is exactly 2000 chars and
-    // "parsed" was null because the ~4 KB full-name line's head was
-    // amputated). The ONLY stdout line is therefore a compact form
-    // that fits whole inside that tail: query keys shortened to their
-    // unique qNN prefix, seconds at 2 decimals with trailing zeros
-    // trimmed. Full names + nanosecond precision live in
+    // and json-parses its last line. With 235 queries no per-query
+    // map fits, so the ONLY stdout line carries the totals and a
+    // pointer; full names + nanosecond precision live in
     // BENCH_FULL.json / BENCH_LOG.jsonl (committed, judge-readable).
-    def compactNum(v: Double, dp: Int): String = {
-      val s = if (dp == 1) f"$v%.1f" else f"$v%.2f"
+    def compactNum(v: Double): String = {
+      val s = f"$v%.2f"
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
     }
-    def compactLine(rs: Seq[(String, Double)], rawTotal: Double, dp: Int): String = {
-      val qs = rs.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + compactNum(v, dp)
-      }.mkString("{", ",", "}")
-      val total = if (rs.nonEmpty) rs.map(_._2).sum else 0.0
-      s"""{"metric":"total","value":${compactNum(total, 2)},"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir","sha":"$gitSha","raw_total":${compactNum(rawTotal, 2)},""" +
-        s""""full":"BENCH_FULL.json"}"""
-    }
-    val rawTotal = results.map(_._2).sum
-    // degrade in steps so the line ALWAYS fits the capture window:
-    // 2dp → 1dp → no per-query map at all (totals + pointer only)
-    val compact2 = compactLine(certified, rawTotal, 2)
-    val compact1 = compactLine(certified, rawTotal, 1)
-    val minimal =
-      s"""{"metric":"total","value":${compactNum(certified.map(_._2).sum, 2)},""" +
-        s""""unit":"sec","sf":"$sfDir","sha":"$gitSha",""" +
-        s""""raw_total":${compactNum(rawTotal, 2)},"full":"BENCH_FULL.json"}"""
     val stdoutLine =
-      if (compact2.length <= 1980) compact2
-      else if (compact1.length <= 1980) compact1
-      else minimal
+      s"""{"metric":"total","value":${compactNum(certified.map(_._2).sum)},""" +
+        s""""unit":"sec","sf":"$sfDir","sha":"$gitSha",""" +
+        s""""raw_total":${compactNum(results.map(_._2).sum)},"full":"BENCH_FULL.json"}"""
     // The driver's stdout capture preserves only a ~2,000-char tail —
     // with 100+ queries that amputates half the per-query timings from
     // the round artifact. Persist the FULL line in-repo: latest run
@@ -364,8 +323,7 @@ object Bench {
     // Streaming-vs-harness split: ~10 of the 12 slowest queries are
     // micro-batch HARNESS machinery (state-store init, per-trigger
     // planning, sink commit — fixed per run, not per row; the per-row
-    // slope a production stream pays is ~245 µs, Probe
-    // streaming-scalelaw). Measure the fixed cost HERE, in this JVM,
+    // slope a production stream pays is ~245 µs). Measure the fixed cost HERE, in this JVM,
     // by timing the same harness on a 3-batch MINIMAL STATEFUL stream
     // — a 1-key update-mode count, so the probe pays what the real
     // streaming rows pay (state-store provider init + per-trigger
@@ -378,12 +336,11 @@ object Bench {
       import org.apache.spark.sql.functions.{col => fcol, count => fcount, lit => flit}
       def once(): Double = {
         val t0 = System.nanoTime()
-        SparkEntry.runMicroBatched(spark, Seq("id"),
-          Seq(Seq(Tuple1(1L)), Seq(Tuple1(2L)), Seq(Tuple1(3L))),
-          "graft-bench-fixed", Seq("k", "n"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
-          stream.groupBy((fcol("id") % 1L).as("k"))
-            .agg(fcount(flit(1)).as("n"))
+        MicroBatchHarness.run(spark,
+          Seq(Feed(Seq("id"), Seq(Seq(Tuple1(1L)), Seq(Tuple1(2L)), Seq(Tuple1(3L))))),
+          "graft-bench-fixed", Seq("k", "n"), OutputMode.Update()) {
+          case Seq(stream) =>
+            stream.groupBy((fcol("id") % 1L).as("k")).agg(fcount(flit(1)).as("n"))
         }.count()
         (System.nanoTime() - t0) / 1e9
       }
@@ -431,7 +388,8 @@ object Bench {
       // probe must not replace the certified full-suite line
       if (only.isEmpty)
         java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-          (jsonLine(certified).stripSuffix("}") + streamingSplit +
+          (jsonLine(certified).stripSuffix("}") + s""","failed":$failedJson""" +
+            streamingSplit +
             regressionGate + certProvenance + "}\n")
             .getBytes("UTF-8"))
       // provenance fields (r15 advice): the EFFECTIVE streaming sink
@@ -441,6 +399,7 @@ object Bench {
         (s"""{"ts":"${java.time.Instant.now()}","sha":"$gitSha",""" +
           s""""stream_sink":"$curStreamSink",""" +
           s""""state_store":"$curStateStore",""" +
+          s""""failed":$failedJson,""" +
           s""""bench":$rawLine}""" + "\n")
           .getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,

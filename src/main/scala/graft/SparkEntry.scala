@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import scala.util.chaining._
 
 import graft.engine.{Detector, DetectorConfig, Histogram, Profiler}
 import graft.ops.{Bucketing, Corpus, Curation, Dedup, Drift, Expectations, Frequent, Graph, IvfIndex, Layout, Multimodal, Prefix, Quantize, Sampling, Similarity, Sink, Sketch, Skew, Snapshot, Svg, Temporal, TextAnalysis}
-import graft.streaming.StreamingProfile
+import graft.streaming.{MicroBatchHarness, StreamingProfile}
+import graft.streaming.MicroBatchHarness.{Feed, rmTree, scratchDir}
 
 /** Driver contract: every deterministic operator of the engine is
   * registered here as a (SparkSession, sfDir) => DataFrame query with a
@@ -26,7 +28,7 @@ object SparkEntry {
   /** Table loader. The events table's `ts` physical type has varied
     * across testdata generations: TIMESTAMP(NANOS) (Spark 4 reads it
     * as long under spark.sql.legacy.parquet.nanosAsLong, set in
-    * Verify/Bench — floor(ns/1000) back to micros), and un-adjusted
+    * Session.local — floor(ns/1000) back to micros), and un-adjusted
     * TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ under Spark 4's default
     * inferTimestampNTZ). Normalize both to TimestampType: the session
     * timezone is pinned to UTC, so the NTZ wall-clock cast preserves
@@ -275,243 +277,6 @@ object SparkEntry {
   private def withDups(df: DataFrame, idCol: String, below: Long, shift: Long): DataFrame =
     df.unionByName(df.filter(col(idCol) < below)
       .withColumn(idCol, col(idCol) + shift))
-
-  /** Shared micro-batch harness for the append-mode streaming oracle
-    * rows (q123/q133/q148–q154): feed `batches` one micro-batch at a
-    * time through a MemoryStream (a driver-side TEST source by design
-    * — the operator under test is the same distributed plan a Kafka
-    * source would run), run `build` on the streaming frame (columns
-    * named `cols`), collect `outCols` of every emitted micro-batch
-    * into a driver buffer via foreachBatch, and return the union.
-    * The buffer replaced a temp-parquet sink + read-back (r10 verdict
-    * #5): each parquet write is a full job with file-commit protocol,
-    * so 15 streaming rows paid ~45 write/read/delete jobs of pure
-    * harness cost per run. Collecting is safe HERE by construction —
-    * the feeds are driver-sized fixture batches; a production stream
-    * lands in a real sink (ops/Sink.scala), not this harness.
-    * State-store partition count is pinned to 1 for the query's
-    * lifetime — fixed at stream start from the global shuffle
-    * setting; N state-store instances each writing delta + snapshot
-    * files per micro-batch is pure fixed overhead at harness feed
-    * rates (4 was measured at 1.07 s/run fixed cost; state updates
-    * are per-key, so the partition count never changes emitted
-    * values), and production picks this by expected horizon
-    * cardinality — with the session's setting restored immediately
-    * after start. */
-  /** Checkpoint root for the harness's streaming queries: tmpfs
-    * (/dev/shm) when present, else the JVM temp dir. The offset log,
-    * commit log, and state-store delta files are written-and-synced
-    * PER TRIGGER — on a disk-backed /tmp that fsync chain is the
-    * dominant share of the ~1.1 s/query fixed harness cost; on tmpfs
-    * it is memory traffic. Scratch only: deleted right after the
-    * query stops, and a production stream points its checkpoint at
-    * durable storage (this harness is the TEST sink). */
-  private def tmpCheckpointDir(prefix: String): java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    val root = if (shm.isDirectory && shm.canWrite) shm.toPath
-               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(root, prefix).toFile
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(rmTree)
-    f.delete(): Unit
-  }
-
-  /** r13 streaming fixed-cost cut: skip Spark's watermark-advance
-    * NO-DATA micro-batches (a full offset-WAL + commit-WAL + planning
-    * cycle after EVERY data batch of a watermarked query) and feed one
-    * trailing EMPTY data batch instead — same per-batch watermark
-    * values, same emitted-row union (all 15 streaming oracle rows
-    * verified green both ways), ~half the trigger count.
-    * GRAFT_STREAM_NODATA_SKIP=0 restores the stock behavior (A/B
-    * lever; also the escape hatch if a future operator's emissions
-    * ever depend on the no-data trigger itself). */
-  private[graft] var skipNoDataBatches: Boolean =
-    sys.env.get("GRAFT_STREAM_NODATA_SKIP").forall(_ != "0")
-
-  /** Bench-only bounded sink for the micro-batch harnesses
-    * (GRAFT_STREAM_SINK=noop, set by scripts/bench.sh): each emitted
-    * batch lands in the `noop` batch sink — every projected column is
-    * fully computed on the executors (same reason Bench's outer
-    * timing uses noop over count: nothing prunes), but NO row is
-    * serialized to the driver, so the benchmark measures the
-    * streaming OPERATORS, not the O(emitted-rows) driver ArrayBuffer
-    * the correctness harness needs for the oracle frame (r14 receipt:
-    * the per-row-feed streaming rows' sf1 ratios were sink-dominated
-    * at ×4.4–×5.4). Verify never sets it, so every oracle row still
-    * rides the full driver sink. In noop mode the harness returns a
-    * correctly-typed EMPTY frame — bench discards it. */
-  private[graft] var streamNoopSink: Boolean =
-    sys.env.get("GRAFT_STREAM_SINK").contains("noop")
-
-  private[graft] def runMicroBatched[T <: Product : org.apache.spark.sql.Encoder](
-      s: SparkSession, cols: Seq[String], batches: Seq[Seq[T]],
-      tmpPrefix: String, outCols: Seq[String],
-      mode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Append())(
-      build: DataFrame => DataFrame): DataFrame = {
-    // Source parallelism: the stateless scan-side work (cleaning
-    // regexes, lang-id, quality ladders) runs on the SOURCE partitions
-    // — before any exchange — so a 1-partition MemoryStream serializes
-    // it onto one core no matter the shuffle setting (measured: q154's
-    // 4.6k-row shard spent 4.4 s in one addBatch task). 8 input
-    // partitions is the production shape (many source partitions, few
-    // state partitions); every consumer is arrival-order-insensitive
-    // by contract (sorted within key, or commutative state updates) —
-    // the oracle gate holds under any input split. (An r12 experiment
-    // dropped tiny feeds to 2 source partitions to save ~50 ms of task
-    // launches per trigger; a same-host A/B showed q123 +1.9 s — the
-    // per-ROW scan-side work of small feeds still wants the cores, so
-    // 8 stays unconditionally.)
-    val srcParts = math.min(8, s.sparkContext.defaultParallelism)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[T](s, srcParts)
-    val stream = mem.toDF().toDF(cols: _*)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    val ckpt = tmpCheckpointDir(tmpPrefix)
-    // EVERYTHING from here rides inside try/finally { rmTree(ckpt) }:
-    // a build-time analysis error or a failed start() must not leak
-    // the tmpfs checkpoint dir (/dev/shm pages the benchmarks would
-    // then measure)
-    try {
-      // plan building happens BEFORE the conf pin: `build` only
-      // constructs the DataFrame (state-store partition count binds at
-      // query START), and a build-time analysis error must not escape
-      // with the session conf still pinned to 1
-      val built = build(stream)
-      // Watermarked queries run a NO-DATA micro-batch after every data
-      // batch (Spark's watermark-advance trigger): a second offset-WAL
-      // write, commit-WAL write, and batch planning per feed — pure
-      // fixed cost at harness feed rates. Emissions depend only on the
-      // per-batch watermark VALUES, and those are identical with the
-      // no-data batches skipped (the watermark updates at data-batch
-      // end either way; late-row filtering and state eviction read the
-      // same value in the following batch). So: disable no-data
-      // batches for watermarked plans and feed ONE trailing empty
-      // batch — a real data batch with zero rows — whose watermark
-      // equals what the final no-data batch would have seen, emitting
-      // any windows the last feed finalized. Union of emitted rows is
-      // unchanged (oracle rows stay green); batches drop ~2N -> N+1.
-      val hasWatermark = skipNoDataBatches && {
-        built.queryExecution.logical.collectFirst {
-          case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => e
-        }.isDefined
-      }
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNoData = s.conf.get(noDataKey)
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      if (hasWatermark) s.conf.set(noDataKey, "false")
-      val q = try {
-        built.writeStream
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            if (streamNoopSink)
-              bdf.select(outCols.map(col): _*)
-                .write.format("noop").mode("overwrite").save()
-            else {
-              val rows = bdf.select(outCols.map(col): _*).collect()
-              buf.synchronized { buf ++= rows; () }
-            }
-          }
-          .outputMode(mode).start()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set(noDataKey, prevNoData)
-      }
-      try {
-        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        if (hasWatermark) { mem.addData(Seq.empty[T]); q.processAllAvailable() }
-      } finally q.stop()
-      // schema pinned from the built plan so the zero-emission case
-      // returns a correctly-typed empty frame
-      val outSchema = org.apache.spark.sql.types.StructType(
-        outCols.map(c => built.schema(c)))
-      s.createDataFrame(
-        buf.synchronized(new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(buf).asJava)),
-        outSchema)
-    } finally rmTree(ckpt)
-  }
-
-  /** Two-source sibling of [[runMicroBatched]] for STREAM–STREAM
-    * operators (watermarked joins): both MemoryStreams receive their
-    * i-th micro-batch before each processAllAvailable, so rows that
-    * must match across sides-and-batches exercise the join state (a
-    * row from batch 0 held in the state store until its partner lands
-    * in batch 2). Same conf pin / driver-buffer sink / empty-schema
-    * handling as [[runMicroBatched]]. */
-  private[graft] def runMicroBatched2[A <: Product : org.apache.spark.sql.Encoder,
-                               B <: Product : org.apache.spark.sql.Encoder](
-      s: SparkSession, colsA: Seq[String], batchesA: Seq[Seq[A]],
-      colsB: Seq[String], batchesB: Seq[Seq[B]],
-      tmpPrefix: String, outCols: Seq[String])(
-      build: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // same source-parallelism rationale as runMicroBatched
-    val srcParts = math.min(8, s.sparkContext.defaultParallelism)
-    val memA = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[A](s, srcParts)
-    val memB = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[B](s, srcParts)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    val ckpt = tmpCheckpointDir(tmpPrefix)
-    // same leak guard as runMicroBatched: rmTree covers failed
-    // build/start, not just the feed loop
-    try {
-      val built = build(memA.toDF().toDF(colsA: _*), memB.toDF().toDF(colsB: _*))
-      // same no-data-batch rationale as runMicroBatched (both join
-      // sides are watermarked; the trailing empty batch feeds BOTH
-      // sources so the final watermark computation sees fresh offsets
-      // on each)
-      val hasWatermark = skipNoDataBatches && {
-        built.queryExecution.logical.collectFirst {
-          case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => e
-        }.isDefined
-      }
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNoData = s.conf.get(noDataKey)
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      if (hasWatermark) s.conf.set(noDataKey, "false")
-      val q = try {
-        built.writeStream
-          .option("checkpointLocation", ckpt.getAbsolutePath)
-          .foreachBatch { (bdf: DataFrame, _: Long) =>
-            if (streamNoopSink)
-              bdf.select(outCols.map(col): _*)
-                .write.format("noop").mode("overwrite").save()
-            else {
-              val rows = bdf.select(outCols.map(col): _*).collect()
-              buf.synchronized { buf ++= rows; () }
-            }
-          }
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set(noDataKey, prevNoData)
-      }
-      try {
-        batchesA.zipAll(batchesB, Seq.empty[A], Seq.empty[B]).foreach {
-          case (ba, bb) =>
-            if (ba.nonEmpty) { memA.addData(ba); () }
-            if (bb.nonEmpty) { memB.addData(bb); () }
-            q.processAllAvailable()
-        }
-        if (hasWatermark) {
-          memA.addData(Seq.empty[A]); memB.addData(Seq.empty[B])
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      val outSchema = org.apache.spark.sql.types.StructType(
-        outCols.map(c => built.schema(c)))
-      s.createDataFrame(
-        buf.synchronized(new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(buf).asJava)),
-        outSchema)
-    } finally rmTree(ckpt)
-  }
 
   /** Shared shard prep for the streaming dedup-family harnesses
     * (q148/q152/q154): bucket docs into three time-ordered shards by
@@ -914,7 +679,7 @@ object SparkEntry {
       // Deleted after the harness returns — the result is driver-
       // buffered by then, and leaked tmpfs pages would shrink the
       // memory the benchmarks measure.
-      val priorRoot = tmpCheckpointDir("graft-prior-sketch")
+      val priorRoot = scratchDir("graft-prior-sketch")
       val priorDir = priorRoot.toString + "/sketches"
       try {
       Dedup.sketchTable(docs.filter(col("doc_id") < 400), "doc_id", "text")
@@ -936,8 +701,8 @@ object SparkEntry {
       val shards: Seq[Seq[(Long, String, Int, java.sql.Timestamp)]] =
         (0 to 2).map(b => shardRows.toSeq.collect { case (id, tx, `b`) =>
           (id, tx, b, java.sql.Timestamp.valueOf(s"2024-01-01 00:0$b:00")) })
-      runMicroBatched(s, Seq("doc_id", "text", "batch", "ts"), shards,
-        "graft-stream-admit", Seq("doc_id", "batch")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("doc_id", "text", "batch", "ts"), shards)),
+        "graft-stream-admit", Seq("doc_id", "batch")) { case Seq(stream) =>
         StreamingProfile.streamingAdmit(stream, "ts", "text", prior)
       }.orderBy("doc_id")
       } finally rmTree(priorRoot) // covers the sketch write too
@@ -991,8 +756,8 @@ object SparkEntry {
             ((-1L, java.sql.Timestamp.valueOf("2024-02-05 00:00:00"), 0.0, 3))
           else rows
         }
-      runMicroBatched(s, Seq("event_id", "ts", "value", "batch"), batches,
-        "graft-stream-psi", Seq("window_start", "n", "psi")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("event_id", "ts", "value", "batch"), batches)),
+        "graft-stream-psi", Seq("window_start", "n", "psi")) { case Seq(stream) =>
         StreamingProfile.windowedPsi(stream, "ts", "value", cuts, probs,
           windowDur = "24 hours", watermark = "24 hours")
       }.select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
@@ -1253,8 +1018,8 @@ object SparkEntry {
       val dup = withDups(t(s, d, "documents"), "doc_id", 50, 10000)
         .filter(col("text").isNotNull)
       val shards = dedupShards(s, dup, Dedup.sketchWord(col("text"), 64))
-      runMicroBatched(s, Seq("doc_id", "text", "batch", "ts"), shards,
-        "graft-stream-neardup", Seq("doc_id", "batch")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("doc_id", "text", "batch", "ts"), shards)),
+        "graft-stream-neardup", Seq("doc_id", "batch")) { case Seq(stream) =>
         StreamingProfile.streamingNearDup(stream, "ts", "text")
       }.orderBy("doc_id")
     }),
@@ -1325,8 +1090,8 @@ object SparkEntry {
               "sentinel", 3))
           else rows
         }
-      runMicroBatched(s, Seq("event_id", "ts", "event_type", "batch"), batches,
-        "graft-stream-vc", Seq("window_start", "event_type", "cnt")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("event_id", "ts", "event_type", "batch"), batches)),
+        "graft-stream-vc", Seq("window_start", "event_type", "cnt")) { case Seq(stream) =>
         StreamingProfile.windowedValueCounts(stream, "ts", "event_type",
           window = "24 hours", watermark = "24 hours")
       }.select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
@@ -1360,9 +1125,9 @@ object SparkEntry {
               "sentinel", Option(0.0), 3))
           else rows
         }
-      runMicroBatched(s, Seq("event_id", "ts", "event_type", "value", "batch"),
-        batches, "graft-stream-np",
-        Seq("window_start", "event_type", "n", "mean", "std", "min", "max")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("event_id", "ts", "event_type", "value", "batch"),
+        batches)), "graft-stream-np",
+        Seq("window_start", "event_type", "n", "mean", "std", "min", "max")) { case Seq(stream) =>
         StreamingProfile.windowedNumericProfile(stream, "ts", "event_type",
           "value", window = "24 hours", watermark = "24 hours")
       }.select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
@@ -1382,8 +1147,8 @@ object SparkEntry {
       val dup = withDups(t(s, d, "documents"), "doc_id", 50, 10000)
         .filter(col("text").isNotNull)
       val shards = dedupShards(s, dup, TextAnalysis.fingerprint(col("text")))
-      runMicroBatched(s, Seq("doc_id", "text", "batch", "ts"), shards,
-        "graft-stream-dedup", Seq("doc_id", "batch")) { stream =>
+      MicroBatchHarness.run(s, Seq(Feed(Seq("doc_id", "text", "batch", "ts"), shards)),
+        "graft-stream-dedup", Seq("doc_id", "batch")) { case Seq(stream) =>
         StreamingProfile.streamingDedup(stream, "ts", "text")
       }.orderBy("doc_id")
     }),
@@ -1402,9 +1167,9 @@ object SparkEntry {
         .as[(Long, Long, Int)].collect()
       val batches: Seq[Seq[(Long, Long, Int)]] =
         (0 to 2).map(b => ords.toSeq.filter(_._3 == b))
-      runMicroBatched(s, Seq("o_orderkey", "o_custkey", "batch"), batches,
+      MicroBatchHarness.run(s, Seq(Feed(Seq("o_orderkey", "o_custkey", "batch"), batches)),
         "graft-stream-enrich",
-        Seq("o_orderkey", "o_custkey", "c_mktsegment", "c_nationkey")) { stream =>
+        Seq("o_orderkey", "o_custkey", "c_mktsegment", "c_nationkey")) { case Seq(stream) =>
         StreamingProfile.enrich(stream, dim, "o_custkey")
       }.orderBy("o_orderkey")
     }),
@@ -1433,9 +1198,9 @@ object SparkEntry {
             .otherwise(col("text")))
       val shards = dedupShards(s, dup, TextAnalysis.fingerprint(
         TextAnalysis.redactPii(TextAnalysis.stripMarkup(col("text")))))
-      runMicroBatched(s, Seq("doc_id", "text", "batch", "ts"), shards,
+      MicroBatchHarness.run(s, Seq(Feed(Seq("doc_id", "text", "batch", "ts"), shards)),
         "graft-stream-curate",
-        Seq("id", "text_clean", "lang", "quality", "n_tokens")) { stream =>
+        Seq("id", "text_clean", "lang", "quality", "n_tokens")) { case Seq(stream) =>
         StreamingProfile.streamingCurate(stream, "ts", "doc_id", "text",
           Curation.CurationConfig(lang = Some("en"), minQuality = 0.5,
             minTokens = 5, sampleFraction = 0.5))
@@ -1463,45 +1228,15 @@ object SparkEntry {
         .as[(Long, Long, Int)].collect()
       val batches: Seq[Seq[(Long, Long)]] =
         (0 to 2).map(b => tagged.toSeq.collect { case (u, ts, `b`) => (u, ts) })
-      // same harness shape as runMicroBatched (8 source partitions,
-      // 1 state partition, tmpfs checkpoint, driver-buffer sink) —
-      // inline only because the read-off needs each emission's
-      // batch_id, which the shared harness does not expose
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)](s,
-          math.min(8, s.sparkContext.defaultParallelism))
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Long, Long)]
-      val ckpt = tmpCheckpointDir("graft-stream-sessionize")
-      // rmTree covers a failed start() too, not just the feed loop
-      // (same leak guard as runMicroBatched)
-      try {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "1")
-        val q = try {
-          StreamingProfile.sessionize(mem.toDS(), gapMs = 1800000L)
+      // mapGroupsWithState emits updated groups per batch; the
+      // read-off needs each emission's batch id
+      MicroBatchHarness.run(s, Seq(Feed(Seq("_1", "_2"), batches)),
+          "graft-stream-sessionize", Seq("userId", "nSessions", "nEvents"),
+          OutputMode.Update(), batchIdCol = Some("batch_id")) {
+        case Seq(stream) =>
+          StreamingProfile.sessionize(stream.as[(Long, Long)], gapMs = 1800000L)
             .toDF()
-            .writeStream
-            .option("checkpointLocation", ckpt.getAbsolutePath)
-            .foreachBatch { (bdf: DataFrame, bid: Long) =>
-              if (streamNoopSink)
-                bdf.write.format("noop").mode("overwrite").save()
-              else {
-                val rows = bdf.collect().map(r =>
-                  (r.getLong(0), r.getLong(1), r.getLong(2), bid))
-                buf.synchronized { buf ++= rows; () }
-              }
-            }
-            // mapGroupsWithState emits updated groups per batch
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try {
-          batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmTree(ckpt)
-      buf.synchronized(buf.toSeq)
-        .toDF("userId", "nSessions", "nEvents", "batch_id")
-        .groupBy(col("userId").as("user_id"))
+      }.groupBy(col("userId").as("user_id"))
         .agg(max_by(col("nSessions"), col("batch_id")).as("n_sessions"),
           max_by(col("nEvents"), col("batch_id")).as("n_events"))
         .orderBy("user_id")
@@ -1639,9 +1374,9 @@ object SparkEntry {
         .as[(Long, Double, Int)].collect()
       val batches = (0 to 2).map(b =>
         rows.toSeq.filter(_._1 % 3 == b).map { case (_, p, c) => (p, c) })
-      val perTrigger = runMicroBatched(s, Seq("p", "c"), batches,
+      val perTrigger = MicroBatchHarness.run(s, Seq(Feed(Seq("p", "c"), batches)),
           "graft-stream-calib", Seq("bin", "n", "sp", "sc"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
+          OutputMode.Update()) { case Seq(stream) =>
         // the SHARED bin/aggregate definitions — the streaming state
         // is byte-for-byte the batch report's per-bin sums
         val (n, sp, sc) = Drift.calibrationAggs(col("p"), col("c"))
@@ -2424,10 +2159,10 @@ object SparkEntry {
           (col("event_id") % 3).cast("int").as("__b"))
         .as[(Long, Long, Int)].collect()
       val batches = (0 to 2).map(b => rows.toSeq.filter(_._3 == b))
-      val perTrigger = runMicroBatched(s,
-          Seq("event_id", "user_id", "batch"), batches,
+      val perTrigger = MicroBatchHarness.run(s,
+          Seq(Feed(Seq("event_id", "user_id", "batch"), batches)),
           "graft-stream-hll", Seq("bucket", "mrank"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
+          OutputMode.Update()) { case Seq(stream) =>
         Sketch.hllRegisters(
           stream.select(md5(col("user_id").cast("string").cast("binary")).as("h")),
           Seq.empty)
@@ -2599,9 +2334,9 @@ object SparkEntry {
         val (lo, hi, n) = (fr.getDouble(0), fr.getDouble(1), fr.getLong(2))
         val rows = sub.as[(Double, Int)].collect()
         val batches = (0 to 2).map(b => rows.toSeq.filter(_._2 == b))
-        val perTrigger = runMicroBatched(s, Seq("value", "batch"), batches,
+        val perTrigger = MicroBatchHarness.run(s, Seq(Feed(Seq("value", "batch"), batches)),
             "graft-stream-histq", Seq("bin", "cnt"),
-            org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
+            OutputMode.Update()) { case Seq(stream) =>
           stream.groupBy(Sketch.histBin(col("value"), lit(lo), lit(hi), 64)
               .as("bin"))
             .agg(count(lit(1)).as("cnt"))
@@ -2636,9 +2371,9 @@ object SparkEntry {
           (col("doc_id") % 3).cast("int").as("__b"))
         .as[(Long, String, Int)].collect()
       val batches = (0 to 2).map(b => rows.toSeq.filter(_._3 == b))
-      val perTrigger = runMicroBatched(s, Seq("doc_id", "text", "batch"),
-          batches, "graft-stream-cm", Seq("r", "b", "cnt"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
+      val perTrigger = MicroBatchHarness.run(s, Seq(Feed(Seq("doc_id", "text", "batch"),
+          batches)), "graft-stream-cm", Seq("r", "b", "cnt"),
+          OutputMode.Update()) { case Seq(stream) =>
         Sketch.countMin(
           stream.select(explode(TextAnalysis.tokens(col("text"))).as("item")),
           "item", depth = 4, width = 64, salt = "cm9")
@@ -2750,9 +2485,9 @@ object SparkEntry {
           (col("event_id") % 3).cast("int").as("__b"))
         .as[(String, Int)].collect()
       val batches = (0 to 2).map(b => rows.toSeq.filter(_._2 == b))
-      val perTrigger = runMicroBatched(s, Seq("h", "batch"), batches,
+      val perTrigger = MicroBatchHarness.run(s, Seq(Feed(Seq("h", "batch"), batches)),
           "graft-stream-kmv", Seq("key", "h_out"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
+          OutputMode.Update()) { case Seq(stream) =>
         graft.streaming.StreamingProfile.streamingKmv(
           stream.select(lit("user_id").as("k"), col("h"))
             .as[(String, String)], k = 64)
@@ -2877,11 +2612,11 @@ object SparkEntry {
       val clicks = side("click"); val views = side("view")
       def batches(rows: Array[(Long, Long, java.sql.Timestamp, Int)]) =
         (0 to 2).map(b => rows.toSeq.filter(_._4 == b))
-      runMicroBatched2(s,
-          Seq("click_id", "user_id", "c_ts", "cb"), batches(clicks),
-          Seq("view_id", "v_user_id", "v_ts", "vb"), batches(views),
+      MicroBatchHarness.run(s,
+          Seq(Feed(Seq("click_id", "user_id", "c_ts", "cb"), batches(clicks)),
+            Feed(Seq("view_id", "v_user_id", "v_ts", "vb"), batches(views))),
           "graft-stream-join",
-          Seq("user_id", "click_id", "view_id")) { (a, b) =>
+          Seq("user_id", "click_id", "view_id")) { case Seq(a, b) =>
         a.withWatermark("c_ts", "365 days")
           .join(b.withWatermark("v_ts", "365 days"),
             expr("user_id = v_user_id AND " +
@@ -4040,7 +3775,7 @@ object SparkEntry {
       // index scratch rides the streaming-checkpoint discipline (r11):
       // tmpfs-backed temp dir, eager materialization of the (tiny)
       // result, rmTree in finally — no graft_ivf* residue survives
-      val scratch = tmpCheckpointDir("graft_ivf_")
+      val scratch = scratchDir("graft_ivf_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.build(corpus.filter(col("vec_id") < cut),
@@ -4070,7 +3805,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val corpus = e.filter(col("vec_id") >= 5)
       val cut = corpus.agg(expr("(max(vec_id) + 1) DIV 2")).collect()(0).getLong(0)
-      val scratch = tmpCheckpointDir("graft_ivfc_")
+      val scratch = scratchDir("graft_ivfc_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.build(corpus.filter(col("vec_id") < cut),
@@ -4108,7 +3843,7 @@ object SparkEntry {
     "q234_ivf_index_refined" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val corpus = e.filter(col("vec_id") >= 5)
-      val scratch = tmpCheckpointDir("graft_ivfr_")
+      val scratch = scratchDir("graft_ivfr_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.build(corpus, "vec_id", "embedding", path,
@@ -4131,7 +3866,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val corpus = e.filter(col("vec_id") >= 5)
       val cut = corpus.agg(expr("(max(vec_id) + 1) DIV 2")).collect()(0).getLong(0)
-      val scratch = tmpCheckpointDir("graft_ivfd_")
+      val scratch = scratchDir("graft_ivfd_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.build(corpus.filter(col("vec_id") < cut),
@@ -4158,7 +3893,7 @@ object SparkEntry {
       val corpus = e.filter(col("vec_id") >= 5)
       val cut = corpus.agg(expr("(max(vec_id) + 1) DIV 2")).collect()(0).getLong(0)
       val n = corpus.filter(col("embedding").isNotNull).count()
-      val scratch = tmpCheckpointDir("graft_ivfpq_")
+      val scratch = scratchDir("graft_ivfpq_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.buildPq(corpus.filter(col("vec_id") < cut), "vec_id", "embedding",
@@ -4189,7 +3924,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val corpus = e.filter(col("vec_id") >= 5)
       val cut = corpus.agg(expr("(max(vec_id) + 1) DIV 2")).collect()(0).getLong(0)
-      val scratch = tmpCheckpointDir("graft_ivfrb_")
+      val scratch = scratchDir("graft_ivfrb_")
       try {
         val path = s"$scratch/idx"
         IvfIndex.build(corpus.filter(col("vec_id") < cut),

@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming checkpoint logs (offset/commit WAL, state-store
-      // metadata) ride the FileContext API; its default local impl
-      // shadows every write with a .crc file — measured ~30 ms per
-      // walCommit/commitOffsets ON TMPFS. RawLocalFs drops the
-      // checksum shadow for FileContext users ONLY (parquet and all
-      // data IO use the FileSystem API, untouched); harness
-      // checkpoints are deleted-after-run scratch, and production
-      // points checkpoints at durable storage with its own integrity.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      // streaming state store: default HDFS-backed map;
-      // GRAFT_STATE_STORE=rocksdb switches the whole streaming family
-      // to the disk-bounded RocksDB provider (see StateStores)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.StateStores.providerClass)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q55,q56 restricts the dump (dev loop; the driver
     // leaves it unset and dumps everything).
@@ -37,13 +13,17 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failures = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -65,19 +45,18 @@ object Verify {
     // the artifact itself, not by prose around it. The driver ignores
     // extra files; our own receipts (PLANS.md, committed rocksdb
     // sweeps) quote this file.
-    val sha = try {
-      val base = scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD:src/main/scala")).!!.trim
-      val dirty = scala.sys.process.Process(
-        Seq("git", "status", "--porcelain", "src/main/scala")).!!.trim.nonEmpty
-      if (dirty) s"$base-dirty" else base
-    } catch { case _: Throwable => "unknown" }
     Files.writeString(Paths.get(s"$outDir/verify_env.json"),
-      s"""{"ts":"${java.time.Instant.now()}","sha":"$sha",""" +
+      s"""{"ts":"${java.time.Instant.now()}","sha":"${Session.sha}",""" +
         s""""sf":${q(sfDir)},""" +
         s""""state_store":"${graft.streaming.StateStores.tag}",""" +
         s""""stream_sink":"driver",""" +
         s""""simd":${graft.text.SimdSupport.available}}""")
+    // failure manifest: one {"q", "error"} per query that threw, `[]`
+    // on a clean run — a missing output dir is then explained by data,
+    // not only by stderr
+    Files.writeString(Paths.get(s"$outDir/failures.json"),
+      failures.map { case (n, e) => s"""{"q":${q(n)},"error":${q(e)}}""" }
+        .mkString("[", ",", "]"))
     spark.stop()
   }
 }

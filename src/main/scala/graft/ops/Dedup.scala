@@ -716,8 +716,7 @@ object Dedup {
     * shuffle, no empty-doc reattach join); the only exchanges are the
     * banded self-join's. Exposed separately so the candidate volume
     * (the term that must stay ~linear in corpus size for the op to
-    * scale) is measurable on its own; `Probe simhash-scalelaw` charts
-    * it at 32 vs 64 bits.
+    * scale) is measurable on its own.
     *
     * PRECONDITION (all dedup operators): one row per document id. The
     * former aggregation form silently merged the token streams of rows

@@ -1,23 +1,37 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
-/** Ad-hoc local timing probe (not part of the driver contract). */
+import graft.{Bench, Session, SparkEntry}
+import graft.streaming.{MicroBatchHarness, StateStores}
+import graft.streaming.MicroBatchHarness.Feed
+
+/** Ad-hoc local probe (not part of the driver contract).
+  *
+  * Usage: `graft.tools.Probe <sfDir> <mode>...`, modes:
+  *  - `time:<query>` — 3 samples of Bench's per-query step
+  *  - `plan:<query>` — the formatted physical plan
+  *  - `parts` — scan-partition count per table
+  *  - `stream-state:<nKeys>` — streaming dedup over nKeys keys under
+  *    the current GRAFT_STATE_STORE provider
+  *  - `make-sf1` / `make-sf10` — write a 10x / 100x tree from sfDir
+  *  - `entry` — the flagship detect→profile pipeline
+  *  - `<query>` — 2 timed `count()` runs
+  * Timings are appended to PROBE_LOG.jsonl. */
 object Probe {
 
-  // shared growing-corpus generators for the scale-law probes: each
-  // copy-set is fully token-disjoint (per-set alphabet+digit rotation
-  // over LOWERCASED text — a prefix alone leaves copies ~95%
+  // growing-corpus generators for the scale trees: each copy-set is
+  // fully token-disjoint (per-set alphabet+digit rotation over
+  // LOWERCASED text — a prefix alone leaves copies ~95%
   // Jaccard-similar), so the corpus GROWS with new content instead of
   // stacking near-dups; embeddings rotate indices (an isometry:
   // within-set pairwise cosines preserved, directions generic vs other
-  // sets). The id offset 1000000L keys the copy-set and must stay in
-  // sync everywhere — hence ONE definition.
+  // sets). The id offset 1000000L keys the copy-set.
   private val rotL = "abcdefghijklmnopqrstuvwxyz"
   private val rotD = "0123456789"
-  private def rotatedDocs(docs: org.apache.spark.sql.DataFrame, mult: Int)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  private def rotatedDocs(docs: DataFrame, mult: Int): DataFrame =
     (0 until mult).map { m =>
       val sh = rotL.drop(m % rotL.length) + rotL.take(m % rotL.length) +
         rotD.drop(m % rotD.length) + rotD.take(m % rotD.length)
@@ -25,87 +39,29 @@ object Probe {
         .withColumn("doc_id", col("doc_id") + lit(m * 1000000L))
         .withColumn("text", translate(lower(col("text")), rotL + rotD, sh))
     }.reduce(_ unionByName _)
-  }
-  private def rotatedEmb(emb: org.apache.spark.sql.DataFrame, dim: Int, mult: Int,
-                         withLang: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+
+  private def rotatedEmb(emb: DataFrame, dim: Int, mult: Int): DataFrame =
     (0 until mult).map { m =>
       val r = m % dim
       val rot =
         if (r == 0) col("embedding")
         else concat(slice(col("embedding"), r + 1, dim - r),
           slice(col("embedding"), 1, r))
-      val base = emb.withColumn("vec_id", col("vec_id") + lit(m * 1000000L))
+      emb.withColumn("vec_id", col("vec_id") + lit(m * 1000000L))
         .withColumn("embedding", rot)
-      if (withLang)
-        base.withColumn("lang", concat(lit("l"), (col("vec_id") % 5).cast("string")))
-      else base
     }.reduce(_ unionByName _)
-  }
-
-  /** Shared q154 fixture for the streaming probes: dup-injected docs
-    * with the markup/PII text injections q154 itself applies, bucketed
-    * into three time-ordered shards and pre-deduped per shard on the
-    * curate key (min doc_id wins) — ONE definition so q154-split and
-    * q154-triggers measure the SAME stream q154 runs. */
-  private def q154Shards(spark: SparkSession, sfDir: String)
-      : Seq[Seq[(Long, String, Int, java.sql.Timestamp)]] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dup = docs.unionByName(
-        docs.filter(col("doc_id") < 50)
-          .withColumn("doc_id", col("doc_id") + 10000))
-      .filter(col("text").isNotNull)
-      .withColumn("text",
-        when(col("doc_id") % 4 === 0,
-          concat(lit("<html><p class=\"x\">"), col("text"),
-            lit("</p> see https://example.com/a?b=1 now</html>")))
-          .otherwise(col("text")))
-      .withColumn("text",
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"),
-            lit(" contact alice.smith@example.org or +1 (415) 555-0100")))
-          .otherwise(col("text")))
-    val key = graft.ops.TextAnalysis.fingerprint(
-      graft.ops.TextAnalysis.redactPii(
-        graft.ops.TextAnalysis.stripMarkup(col("text"))))
-    val wmin = Window.partitionBy("__b", "__k")
-    val rows = dup
-      .withColumn("__b", when(col("doc_id") < 200, 0)
-        .when(col("doc_id") < 400, 1).otherwise(2))
-      .withColumn("__k", key)
-      .withColumn("__mn", min("doc_id").over(wmin))
-      .filter(col("doc_id") === col("__mn"))
-      .select(col("doc_id"), col("text"), col("__b"))
-      .as[(Long, String, Int)].collect()
-    (0 to 2).map(b => rows.toSeq.collect {
-      case (id, tx, `b`) =>
-        (id, tx, b, java.sql.Timestamp.valueOf(s"2024-01-01 00:0$b:00"))
-    })
-  }
 
   /** Append one probe measurement to PROBE_LOG.jsonl (cwd, committed
-    * alongside BENCH_LOG.jsonl). Every Probe TIMING result lands here
-    * — the r16 sf10 table was quoted in SURVEY prose with no logged
-    * row behind it; from r17 on a scale claim without a PROBE_LOG line
+    * alongside BENCH_LOG.jsonl): a scale claim without a logged row
     * does not exist. Best-effort: a read-only cwd must not fail the
-    * probe itself. Fields: ts, sha (src/main/scala TREE hash, the
-    * bench pooling key), probe (the subcommand), sf (the dir the
-    * sample ran against), q, run, sec + free-form extras. */
+    * probe itself. Fields: ts, sha (Session.sha, the bench pooling
+    * key), probe (the subcommand), sf (the dir the sample ran
+    * against), q, run, sec + free-form extras. */
   private def probeLog(probe: String, sf: String, q: String, run: Int,
                        sec: Double, extra: (String, String)*): Unit = try {
-    val sha = try {
-      val base = scala.sys.process.Process(
-        Seq("git", "rev-parse", "--short", "HEAD:src/main/scala")).!!.trim
-      val dirty = scala.sys.process.Process(
-        Seq("git", "status", "--porcelain", "src/main/scala")).!!.trim.nonEmpty
-      if (dirty) s"$base-dirty" else base
-    } catch { case _: Throwable => "unknown" }
     val extras = extra.map { case (k, v) => s""","$k":$v""" }.mkString
     java.nio.file.Files.write(java.nio.file.Paths.get("PROBE_LOG.jsonl"),
-      (f"""{"ts":"${java.time.Instant.now()}","sha":"$sha",""" +
+      (f"""{"ts":"${java.time.Instant.now()}","sha":"${Session.sha}",""" +
         f""""probe":"$probe","sf":"$sf","q":"$q","run":$run,""" +
         f""""sec":$sec%.3f$extras}""" + "\n").getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,
@@ -114,1752 +70,157 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.StateStores.providerClass)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.filter(_ == "micro").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types.DecimalType
-      val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val x = col("l_extendedprice")
-      def time(tag: String)(f: => Unit): Unit = (1 to 3).foreach { i =>
-        val t0 = System.nanoTime(); f
-        println(f"MICRO $tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      time("warm")(df.agg(sum(x)).collect())
-      time("dec-sums")(df.agg(sum(x.cast(DecimalType(38, 6))),
-        sum((x * x).cast(DecimalType(38, 6))),
-        sum((x * x * x).cast(DecimalType(38, 6))),
-        sum((x * x * x * x).cast(DecimalType(38, 6)))).collect())
-      val y = x / 100000.0
-      time("dec-sums-scaled6")(df.agg(sum(y.cast(DecimalType(38, 6))),
-        sum((y * y).cast(DecimalType(38, 6))),
-        sum((y * y * y).cast(DecimalType(38, 6))),
-        sum((y * y * y * y).cast(DecimalType(38, 6)))).collect())
-      time("dec-sums-scaled12")(df.agg(sum(y.cast(DecimalType(30, 12))),
-        sum((y * y).cast(DecimalType(30, 12))),
-        sum((y * y * y).cast(DecimalType(30, 12))),
-        sum((y * y * y * y).cast(DecimalType(30, 12)))).collect())
-      time("sort-quantiles")(
-        println(graft.engine.Quantiles.exact(df, "l_extendedprice", Seq(0.25, 0.5, 0.75), 600572L)))
-      time("builtin-percentile")(df.agg(percentile(x, array(lit(0.25), lit(0.5), lit(0.75)))).collect())
-    }
-    // Receipt probe for nCentroidsFor's sqrt rule past the soft cap:
-    // force maxC far below the corpus's want, then measure the ACTUAL
-    // per-query candidate load (sum of probed-cell sizes, nprobe=4)
-    // and the ivfTopK wall under the old hard clamp vs the sqrt rule.
-    names.filter(_ == "ivf-cand").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      import graft.ops.{Similarity, Quantize}
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val corpus = e.filter(col("vec_id") >= 5 && col("embedding").isNotNull)
-      val q = e.filter(col("vec_id") < 5)
-      val n = corpus.count()
-      val maxC = 16
-      val want = (n + 124) / 125
-      val kOld = math.min(maxC.toLong, math.max(16L, want)).toInt
-      val kNew = Quantize.nCentroidsFor(n, minC = 16, maxC = maxC)
-      for ((tag, k) <- Seq("clamped" -> kOld, "sqrt" -> kNew)) {
-        val cent = corpus.orderBy(col("vec_id")).limit(k)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
-        val assigned = Similarity.assignToCentroid(
-          corpus, "vec_id", "embedding", cent, "centroid_id", "cv")
-        val sizes = assigned.groupBy("centroid_id").count()
-        val pr = q.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-          .crossJoin(broadcast(cent))
-          .withColumn("sim", Similarity.cosine(col("qv"), col("cv")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(desc("sim"), col("centroid_id"))))
-          .filter(col("rn") <= 4).select("qid", "centroid_id")
-        val cand = pr.join(sizes, "centroid_id")
-          .groupBy("qid").agg(sum("count").as("cand"))
-          .agg(avg("cand"), max("cand")).collect()(0)
-        val t0 = System.nanoTime()
-        Similarity.ivfTopK(q, corpus, "vec_id", "embedding", "vec_id",
-            "embedding", k = 10, nCentroids = k, nprobe = 4)
-          .write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        println(f"IVF-CAND $tag: n=$n want=$want K=$k " +
-          f"avgCandPerQuery=${cand.getDouble(0)}%.0f maxCandPerQuery=${cand.getLong(1)} " +
-          f"ivfTopK=$wall%.2f s")
-      }
-    }
-    val qs = graft.SparkEntry.queries
-    names.filter(_ == "pipeline-stress").foreach { _ =>
-      import graft.engine.{SyntheticPipeline, DetectorConfig}
-      val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      val t0 = System.nanoTime()
-      val cfg = SyntheticPipeline.Config(
-        detector = DetectorConfig(strictFormats = true),
-        sampleCap = 0,          // profile the FULL table, no sample cap
-        nSamples = 1000000,     // generate 1M rows
-        seed = 42, textColumns = false)
-      // phase-level timing of profileTable's internals
-      locally {
-        val clean = df.na.drop("any").cache()
-        val p0 = System.nanoTime()
-        val det = graft.engine.Detector.detect(clean, cfg.detector)
-        val p1 = System.nanoTime()
-        graft.engine.Profiler.profileScalars(clean, det)
-        val p2 = System.nanoTime()
-        det.collect { case (n, (graft.engine.SemanticType.Categorical, _)) => n }
-          .foreach(n => graft.engine.Profiler.profileCategorical(clean, n))
-        val p3 = System.nanoTime()
-        println(f"PROBE phases: detect=${(p1 - p0) / 1e9}%.1fs scalars=${(p2 - p1) / 1e9}%.1fs categorical=${(p3 - p2) / 1e9}%.1fs")
-        clean.unpersist()
-      }
-      val profiles = SyntheticPipeline.profileTable(df, cfg)
-      val t1 = System.nanoTime()
-      val synth = SyntheticPipeline.generate(spark, profiles, cfg)
-      val n = synth.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      val validation = SyntheticPipeline.validate(
-        SyntheticPipeline.generate(spark, profiles, cfg), profiles, cfg)
-      val t3 = System.nanoTime()
-      println(f"PROBE pipeline-stress: profile=${(t1 - t0) / 1e9}%.1fs generate1M=${(t2 - t1) / 1e9}%.1fs validate=${(t3 - t2) / 1e9}%.1fs")
-      validation.toSeq.sortBy(_._1).foreach { case (c, m) =>
-        println(s"PROBE   $c: " + m.toSeq.sortBy(_._1).map { case (k, v) => f"$k=$v%.4f" }.mkString(" "))
-      }
-    }
-    names.filter(_ == "micro33").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      def time(tag: String)(f: => Unit): Unit = (1 to 2).foreach { i =>
-        val t0 = System.nanoTime(); f
-        println(f"MICRO33 $tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      val cols = Seq("event_id", "event_type", "props", "ts", "user_id", "value")
-      def s(c: String) = trim(col(c).cast("string"))
-      time("warm")(ev.agg(count(lit(1))).collect())
-      time("distincts")(ev.agg(
-        count_distinct(s(cols.head)),
-        cols.tail.flatMap(c => Seq(count_distinct(s(c)), count_distinct(lower(s(c))))) ++
-          Seq(count_distinct(lower(s(cols.head)))): _*).collect())
-      time("regex-digits")(ev.agg(
-        cols.map(c => avg(when(length(regexp_replace(s(c), "\\D", "")).between(7, 15), 1.0).otherwise(0.0))).head,
-        cols.map(c => avg(when(length(regexp_replace(s(c), "\\D", "")).between(7, 15), 1.0).otherwise(0.0))).tail: _*).collect())
-      time("dateparse")(ev.agg(
-        cols.map(c => avg(when(graft.engine.Detector.tryParseDate(s(c)).isNotNull, 1.0).otherwise(0.0))).head,
-        cols.map(c => avg(when(graft.engine.Detector.tryParseDate(s(c)).isNotNull, 1.0).otherwise(0.0))).tail: _*).collect())
-      time("trycast")(ev.agg(
-        cols.map(c => avg(when(s(c).try_cast(org.apache.spark.sql.types.DoubleType).isNotNull, 1.0).otherwise(0.0))).head,
-        cols.map(c => avg(when(s(c).try_cast(org.apache.spark.sql.types.DoubleType).isNotNull, 1.0).otherwise(0.0))).tail: _*).collect())
-      time("full-signals")(graft.engine.Detector.signals(ev))
-    }
-    // phase-level detection timing: phases:<table> (phase33 = phases:events)
-    names.collect { case "phase33" => "events"
-                    case n if n.startsWith("phases:") => n.stripPrefix("phases:") }
-      .foreach { table =>
-        import org.apache.spark.sql.functions._
-        val raw = spark.read.parquet(s"$sfDir/$table.parquet")
-        val df = // events carries TIMESTAMP(NANOS) read as long — same ns→us fix as SparkEntry.t
-          if (table == "events" && raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-            raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          else raw
-        def time(tag: String)(f: => Unit): Unit = (1 to 2).foreach { i =>
-          val t0 = System.nanoTime(); f
-          println(f"PHASES($table) $tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val spark = Session.local(Session.cpus)
+    val qs = SparkEntry.queries
+    args.drop(1).foreach {
+      case n if n.startsWith("time:") =>
+        val q = n.stripPrefix("time:")
+        time(spark, sfDir, q, qs(q))
+      case n if n.startsWith("plan:") =>
+        val q = n.stripPrefix("plan:")
+        println(s"===== PLAN $q =====")
+        println(qs(q)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      case "parts" =>
+        Seq("documents", "embeddings", "events", "orders", "lineitem",
+          "customer").foreach { t =>
+          val df = spark.read.parquet(s"$sfDir/$t.parquet")
+          println(s"PARTS $t partitions=${df.rdd.getNumPartitions}")
         }
-        time("warm")(df.agg(count(lit(1))).collect())
-        time("signals-only")(graft.engine.Detector.signalsOnlyForProbe(df))
-        time("distincts-only")(graft.engine.Detector.distinctsOnlyForProbe(df))
-      }
-    names.filter(_ == "micro24").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def time(tag: String)(f: => Unit): Unit = (1 to 2).foreach { i =>
-        val t0 = System.nanoTime(); f
-        println(f"MICRO24 $tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      val sh = docs.select(col("doc_id").as("id"),
-        explode(graft.ops.Dedup.shingleStream(col("text"), 3)).as("s"))
-      time("shingle-explode")(sh.write.format("noop").mode("overwrite").save())
-      val hashed = sh.withColumn("v", conv(substring(md5(col("s").cast("binary")), 1, 7), 16, 10).cast("long"))
-      time("shingle-md5")(hashed.write.format("noop").mode("overwrite").save())
-      val minExprs = graft.ops.Dedup.minhashParams(16).zipWithIndex.map { case ((a, b), i) =>
-        min((col("v") * a + b) % graft.ops.Dedup.MinhashP).as(s"h$i") }
-      time("signatures")(hashed.groupBy("id").agg(minExprs.head, minExprs.tail: _*)
-        .write.format("noop").mode("overwrite").save())
-      time("full-candidates")(graft.ops.Dedup.minhashCandidates(docs, "doc_id", "text")
-        .write.format("noop").mode("overwrite").save())
-    }
-    names.filter(_ == "scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      // each copy-set gets fully distinct tokens (per-set alphabet+digit
-      // rotation over LOWERCASED text — a prefix alone leaves copies
-      // ~95% Jaccard-similar, and rotating raw text would leave
-      // uppercase/unrotated chars shared across copies after the
-      // tokenizer lowercases): the corpus GROWS with new content
-      // instead of stacking near-dups, so timing reflects scaling, not
-      // quadratic duplicate-pair volume
-      def at(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      // untimed warmup so x1 isn't charged for JIT/codegen compilation
-      graft.ops.Dedup.lshJaccardDedup(at(1), "doc_id", "text",
-        numHashes = 16, bands = 4, k = 3, minJaccard = 0.8).count()
-      Seq(1, 4, 10).foreach { m =>
-        val df = at(m)
-        val t0 = System.nanoTime()
-        val n = graft.ops.Dedup.lshJaccardDedup(df, "doc_id", "text",
-          numHashes = 16, bands = 4, k = 3, minJaccard = 0.8).count()
-        println(f"SCALELAW lsh-jaccard x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n pairs)")
-        val t1 = System.nanoTime()
-        val ne = graft.ops.Dedup.exact(df, "doc_id", "text").count()
-        println(f"SCALELAW exact-dedup x$m: ${(System.nanoTime() - t1) / 1e9}%.1f s ($ne groups)")
-      }
-    }
-    names.filter(_ == "simhash-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      // same growing-corpus generator as `scalelaw`: each copy-set gets
-      // fully distinct tokens (alphabet+digit rotation over lowercased
-      // text) so candidate growth measures random band collisions, not
-      // genuine near-dup volume
-      def at(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      graft.ops.Dedup.simhashCandidates(at(1), "doc_id", "text", 64, 4).count() // warmup
-      Seq(32, 64).foreach { nb =>
-        Seq(1, 4, 10).foreach { m =>
+      case n if n.startsWith("stream-state:") =>
+        streamState(spark, sfDir, n.stripPrefix("stream-state:").toInt)
+      case "make-sf1" => makeSf1(spark, sfDir)
+      case "make-sf10" => makeSf10(spark, sfDir)
+      case "entry" =>
+        val rows = SparkEntry.entry(spark).collect()
+        println(s"PROBE entry: ${rows.length} rows")
+        rows.foreach(r => println(s"  $r"))
+      case n if qs.contains(n) =>
+        (1 to 2).foreach { i =>
           val t0 = System.nanoTime()
-          val n = graft.ops.Dedup.simhashCandidates(at(m), "doc_id", "text", nb, 4).count()
-          println(f"SIMHASH-SCALELAW nBits=$nb x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n candidate pairs)")
+          val cnt = qs(n)(spark, sfDir).count()
+          println(f"PROBE $n run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($cnt rows)")
         }
-      }
-    }
-    names.filter(_ == "newops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val events = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("event_id"), col("value"))
-      // growing corpus: same rotation generator as `scalelaw` (each
-      // copy-set fully token-disjoint, so vocab grows with the data)
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      // growing events: distinct values grow with the data (the KS /
-      // histogram cost driver is |distinct|, not rows)
-      def evAt(mult: Int): org.apache.spark.sql.DataFrame =
-        (0 until mult).map { m =>
-          events.withColumn("event_id", col("event_id") + lit(m * 100000000L))
-            .withColumn("value", col("value") + lit(m * 1.7e-4))
-        }.reduce(_ unionByName _)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"NEWOPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      // warmup (untimed): JIT + codegen for all four paths
-      graft.ops.Frequent.frequentTokens(docsAt(1), "text", 0.001).count()
-      graft.ops.Drift.ksTwoSample(evAt(1), col("value"), col("event_id") % 2 === 0).count()
-      graft.engine.Histogram.equiDepth(evAt(1), "value", "event_id", 16).count()
-      graft.ops.Corpus.shuffleShards(docsAt(1), "doc_id", 1024).count()
-      Seq(1, 4, 10).foreach { m =>
-        time(s"frequent-tokens x$m")(
-          graft.ops.Frequent.frequentTokens(docsAt(m), "text", 0.001).count())
-        time(s"ks-drift x$m")(
-          graft.ops.Drift.ksTwoSample(evAt(m), col("value"),
-            col("event_id") % 2 === 0).count())
-        time(s"equidepth-hist x$m")(
-          graft.engine.Histogram.equiDepth(evAt(m), "value", "event_id", 16).count())
-        time(s"shuffle-shards x$m")(
-          graft.ops.Corpus.shuffleShards(docsAt(m), "doc_id", 1024).count())
-      }
-    }
-    names.filter(_ == "r4ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      // growing text corpus: same rotation generator as `scalelaw`
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      // growing embedding corpus: copy-set m rotates each vector by m
-      // positions — an isometry (within-set pairwise cosines preserved
-      // exactly) whose directions are generic vs other sets, so no
-      // cross-set near-dups are manufactured and pair volume measures
-      // scaling, not duplicate stacking
-      val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-      def embAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedEmb(emb, dim, mult)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"R4OPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      // warmup (untimed)
-      graft.ops.Dedup.jaccardJoinPrefix(docsAt(1), "doc_id", "text", 0.8).count()
-      graft.ops.Similarity.semanticDedupPairs(embAt(1), "vec_id", "embedding", 16, 0.99).count()
-      Seq(1, 4, 10).foreach { m =>
-        time(s"prefix-jaccard x$m")(
-          graft.ops.Dedup.jaccardJoinPrefix(docsAt(m), "doc_id", "text", 0.8).count())
-        // cluster count grows with the corpus — the documented scale
-        // rule keeping cluster sizes (and the n²/k pair space) bounded.
-        // Lloyd refinement (the production mode; seeded centroids are
-        // the oracle-replay mode) so centroids track the grown corpus
-        // rather than staying inside copy-set 0's directions
-        time(s"semantic-pairs x$m")(
-          graft.ops.Similarity.semanticDedupPairs(embAt(m), "vec_id",
-            "embedding", 16 * m, 0.99, kmeansIterations = 2).count())
-      }
-    }
-    names.filter(_ == "r5ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      // growing text corpus: rotation generator (token-disjoint copy
-      // sets) as in `scalelaw`; growing embeddings: index-rotation
-      // isometry as in `r4ops-scalelaw`
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-      def embAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedEmb(emb, dim, mult, withLang = true)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"R5OPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      // warmup (untimed)
-      graft.ops.Dedup.containmentJoinPrefix(docsAt(1), "doc_id", "text", 0.9).count()
-      graft.ops.Corpus.bm25(docsAt(1), "doc_id", "text",
-        Seq("spark", "shuffle", "hash", "merge", "window")).count()
-      Seq(1, 4, 10).foreach { m =>
-        time(s"containment-join x$m")(
-          graft.ops.Dedup.containmentJoinPrefix(docsAt(m), "doc_id", "text", 0.9).count())
-        // query terms from copy-set 0's alphabet — at x10 the corpus
-        // vocabulary is ~10x but the matched-term row count is flat
-        time(s"bm25 x$m")(
-          graft.ops.Corpus.bm25(docsAt(m), "doc_id", "text",
-            Seq("spark", "shuffle", "hash", "merge", "window")).count())
-        time(s"token-budget x$m")(
-          graft.ops.Corpus.tokenBudgetSample(docsAt(m), "doc_id", "text",
-            "source", 2000L).count())
-        time(s"hard-negatives x$m")(
-          graft.ops.Similarity.hardNegatives(
-            embAt(1).filter(col("vec_id") < 10), embAt(m),
-            "vec_id", "embedding", "lang", "vec_id", "embedding", "lang", 5).count())
-      }
-    }
-    names.filter(_ == "r6ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-      def embAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedEmb(emb, dim, mult)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"R6OPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      // warmup (untimed)
-      graft.ops.Quantize.pqEncode(embAt(1), "vec_id", "embedding",
-        graft.ops.Quantize.pqTrain(embAt(1), "vec_id", "embedding", dim, 4, 8, 2),
-        dim, 4).count()
-      Seq(1, 4, 10).foreach { m =>
-        time(s"pq-train-encode x$m") {
-          val cb = graft.ops.Quantize.pqTrain(embAt(m), "vec_id", "embedding",
-            dim, 4, 8, 2)
-          graft.ops.Quantize.pqEncode(embAt(m), "vec_id", "embedding", cb,
-            dim, 4).count()
-        }
-        // fixed 5 queries, growing corpus: ADC cost must track the code
-        // table (m · corpus rows), never dim · corpus
-        time(s"pq-adc x$m")(
-          graft.ops.Quantize.pqTopKAdc(embAt(1).filter(col("vec_id") < 5),
-            embAt(m), "vec_id", "embedding", "vec_id", "embedding",
-            dim, 4, 8, 2, 10).count())
-        time(s"importance-weights x$m") {
-          val dm = docsAt(m)
-          graft.ops.Corpus.importanceWeights(
-            dm.filter(col("source").isin("src0", "src1", "src2", "src3")),
-            dm, dm, "doc_id", "text").count()
-        }
-        time(s"collocations x$m")(
-          graft.ops.Corpus.collocations(docsAt(m), "doc_id", "text", 5L, 30)
-            .count())
-        time(s"curriculum x$m")(
-          graft.ops.Curation.curriculumPhases(docsAt(m), "doc_id", "text", 3)
-            .count())
-      }
-    }
-    names.filter(_ == "r7ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-      def embAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedEmb(emb, dim, mult)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"R7OPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      // warmup (untimed)
-      graft.ops.Corpus.windowDupStats(docsAt(1), "doc_id", "text", 40, 20).count()
-      graft.ops.Quantize.ivfPqTopKAdc(embAt(1).filter(col("vec_id") < 5),
-        embAt(1), "vec_id", "embedding", "vec_id", "embedding",
-        dim, 4, 8, 2, nCells = 16, nProbe = 2, topK = 10).count()
-      Seq(1, 4, 10).foreach { m =>
-        // char-window family: ~(len/stride) windows per doc, reduced to
-        // 16-byte fingerprints before any exchange — cost must grow with
-        // total window count (linear in corpus chars), never pairs
-        time(s"window-dedup x$m")(
-          graft.ops.Corpus.windowDupStats(docsAt(m), "doc_id", "text", 40, 20)
-            .count())
-        time(s"span-removal x$m")(
-          graft.ops.Corpus.spanRemoval(docsAt(m), "doc_id", "text", 40, 20)
-            .count())
-        time(s"keep-best x$m")(
-          graft.ops.Dedup.exactKeepBest(
-            docsAt(m).withColumn("crawl_ts", col("doc_id") % 256),
-            "doc_id", "text", "crawl_ts").count())
-        // fixed 5 queries, growing corpus: the IVF prune must keep the
-        // scoring join at ~nProbe/nCells of the full-scan ADC's row
-        // volume (same codes table, same distance tables)
-        time(s"ivfpq-adc x$m")(
-          graft.ops.Quantize.ivfPqTopKAdc(embAt(1).filter(col("vec_id") < 5),
-            embAt(m), "vec_id", "embedding", "vec_id", "embedding",
-            dim, 4, 8, 2, nCells = 16, nProbe = 2, topK = 10).count())
-        time(s"pq-adc-fullscan x$m")(
-          graft.ops.Quantize.pqTopKAdc(embAt(1).filter(col("vec_id") < 5),
-            embAt(m), "vec_id", "embedding", "vec_id", "embedding",
-            dim, 4, 8, 2, 10).count())
-      }
-    }
-    names.filter(_ == "r9ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def docsAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, mult)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"R9OPS-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      def toks(df: org.apache.spark.sql.DataFrame) = df
-        .select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("item"))
-      // warmup (untimed)
-      graft.ops.Sketch.kmvDistinct(docsAt(1), Seq("text", "lang"), 256).count()
-      graft.ops.Sketch.countMin(toks(docsAt(1)), "item", 4, 64, "p").count()
-      Seq(1, 4, 10).foreach { m =>
-        // sketches: cost must be ONE linear scan (state O(k) / O(d·w)
-        // per task); output row count constant as the corpus grows
-        time(s"kmv x$m")(
-          graft.ops.Sketch.kmvDistinct(docsAt(m), Seq("text", "lang"), 256).count())
-        time(s"countmin x$m")(
-          graft.ops.Sketch.countMin(toks(docsAt(m)), "item", 4, 64, "p").count())
-        // rewrite: linear in chunks; election ships fingerprints only
-        time(s"chunk-dedup x$m")(
-          graft.ops.Dedup.chunkDedupRewrite(docsAt(m), "doc_id", "text", 12).count())
-        // bigram LM: vocab²-bounded model, corpus-linear scoring scan
-        time(s"bigram-lm x$m")(
-          graft.ops.Corpus.bigramLogProb(docsAt(m), docsAt(m), "doc_id", "text").count())
-      }
-    }
-    names.filter(_ == "admit-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      // FIXED incoming shard (one rotation set), GROWING prior corpus:
-      // admission cost must track the shard + the prior SKETCH TABLE
-      // (one long per historical doc), never the prior text — the
-      // receipts for "daily append against years of history"
-      // shard = near-dups of prior set 0 (all rejected) + rotation set
-      // 11 (never in any prior size here — all admitted): both halves
-      // of the admission path run at every prior size
-      val shard = rotatedDocs(docs, 1)
-        .withColumn("doc_id", col("doc_id") + lit(500000000L))
-        .unionByName(rotatedDocs(docs, 12)
-          .filter(col("doc_id") >= 11L * 1000000L)
-          .withColumn("doc_id", col("doc_id") + lit(600000000L)))
-      graft.ops.Dedup.admitIncremental(shard, "doc_id", "text",
-        graft.ops.Dedup.sketchTable(rotatedDocs(docs, 1), "doc_id", "text")).count() // warmup
-      Seq(1, 4, 10).foreach { m =>
-        val prior = graft.ops.Dedup.sketchTable(rotatedDocs(docs, m), "doc_id", "text")
-          .localCheckpoint() // persisted-table stand-in: sketch cost not charged
-        val t0 = System.nanoTime()
-        val n = graft.ops.Dedup.admitIncremental(shard, "doc_id", "text", prior).count()
-        println(f"ADMIT-SCALELAW prior x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n admitted)")
-      }
-    }
-    names.filter(_ == "pairs-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val events = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("user_id"), col("event_type"))
-      // growing corpus with a power-law head: copy-set m shifts user ids
-      // (audience grows with the data) and ONE bot key touches 500·m
-      // distinct items — the straggler shape the block route exists for.
-      // Pair volume for the hot key alone is (500·m)²/2, so plain-route
-      // time concentrates in one task while the blocked route spreads
-      // cells of ≤ blockSize² pairs.
-      def at(mult: Int): org.apache.spark.sql.DataFrame = {
-        val base = (0 until mult).map { m =>
-          events.withColumn("user_id", col("user_id") + lit(m * 10000000L))
-        }.reduce(_ unionByName _)
-        val hot = spark.range(500L * mult).select(lit(-1L).as("user_id"),
-          concat(lit("syn_item_"), col("id")).as("event_type"))
-        base.unionByName(hot)
-      }
-      graft.ops.Frequent.coOccurrence(at(1), "user_id", "event_type",
-        heavyKeyItemBound = Some(100L), blockSize = 256).count() // warmup
-      Seq(1, 4, 10).foreach { m =>
-        val df = at(m)
-        val t0 = System.nanoTime()
-        val nb = graft.ops.Frequent.coOccurrence(df, "user_id", "event_type",
-          heavyKeyItemBound = Some(100L), blockSize = 256).count()
-        println(f"PAIRS-SCALELAW blocked x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($nb pairs)")
-        val t1 = System.nanoTime()
-        val np = graft.ops.Frequent.coOccurrence(df, "user_id", "event_type",
-          heavyKeyItemBound = None).count()
-        println(f"PAIRS-SCALELAW plain   x$m: ${(System.nanoTime() - t1) / 1e9}%.1f s ($np pairs)")
-        val pp = graft.ops.Frequent.blockedPairs(
-          graft.ops.Frequent.presenceRows(df, "user_id", "event_type"), 256)
-          .rdd.mapPartitions(it => Iterator(it.size.toLong)).collect()
-        println(s"PAIRS-SCALELAW maxtask x$m: ${pp.max} of ${pp.sum} pairs in the largest task")
-      }
-    }
-    names.filter(_ == "zorder").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val dims = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("event_id"), col("user_id"),
-          floor(col("value")).cast("long").as("v"))
-      val zpath = "/tmp/graft_probe_zorder"
-      val lpath = "/tmp/graft_probe_linear"
-      graft.ops.Layout.zorder(dims, "user_id", "v", 32)
-        .write.mode("overwrite").parquet(zpath)
-      dims.repartitionByRange(32, col("event_id"))
-        .sortWithinPartitions("event_id")
-        .write.mode("overwrite").parquet(lpath)
-      Seq(("zorder", zpath), ("linear", lpath)).foreach { case (nm, p) =>
-        val df = spark.read.parquet(p)
-          .filter(col("user_id").between(10, 20) && col("v").between(20, 60))
-        val qe = df.queryExecution
-        val t0 = System.nanoTime()
-        val n = qe.executedPlan.execute().map(_ => 1L).reduce(_ + _)
-        val dt = (System.nanoTime() - t0) / 1e9
-        // scan-node numOutputRows = rows surviving parquet row-group/page
-        // pruning + pushed filters, BEFORE Spark's re-filter — the
-        // data-skipping measure
-        val scanned = qe.executedPlan.collectLeaves()
-          .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-        println(f"PROBE zorder layout=$nm: $dt%.2f s, result=$n rows, scan-emitted=$scanned rows")
-      }
-    }
-    names.filter(_ == "ivfpq-recall").foreach { _ =>
-      import org.apache.spark.sql.Column
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      // The recall/cost frontier a 100-TB ANN operator actually tunes:
-      // fixed 5-query audit set, growing corpus (x1/x4/x10 index-
-      // rotation isometry), recall@10 of the IVF-pruned ADC vs the
-      // exact L2 top-10 across nProbe in {1, 2, 4, 8} of 16 cells,
-      // with the full-scan ADC's recall as the ceiling IVF pruning is
-      // dialed against (everything above it is PQ quantization error,
-      // not cell loss). The exact side here is the audit convention:
-      // 5 queries only — never an unsampled corpus scan.
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val dim = emb.select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-      def embAt(mult: Int): org.apache.spark.sql.DataFrame = rotatedEmb(emb, dim, mult)
-      val q = emb.filter(col("vec_id") < 5)
-      def l2sq(a: Column, b: Column): Column =
-        aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-      Seq(1, 4, 10).foreach { m =>
-        val corpus = embAt(m).localCheckpoint()
-        val qv = q.select(col("vec_id").as("query_id"),
-          transform(col("embedding"), _.cast("double")).as("qv"))
-        val cv = corpus.filter(col("embedding").isNotNull)
-          .select(col("vec_id").as("neighbor_id"),
-            transform(col("embedding"), _.cast("double")).as("cv"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("d2").asc, col("neighbor_id").asc)
-        val exact = qv.crossJoin(cv).withColumn("d2", l2sq(col("qv"), col("cv")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
-          .select("query_id", "neighbor_id").localCheckpoint()
-        // two codebook capacities: the q131/q142 dev shape (m=4, k=8 —
-        // 3 bits/subvector) and a finer one (m=8, k=32 — 5 bits/
-        // subvector, twice the subspaces). The sweep's lesson at dev
-        // scale: when quantization error dominates, the IVF stage acts
-        // as a geometric FILTER that can beat the full-scan ADC ranking
-        // at low nProbe, and extra probes buy nothing — recall budget
-        // goes to codebook bits first, nProbe second.
-        Seq((4, 8, 2), (8, 32, 4)).foreach { case (pm, pk, pit) =>
-          Seq(1, 2, 4, 8).foreach { p =>
-            val t0 = System.nanoTime()
-            val hits = graft.ops.Quantize.ivfPqTopKAdc(q, corpus,
-                "vec_id", "embedding", "vec_id", "embedding",
-                dim, pm, pk, pit, nCells = 16, nProbe = p, topK = 10)
-              .select("query_id", "neighbor_id")
-              .join(exact, Seq("query_id", "neighbor_id")).count()
-            println(f"IVFPQ-RECALL x$m m=$pm k=$pk nProbe=$p: " +
-              f"recall@10=${hits / 50.0}%.2f " +
-              f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
-          }
-          val full = graft.ops.Quantize.pqTopKAdc(q, corpus,
-              "vec_id", "embedding", "vec_id", "embedding", dim, pm, pk, pit, 10)
-            .select("query_id", "neighbor_id")
-            .join(exact, Seq("query_id", "neighbor_id")).count()
-          println(f"IVFPQ-RECALL x$m m=$pm k=$pk fullscan: " +
-            f"recall@10=${full / 50.0}%.2f")
-        }
-      }
-    }
-    names.filter(_ == "bpe-scalelaw").foreach { _ =>
-      // BPE training's scale claim: after the single text scan that
-      // collapses the corpus to (word, freq), every merge round is
-      // |vocab|-proportional — the rotation generator grows BOTH the
-      // corpus and the vocabulary (token-disjoint copy-sets), so cost
-      // should track the vocab growth and never the raw text volume
-      // re-scanned per round.
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def at(m: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, m)
-      graft.ops.Corpus.bpeTrain(at(1), "text", 5).count() // warmup
-      Seq(1, 4, 10).foreach { m =>
-        val t0 = System.nanoTime()
-        val n = graft.ops.Corpus.bpeTrain(at(m), "text", 5).count()
-        println(f"BPE-SCALELAW x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n merges)")
-      }
-    }
-    names.filter(_ == "streaming-scalelaw").foreach { _ =>
-      // VERDICT r8 #6: the bench's top band is all streaming rows —
-      // attribute their cost to micro-batch trigger fixed overhead vs
-      // per-row work by running the SAME q154-class pipeline (full
-      // streamingCurate, 3 shards + watermark state) at 1x/4x/10x
-      // volume. Receipt: the s/row slope vs the x1 intercept.
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("text").isNotNull)
-      val cfg = graft.ops.Curation.CurationConfig(lang = Some("en"),
-        minQuality = 0.5, minTokens = 5, sampleFraction = 0.5)
-      def run(m: Int): (Int, Double) = {
-        val rows = rotatedDocs(docs0, m)
-          .select(col("doc_id"), col("text"), (col("doc_id") % 3).cast("int"))
-          .as[(Long, String, Int)].collect()
-        val batches = (0 to 2).map { b =>
-          rows.toSeq.collect { case (id, tx, `b`) =>
-            (id, tx, b, new java.sql.Timestamp(1700000000000L + b * 60000L)) }
-        }
-        val t0 = System.nanoTime()
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, Int, java.sql.Timestamp)]
-        val stream = mem.toDF().toDF("doc_id", "text", "batch", "ts")
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = try {
-          graft.streaming.StreamingProfile
-            .streamingCurate(stream, "ts", "doc_id", "text", cfg)
-            .writeStream
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, _: Long) =>
-              bdf.write.format("noop").mode("overwrite").save()
-            }
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .start()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        finally q.stop()
-        (rows.length, (System.nanoTime() - t0) / 1e9)
-      }
-      run(1) // warmup: state-store + streaming codegen init
-      val pts = Seq(1, 4, 10).map { m =>
-        val (n, dt) = run(m)
-        println(f"STREAM-SCALELAW x$m: $dt%6.2f s  ($n rows)")
-        (n, dt)
-      }
-      val (n1, t1) = pts.head; val (n10, t10) = pts.last
-      val slope = (t10 - t1) / (n10 - n1)
-      val fixed = t1 - slope * n1
-      println(f"STREAM-SCALELAW fit: fixed=$fixed%.2f s/run, slope=${slope * 1e6}%.1f us/row " +
-        f"(fixed share at x1: ${fixed / t1 * 100}%.0f%%)")
-    }
-    names.filter(_ == "bpe-merges-scalelaw").foreach { _ =>
-      // VERDICT r8 #4: per-merge cost law across nMerges. The
-      // distributed loop pays one Spark job + collect PER ROUND (cost
-      // ~linear in rounds, never amortizing); the driver-local
-      // delta-recount loop pays one vocab scan total, then per-round
-      // cost proportional to the words containing the merged pair
-      // (shrinking as merges specialize). Receipt: local per-merge
-      // cost must FALL with nMerges while distributed stays ~flat.
-      // rotatedDocs(10): token-disjoint copy-sets 10x the vocabulary,
-      // so 1000 merge rounds actually happen instead of exhausting
-      val docs = rotatedDocs(spark.read.parquet(s"$sfDir/documents.parquet"), 10)
-      graft.ops.Corpus.bpeTrainLocal(docs, "text", 5).count() // warmup
-      graft.ops.Corpus.bpeTrain(docs, "text", 5).count()
-      Seq(10, 100, 1000).foreach { n =>
-        val t0 = System.nanoTime()
-        val got = graft.ops.Corpus.bpeTrainLocal(docs, "text", n).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"BPE-MERGES local  n=$n%5d: $dt%7.2f s  ($got merges, ${dt / got * 1000}%.2f ms/merge)")
-      }
-      Seq(10, 100).foreach { n =>
-        val t0 = System.nanoTime()
-        val got = graft.ops.Corpus.bpeTrain(docs, "text", n).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"BPE-MERGES spark  n=$n%5d: $dt%7.2f s  ($got merges, ${dt / got * 1000}%.2f ms/merge)")
-      }
-    }
-    names.filter(_ == "cosine-sql").foreach { _ =>
-      graft.GraftExtensions.registerInto(spark)
-      spark.read.parquet(s"$sfDir/embeddings.parquet").createOrReplaceTempView("emb")
-      val rows = spark.sql(
-        """SELECT a.vec_id, b.vec_id AS other,
-          |  round(graft_cosine(CAST(a.embedding AS ARRAY<DOUBLE>), CAST(b.embedding AS ARRAY<DOUBLE>)), 6) AS sim
-          |FROM emb a JOIN emb b ON a.vec_id = 0 AND b.vec_id IN (0, 1, 2)
-          |ORDER BY other""".stripMargin).collect()
-      rows.foreach(r => println(s"PROBE cosine-sql: $r"))
-    }
-    // Aho–Corasick scale law: blocklist cost vs term count, against
-    // the N-contains() chain it replaces. Terms are corpus-derived
-    // 3-grams so the automaton actually matches.
-    names.filter(_ == "ac-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("text").isNotNull).localCheckpoint()
-      val base = Seq("spark", "shuffle", "window", "merge", "batch", "table",
-        "value", "data", "query", "row")
-      def termSet(n: Int): Seq[String] = {
-        val combos = base ++ (for (a <- base; b <- base) yield s"$a $b")
-        val real = combos.distinct.take(n)
-        real ++ (0 until (n - real.size)).map(i => f"zz$i%04d") // exactly n
-      }
-      def time(tag: String)(f: => Long): Unit = (1 to 3).foreach { i =>
-        val t0 = System.nanoTime(); val r = f
-        println(f"AC-SCALELAW $tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s (sum=$r)")
-      }
-      Seq(10, 100, 1000).foreach { n =>
-        val ts = termSet(n).distinct
-        time(s"automaton n=${ts.size}") {
-          docs.select(graft.ops.TextAnalysis
-            .blocklistHits(col("text"), ts).as("h"))
-            .agg(sum("h")).collect()(0).getLong(0)
-        }
-      }
-      Seq(10, 100).foreach { n =>
-        val ts = termSet(n).distinct
-        time(s"contains-chain n=${ts.size}") {
-          val t = lower(col("text"))
-          docs.select(ts.map(tm =>
-              when(t.contains(tm), 1).otherwise(0))
-              .reduce(_ + _).as("h"))
-            .agg(sum("h")).collect()(0).getLong(0)
-        }
-      }
-    }
-    // Sketch-family scale law: KMV / HLL (md5 + xxhash64) / count–min
-    // / histogram quantiles / per-group KMV overlap at x1/x4/x10 —
-    // every sketch's cost should be ~linear in the scan with
-    // sketch-sized (not data-sized) shuffles; the md5-vs-xxhash64 pair
-    // measures what the oracle-replayable digest costs over the
-    // production hash on the SAME input and register layout.
-    names.filter(_ == "sketch-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag",
-          "l_extendedprice")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_returnflag")
-      def docsAt(m: Int): org.apache.spark.sql.DataFrame = rotatedDocs(docs, m)
-      // growing lineitem: keys shift per copy so distinct counts grow
-      // with the data (the HLL/KMV cost driver is values hashed)
-      def liAt(mult: Int): org.apache.spark.sql.DataFrame =
-        (0 until mult).map { m =>
-          li.withColumn("l_orderkey", col("l_orderkey") + lit(m * 100000000L))
-            .withColumn("l_partkey", col("l_partkey") + lit(m * 100000000L))
-            .withColumn("l_suppkey", col("l_suppkey") + lit(m * 100000000L))
-        }.reduce(_ unionByName _)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime(); val n = f
-        println(f"SKETCH-SCALELAW $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
-      }
-      def toks(df: org.apache.spark.sql.DataFrame) = df
-        .filter(col("source").isNotNull && col("text").isNotNull)
-        .select(col("source"),
-          explode(graft.ops.TextAnalysis.tokens(col("text"))).as("tok"))
-      // warmup (untimed): JIT + codegen for every path
-      graft.ops.Sketch.kmvDistinct(liAt(1), cols, 64).count()
-      graft.ops.Sketch.hllDistinct(liAt(1), cols).count()
-      graft.ops.Sketch.hllDistinctFast(liAt(1), cols).count()
-      graft.ops.Sketch.countMin(toks(docsAt(1)).select(col("tok").as("item")),
-        "item", 4, 64, salt = "cm").count()
-      graft.ops.Sketch.histQuantiles(liAt(1), "l_extendedprice", 256,
-        Seq(0.5)).count()
-      graft.ops.Sketch.kmvJaccardByGroup(toks(docsAt(1)), "source", "tok", 64).count()
-      Seq(1, 4, 10).foreach { m =>
-        time(s"kmv-distinct x$m")(
-          graft.ops.Sketch.kmvDistinct(liAt(m), cols, 64).count())
-        time(s"hll-md5 x$m")(
-          graft.ops.Sketch.hllDistinct(liAt(m), cols).count())
-        time(s"hll-xxhash64 x$m")(
-          graft.ops.Sketch.hllDistinctFast(liAt(m), cols).count())
-        time(s"countmin x$m")(
-          graft.ops.Sketch.countMin(
-            toks(docsAt(m)).select(col("tok").as("item")),
-            "item", 4, 64, salt = "cm").count())
-        time(s"hist-quantiles x$m")(
-          graft.ops.Sketch.histQuantiles(liAt(m), "l_extendedprice", 256,
-            Seq(0.25, 0.5, 0.9, 0.99)).count())
-        time(s"kmv-group-overlap x$m")(
-          graft.ops.Sketch.kmvJaccardByGroup(toks(docsAt(m)),
-            "source", "tok", 64).count())
-      }
-    }
-    // Maximal-dup-span scale law: stride-1 exact-substring dedup at
-    // x1/x4/x10 on the rotated (token-disjoint) corpus plus injected
-    // cross-copy duplicates, so span volume stays proportional.
-    names.filter(_ == "dupspan-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def at(m: Int): org.apache.spark.sql.DataFrame = {
-        val grown = rotatedDocs(docs, m)
-        // inject dups: every 10th doc cloned at a shifted id (the
-        // q139/q141/q197 withDups shape, applied per copy-set)
-        grown.unionByName(
-          grown.filter(col("doc_id") % 10 === 0)
-            .withColumn("doc_id", col("doc_id") + lit(500000L)))
-      }
-      graft.ops.Corpus.maxDupSpans(at(1), "doc_id", "text", 40).count() // warmup
-      Seq(1, 4, 10).foreach { m =>
-        val t0 = System.nanoTime()
-        val n = graft.ops.Corpus.maxDupSpans(at(m), "doc_id", "text", 40).count()
-        println(f"DUPSPAN-SCALELAW maxDupSpans x$m: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n spans)")
-      }
-    }
-    names.filter(_ == "r10ops-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dim = emb.select(size(col("embedding"))).head().getInt(0)
-      val q = emb.filter(col("vec_id") < 5).localCheckpoint()
-      // warmup both kernels once
-      graft.ops.Quantize.hammingTopK(q, emb, "vec_id", "embedding",
-        "vec_id", "embedding", 10, 40).count()
-      graft.ops.Similarity.bruteForceTopKLarge(q, emb, "vec_id", "embedding",
-        "vec_id", "embedding", 10).count()
-      Seq(1, 4, 10).foreach { m =>
-        val c = rotatedEmb(emb, dim, m).localCheckpoint()
-        val t0 = System.nanoTime()
-        val nh = graft.ops.Quantize.hammingTopK(q, c, "vec_id", "embedding",
-          "vec_id", "embedding", 10, 40).count()
-        val t1 = System.nanoTime()
-        val ne = graft.ops.Similarity.bruteForceTopKLarge(q, c,
-          "vec_id", "embedding", "vec_id", "embedding", 10).count()
-        val t2 = System.nanoTime()
-        println(f"R10-SCALELAW hamming x$m: ${(t1 - t0) / 1e9}%.2f s " +
-          f"($nh rows) vs exact ${(t2 - t1) / 1e9}%.2f s ($ne rows)")
-      }
-      // wide config: enough pairs (200 q x 10x corpus) that the scan
-      // kernel, not stage overhead, is what's timed
-      locally {
-        val c = rotatedEmb(emb, dim, 10).localCheckpoint()
-        val qw = emb.filter(col("vec_id") < 200).localCheckpoint()
-        val t0 = System.nanoTime()
-        val nh = graft.ops.Quantize.hammingTopK(qw, c, "vec_id", "embedding",
-          "vec_id", "embedding", 10, 40).count()
-        val t1 = System.nanoTime()
-        val ne = graft.ops.Similarity.bruteForceTopKLarge(qw, c,
-          "vec_id", "embedding", "vec_id", "embedding", 10).count()
-        val t2 = System.nanoTime()
-        println(f"R10-SCALELAW hamming wide (200q x 10x): " +
-          f"${(t1 - t0) / 1e9}%.2f s ($nh rows) vs exact " +
-          f"${(t2 - t1) / 1e9}%.2f s ($ne rows)")
-      }
-      // md5 vs xxhash64 on the dup-span one-row-per-character path
-      locally {
-        val dup = docs.unionByName(
-          docs.filter(col("doc_id") < 50)
-            .withColumn("doc_id", col("doc_id") + lit(500000L)))
-          .localCheckpoint()
-        graft.ops.Corpus.maxDupSpans(dup, "doc_id", "text", 40).count() // warm
-        val t0 = System.nanoTime()
-        val nm = graft.ops.Corpus.maxDupSpans(dup, "doc_id", "text", 40).count()
-        val t1 = System.nanoTime()
-        val nx = graft.ops.Corpus.maxDupSpansFast(dup, "doc_id", "text", 40).count()
-        val t2 = System.nanoTime()
-        println(f"R10-SCALELAW dupspan md5: ${(t1 - t0) / 1e9}%.2f s ($nm) " +
-          f"vs xxhash64: ${(t2 - t1) / 1e9}%.2f s ($nx)")
-      }
-      val phrases = Seq(Seq("table", "table"),
-        Seq("value", "table", "part"), Seq("fast", "spark"))
-      graft.ops.TextAnalysis.phraseSearch(docs, "doc_id", "text", phrases).count()
-      graft.ops.Corpus.conjunctiveTopK(docs, "doc_id", "text",
-        Seq("spark", "vector", "window"), 20).count()
-      Seq(1, 4, 10).foreach { m =>
-        val d = rotatedDocs(docs, m).localCheckpoint()
-        val t0 = System.nanoTime()
-        val np = graft.ops.TextAnalysis.phraseSearch(d, "doc_id", "text",
-          phrases).count()
-        val t1 = System.nanoTime()
-        val nc = graft.ops.Corpus.conjunctiveTopK(d, "doc_id", "text",
-          Seq("spark", "vector", "window"), 20).count()
-        val t2 = System.nanoTime()
-        println(f"R10-SCALELAW phrase x$m: ${(t1 - t0) / 1e9}%.2f s " +
-          f"($np hits); conjunctive: ${(t2 - t1) / 1e9}%.2f s ($nc rows)")
-      }
-    }
-    // R11 receipt (r10 verdict #2): shuffle-byte reduction from the
-    // map-side singleton bloom prune of the stride-1 substring family.
-    // The unpruned twin reproduces the r10 pipeline verbatim (explode
-    // -> md5 fp -> groupBy occ -> join back -> per-doc collect+merge),
-    // so the delta is the r11 rework (bloom prune + segmented merge);
-    // both variants must agree on the span count (exactness receipt).
-    names.filter(_ == "prune-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            shuffleBytes.addAndGet(
-              s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-          }
-        })
-      def measure(f: => Long): (Long, Long, Double) = {
-        Thread.sleep(500); shuffleBytes.set(0L)
-        val t0 = System.nanoTime()
-        val n = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1500) // let straggler stage-completed events land
-        (n, shuffleBytes.get(), dt)
-      }
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def at(m: Int): org.apache.spark.sql.DataFrame = {
-        val grown = rotatedDocs(docs, m)
-        grown.unionByName(
-          grown.filter(col("doc_id") % 10 === 0)
-            .withColumn("doc_id", col("doc_id") + lit(500000L)))
-      }
-      val L = 40
-      // the r10 (unpruned) marked-offset pipeline, inlined
-      def unprunedSpans(df: org.apache.spark.sql.DataFrame): Long = {
-        val base = df.filter(col("doc_id").isNotNull)
-          .select(col("doc_id").as("id"), col("text").cast("string").as("text"))
-          .filter(col("text").isNotNull && length(col("text")) >= L)
-        val wins = base
-          .select(col("id"),
-            explode(expr(s"sequence(0, CAST(length(text) AS INT) - $L, 1)")).as("off"),
-            col("text"))
-          .select(col("id"), col("off").cast("int").as("off"),
-            md5(expr(s"substring(text, off + 1, $L)").cast("binary")).as("fp"))
-          .localCheckpoint()
-        val dupFp = wins.groupBy("fp").agg(count(lit(1)).as("occ"))
-          .filter(col("occ") > 1).select("fp")
-        val marked = wins.join(dupFp, Seq("fp")).select("id", "off")
-        val grouped = marked.groupBy("id")
-          .agg(sort_array(collect_list(col("off"))).as("offs"))
-        grouped
-          .select(col("id"), col("offs"), expr(
-            s"""filter(sequence(1, size(offs)), i ->
-               |  i = 1 OR element_at(offs, i) >
-               |    element_at(offs, greatest(i - 1, 1)) + $L)""".stripMargin.trim)
-            .as("starts"))
-          .select(col("id"), expr(
-            s"""transform(starts, (st, k) -> named_struct(
-               |  's', element_at(offs, st),
-               |  'e', element_at(offs, CASE WHEN k + 2 <= size(starts)
-               |         THEN element_at(starts, k + 2) - 1
-               |         ELSE size(offs) END) + $L))""".stripMargin.trim).as("merged"))
-          .select(col("id"), explode(col("merged")).as("sp"))
-          .count()
-      }
-      graft.ops.Corpus.maxDupSpans(at(1), "doc_id", "text", L).count() // warm
-      unprunedSpans(at(1))
-      Seq(1, 4, 10).foreach { m =>
-        val d = at(m).localCheckpoint()
-        val (np, bp, tp) = measure(
-          graft.ops.Corpus.maxDupSpans(d, "doc_id", "text", L).count())
-        val (nu, bu, tu) = measure(unprunedSpans(d))
-        println(f"PRUNE-SCALELAW x$m: pruned $tp%.2f s ${bp / 1e6}%.1f MB shuffle " +
-          f"($np spans) vs unpruned $tu%.2f s ${bu / 1e6}%.1f MB ($nu spans) " +
-          f"-> bytes x${bu.toDouble / math.max(1L, bp)}%.1f")
-      }
-    }
-    // Fixed-cost probe of the micro-batch harness (r10 verdict #5):
-    // the same minimal 3-trigger 1-key stateful stream Bench's
-    // streaming_split times — run standalone to compare checkpoint
-    // backends / sink forms without a full bench.
-    names.filter(_ == "stream-fixed").foreach { _ =>
-      import org.apache.spark.sql.functions.{col, count, lit}
-      import spark.implicits._
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        graft.SparkEntry.runMicroBatched(spark, Seq("id"),
-          Seq(Seq(Tuple1(1L)), Seq(Tuple1(2L)), Seq(Tuple1(3L))),
-          "probe-stream-fixed", Seq("k", "n"),
-          org.apache.spark.sql.streaming.OutputMode.Update()) { st =>
-          st.groupBy((col("id") % 1L).as("k")).agg(count(lit(1)).as("n"))
-        }.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (1 to 6).foreach(i => println(f"STREAM-FIXED run$i: ${once()}%.2f s"))
-    }
-    // Phase breakdown of the harness fixed cost: where do the ~1.5 s
-    // go — query start, each processAllAvailable, stop?
-    names.filter(_ == "stream-phases").foreach { _ =>
-      import org.apache.spark.sql.functions.{col, count, lit}
-      import spark.implicits._
-      def once(srcParts: Int): String = {
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[Tuple1[Long]](spark, srcParts)
-        val ckpt = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "probe-phases").toFile
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        val t0 = System.nanoTime()
-        val q = try {
-          mem.toDF().toDF("id")
-            .groupBy((col("id") % 1L).as("k")).agg(count(lit(1)).as("n"))
-            .writeStream
-            .option("checkpointLocation", ckpt.getAbsolutePath)
-            .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, _: Long) =>
-              bdf.collect(); ()
-            }
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-            .start()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        val t1 = System.nanoTime()
-        val ts = (1 to 3).map { i =>
-          mem.addData(Tuple1(i.toLong)); q.processAllAvailable()
-          System.nanoTime()
-        }
-        q.recentProgress.foreach { p =>
-          println(s"  trigger ${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}")
-        }
-        q.stop()
-        val t2 = System.nanoTime()
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(ckpt)
-        f"src=$srcParts start ${(t1 - t0) / 1e9}%.2f " +
-          f"b1 ${(ts(0) - t1) / 1e9}%.2f b2 ${(ts(1) - ts(0)) / 1e9}%.2f " +
-          f"b3 ${(ts(2) - ts(1)) / 1e9}%.2f stop ${(t2 - ts(2)) / 1e9}%.2f"
-      }
-      once(8) // warm
-      (1 to 3).foreach(i => println(s"STREAM-PHASES run$i: ${once(8)}"))
-      // checkpoint logs ride FileContext (fs.AbstractFileSystem.*) —
-      // swap its local impl to RawLocalFs (no .crc shadow writes) and
-      // compare; parquet IO uses the FileSystem API and is untouched
-      spark.sparkContext.hadoopConfiguration.set(
-        "fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      (1 to 3).foreach(i => println(s"STREAM-PHASES-RAWFS run$i: ${once(8)}"))
-      spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-      spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "100")
-      (1 to 3).foreach(i => println(s"STREAM-PHASES-RETAIN2 run$i: ${once(8)}"))
-    }
-    // Where does q154's wall go? Split feed prep (dedupShards window +
-    // collect — batch work charged to the streaming row) from the
-    // micro-batch execution itself.
-    names.filter(_ == "q154-split").foreach { _ =>
-      import spark.implicits._
-      (1 to 2).foreach { run =>
-        val t0 = System.nanoTime()
-        val shards = q154Shards(spark, sfDir)
-        val t1 = System.nanoTime()
-        val n = graft.SparkEntry.runMicroBatched(spark,
-          Seq("doc_id", "text", "batch", "ts"), shards,
-          "probe-q154", Seq("id", "text_clean", "lang", "quality", "n_tokens")) {
-          stream =>
-            graft.streaming.StreamingProfile.streamingCurate(stream, "ts",
-              "doc_id", "text",
-              graft.ops.Curation.CurationConfig(lang = Some("en"),
-                minQuality = 0.5, minTokens = 5, sampleFraction = 0.5))
-        }.count()
-        val t2 = System.nanoTime()
-        println(f"Q154-SPLIT run$run: prep ${(t1 - t0) / 1e9}%.2f s, " +
-          f"stream ${(t2 - t1) / 1e9}%.2f s ($n rows)")
-      }
-    }
-    // Per-trigger duration breakdown of the q154 stream (planning vs
-    // execution vs state commit) straight from StreamingQueryProgress.
-    names.filter(_ == "q154-triggers").foreach { _ =>
-      import spark.implicits._
-      val shards = q154Shards(spark, sfDir)
-      (1 to 2).foreach { run =>
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, Int, java.sql.Timestamp)]
-        val built = graft.streaming.StreamingProfile.streamingCurate(
-          mem.toDF().toDF("doc_id", "text", "batch", "ts"), "ts",
-          "doc_id", "text",
-          graft.ops.Curation.CurationConfig(lang = Some("en"),
-            minQuality = 0.5, minTokens = 5, sampleFraction = 0.5))
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("PROBE_STREAM_PARTS", "1"))
-        val q = try built.writeStream
-          .foreachBatch { (bdf: org.apache.spark.sql.DataFrame, _: Long) =>
-            bdf.count(); ()
-          }.outputMode("append").start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-        val t0 = System.nanoTime()
-        try shards.foreach { b => mem.addData(b); q.processAllAvailable() }
-        finally {
-          q.recentProgress.foreach { p =>
-            val d = p.durationMs
-            println(s"  trigger batch=${p.batchId} rows=${p.numInputRows} " +
-              s"durations=$d")
-          }
-          q.stop()
-        }
-        println(f"Q154-TRIGGERS run$run total ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          s"(parts=${sys.env.getOrElse("PROBE_STREAM_PARTS", "1")})")
-      }
-    }
-    // Where does q63's sf1 wall go? equiDepth = count + range-sort
-    // checkpoint + two RDD passes + 8-group agg, all linear on paper.
-    names.filter(_ == "q63-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"Q63-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"Q63-SPLIT run $run")
-        val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-        val rows = tt("scan+select")(
-          ev0.select(col("value").cast("double").as("v"), col("event_id").as("id"))
-            .filter(col("v").isNotNull).localCheckpoint())
-        val n = tt("count")(rows.count())
-        val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val sorted = tt("rangeSort+ckpt")(
-          rows.withColumn("__v0", lit(1L))
-            .repartitionByRange(nPart, col("v"), col("id"))
-            .sortWithinPartitions(col("v"), col("id"))
-            .localCheckpoint())
-        val vIdx = sorted.schema.fieldIndex("__v0")
-        val p1 = tt("pass1")(
-          sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-            var s = 0L; it.foreach { r => if (!r.isNullAt(vIdx)) s += r.getLong(vIdx) }
-            Iterator((i, s))
-          }.collect())
-        println(s"Q63-SPLIT n=$n parts=${p1.length}")
-        val full = tt("full-equiDepth")(
-          graft.engine.Histogram.equiDepth(ev0, "value", "event_id", 8).collect())
-        println(s"Q63-SPLIT buckets=${full.length}")
-      }
-    }
-    names.filter(_.startsWith("plan:")).foreach { n =>
-      val q = n.stripPrefix("plan:")
-      println(s"===== PLAN $q =====")
-      println(qs(q)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
-    // ivf-split: where does the q235 lifecycle wall go? build (seed +
-    // assign + write), append (repair + alloc + assign + write),
-    // driftReport, rebuild (kmeans + staged swap), search.
-    names.filter(_ == "ivf-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"IVF-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"IVF-SPLIT run $run")
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val corpus = e.filter(col("vec_id") >= 5)
-        val cut = tt("cut agg")(
-          corpus.agg(expr("(max(vec_id) + 1) DIV 2")).collect()(0).getLong(0))
-        val scratch = java.nio.file.Files.createTempDirectory("graft_ivfsplit_").toFile
-        try {
-          val path = s"${scratch.getAbsolutePath}/idx"
-          tt("build")(graft.ops.IvfIndex.build(
-            corpus.filter(col("vec_id") < cut), "vec_id", "embedding",
-            path, nCells = 16))
-          tt("append")(graft.ops.IvfIndex.append(spark, path,
-            corpus.filter(col("vec_id") >= cut), "vec_id", "embedding"))
-          tt("driftReport")(graft.ops.IvfIndex.driftReport(spark, path,
-            threshold = 0.2).write.format("noop").mode("overwrite").save())
-          tt("rebuild")(graft.ops.IvfIndex.rebuild(spark, path,
-            nCells = 16, kmeansIterations = 2))
-          tt("search")(graft.ops.IvfIndex.search(spark, path,
-              e.filter(col("vec_id") < 5), "vec_id", "embedding",
-              k = 10, nprobe = 4)
-            .write.format("noop").mode("overwrite").save())
-        } finally org.apache.commons.io.FileUtils.deleteQuietly(scratch): Unit
-      }
-    }
-    // q83-split: where does pageRank's sf1 wall go? edge distinct+cut,
-    // degree join cut, node count, then each MM round.
-    names.filter(_ == "q83-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"Q83-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"Q83-SPLIT run $run")
-        val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        val edges = li.select(
-          concat(lit("p"), col("l_partkey").cast("string")).as("a"),
-          concat(lit("s"), col("l_suppkey").cast("string")).as("b"))
-        val sym = edges.unionByName(
-          edges.select(col("b").as("a"), col("a").as("b")))
-        val e = tt("distinct+cut")(
-          sym.filter(col("a").isNotNull && col("b").isNotNull)
-            .select(col("a").as("src"), col("b").as("dst"))
-            .distinct().transform(graft.ops.Checkpoints.cut))
-        val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        val ed = tt("ed join+repart+cut")(
-          e.join(deg, "src").repartition(col("src"))
-            .sortWithinPartitions("src").transform(graft.ops.Checkpoints.cut))
-        val nodes = tt("nodes distinct+cut")(
-          e.select(col("src").as("id"))
-            .unionByName(e.select(col("dst").as("id"))).distinct()
-            .transform(graft.ops.Checkpoints.cut))
-        val n = tt("node count")(nodes.count())
-        println(s"Q83-SPLIT nodes=$n edges=" + ed.count())
-        var ranks = nodes.withColumn("pr", lit(1.0 / n))
-        (1 to 3).foreach { it =>
-          ranks = tt(s"round $it") {
-            val contrib = ed.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-              .groupBy(col("dst").as("id"))
-              .agg(sum(floor(col("pr") / col("deg") * 1e15)
-                .cast("decimal(38,0)")).as("acc"))
-            val next = ranks.drop("pr").join(contrib, Seq("id"), "left")
-              .select(col("id"), (lit(0.15 / n) + lit(0.85) *
-                (coalesce(col("acc"), lit(java.math.BigDecimal.ZERO))
-                  .cast("double") / 1e15)).as("pr"))
-            val cut = if (it % 2 == 0 || it == 3)
-              next.transform(graft.ops.Checkpoints.cut) else next
-            cut.count(); cut
-          }
-        }
-      }
-    }
-    // q27-split: where does the LSH near-dup route's sf1 wall go?
-    // Replicates cosineNearDupBucketed's stages inline (route gate,
-    // norm checkpoint, bucket tables, occupancy counts, refined
-    // self-join + verify) so each is timed behind its own action.
-    names.filter(_ == "q27-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"Q27-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"Q27-SPLIT run $run")
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val dup = e.unionByName(
-          e.filter(col("vec_id") < 50).withColumn("vec_id", col("vec_id") + 10000))
-        val n = tt("route-gate count")(dup.select("vec_id").count())
-        val nBits = math.max(8, 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(1L, n / 64L - 1L))).toInt
-        val v = tt("norm checkpoint") {
-          val w = dup.filter(col("embedding").isNotNull)
-            .select(col("vec_id").as("id"), col("embedding").as("v"))
-            .withColumn("n", sqrt(aggregate(transform(col("v"),
-              x => x.cast("double") * x.cast("double")),
-              lit(0.0), (a, x) => a + x)))
-            .localCheckpoint()
-          w.count(); w
-        }
-        val dim = 64
-        val tabled = tt("bucket tables") {
-          val t0 = (0 until 4).map { t =>
-            val b1 = graft.ops.Similarity.hyperplaneBucket(col("v"), dim, nBits, 42L + t)
-            v.select(col("id"), lit(t).as("tbl"), b1.as("bucket"))
-          }.reduce(_ unionByName _)
-          t0.write.format("noop").mode("overwrite").save(); t0
-        }
-        tt("occupancy counts")(
-          tabled.groupBy("tbl", "bucket").agg(count(lit(1)).as("m"))
-            .agg(max("m"), sum(col("m") * (col("m") - 1) / 2)).collect())
-        tt("end-to-end op")(
-          graft.ops.Similarity.cosineNearDupBucketed(dup, "vec_id", "embedding",
-            0.99, nBits = nBits)
-            .write.format("noop").mode("overwrite").save())
-      }
-    }
-    // ivf-append-split: the persisted-index receipt — append cost vs
-    // full rebuild cost at this sf (append assigns ONLY the shard
-    // against frozen centroids; rebuild re-trains + re-assigns all).
-    names.filter(_ == "ivf-append-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"IVF-APPEND $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"IVF-APPEND run $run")
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val corpus = e.filter(col("vec_id") >= 5)
-        // daily-append shape: history = 95% of ids, shard = the top 5%
-        val cut = corpus.agg(expr("(max(vec_id) * 19 DIV 20)"))
-          .collect()(0).getLong(0)
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-ivf-probe").toString
-        tt("build history (95%)")(graft.ops.IvfIndex.build(
-          corpus.filter(col("vec_id") < cut), "vec_id", "embedding",
-          s"$base/i1", nCells = 16))
-        tt("append shard (5%)")(graft.ops.IvfIndex.append(spark,
-          s"$base/i1", corpus.filter(col("vec_id") >= cut),
-          "vec_id", "embedding"))
-        tt("full rebuild")(graft.ops.IvfIndex.build(
-          corpus, "vec_id", "embedding", s"$base/i2", nCells = 16))
-        tt("search appended")(graft.ops.IvfIndex.search(spark, s"$base/i1",
-          e.filter(col("vec_id") < 5), "vec_id", "embedding", 10, 4)
-          .write.format("noop").mode("overwrite").save())
-      }
-    }
-    // q195-split: where does the density-over-int8-IVF wall go at sf1?
-    names.filter(_ == "q195-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"Q195-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      (1 to 2).foreach { run =>
-        println(s"Q195-SPLIT run $run")
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val n = e.filter(col("embedding").isNotNull).count()
-        val q8 = tt("int8 quantize + checkpoint") {
-          val w = graft.ops.Quantize.int8Symmetric(e, "vec_id", "embedding")
-            .select(col("vec_id"),
-              transform(col("qvec"), _.cast("double")).as("__q8"))
-            .localCheckpoint()
-          w.count(); w
-        }
-        val nc = if (n <= 2048L) 16 else graft.ops.Quantize.nCentroidsFor(n)
-        val topk = tt("ivfTopK (inner op)") {
-          val t = graft.ops.Similarity.ivfTopK(q8, q8, "vec_id", "__q8",
-            "vec_id", "__q8", k = 11, nCentroids = nc, nprobe = 4)
-          t.write.format("noop").mode("overwrite").save(); t
-        }
-        tt("knnDensity read-off")(
-          graft.ops.Similarity.knnDensity(topk, k = 10)
-            .write.format("noop").mode("overwrite").save())
-        tt("full q195 registration")(
-          graft.SparkEntry.queries("q195_knn_density_ivf")(spark, sfDir)
-            .write.format("noop").mode("overwrite").save())
-      }
-    }
-    // parts — scan-partition counts per table (file bin-packing check)
-    names.filter(_ == "parts").foreach { _ =>
-      Seq("documents", "embeddings", "events", "orders", "lineitem",
-        "customer").foreach { t =>
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
-        println(s"PARTS $t partitions=${df.rdd.getNumPartitions}")
-      }
-    }
-    // time:qNNN — the bench's exact per-query path (registration fn +
-    // noop write + clearCache), 3 samples, for isolating in-suite walls
-    names.filter(_.startsWith("time:")).foreach { n =>
-      val q = n.stripPrefix("time:")
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        qs(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        // Bench's isolation rule: localCheckpoint blocks are plain
-        // persisted RDDs the ContextCleaner only reaps at GC time —
-        // at the 10x/100x trees they linger large enough to tax the
-        // next sample with GC pressure
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        val dt = (System.nanoTime() - t0) / 1e9
-        probeLog("time", sfDir, q, i, dt)
-        println(f"TIME $q run$i: $dt%.2f s")
-      }
-    }
-    // r16 verdict #6: state-at-scale A/B — where does RocksDB's
-    // disk-bounded state store beat the in-heap HDFS map? The sf0.1
-    // streaming A/B answered only the SMALL-state regime (RocksDB
-    // loses: per-trigger fixed costs dominate and the map fits in
-    // heap). This probe is the big-state regime the 100 TB admission
-    // pipeline actually lives in: a streaming dedup whose state grows
-    // with the CORPUS (one fingerprint per document ever admitted),
-    // not with the batch. `stream-state:N` runs a micro-batched
-    // dropDuplicates over N distinct long fingerprints (4 batches,
-    // 20% of each batch re-probing the previous batch's keys so state
-    // is read, not only written) under the CURRENT provider — run it
-    // once per GRAFT_STATE_STORE value and diff the walls. Wall +
-    // provider land in PROBE_LOG.jsonl.
-    names.filter(_.startsWith("stream-state:")).foreach { n =>
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{count => fcount, lit => flit}
-      val nKeys = n.stripPrefix("stream-state:").toInt
-      val nBatches = 4
-      val per = nKeys / nBatches
-      val batches = (0 until nBatches).map { b =>
-        val fresh = (0 until per).map(i => Tuple1(b.toLong * per + i))
-        val reprobe = if (b == 0) Seq.empty[Tuple1[Long]]
-          else (0 until per / 5).map(i => Tuple1((b - 1).toLong * per + i))
-        fresh ++ reprobe
-      }
-      val store = graft.streaming.StateStores.tag
-      val t0 = System.nanoTime()
-      val out = graft.SparkEntry.runMicroBatched(spark, Seq("id"), batches,
-        s"graft-state-ab-$store-$nKeys", Seq("n"),
-        org.apache.spark.sql.streaming.OutputMode.Update()) { stream =>
-        stream.dropDuplicates("id").groupBy().agg(fcount(flit(1)).as("n"))
-      }
-      val finalN = out.collect().map(_.getLong(0)).max
-      val dt = (System.nanoTime() - t0) / 1e9
-      probeLog("stream-state", sfDir, s"dedup$nKeys", 1, dt,
-        "state_store" -> s""""$store"""", "n_keys" -> nKeys.toString,
-        "final_distinct" -> finalN.toString)
-      println(f"STREAM-STATE store=$store keys=$nKeys wall=$dt%.2f s " +
-        s"final_distinct=$finalN")
-    }
-
-    // r11 verdict #2: materialize an sf1 tree (10x sf0.1) for the
-    // scale-law run. documents/embeddings grow CONTENT-disjoint (the
-    // shared rotation generators); lineitem copies shift every key
-    // column so joins/graphs/distincts grow 10x instead of stacking
-    // duplicates. Pass the SOURCE sf dir as args(0); writes to
-    // SPARK_GRAFT_SF1_DIR (default /tmp/graft_sf1).
-    names.filter(_ == "make-sf1").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      rotatedDocs(docs, 10).write.mode("overwrite")
-        .parquet(s"$out/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      rotatedEmb(emb, 64, 10).write.mode("overwrite")
-        .parquet(s"$out/embeddings.parquet")
-      // r12 verdict #1 (FULL-suite sf1): every table, not just the three
-      // heavy ones. Key shifts are CONSISTENT across tables (the same
-      // m*1e8 offset on every surrogate key), so fact-dim joins match
-      // within a copy-set and join/graph/distinct volume genuinely
-      // grows 10x instead of stacking duplicate keys. Timestamps stay
-      // unchanged — calendar-bounded frames (resample/retention spines)
-      // keep their size and the data becomes 10x DENSER per bucket,
-      // which is the realistic scale-up. events.value gets the per-copy
-      // epsilon so |distinct| — the KS/histogram cost driver — grows
-      // with the data. region/nation are fixed-size dims by definition.
-      def shifted(t: String, keys: Seq[String], eps: Option[String] = None)
-          : Unit = {
-        val base = spark.read.parquet(s"$sfDir/$t.parquet")
-        (0 until 10).map { m =>
-          val off = m * 100000000L
-          val k = keys.foldLeft(base)((d, c) => d.withColumn(c, col(c) + off))
-          eps.fold(k)(c => k.withColumn(c, col(c) + lit(m * 1.7e-4)))
-        }.reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(s"$out/$t.parquet")
-      }
-      shifted("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
-      shifted("orders", Seq("o_orderkey", "o_custkey"))
-      shifted("customer", Seq("c_custkey"))
-      shifted("supplier", Seq("s_suppkey"))
-      shifted("part", Seq("p_partkey"))
-      shifted("events", Seq("event_id", "user_id"), eps = Some("value"))
-      Seq("region", "nation").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet")
-          .write.mode("overwrite").parquet(s"$out/$t.parquet")
-      }
-      println(s"MAKE-SF1 wrote $out: " +
-        Seq("documents", "embeddings", "lineitem", "orders", "customer",
-          "supplier", "part", "events", "region", "nation").map { t =>
-          s"$t=${spark.read.parquet(s"$out/$t.parquet").count()}"
-        }.mkString(" "))
-    }
-
-    // r15 verdict #1: the SECOND untested decade — a 100x tree (pass
-    // sf0.1 as args(0) → "sf10") for the heavy-family scale receipt.
-    // Heavy tables only (documents, embeddings, lineitem): the sf10
-    // query set (q197/q198/q210, q125, q83, q142/q195, q230–q235)
-    // reads nothing else, and the full-table tree belongs to make-sf1.
-    // Same generators as sf1, factor 100: content rotations cycle at
-    // 26 (letters) / 64 (dims), so a 100x corpus carries genuine
-    // exact-duplicate families (~4 identical copies per doc) — the
-    // realistic shape of a crawl at that scale, and a deliberately
-    // HARDER dedup input than self-similar copies. lineitem shifts
-    // every key by m·1e8 per copy: joins/graphs/distincts grow 100x
-    // as 100 key-disjoint copy-sets, never stacked duplicate keys.
-    names.filter(_ == "make-sf10").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val out = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft_sf10")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      rotatedDocs(docs, 100).write.mode("overwrite")
-        .parquet(s"$out/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      rotatedEmb(emb, 64, 100).write.mode("overwrite")
-        .parquet(s"$out/embeddings.parquet")
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      (0 until 100).map { m =>
-        val off = m * 100000000L
-        Seq("l_orderkey", "l_partkey", "l_suppkey")
-          .foldLeft(li)((d, c) => d.withColumn(c, col(c) + off))
-      }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-      println(s"MAKE-SF10 wrote $out: " +
-        Seq("documents", "embeddings", "lineitem").map { t =>
-          s"$t=${spark.read.parquet(s"$out/$t.parquet").count()}"
-        }.mkString(" "))
-    }
-
-    // r11 verdict #2: headline heavy queries at sf0.1 vs sf1 — wall +
-    // shuffle bytes; sub-linear families should show it, anything
-    // super-linear is next round's list.
-    names.filter(_ == "sf1-scalelaw").foreach { _ =>
-      val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            shuffleBytes.addAndGet(
-              s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-          }
-        })
-      val heavy = Seq("q83_pagerank", "q169_hll_distinct", "q125",
-        "q197_max_dup_spans", "q198_exact_substr_rewrite",
-        "q210_decontaminate_rewrite", "q28", "q30_ann_ivf",
-        "q142_ivfpq", "q199", "q207", "q211", "q195",
-        // r16: the persisted-index lifecycle family joins the scale
-        // receipt (build/append/CDC/refined/rebuild at both decades)
-        "q230", "q231", "q232", "q233", "q234", "q235")
-      val only = sys.env.get("SPARK_GRAFT_SF1_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      val sel = qs.keys.filter(n => heavy.exists(n.startsWith))
-        .filter(n => only.forall(_.exists(n.startsWith))).toSeq.sorted
-      sel.foreach { name =>
-        val rows = Seq(sfDir, sf1).map { dir =>
-          Thread.sleep(500); shuffleBytes.set(0L)
-          val t0 = System.nanoTime()
-          try qs(name)(spark, dir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[sf1] $name@$dir failed: ${e.getMessage}")
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          Thread.sleep(1500)
-          (dt, shuffleBytes.get())
-        }
-        val (t01, b01) = rows(0); val (t1, b1) = rows(1)
-        // "lo" = args(0)'s tree, "hi" = SPARK_GRAFT_SF1_DIR — the probe
-        // compares ANY adjacent decade pair (sf0.1→sf1, sf1→sf10)
-        probeLog("sf1-scalelaw", sfDir, name, 1, t01,
-          "shuffle_mb" -> f"${b01 / 1e6}%.1f")
-        probeLog("sf1-scalelaw", sf1, name, 1, t1,
-          "shuffle_mb" -> f"${b1 / 1e6}%.1f")
-        println(f"SF1-SCALELAW $name%-28s lo $t01%7.2f s ${b01 / 1e6}%9.1f MB" +
-          f" | hi $t1%7.2f s ${b1 / 1e6}%9.1f MB | wall x${t1 / math.max(0.01, t01)}%.1f" +
-          f" bytes x${b1.toDouble / math.max(1L, b01)}%.1f")
-      }
-    }
-
-    // Where does q195's sf1 wall go? cell-size histogram + per-stage
-    // counts/times of the int8->IVF self-retrieval.
-    names.filter(_ == "q195-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val n = e.filter(col("embedding").isNotNull).count()
-      val kC = graft.ops.Quantize.nCentroidsFor(n)
-      println(s"Q195-SPLIT n=$n nCentroids=$kC")
-      def tt[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"Q195-SPLIT $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      val q8 = graft.ops.Quantize.int8Symmetric(e, "vec_id", "embedding")
-        .select(col("vec_id"),
-          transform(col("qvec"), _.cast("double")).as("__q8"))
-        .localCheckpoint()
-      val cents = tt("centroids")(
-        q8.orderBy(col("vec_id")).limit(kC)
-          .select(col("vec_id").as("centroid_id"), col("__q8").as("cv"))
-          .localCheckpoint())
-      val assigned = tt("assign")(
-        graft.ops.Similarity.assignToCentroid(q8, "vec_id", "__q8",
-          cents, "centroid_id", "cv").localCheckpoint())
-      val hist = assigned.groupBy("centroid_id").count()
-        .agg(max("count"), expr("percentile(count, 0.5)"), sum("count"))
-        .head()
-      println(s"Q195-SPLIT cells: max=${hist.get(0)} median=${hist.get(1)} " +
-        s"total=${hist.get(2)}")
-      val top = tt("ivfTopK")(
-        graft.ops.Similarity.ivfTopK(q8, q8, "vec_id", "__q8",
-          "vec_id", "__q8", k = 11, nCentroids = kC, nprobe = 4)
-          .count())
-      println(s"Q195-SPLIT topk rows=$top")
-    }
-
-    // Where does q133's wall go? prep (base quantile cuts + bin
-    // probabilities + live collect) vs the 4-trigger stream itself.
-    names.filter(_ == "q133-split").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      (1 to 3).foreach { run =>
-        val t0 = System.nanoTime()
-        val bins = 10
-        val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-        val ev = (ev0.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            ev0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case _ => ev0.withColumn("ts", col("ts").cast("timestamp"))
-        }).filter(col("value").isNotNull)
-        val split = lit("2024-01-08 00:00:00").cast("timestamp")
-        val base = ev.filter(col("ts") < split)
-          .select(col("value").cast("double").as("v"))
-        val nBase = base.count()
-        val t1 = System.nanoTime()
-        val cuts = graft.engine.Quantiles.exactExpr(base, col("v"),
-          (1 until bins).map(_.toDouble / bins), nBase)
-        val t2 = System.nanoTime()
-        val binE = cuts.foldLeft(lit(0)) { (acc, c) =>
-          acc + when(col("v") >= lit(c), 1).otherwise(0) }
-        val baseCounts = base.groupBy(binE.as("bin"))
-          .agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val probs = (0 until bins).map(i =>
-          (baseCounts.getOrElse(i, 0L) + 0.5) / (nBase + 0.5 * bins))
-        val t3 = System.nanoTime()
-        val live = ev.filter(col("ts") >= split)
-          .withColumn("__b",
-            when(col("ts") < lit("2024-01-15 00:00:00").cast("timestamp"), 0)
-            .when(col("ts") < lit("2024-01-22 00:00:00").cast("timestamp"), 1)
-            .otherwise(2))
-          .select(col("event_id"), col("ts"),
-            col("value").cast("double").as("value"), col("__b"))
-          .as[(Long, java.sql.Timestamp, Double, Int)].collect()
-        val batches = (0 to 2).map(b => live.toSeq.filter(_._4 == b)) :+
-          Seq((-1L, java.sql.Timestamp.valueOf("2024-02-05 00:00:00"), 0.0, 3))
-        val t4 = System.nanoTime()
-        def streamOver(bs: Seq[Seq[(Long, java.sql.Timestamp, Double, Int)]]): Long =
-          graft.SparkEntry.runMicroBatched(spark,
-            Seq("event_id", "ts", "value", "batch"), bs,
-            "probe-q133", Seq("window_start", "n", "psi")) { stream =>
-            graft.streaming.StreamingProfile.windowedPsi(stream, "ts", "value",
-              cuts, probs, windowDur = "24 hours", watermark = "24 hours")
-          }.count()
-        val n = streamOver(batches)
-        val t5 = System.nanoTime()
-        val thin = batches.map(_.zipWithIndex.collect {
-          case (r, i) if i % 100 == 0 => r })
-        streamOver(thin)
-        val t6 = System.nanoTime()
-        println(f"Q133-SPLIT run$run: count ${(t1 - t0) / 1e9}%.2f " +
-          f"quantiles ${(t2 - t1) / 1e9}%.2f bins ${(t3 - t2) / 1e9}%.2f " +
-          f"collect ${(t4 - t3) / 1e9}%.2f stream ${(t5 - t4) / 1e9}%.2f " +
-          f"thin-stream ${(t6 - t5) / 1e9}%.2f ($n rows, ${live.length} live)")
-      }
-    }
-    // r11 verdict #5 receipt: prune ratio at 10x the single-filter cap's
-    // key budget (2^27 slots / 8 slots-per-key = ~16.8M keys). Driver-
-    // only: the filter kernel is identical on executors; what's under
-    // test is the geometry, not the treeReduce.
-    names.filter(_ == "bloom-shard").foreach { _ =>
-      @inline def mix(i: Long): Long = { // splitmix64: deterministic keys
-        var z = i + 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
-      val n = (1L << 27) / 8 * 10 // 167,772,160 singleton adds
-      def fill(add: Long => Unit): Double = {
-        val t0 = System.nanoTime()
-        var i = 0L
-        while (i < n) { add(mix(i)); i += 1 }
-        (System.nanoTime() - t0) / 1e9
-      }
-      def fpRate(might: Long => Boolean): Double = {
-        var hits = 0L; var i = 0L
-        while (i < 2000000L) { if (might(mix(i * 83L % n))) hits += 1; i += 1 }
-        hits / 2e6
-      }
-      val single = new graft.ops.DupBloom(27)
-      val tS = fill(single.add)
-      val fpS = fpRate(single.mightBeDup)
-      val (nsh, ls) = graft.ops.ShardedDupBloom.geometryFor(n)
-      val sharded = new graft.ops.ShardedDupBloom(nsh, ls)
-      val tH = fill(sharded.add)
-      val fpH = fpRate(sharded.mightBeDup)
-      // no-false-negative sanity on a re-added slice
-      var i = 0L
-      while (i < 100000L) { sharded.add(mix(i)); i += 1 }
-      var fn = 0L; i = 0L
-      while (i < 100000L) { if (!sharded.mightBeDup(mix(i))) fn += 1; i += 1 }
-      println(f"BLOOM-SHARD n=$n: capped single 2^27 fp=$fpS%.4f " +
-        f"(${tS}%.1f s) vs sharded ${nsh}x2^$ls fp=$fpH%.4f (${tH}%.1f s); " +
-        s"false negatives after re-add: $fn")
-    }
-
-    // r16 sf10 adjudication receipt: the duplicated-window fraction of
-    // a documents tree — the denominator behind q197/q198's wall at a
-    // given scale (cost ∝ windows + duplicated windows + span rows; a
-    // tree whose dup fraction approaches 1, like sf10's 26-letter
-    // rotation cycle at 100 copies, grows OUTPUT superlinearly while
-    // the kernel stays linear in its own input+output).
-    names.filter(_ == "dupfrac").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val minLen = 40
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").as("id"), col("text").cast("string").as("text"))
-        .filter(col("text").isNotNull && length(col("text")) >= minLen)
-      val wins = base.select(col("id"),
-          explode(expr(s"sequence(0, CAST(length(text) AS INT) - $minLen, 1)")).as("off"),
-          expr(s"xxhash64(substring(text, off + 1, $minLen))").as("fp"))
-      val agg = wins.groupBy("fp").agg(count(lit(1)).as("occ"))
-        .agg(sum("occ").as("wins"),
-          sum(when(col("occ") > 1, col("occ")).otherwise(0L)).as("dupwins"))
-        .collect()(0)
-      val (w, d) = (agg.getLong(0), agg.getLong(1))
-      val spans = graft.ops.Corpus.maxDupSpansFast(base, "id", "text", minLen).count()
-      println(f"DUPFRAC $sfDir windows=$w dup_windows=$d frac=${d.toDouble / w}%.4f span_rows=$spans")
-    }
-
-    // r11 verdict #1 receipt: lineDedup's gated routes on the grown
-    // corpus — boilerplate injected so the duplicated-line set is
-    // non-trivial at every multiplier (each rotated copy-set carries
-    // its own translated boilerplate, still >= minDocs within the set).
-    names.filter(_ == "linededup-scalelaw").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            shuffleBytes.addAndGet(
-              s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-          }
-        })
-      def measure(f: => Long): (Long, Long, Double) = {
-        Thread.sleep(500); shuffleBytes.set(0L)
-        val t0 = System.nanoTime()
-        val n = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1500)
-        (n, shuffleBytes.get(), dt)
-      }
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("text").isNotNull)
-        .withColumn("text", concat(col("text"),
-          when(col("doc_id") % 2 === 0, lit("\nSubscribe To Our Newsletter"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 3 === 0,
-            lit("\nCopyright 2024 Example Corp\nAll Rights Reserved"))
-            .otherwise(lit(""))))
-      def removed(df: org.apache.spark.sql.DataFrame, maxB: Long): Long =
-        graft.ops.Corpus.lineDedup(df, "doc_id", "text", minDocs = 3, maxB)
-          .agg(sum("n_lines_removed")).head().getLong(0)
-      removed(rotatedDocs(docs, 1).localCheckpoint(), 1000000L) // warm
-      Seq(1, 4, 10).foreach { m =>
-        val d = rotatedDocs(docs, m).localCheckpoint()
-        val (rb, bb, tb) = measure(removed(d, 1000000L)) // broadcast route
-        val (rs, bs, ts) = measure(removed(d, 0L))       // bloom + shuffled
-        println(f"LINEDEDUP-SCALELAW x$m: broadcast $tb%.2f s ${bb / 1e6}%.1f MB " +
-          f"($rb removed) vs bloomed $ts%.2f s ${bs / 1e6}%.1f MB ($rs removed)" +
-          (if (rb != rs) "  ROUTE MISMATCH!" else ""))
-      }
-    }
-
-    names.filter(_ == "entry").foreach { _ =>
-      val rows = graft.SparkEntry.entry(spark).collect()
-      println(s"PROBE entry: ${rows.length} rows")
-      rows.foreach(r => println(s"  $r"))
-    }
-    names.filter(qs.contains).foreach { n =>
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        val cnt = qs(n)(spark, sfDir).count()
-        println(f"PROBE $n run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($cnt rows)")
-      }
+      case n => System.err.println(s"[probe] unknown mode or query: $n")
     }
     spark.stop()
+  }
+
+  /** Bench's exact per-query step, 3 samples, for isolating in-suite
+    * walls. */
+  private def time(spark: SparkSession, sfDir: String, q: String,
+                   fn: Bench.Query): Unit =
+    (1 to 3).foreach { i =>
+      val dt = Bench.runIsolated(spark, sfDir, fn).fold(e => throw e, identity)
+      probeLog("time", sfDir, q, i, dt)
+      println(f"TIME $q run$i: $dt%.2f s")
+    }
+
+  /** State-at-scale A/B — where does RocksDB's disk-bounded state store
+    * beat the in-heap HDFS map? A streaming dedup whose state grows
+    * with the CORPUS (one fingerprint per key ever admitted), not with
+    * the batch: a micro-batched dropDuplicates over nKeys distinct
+    * long keys (4 batches, 20% of each batch re-probing the previous
+    * batch's keys so state is read, not only written) under the
+    * CURRENT provider — run it once per GRAFT_STATE_STORE value and
+    * diff the walls. */
+  private def streamState(spark: SparkSession, sfDir: String, nKeys: Int): Unit = {
+    import spark.implicits._
+    val nBatches = 4
+    val per = nKeys / nBatches
+    val batches = (0 until nBatches).map { b =>
+      val fresh = (0 until per).map(i => Tuple1(b.toLong * per + i))
+      val reprobe = if (b == 0) Seq.empty[Tuple1[Long]]
+        else (0 until per / 5).map(i => Tuple1((b - 1).toLong * per + i))
+      fresh ++ reprobe
+    }
+    val store = StateStores.tag
+    val t0 = System.nanoTime()
+    val out = MicroBatchHarness.run(spark, Seq(Feed(Seq("id"), batches)),
+        s"graft-state-ab-$store-$nKeys", Seq("n"), OutputMode.Update()) {
+      case Seq(stream) =>
+        stream.dropDuplicates("id").groupBy().agg(count(lit(1)).as("n"))
+    }
+    val finalN = out.collect().map(_.getLong(0)).max
+    val dt = (System.nanoTime() - t0) / 1e9
+    probeLog("stream-state", sfDir, s"dedup$nKeys", 1, dt,
+      "state_store" -> s""""$store"""", "n_keys" -> nKeys.toString,
+      "final_distinct" -> finalN.toString)
+    println(f"STREAM-STATE store=$store keys=$nKeys wall=$dt%.2f s " +
+      s"final_distinct=$finalN")
+  }
+
+  /** A 10x tree of every table, written to SPARK_GRAFT_SF1_DIR (default
+    * /tmp/graft_sf1). documents/embeddings grow CONTENT-disjoint (the
+    * rotation generators). Key shifts are CONSISTENT across tables
+    * (the same m*1e8 offset on every surrogate key), so fact-dim joins
+    * match within a copy-set and join/graph/distinct volume genuinely
+    * grows 10x instead of stacking duplicate keys. Timestamps stay
+    * unchanged — calendar-bounded frames (resample/retention spines)
+    * keep their size and the data becomes 10x DENSER per bucket, which
+    * is the realistic scale-up. events.value gets a per-copy epsilon so
+    * |distinct| — the KS/histogram cost driver — grows with the data.
+    * region/nation are fixed-size dims by definition. */
+  private def makeSf1(spark: SparkSession, sfDir: String): Unit = {
+    val out = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    rotatedDocs(docs, 10).write.mode("overwrite")
+      .parquet(s"$out/documents.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    rotatedEmb(emb, 64, 10).write.mode("overwrite")
+      .parquet(s"$out/embeddings.parquet")
+    def shifted(t: String, keys: Seq[String], eps: Option[String] = None)
+        : Unit = {
+      val base = spark.read.parquet(s"$sfDir/$t.parquet")
+      (0 until 10).map { m =>
+        val off = m * 100000000L
+        val k = keys.foldLeft(base)((d, c) => d.withColumn(c, col(c) + off))
+        eps.fold(k)(c => k.withColumn(c, col(c) + lit(m * 1.7e-4)))
+      }.reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$out/$t.parquet")
+    }
+    shifted("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
+    shifted("orders", Seq("o_orderkey", "o_custkey"))
+    shifted("customer", Seq("c_custkey"))
+    shifted("supplier", Seq("s_suppkey"))
+    shifted("part", Seq("p_partkey"))
+    shifted("events", Seq("event_id", "user_id"), eps = Some("value"))
+    Seq("region", "nation").foreach { t =>
+      spark.read.parquet(s"$sfDir/$t.parquet")
+        .write.mode("overwrite").parquet(s"$out/$t.parquet")
+    }
+    println(s"MAKE-SF1 wrote $out: " +
+      Seq("documents", "embeddings", "lineitem", "orders", "customer",
+        "supplier", "part", "events", "region", "nation").map { t =>
+        s"$t=${spark.read.parquet(s"$out/$t.parquet").count()}"
+      }.mkString(" "))
+  }
+
+  /** A 100x tree of the heavy tables only (documents, embeddings,
+    * lineitem — all the sf10 query set reads), written to
+    * SPARK_GRAFT_SF10_DIR (default /tmp/graft_sf10). Same generators as
+    * make-sf1: content rotations cycle at 26 (letters) / 64 (dims), so
+    * a 100x corpus carries genuine exact-duplicate families (~4
+    * identical copies per doc) — the realistic shape of a crawl at
+    * that scale. lineitem shifts every key by m·1e8 per copy. */
+  private def makeSf10(spark: SparkSession, sfDir: String): Unit = {
+    val out = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft_sf10")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    rotatedDocs(docs, 100).write.mode("overwrite")
+      .parquet(s"$out/documents.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    rotatedEmb(emb, 64, 100).write.mode("overwrite")
+      .parquet(s"$out/embeddings.parquet")
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    (0 until 100).map { m =>
+      val off = m * 100000000L
+      Seq("l_orderkey", "l_partkey", "l_suppkey")
+        .foldLeft(li)((d, c) => d.withColumn(c, col(c) + off))
+    }.reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
+    println(s"MAKE-SF10 wrote $out: " +
+      Seq("documents", "embeddings", "lineitem").map { t =>
+        s"$t=${spark.read.parquet(s"$out/$t.parquet").count()}"
+      }.mkString(" "))
   }
 }

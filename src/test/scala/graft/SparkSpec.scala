@@ -6,31 +6,11 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM via Test/fork). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming checkpoint logs (offset/commit WAL, state-store
-      // metadata) ride the FileContext API; its default local impl
-      // shadows every write with a .crc file — measured ~30 ms per
-      // walCommit/commitOffsets ON TMPFS. RawLocalFs drops the
-      // checksum shadow for FileContext users ONLY (parquet and all
-      // data IO use the FileSystem API, untouched); harness
-      // checkpoints are deleted-after-run scratch, and production
-      // points checkpoints at durable storage with its own integrity.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.ui.enabled", "false")
-      // keep saveAsTable output (BucketingSpec) out of the repo tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local("4",
+    "spark.app.name" -> "graft-test",
+    // keep saveAsTable output (BucketingSpec) out of the repo tree
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

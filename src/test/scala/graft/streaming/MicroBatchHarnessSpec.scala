@@ -1,25 +1,26 @@
 package graft.streaming
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
+import graft.streaming.MicroBatchHarness.Feed
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** End-to-end guards for the shared micro-batch oracle harness —
-  * specifically the empty-sink path: a streaming query whose every
-  * batch is filtered away contributes NO rows to the driver buffer,
-  * and the result must be an empty, correctly-schema'd frame (the
-  * schema pinned from the built plan, since nothing was emitted to
-  * infer it from). */
+/** End-to-end guards for the shared micro-batch oracle harness: the
+  * empty-sink path (a streaming query whose every batch is filtered
+  * away contributes NO rows, and the result must be an empty,
+  * correctly-schema'd frame — the schema pinned from the built plan,
+  * since nothing was emitted to infer it from), both sinks, the
+  * no-data-batch skip and the checkpoint leak guard. */
 class MicroBatchHarnessSpec extends SparkSpec {
   import spark.implicits._
 
-  test("runMicroBatched: all-filtered stream yields empty frame with pinned schema") {
+  test("MicroBatchHarness: all-filtered stream yields empty frame with pinned schema") {
     val batches = Seq(
       Seq((1L, "a"), (2L, "b")),
       Seq((3L, "c")),
       Seq.empty[(Long, String)])
-    val out = SparkEntry.runMicroBatched(spark, Seq("id", "s"), batches,
-      "graft-test-empty", Seq("id", "s"), OutputMode.Append()) { stream =>
+    val out = MicroBatchHarness.run(spark, Seq(Feed(Seq("id", "s"), batches)),
+      "graft-test-empty", Seq("id", "s"), OutputMode.Append()) { case Seq(stream) =>
       stream.filter(col("id") < 0) // nothing ever survives
     }
     assert(out.count() === 0L)
@@ -28,26 +29,62 @@ class MicroBatchHarnessSpec extends SparkSpec {
     assert(out.schema("s").dataType.typeName === "string")
   }
 
-  test("runMicroBatched: non-empty stream round-trips rows and column subset") {
+  test("MicroBatchHarness: non-empty stream round-trips rows and column subset") {
     val batches = Seq(Seq((1L, "a"), (2L, "b")), Seq((3L, "c")))
-    val out = SparkEntry.runMicroBatched(spark, Seq("id", "s"), batches,
-      "graft-test-rows", Seq("id"), OutputMode.Append()) { stream =>
+    val out = MicroBatchHarness.run(spark, Seq(Feed(Seq("id", "s"), batches)),
+      "graft-test-rows", Seq("id"), OutputMode.Append()) { case Seq(stream) =>
       stream.filter(col("id") =!= 2L)
     }
     assert(out.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L))
     assert(out.columns.toSeq === Seq("id"))
   }
 
-  test("runMicroBatched2: all-filtered two-source stream yields empty frame") {
+  test("MicroBatchHarness: all-filtered two-source stream yields empty frame") {
     val a = Seq(Seq((1L, 10L)), Seq((2L, 20L)))
     val b = Seq(Seq((1L, 100L)), Seq.empty[(Long, Long)])
-    val out = SparkEntry.runMicroBatched2(spark,
-      Seq("id", "va"), a, Seq("id", "vb"), b,
-      "graft-test-empty2", Seq("id", "va")) { (sa, _) =>
+    val out = MicroBatchHarness.run(spark,
+      Seq(Feed(Seq("id", "va"), a), Feed(Seq("id", "vb"), b)),
+      "graft-test-empty2", Seq("id", "va")) { case Seq(sa, _) =>
       sa.filter(col("va") < 0)
     }
     assert(out.count() === 0L)
     assert(out.columns.toSeq === Seq("id", "va"))
+  }
+
+  test("noop sink conf: empty frame with pinned schema; driver sink returns the rows") {
+    val batches = Seq(Seq((1L, "a"), (2L, "b")), Seq((3L, "c")))
+    def run(s: org.apache.spark.sql.SparkSession) =
+      MicroBatchHarness.run(s, Seq(Feed(Seq("id", "s"), batches)),
+        "graft-test-sink", Seq("id", "s"),
+        batchIdCol = Some("batch_id")) { case Seq(stream) => stream }
+    // a child session: its conf is its own, the shared session's
+    // stays on the default driver sink
+    val noopSession = spark.newSession()
+    noopSession.conf.set(MicroBatchHarness.SinkConf, "noop")
+    val noop = run(noopSession)
+    assert(noop.count() === 0L)
+    assert(noop.schema.map(f => (f.name, f.dataType.typeName)) ===
+      Seq(("id", "long"), ("s", "string"), ("batch_id", "long")))
+    val driver = run(spark)
+    assert(driver.schema === noop.schema)
+    assert(driver.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .sorted.toSeq === Seq((1L, "a", 0L), (2L, "b", 0L), (3L, "c", 1L)))
+    noopSession.conf.set(MicroBatchHarness.SinkConf, "bogus")
+    intercept[IllegalArgumentException](run(noopSession))
+  }
+
+  test("checkpoint dir is removed when build throws") {
+    val prefix = s"graft-test-leak-${java.util.UUID.randomUUID()}"
+    def leaked = Option(MicroBatchHarness.scratchRoot.listFiles())
+      .getOrElse(Array.empty[java.io.File]).filter(_.getName.startsWith(prefix))
+    val err = intercept[IllegalStateException] {
+      MicroBatchHarness.run(spark,
+        Seq(Feed(Seq("id"), Seq(Seq(Tuple1(1L))))), prefix, Seq("id")) {
+        _ => throw new IllegalStateException("build failed")
+      }
+    }
+    assert(err.getMessage === "build failed")
+    assert(leaked.isEmpty, s"leaked: ${leaked.mkString(", ")}")
   }
 
   test("no-data-batch skip: fewer triggers, identical emitted union for a watermarked append agg") {
@@ -76,14 +113,12 @@ class MicroBatchHarnessSpec extends SparkSpec {
       Seq((3L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"))),
       Seq((4L, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"))))
     def run(skip: Boolean): (Int, Seq[(Long, Long)]) = {
-      val prev = SparkEntry.skipNoDataBatches
-      SparkEntry.skipNoDataBatches = skip
       batchCounter.set(0)
       spark.streams.addListener(listener)
       try {
-        val out = SparkEntry.runMicroBatched(spark, Seq("id", "ts"),
-          batches, "graft-test-nodata", Seq("wstart", "n"),
-          OutputMode.Append()) { stream =>
+        val out = MicroBatchHarness.run(spark, Seq(Feed(Seq("id", "ts"), batches)),
+          "graft-test-nodata", Seq("wstart", "n"),
+          OutputMode.Append(), skipNoDataBatches = skip) { case Seq(stream) =>
           stream.withWatermark("ts", "1 second")
             .groupBy(window(col("ts"), "10 seconds").as("w"))
             .agg(count(lit(1)).as("n"))
@@ -103,10 +138,7 @@ class MicroBatchHarnessSpec extends SparkSpec {
         }) Thread.sleep(50)
         (batchCounter.get(),
           out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
-      } finally {
-        spark.streams.removeListener(listener)
-        SparkEntry.skipNoDataBatches = prev
-      }
+      } finally spark.streams.removeListener(listener)
     }
     val (nSkip, rowsSkip) = run(skip = true)
     val (nFull, rowsFull) = run(skip = false)
@@ -130,9 +162,9 @@ class MicroBatchHarnessSpec extends SparkSpec {
     val rnd = new scala.util.Random(67)
     val rows = (0 until 90).map(_ => (rnd.nextDouble(), rnd.nextInt(2)))
     def run(splits: Seq[Seq[(Double, Int)]]): Seq[(Int, Long, Double, Double, Double)] = {
-      val perTrigger = SparkEntry.runMicroBatched(spark, Seq("p", "c"),
-          splits, "graft-test-calib", Seq("bin", "n", "sp", "sc"),
-          OutputMode.Update()) { stream =>
+      val perTrigger = MicroBatchHarness.run(spark, Seq(Feed(Seq("p", "c"), splits)),
+          "graft-test-calib", Seq("bin", "n", "sp", "sc"),
+          OutputMode.Update()) { case Seq(stream) =>
         val (n, sp, sc) = graft.ops.Drift.calibrationAggs(col("p"), col("c"))
         stream.groupBy(graft.ops.Drift.calibrationBin(col("p"), 10).as("bin"))
           .agg(n.as("n"), sp.as("sp"), sc.as("sc"))
