@@ -58,7 +58,7 @@ object Bench {
     } catch { case _: Throwable => () }
     // local debugging aid: SPARK_GRAFT_ONLY=q32,q33 restricts the run
     // (absent in the driver environment — full set runs there)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = Session.only
 
     def timeOne(name: String, fn: Query): Option[Double] =
       runIsolated(spark, sfDir, fn) match {
@@ -160,7 +160,7 @@ object Bench {
     // per query: its seconds, or None when any sample threw — a failed
     // query is reported by name and never timed as if it had run
     val measured: Seq[(String, Option[Double])] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+      .filter { case (n, _) => Session.selects(only, n) }
       .map { case (name, fn) =>
       val first = timeOne(name, fn)
       val hist = histMedian.get(name)

@@ -9,6 +9,19 @@ object Session {
   /** Local cores from SPARK_GRAFT_CPUS (default 4). */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  /** Query-name prefixes from SPARK_GRAFT_ONLY, the dev-run filter of
+    * Bench and Verify; None when unset (the full suite runs). */
+  def only: Option[Set[String]] = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** Comma-separated prefixes, each trimmed; empty entries are dropped,
+    * so a stray comma can never select every query. */
+  private[graft] def parseOnly(raw: Option[String]): Option[Set[String]] =
+    raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** Whether `name` runs under the filter `only`. */
+  def selects(only: Option[Set[String]], name: String): Boolean =
+    only.forall(_.exists(name.startsWith))
+
   /** Builds (or returns the running) local session on `cpus` cores.
     * `conf` pairs are applied after the shared settings, so a caller
     * can add keys or override one. */

@@ -1,18 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * Oracle.sql as oracle_sql.json, for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q55,q56 restricts the dump (dev loop; the driver
-    // leaves it unset and dumps everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
+    // SPARK_GRAFT_ONLY=q55,q56 restricts the dump (dev loop; unset
+    // dumps everything).
+    val only = Session.only
+    def selected(name: String): Boolean = Session.selects(only, name)
     val failures = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq
       .flatMap { case (name, fn) =>
         try {
@@ -36,7 +34,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = Oracle.sql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Provenance stamp (r16 verdict #3): the effective state-store

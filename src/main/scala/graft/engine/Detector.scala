@@ -378,14 +378,6 @@ object Detector {
     else Text
   }
 
-  // timing hooks for graft.tools.Probe (phase-level attribution only)
-  private[graft] def signalsOnlyForProbe(df: DataFrame): Unit = {
-    val exprs = df.schema.fields.toSeq.flatMap(f => signalExprs(f, DetectorConfig()))
-    df.agg(exprs.head, exprs.tail: _*).collect()
-  }
-  private[graft] def distinctsOnlyForProbe(df: DataFrame): Unit =
-    distinctCounts(df, df.schema.fields.toSeq, DetectorConfig())
-
   /** Detect all columns of a table: one scan + driver fold. */
   def detect(df: DataFrame, cfg: DetectorConfig = DetectorConfig(),
              columns: Seq[String] = Nil): Map[String, (SemanticType, ColumnSignals)] = {

@@ -238,14 +238,7 @@ object TextProfiler {
     // 16 parts, sf1 ratio ×4.9) — √n picks both regimes correctly and
     // keeps ship volume growing sublinearly on a real cluster. The
     // count is one narrow scan, trivial next to the d² row work.
-    // validated override: a non-numeric or < 2 value must fail HERE
-    // with a usable message, not deep inside repartition
-    val accParts = sys.env.get("GRAFT_PROFILE_PARTS").map { raw =>
-      val v = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"GRAFT_PROFILE_PARTS must be an integer >= 2, got '$raw'"))
-      require(v >= 2, s"GRAFT_PROFILE_PARTS must be >= 2, got $v")
-      v
-    }.getOrElse {
+    val accParts = {
       val cores = spark.sparkContext.defaultParallelism
       if (d < 1024) math.max(2, cores / 2)
       else {
@@ -257,15 +250,6 @@ object TextProfiler {
         math.min(cores.toLong,
           math.max(2L, math.round(math.sqrt(nRows / 20.0)))).toInt
       }
-    }
-    // stage telemetry (stderr, opt-in): where does a wide profile spend
-    // its time — the distributed accumulate or the driver factorization?
-    val timing = sys.env.contains("GRAFT_PROFILE_TIMING")
-    var tMark = System.nanoTime()
-    def mark(stage: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[profile] $stage ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
     }
     val rdd0 = entries.rdd
     // repartition, not coalesce: a single-file table arrives as ONE
@@ -303,7 +287,6 @@ object TextProfiler {
         Iterator.single(a)
       }
       .treeAggregate(new Acc(d))((a, b) => a.merge(b), (a, b) => a.merge(b))
-    mark("treeAggregate")
     if (acc.n == 0) return None
 
     val n = acc.n.toDouble
@@ -340,9 +323,7 @@ object TextProfiler {
     i = 0; while (i < d) { trace += cov(i * d + i); i += 1 }
     val jittered = cov.clone()
     i = 0; while (i < d) { jittered(i * d + i) += 1e-6; i += 1 }
-    mark("cov-build")
     val chol = cholesky(jittered, d)
-    mark("cholesky")
     // logdet from the Cholesky we already have — O(d) instead of a
     // second O(d³) LU like np.linalg.det (SURVEY.md §4.4)
     val logDet = chol.map(l => 2.0 * (0 until d).map(j => math.log(l(j)(j))).sum)

@@ -2,12 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract guard over the query roster itself: the
-  * correctness gate hashes `queries` against `oracleSql` by NAME, so
-  * a typo'd key silently downgrades a row to "no check" and an
-  * orphaned oracle checks nothing. Registration mistakes should fail
-  * HERE, in a millisecond spec, not as a missing row in the round
-  * artifact. */
+/** Guard over the query roster itself: the correctness gate pairs
+  * `SparkEntry.queries` with `Oracle.sql` by NAME, so a typo'd key
+  * silently downgrades a row to "no check" and an orphaned oracle
+  * checks nothing. Registration mistakes should fail HERE, in a
+  * millisecond spec, not as a missing row in the Verify dump. */
 class RosterSpec extends AnyFunSuite {
 
   // the rows-only exemptions the contract grants (non-SQL-expressible
@@ -16,14 +15,14 @@ class RosterSpec extends AnyFunSuite {
 
   test("every registered query has an oracle, except the declared rows-only set") {
     val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
+    val o = Oracle.sql.keySet
     val missing = q -- o -- rowsOnly
     assert(missing.isEmpty,
       s"queries without an oracle (and not declared rows-only): $missing")
   }
 
   test("no orphaned oracles: every oracle key is a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphans = Oracle.sql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries with no query: $orphans")
   }
 
@@ -33,7 +32,7 @@ class RosterSpec extends AnyFunSuite {
   }
 
   test("oracle SQL strings are non-empty and single-statement") {
-    SparkEntry.oracleSql.foreach { case (name, sql) =>
+    Oracle.sql.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, s"$name: empty oracle")
       // a statement-level semicolon would truncate the driver's DuckDB
       // execute; semicolons INSIDE string literals (regex char
