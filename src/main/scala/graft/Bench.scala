@@ -415,5 +415,8 @@ object Bench {
     spark.stop()
     println(stdoutLine)
     System.out.flush()
+    // a throwing query fails the run (after its record is written), so
+    // the regression gate cannot pass on a suite that did not complete
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

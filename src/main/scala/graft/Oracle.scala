@@ -156,9 +156,6 @@ object Oracle {
   private def withDupsSql(table: String, idCol: String, below: Long, shift: Long): String =
     s"(SELECT * FROM $table UNION ALL SELECT ${"*"} REPLACE ($idCol + $shift AS $idCol) FROM $table WHERE $idCol < $below)"
 
-  // stopword IN-list fragments
-  private def inList(words: Seq[String]): String = words.map(w => s"'$w'").mkString("(", ", ", ")")
-
   // ---------------------------------------------------------------
   // oracle SQL (DuckDB dialect), one per registered query
   // ---------------------------------------------------------------
@@ -3605,7 +3602,7 @@ object Oracle {
 
       "q19_token_stats" ->
         // coalesce/nullif: Spark's aggregate() over an empty token array
-        // yields 0 (and meanTokenLen guards nt=0 → 0.0); DuckDB list_sum([])
+        // yields 0 (and meanTokenLenFromStats guards nt=0 → 0.0); DuckDB list_sum([])
         // is NULL and x/0 diverges — align both, and pin HUGEINT → BIGINT
         s"""SELECT doc_id,
            |  len($toks) AS n_tokens,

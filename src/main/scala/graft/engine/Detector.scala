@@ -13,6 +13,15 @@ import org.apache.spark.sql.types._
   */
 object Detector {
 
+  // The reference's ladder thresholds (`Latanova_v1.py:124`, `:76,84`,
+  // `:148`, `:164`, `:168`).
+  private val UniqueThreshold = 0.3
+  private val NumericThreshold = 0.9
+  private val SpecialFormatThreshold = 0.7
+  private val IntegralThreshold = 0.95
+  private val DateThreshold = 0.8
+  private val MaxCategories = 50
+
   /** Boolean token universe (`Latanova_v1.py:135`). */
   val boolTokens: Seq[String] =
     Seq("true", "false", "1", "0", "yes", "no", "y", "n", "t", "f")
@@ -209,15 +218,8 @@ object Detector {
     * rows through the shuffle — measured 4x the whole detection scan);
     * the exploded (column, norm?, value) stream shuffles narrow rows
     * once and aggregates each distinct set independently. */
-  private def distinctCounts(df: DataFrame, fields: Seq[StructField],
-                             cfg: DetectorConfig): Map[(String, Boolean), Long] = {
-    val approx = cfg.approxDistinct
-    // exact-refinement margin: every classification rule reads
-    // cardinality only below maxCategories, so an estimate at 4x that
-    // (floor 200) cannot cross a threshold even at several times HLL's
-    // ~5% error — scaled with the config, not hardcoded, so a raised
-    // maxCategories keeps the identical-to-exact guarantee
-    val refineMargin = math.max(200L, 4L * cfg.maxCategories)
+  private def distinctCounts(df: DataFrame,
+                             fields: Seq[StructField]): Map[(String, Boolean), Long] = {
     // lower() is injective on rendered numbers/dates/booleans (only the
     // exponent 'E' changes case, uniformly), so for those dtypes ONE
     // stream serves both the trimmed and the lower+trimmed cardinality —
@@ -236,40 +238,13 @@ object Detector {
         Seq(base, struct(lit(f.name).as("c"), lit(true).as("nrm"), lower(s).as("v")))
       else Seq(base)
     }
-    def run(ps: Seq[Column], exact: Boolean): Map[(String, Boolean), Long] = {
-      if (ps.isEmpty) return Map.empty
-      val d = if (exact) count_distinct(col("v")) else approx_count_distinct(col("v"))
-      df.select(explode(array(ps: _*)).as("p"))
-        .select(col("p.c"), col("p.nrm"), col("p.v"))
-        .groupBy("c", "nrm")
-        .agg(d.as("d"))
-        .collect()
-        .map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2))
-        .toMap
-    }
-    val computed =
-      if (!approx) run(pairs, exact = true)
-      else {
-        // two-tier: HLL everywhere, then EXACT refinement only where the
-        // estimate is small enough to matter (see refineMargin above) —
-        // the approx path classifies IDENTICALLY to exact mode while
-        // the expensive exact distinct runs only over low-cardinality
-        // columns — the 100 TB shape.
-        val est = run(pairs, exact = false)
-        val refine = fields.flatMap { f =>
-          val s = trim(col(f.name).cast(StringType))
-          val base =
-            if (est.getOrElse((f.name, false), Long.MaxValue) < refineMargin)
-              Seq(struct(lit(f.name).as("c"), lit(false).as("nrm"), s.as("v")))
-            else Nil
-          val norm =
-            if (needsNorm(f) && est.getOrElse((f.name, true), Long.MaxValue) < refineMargin)
-              Seq(struct(lit(f.name).as("c"), lit(true).as("nrm"), lower(s).as("v")))
-            else Nil
-          base ++ norm
-        }
-        est ++ run(refine, exact = true)
-      }
+    val computed = df.select(explode(array(pairs: _*)).as("p"))
+      .select(col("p.c"), col("p.nrm"), col("p.v"))
+      .groupBy("c", "nrm")
+      .agg(count_distinct(col("v")).as("d"))
+      .collect()
+      .map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2))
+      .toMap
     computed ++ fields.filterNot(needsNorm).flatMap { f =>
       computed.get((f.name, false)).map((f.name, true) -> _)
     }
@@ -281,7 +256,7 @@ object Detector {
     *
     * Date detection is two-phase: the fused agg carries only the cheap
     * shape-regex ratio (an upper bound on the parse ratio); columns
-    * clearing the `dateThreshold` screen get their EXACT multi-format
+    * clearing the `DateThreshold` screen get their EXACT multi-format
     * parse ratio from a second agg over just those columns. The
     * classification outcome is identical (true ratio ≤ shape ratio, so
     * a column failing the screen can never reach the threshold), but
@@ -295,7 +270,7 @@ object Detector {
       else columns.map(n => df.schema(n))
     val exprs = fields.flatMap(f => signalExprs(f, cfg))
     val row: Row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    val distincts = distinctCounts(df, fields, cfg)
+    val distincts = distinctCounts(df, fields)
     val idx = row.schema.fieldNames.zipWithIndex.toMap
     def d(n: String, s: String): Double =
       if (row.isNullAt(idx(s"$n#$s"))) 0.0 else row.getDouble(idx(s"$n#$s"))
@@ -304,7 +279,7 @@ object Detector {
     // phase 2: exact parse ratio for shape-screen survivors (one agg)
     val stringLike = fields.filter(f => !isNumericType(f.dataType) &&
       !isDatetimeType(f.dataType) && f.dataType != BooleanType)
-    val dateCandidates = stringLike.filter(f => d(f.name, "date") >= cfg.dateThreshold)
+    val dateCandidates = stringLike.filter(f => d(f.name, "date") >= DateThreshold)
     val parsedRatios: Map[String, Double] =
       if (dateCandidates.isEmpty) Map.empty
       else {
@@ -361,20 +336,20 @@ object Detector {
     * uses anchored regexes, so those columns classify correctly. */
   def classify(sig: ColumnSignals, cfg: DetectorConfig = DetectorConfig()): SemanticType = {
     import SemanticType._
-    val t = cfg.specialFormatThreshold
+    val t = SpecialFormatThreshold
     def numericSplit: SemanticType =
-      if (sig.integralRatio >= cfg.integralThreshold) Integer else Float
+      if (sig.integralRatio >= IntegralThreshold) Integer else Float
     if (sig.n == 0) Unknown
     else if (sig.dataType == BooleanType) Boolean
     else if (sig.nDistinctNorm <= 3 && sig.allBoolTokens) Boolean
     else if (cfg.strictFormats && !isNumericType(sig.dataType)
-             && (isDatetimeType(sig.dataType) || sig.dateRatio >= cfg.dateThreshold)) Datetime
+             && (isDatetimeType(sig.dataType) || sig.dateRatio >= DateThreshold)) Datetime
     else if (sig.emailRatio > t) Email
     else if (sig.phoneRatio > t && !(cfg.strictFormats && isNumericType(sig.dataType))) Phone
     else if (isNumericType(sig.dataType)) numericSplit
-    else if (sig.numericRatio >= cfg.numericThreshold && sig.n > 0) numericSplit
-    else if (isDatetimeType(sig.dataType) || sig.dateRatio >= cfg.dateThreshold) Datetime
-    else if (sig.uniqueRatio <= cfg.uniqueThreshold && sig.nDistinct < cfg.maxCategories) Categorical
+    else if (sig.numericRatio >= NumericThreshold && sig.n > 0) numericSplit
+    else if (isDatetimeType(sig.dataType) || sig.dateRatio >= DateThreshold) Datetime
+    else if (sig.uniqueRatio <= UniqueThreshold && sig.nDistinct < MaxCategories) Categorical
     else Text
   }
 

@@ -139,7 +139,8 @@ object Profiler {
   }
 
   /** value_counts(normalize=True) (`Latanova_v1.py:255-271`): one
-    * (tiny, ≤maxCategories-row) groupBy per categorical column.
+    * (tiny, < 50-row — the Detector's category cap) groupBy per
+    * categorical column.
     * Order: count desc, then value asc — pandas breaks count ties by
     * first-seen order, which is not reproducible distributed; we
     * document value-order instead (SURVEY.md §2.4). */

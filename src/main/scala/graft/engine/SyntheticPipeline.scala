@@ -201,11 +201,6 @@ object SyntheticPipeline {
     out.write.mode("overwrite").option("header", "true").csv(path)
   }
 
-  /** Column count per detected semantic type — the reference's closing
-    * type summary (`Latanova_v1.py:726-731`). */
-  def typeSummary(profiles: Map[String, ColumnProfile]): Map[String, Int] =
-    profiles.values.groupBy(_.semanticType.name).map { case (t, ps) => t -> ps.size }
-
   /** detect → profile → generate → validate, the full reference run. */
   def run(df: DataFrame, cfg: Config = Config()): Result = {
     val profiles = profileTable(df, cfg)

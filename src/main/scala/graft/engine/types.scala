@@ -35,31 +35,13 @@ object BoolFormat {
   val all: Seq[BoolFormat] = Seq(TrueFalse, YesNo, OneZero, YN, TF, Native)
 }
 
-/** Detector thresholds — the reference's tunables surfaced as config
-  * (`Latanova_v1.py:124`, `:76,84`, `:148`, `:164`, `:168`).
-  * `strictFormats=false` reproduces the reference ladder verbatim,
-  * including the documented phone-precedence quirk (SURVEY.md §1);
-  * `strictFormats=true` anchors email/phone regexes and checks
-  * datetime before the special formats, so ISO dates and street
-  * addresses classify correctly. */
-final case class DetectorConfig(
-    uniqueThreshold: Double = 0.3,
-    numericThreshold: Double = 0.9,
-    specialFormatThreshold: Double = 0.7,
-    integralThreshold: Double = 0.95,
-    dateThreshold: Double = 0.8,
-    maxCategories: Int = 50,
-    strictFormats: Boolean = false,
-    /** 100 TB path: two-tier distinct cardinalities — HLL++
-      * approx_count_distinct everywhere, then EXACT refinement of the
-      * columns whose estimate lands under a 200 safety margin. Every
-      * classification rule reads cardinality only below maxCategories
-      * (≤3 boolean, <50 categorical), so this mode classifies
-      * IDENTICALLY to exact mode while the expensive exact distinct
-      * never runs over a high-cardinality column. Exact mode remains
-      * the default because ColumnSignals.nDistinct is reported (and
-      * oracle-compared) verbatim. */
-    approxDistinct: Boolean = false)
+/** Detector options. The ladder's thresholds are constants in
+  * [[Detector]]. `strictFormats=false` reproduces the reference ladder
+  * verbatim, including the documented phone-precedence quirk
+  * (SURVEY.md §1); `strictFormats=true` anchors email/phone regexes
+  * and checks datetime before the special formats, so ISO dates and
+  * street addresses classify correctly. */
+final case class DetectorConfig(strictFormats: Boolean = false)
 
 /** One-pass detection signals for a column: every ratio the ladder
   * needs, computed in a single table-wide agg (SURVEY.md §4 point 1). */

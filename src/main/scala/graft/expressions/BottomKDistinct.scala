@@ -36,28 +36,41 @@ case class BottomKDistinct(child: Expression, k: Int,
   override def createAggregationBuffer(): java.util.TreeSet[UTF8String] =
     new java.util.TreeSet[UTF8String]()
 
+  /** Whether `v` belongs in the bottom k: below the current kth once
+    * the set is full, and not already present. */
+  @inline private def enters(buf: java.util.TreeSet[UTF8String],
+                             v: UTF8String): Boolean =
+    (buf.size < k || v.compareTo(buf.last()) < 0) && !buf.contains(v)
+
+  /** Adds `v`, a value [[enters]] accepted, keeping it by reference. */
   @inline private def insert(buf: java.util.TreeSet[UTF8String],
                              v: UTF8String): Unit = {
-    // skip the copy unless v actually enters the set: only candidates
-    // below the current kth survive once the set is full
-    if (buf.size < k) {
-      buf.add(v.clone()); ()
-    } else if (v.compareTo(buf.last()) < 0 && buf.add(v.clone())) {
-      buf.pollLast(); ()
-    }
+    buf.add(v)
+    if (buf.size > k) { buf.pollLast(); () }
   }
 
   override def update(buf: java.util.TreeSet[UTF8String],
                       input: InternalRow): java.util.TreeSet[UTF8String] = {
     val v = child.eval(input)
-    if (v != null) insert(buf, v.asInstanceOf[UTF8String])
+    // the input row's bytes may be reused by the next row, so a value
+    // that enters the set is copied first; duplicates and values above
+    // the kth are never copied
+    if (v != null) {
+      val u = v.asInstanceOf[UTF8String]
+      if (enters(buf, u)) insert(buf, u.clone())
+    }
     buf
   }
 
   override def merge(buf: java.util.TreeSet[UTF8String],
                      other: java.util.TreeSet[UTF8String]): java.util.TreeSet[UTF8String] = {
+    // `other` holds owned values (copied in update or built by
+    // deserialize), so they enter without another copy
     val it = other.iterator()
-    while (it.hasNext) insert(buf, it.next())
+    while (it.hasNext) {
+      val v = it.next()
+      if (enters(buf, v)) insert(buf, v)
+    }
     buf
   }
 

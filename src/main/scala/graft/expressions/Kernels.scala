@@ -22,8 +22,4 @@ object Kernels {
   def binSliceLong(c: Column, pos: Int, len: Int): Column =
     GraftColumnBridge.column(RadixSliceLong(
       GraftColumnBridge.expression(c), pos, len, 2))
-
-  /** Bit length of a non-negative long (0 for 0) — one LZCNT. */
-  def bitLength64(c: Column): Column =
-    GraftColumnBridge.column(BitLength64(GraftColumnBridge.expression(c)))
 }

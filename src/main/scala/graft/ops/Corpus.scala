@@ -1281,48 +1281,14 @@ object Corpus {
     * per span occurrence: (id, span_start, span_end, span_len),
     * span char range [span_start, span_end) 0-based. */
   def maxDupSpans(df: DataFrame, idCol: String, textCol: String,
-                  minLen: Int): DataFrame =
-    maxDupSpansWithFp(df, idCol, textCol, minLen, fp = None)
-
-  /** Production-hash variant of [[maxDupSpans]]: identical span
-    * semantics and plan shape, window fingerprints via xxhash64
-    * (8-byte integer digests — no hex string, ~half the shuffle key
-    * width; the [[graft.ops.Sketch.hllDistinctFast]] convention).
-    * Measured at sf0.1 the two are at parity (R10-SCALELAW — the
-    * explode + fp shuffle dominates, not the hash), so the value of
-    * this form is the narrower shuffle key at real corpus scale, not
-    * local speed. A 64-bit collision would mark one extra L-gram
-    * duplicated — negligible below ~2³² windows per corpus and
-    * acceptable for a REWRITE gate (the registered q197 row keeps md5
-    * so the oracle replays). */
-  def maxDupSpansFast(df: DataFrame, idCol: String, textCol: String,
-                      minLen: Int): DataFrame =
-    maxDupSpansWithFp(df, idCol, textCol, minLen,
-      fp = Some(sub => xxhash64(sub)))
-
-  /** `fp = None` → the one-pass md5 window kernel (the registered q197
-    * form — bit-exact digests, no per-window substring); `Some(f)` →
-    * the expression-chain form with a caller-supplied fingerprint
-    * (the xxhash64 production variant). */
-  private def maxDupSpansWithFp(df: DataFrame, idCol: String, textCol: String,
-                                minLen: Int,
-                                fp: Option[Column => Column]): DataFrame = {
+                  minLen: Int): DataFrame = {
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
     val base = df
       .filter(col(idCol).isNotNull)
       .select(col(idCol).as("id"), col(textCol).cast("string").as("text"))
       .filter(col("text").isNotNull && length(col("text")) >= minLen)
-    val winsAll = (fp match {
-        case None => base.select(col("id"),
-          posexplode(md5WindowArr(col("text"), minLen)).as(Seq("off", "fp")))
-        case Some(f) => base
-          .select(col("id"),
-            explode(expr(s"sequence(0, CAST(length(text) AS INT) - $minLen, 1)"))
-              .as("off"),
-            col("text"))
-          .select(col("id"), col("off"),
-            f(expr(s"substring(text, off + 1, $minLen)")).as("fp"))
-      })
+    val winsAll = base.select(col("id"),
+        posexplode(md5WindowArr(col("text"), minLen)).as(Seq("off", "fp")))
       .select(col("id"), col("off").cast("int").as("off"), col("fp"))
       .withColumn("__ph", xxhash64(col("fp")))
       .localCheckpoint() // feeds bloom build, the dup-mark agg, and the join back

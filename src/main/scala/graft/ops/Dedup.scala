@@ -209,18 +209,6 @@ object Dedup {
     array(sig: _*)
   }
 
-  /** LSH band digests: the signature split into `bands` rows of
-    * numHashes/bands, each band hashed to one digest. Two documents
-    * collide in a band iff that whole band matches → P[candidate]
-    * follows the usual (1-(1-s^r)^b) S-curve. */
-  def lshBands(sigCol: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", slice(sigCol, b * r + 1, r)).cast("binary")).as("bucket"))
-    }: _*)
-  }
-
   /** Exact-duplicate groups on the normalized content fingerprint:
     * returns (keep_id, dup_count) per distinct content, keep_id = min id.
     * One shuffle, keyed on the 128-bit digest. */
@@ -557,15 +545,6 @@ object Dedup {
       .select("id_a", "id_b", "containment")
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold. Routes by
-    * corpus size — the exact blocked kernel while O(n²) compares are
-    * affordable, the near-linear hyperplane-LSH kernel above the
-    * threshold — so the quadratic path is unreachable for production
-    * callers at scale; see [[Similarity.cosinePairsAuto]]. */
-  def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double): DataFrame =
-    Similarity.cosinePairsAuto(df, idCol, vecCol, threshold)
-
   /** SimHash near-duplicates within Hamming distance `maxDist` — the
     * tolerance-based form of the exact-sketch-match dedup. The
     * `nBits`-bit sketch is split into `bands` contiguous blocks; any
@@ -775,21 +754,6 @@ object Dedup {
     wordCols.map(c => bit_count(col(s"$l.$c").bitwiseXOR(col(s"$r.$c"))))
       .reduce(_ + _)
 
-  /** Cross-corpus exact overlap: (id_a, id_b) pairs whose normalized
-    * content fingerprints match across two corpora — the detection half
-    * of train/test decontamination. The join is keyed on the 16-byte
-    * md5 digest, never raw text; both sides reduce to one (fp, id) row
-    * per doc before the equijoin, so shuffle volume is O(docs), not
-    * O(text). */
-  def crossCorpusExact(a: DataFrame, idA: String, b: DataFrame, idB: String,
-                       textCol: String): DataFrame = {
-    val fa = a.select(col(idA).as("id_a"),
-      TextAnalysis.fingerprint(col(textCol)).as("fp"))
-    val fb = b.select(col(idB).as("id_b"),
-      TextAnalysis.fingerprint(col(textCol)).as("fp"))
-    fa.join(fb, "fp").select("id_a", "id_b")
-  }
-
   /** Train/test decontamination: remove from `train` every document
     * whose exact content fingerprint appears in `test` (benchmark /
     * eval-set leakage). A left-anti join on the digest — at scale the
@@ -855,16 +819,6 @@ object Dedup {
     keepRepresentatives(df, idCol,
       simhashNearDup(df, idCol, textCol, maxDist), rounds)
 
-  /** [[dedupCorpus]] with MinHash-LSH + exact-Jaccard pairs instead of
-    * the SimHash Hamming sketch — higher-precision near-dup edges at
-    * the cost of the shingle pipeline. Same components machinery. */
-  def dedupCorpusJaccard(df: DataFrame, idCol: String, textCol: String,
-                         minJaccard: Double = 0.8,
-                         rounds: Int = 3): DataFrame =
-    keepRepresentatives(df, idCol,
-      lshJaccardDedup(df, idCol, textCol, minJaccard = minJaccard)
-        .select("id_a", "id_b"), rounds)
-
   /** Shared tail of the corpus-dedup forms: connected components over
     * the pair set, drop every non-minimum member. Docs in no pair never
     * enter the label frame, so the anti-join keeps them for free. */
@@ -875,20 +829,6 @@ object Dedup {
       .select(col("id").as(idCol))
     df.join(drop, Seq(idCol), "left_anti")
   }
-
-  /** Boilerplate lines: lines (split on `\n`) appearing in at least
-    * `minDocs` DISTINCT documents — headers, footers, nav chrome. The
-    * shuffle key is md5(line), never the line text, so wide lines don't
-    * fatten the exchange; count_distinct(id) is the two-phase
-    * partial-agg form. Returns (line, n_docs). */
-  def boilerplateLines(df: DataFrame, idCol: String, textCol: String,
-                       minDocs: Long): DataFrame =
-    df.select(col(idCol).as("id"),
-        explode(split(col(textCol), "\n")).as("line"))
-      .groupBy(md5(col("line").cast("binary")).as("lh"))
-      .agg(first(col("line")).as("line"), count_distinct(col("id")).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
-      .select("line", "n_docs")
 
   /** Strip boilerplate lines from every document (C4/RefinedWeb-style
     * corpus cleaning): lines occurring in ≥ `minDocs` distinct docs are

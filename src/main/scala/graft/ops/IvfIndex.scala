@@ -43,7 +43,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    just documented: maintenance takes the `_maintenance.lock` claim
   *    file (create-no-overwrite, the gen allocator's atomicity
   *    discipline) and every mutating entry point ([[append]],
-  *    [[appendPq]], [[applyChanges]], [[applyChangesPq]]) FAILS LOUDLY
+  *    [[appendPq]], [[applyChanges]]) FAILS LOUDLY
   *    while it is held — an append racing a swap would otherwise write
   *    its gen directory into a tree the swap then deletes wholesale
   *    (silent row loss, the failure the old prose-only contract could
@@ -598,26 +598,6 @@ object IvfIndex {
     }
   }
 
-  /** [[applyChanges]] for the PQ index: upserts encode against the
-    * FROZEN cells + codebook (cost ∝ batch). Same codes-first,
-    * tombstones-last write ordering. */
-  def applyChangesPq(spark: SparkSession, path: String, changes: DataFrame,
-                     idCol: String, vecCol: String, seqCol: String,
-                     opCol: String, dim: Int, m: Int,
-                     deleteOp: String = "delete"): Unit = {
-    repairWrite(spark, path)
-    val cells = spark.read.parquet(s"$path/cells")
-    val codebook = spark.read.parquet(s"$path/codebook")
-    val g = allocateGen(spark, path)
-    withCdcIntent(spark, path, g) {
-      val latest = latestPerKey(changes, idCol, vecCol, seqCol, opCol)
-      writeGen(encodeGen(latest.filter(col("__op") =!= lit(deleteOp)),
-        "id", "__vec", cells, codebook, dim, m), s"$path/codes", g, "cell")
-      latest.select(col("id"), lit(g).as("tomb_gen"))
-        .write.mode("append").parquet(s"$path/tombstones")
-    }
-  }
-
   /** Bracket a CDC batch with an in-flight intent file
     * (`_gens/gen-G.cdc`): created before the batch's first table write,
     * removed after its last. [[requireNoInflightWriters]] reads these —
@@ -854,10 +834,9 @@ object IvfIndex {
     * only live rows (same filter [[search]] applies), preserving the
     * (gen, cell) partitioning — drift history survives — then drop
     * the tombstone table, all under the crash-recoverable swap
-    * protocol above. `cellCol` = "centroid_id" for the flat index,
-    * "cell" for the PQ index. Requires exclusive access. */
-  def compact(spark: SparkSession, path: String,
-              cellCol: String = "centroid_id"): Unit = {
+    * protocol above. Only the flat index takes CDC batches, so only it
+    * has tombstones to fold. Requires exclusive access. */
+  def compact(spark: SparkSession, path: String): Unit = {
     val fs = fsFor(spark, path)
     acquireMaintenanceLock(fs, path)
     try {
@@ -872,7 +851,7 @@ object IvfIndex {
             .join(broadcast(latest), Seq("id"), "left")
             .filter(col("__tg").isNull || col("gen") >= col("__tg"))
             .drop("__tg")
-          live.write.mode("overwrite").partitionBy("gen", cellCol)
+          live.write.mode("overwrite").partitionBy("gen", "centroid_id")
             .parquet(s"$path/$StagedDir/codes")
           commitSwap(fs, path, expected = Seq("codes"))
       }

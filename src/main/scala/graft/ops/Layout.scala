@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 import graft.expressions.InterleaveBits
 
@@ -22,17 +21,4 @@ object Layout {
     org.apache.spark.sql.GraftColumnBridge.column(InterleaveBits(
       org.apache.spark.sql.GraftColumnBridge.expression(a.cast("long")),
       org.apache.spark.sql.GraftColumnBridge.expression(b.cast("long"))))
-
-  /** Re-layout a frame Z-ordered on two dimensions: range-partition by
-    * Z-value (each output file owns a contiguous Z range ⇒ a tight
-    * min/max box on BOTH dimensions), sort within partitions, and drop
-    * the helper column. One shuffle at write time buys file-level
-    * skipping on every subsequent scan. */
-  def zorder(df: DataFrame, colA: String, colB: String,
-             partitions: Int): DataFrame = {
-    val z = df.withColumn("__z", zvalue(col(colA), col(colB)))
-    z.repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 }

@@ -17,24 +17,15 @@ import org.apache.spark.sql.types._
   * behavior) is real and tested while those codecs stay swappable.
   *
   * Scale notes: payloads never enter a shuffle key (metadata-only
-  * projections are pushed before any groupBy/join); partition sizing is
-  * bytes-based (`repartitionForPayloads`) because row counts are
-  * meaningless when one row is 10 MB of video.
+  * projections are pushed before any groupBy/join).
   */
 object Multimodal {
 
-  /** Typed metadata carried beside every payload. */
-  val metaSchema: StructType = StructType(Seq(
-    StructField("modality", StringType),   // image | audio | video | text
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("width", IntegerType),     // image/video; null otherwise
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType))) // audio/video; null otherwise
-
   /** Wrap a raw binary column into (payload, meta) with byte-accurate
     * n_bytes and everything codec-derived left null (to be filled by a
-    * decode pass). */
+    * decode pass). meta = (modality: image | audio | video | text, mime,
+    * n_bytes, width, height, duration_ms); width/height are set for
+    * image/video, duration_ms for audio/video. */
   def ingest(df: DataFrame, binCol: String, modality: String, mime: String): DataFrame =
     df.withColumn("meta", struct(
       lit(modality).as("modality"), lit(mime).as("mime"),
@@ -949,19 +940,5 @@ object Multimodal {
           md5(concat(digest, lit(s"#$j")).cast(BinaryType)), 1, 7)
         .cast(DoubleType) / 268435456.0 * 2.0 - 1.0
     }: _*)
-  }
-
-  /** Frame-sample offsets for a video payload: every `everyMs` ms over
-    * the (decoded) duration — pure expression, no codec needed. */
-  def frameSampleOffsets(durationMs: Column, everyMs: Int): Column =
-    when(durationMs <= 0, array().cast(ArrayType(LongType)))
-      .otherwise(sequence(lit(0L), durationMs - 1, lit(everyMs.toLong)))
-
-  /** Bytes-aware repartition: target ~`targetMB` of payload per
-    * partition using the metadata's n_bytes (NOT row counts). */
-  def repartitionForPayloads(df: DataFrame, nBytesCol: Column, targetMB: Int = 128): DataFrame = {
-    val totalBytes = df.agg(sum(nBytesCol)).head().getLong(0)
-    val parts = math.max(1, (totalBytes / (targetMB.toLong << 20)).toInt)
-    df.repartition(parts)
   }
 }

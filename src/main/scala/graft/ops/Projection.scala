@@ -142,21 +142,6 @@ object Projection {
       ((col("__u") * lit(-sth) + col("__v") * lit(cth)) * lit(fl)).as("y"))
   }
 
-  /** The reference's exact viz prep: union original + synthetic vector
-    * frames (tagged), fit PCA on the union, project both
-    * (`np.vstack` + fit + separate transforms, `Latanova_v1.py:541-546`). */
-  def pcaCompare(original: DataFrame, synthetic: DataFrame,
-                 idCol: String, vecCol: String, k: Int = 2): DataFrame = {
-    val tagged = original.select(col(idCol), col(vecCol), lit("original").as("source"))
-      .unionByName(synthetic.select(col(idCol), col(vecCol), lit("synthetic").as("source")))
-    val withVec = tagged.select(col(idCol), col("source"),
-      array_to_vector(transform(col(vecCol), _.cast("double"))).as("__v"))
-    val model = new PCA().setInputCol("__v").setOutputCol("__pc").setK(k)
-      .fit(withVec)
-    model.transform(withVec)
-      .select(col(idCol), col("source"), vector_to_array(col("__pc")).as("pc"))
-  }
-
   /** Johnson–Lindenstrauss random projection with Rademacher (±1)
     * entries (Achlioptas 2003 — database-friendly projections: the
     * sign matrix preserves pairwise distances with the same JL

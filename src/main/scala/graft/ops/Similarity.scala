@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    the probed clusters. At 100 TB this is the difference between
   *    scanning the corpus per query and scanning ~nprobe/K of it.
   *  - [[cosinePairs]] — all-pairs above a threshold, for near-dup; at
-  *    scale the corpus side should be LSH-bucketed first (Dedup.lshBands
-  *    family) — the brute pair join is provided for exactness and small n.
+  *    scale the corpus side should be LSH-bucketed first (Dedup's
+  *    MinHash/SimHash families) — the brute pair join is provided for
+  *    exactness and small n.
   */
 object Similarity {
 

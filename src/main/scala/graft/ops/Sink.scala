@@ -1,45 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Output hygiene at corpus scale: a 100 TB pipeline that writes with
   * whatever partitioning its last shuffle left behind produces either
   * the small-files problem (thousands of KB-sized parquet files whose
   * open/footer costs dominate every later scan) or multi-GB files no
-  * executor can read-ahead efficiently. These sinks size the file count
-  * from the DATA, not the accidental partition count.
+  * executor can read-ahead efficiently. The compactor sizes the file
+  * count from the DATA, not the accidental partition count.
   */
 object Sink {
-
-  /** Write `df` as parquet with ~`targetMB` per output file.
-    *
-    * File count comes from an estimated on-disk size: bytes-per-row is
-    * measured on a capped driver sample (JVM object size via Spark's
-    * own `SizeEstimator`, shrunk by `encodingRatio` for parquet's
-    * encoding+compression — the default 4x is the usual columnar
-    * ballpark; pass a measured ratio for skewed payloads), times the
-    * exact row count. One extra count job + one capped collect — at
-    * scale that is noise next to the write, and the alternative
-    * (writing whatever partitioning fell out of the last shuffle) costs
-    * every future reader. Returns the partition count used. */
-  def writeSizedParquet(df: DataFrame, path: String, targetMB: Int = 256,
-                        sampleRows: Int = 1000,
-                        encodingRatio: Double = 4.0): Int = {
-    require(targetMB > 0 && sampleRows > 0 && encodingRatio > 0,
-      s"bad sizing args targetMB=$targetMB sampleRows=$sampleRows ratio=$encodingRatio")
-    val n = df.count()
-    val parts =
-      if (n == 0) 1
-      else {
-        val sample = df.limit(math.min(sampleRows, n).toInt).collect()
-        val bytesPerRow = math.max(1L,
-          org.apache.spark.util.SizeEstimator.estimate(sample) / sample.length)
-        val estBytes = (n * bytesPerRow / encodingRatio).toLong
-        math.max(1, (estBytes / (targetMB.toLong << 20)).toInt + 1)
-      }
-    df.repartition(parts).write.mode("overwrite").parquet(path)
-    parts
-  }
 
   /** Compact an existing parquet directory to ~`targetMB` files — the
     * maintenance pass after many small appends (streaming sinks, daily

@@ -161,39 +161,6 @@ object Sketch {
       .withColumnRenamed("__m", "m")
   }
 
-  /** PRODUCTION-HASH HyperLogLog — [[hllDistinct]] with xxhash64
-    * (Spark's codegen'd 64-bit hash) in place of md5: same register
-    * layout (bucket = top 8 hash bits, w = the next 48, rank =
-    * 49 − bitlength(w)), same exact-integer Z accumulator and both
-    * estimator regimes via [[hllEstimate]]. Roughly halves the scan
-    * cost of the md5 form (no 128-bit digest, no hex decode — one
-    * codegen'd long op per value); the price is oracle replay: DuckDB
-    * has no xxhash64, so this variant is certified by spec
-    * (tolerance vs exact distinct counts + agreement with the md5
-    * form's error envelope), while q169 keeps the md5 form whose
-    * estimate replays exactly in SQL. Use THIS one for the 100 TB
-    * profile pass, the md5 one when the number itself must be
-    * auditable cross-engine.
-    *
-    * xxhash64(NULL) returns the seed, not NULL — nulls are excluded
-    * BEFORE hashing to keep count_distinct semantics. */
-  def hllDistinctFast(df: DataFrame, colNames: Seq[String]): DataFrame = {
-    require(colNames.nonEmpty, "colNames must be non-empty")
-    val pairs = df.select(explode(array(colNames.map(c =>
-        struct(lit(c).as("n"),
-          when(col(c).isNotNull, xxhash64(col(c).cast("string")))
-            .as("h64"))): _*)).as("x"))
-      .select(col("x.n").as("col_name"), col("x.h64").as("h64"))
-      .filter(col("h64").isNotNull)
-    val regs = pairs
-      .withColumn("bucket", shiftrightunsigned(col("h64"), 56).cast("int"))
-      .withColumn("w", shiftrightunsigned(col("h64"), 8)
-        .bitwiseAND(lit((1L << 48) - 1)))
-      .withColumn("rank", hllRank(col("w")))
-      .groupBy(col("col_name"), col("bucket")).agg(max(col("rank")).as("mrank"))
-    hllEstimate(regs, Seq("col_name")).withColumnRenamed("__m", "m")
-  }
-
   /** HLL register table of a keyed digest stream: (keys..., bucket,
     * mrank). The shared first half of every HLL variant (including
     * the streaming per-micro-batch emission, where the caller merges

@@ -85,18 +85,6 @@ object Snapshot {
       .select(keyCols.map(col) :+ col("change"): _*)
   }
 
-  /** One-row summary of a diff: counts per change class plus the
-    * unchanged remainder (computable from the inputs without emitting
-    * unchanged rows). */
-  def diffSummary(oldDf: DataFrame, newDf: DataFrame,
-                  keyCols: Seq[String]): DataFrame = {
-    val d = diff(oldDf, newDf, keyCols)
-    d.agg(
-      coalesce(sum(when(col("change") === "added", 1L)), lit(0L)).as("n_added"),
-      coalesce(sum(when(col("change") === "removed", 1L)), lit(0L)).as("n_removed"),
-      coalesce(sum(when(col("change") === "changed", 1L)), lit(0L)).as("n_changed"))
-  }
-
   /** CDC MERGE: apply a changelog to a base snapshot, latest change
     * per key wins (the compaction every incremental table format runs;
     * `MERGE INTO` semantics with upsert + delete). `changes` must

@@ -134,7 +134,7 @@ object TextAnalysis {
       .otherwise(st.getField("stops").getItem(idx).cast("double") / nt)
   }
 
-  /** `meanTokenLen` from a projected stats column. */
+  /** Mean token length in characters, from a projected stats column. */
   def meanTokenLenFromStats(st: Column): Column = {
     val nt = st.getField("n_tokens")
     when(nt === 0, 0.0)
@@ -167,10 +167,6 @@ object TextAnalysis {
       .otherwise(lit("fr"))
   }
 
-  /** Count of CJK codepoints (zh detection path). */
-  def cjkCount(c: Column): Column =
-    length(c) - length(regexp_replace(c, "[\\x{4e00}-\\x{9fff}]", ""))
-
   /** Predicted language: zh if CJK chars present, else argmax stopword
     * evidence with fixed precedence en > de > es > fr (deterministic
     * tie-break), 'und' when no evidence at all. The zh branch uses a
@@ -199,9 +195,6 @@ object TextAnalysis {
     * a nonzero rate; keyword-stuffed or boilerplate text scores ~0. */
   def stopwordRatio(c: Column): Column =
     stopwordRatioFromStats(tokenStatsEn(c))
-
-  /** Mean token length in characters. */
-  def meanTokenLen(c: Column): Column = meanTokenLenFromStats(tokenStats(c))
 
   /** Composite quality score in [0,1]: length band + word-shape band +
     * punctuation sanity + stopword evidence. The weights are the usual

@@ -317,20 +317,6 @@ object Vectorize {
         coalesce(col("__vecout"), array_repeat(lit(0.0), lit(maxTokens * dim))))
       .drop("__id", "__vecout")
   }
-
-  /** Mean-pool variant (`get_vectorised_entries`, `Latanova_v1.py:23-43`
-    * — dead code in the reference, kept for API completeness). */
-  def meanPoolLocal(model: Embedder)(entry: String): Array[Double] = {
-    val toks = Tokenize.tokensLocal(entry)
-    val out = new Array[Double](model.dim)
-    if (toks.isEmpty) return out
-    toks.foreach { t =>
-      val v = model.lookup(t)
-      var j = 0; while (j < model.dim) { out(j) += v(j); j += 1 }
-    }
-    var j = 0; while (j < model.dim) { out(j) /= toks.length; j += 1 }
-    out
-  }
 }
 
 /** Vocabulary for nearest-word decode: the corpus's distinct tokens

@@ -7,8 +7,7 @@ package graft.text
   * forked javaOptions and scripts/_jvmflags.sh both pass it; on a real
   * cluster the flag must reach the EXECUTOR JVMs —
   * `spark.executor.extraJavaOptions` — or each executor independently
-  * falls back to the scalar kernel). Detection is per-JVM and lazy;
-  * `GRAFT_SIMD=off` is the kill switch for A/B measurement.
+  * falls back to the scalar kernel). Detection is per-JVM and lazy.
   *
   * The vector and scalar kernels are BIT-IDENTICAL by construction
   * (same per-cell chain structure, same fused multiply-adds — see
@@ -17,9 +16,8 @@ package graft.text
   * module still produces exactly one answer. */
 private[graft] object SimdSupport {
   lazy val available: Boolean =
-    sys.env.get("GRAFT_SIMD").forall(_ != "off") &&
-      (try { Class.forName("jdk.incubator.vector.DoubleVector"); true }
-       catch { case _: Throwable => false })
+    try { Class.forName("jdk.incubator.vector.DoubleVector"); true }
+    catch { case _: Throwable => false }
 
   /** JIT warmup gate (r17). The Vector API has a COMPILATION CLIFF:
     * until C2 compiles the kernel (and inlines the DoubleVector

@@ -73,28 +73,60 @@ class DetectorSpec extends SparkSpec {
     assert(Detector.detect(df)("c")._1 === SemanticType.Unknown)
   }
 
-  test("approxDistinct two-tier mode classifies identically to exact mode") {
+  test("near-threshold cardinalities: 3 vs 4 boolean tokens, 49 vs 50 categories") {
     import spark.implicits._
-    // near-threshold columns: exactly-3-token boolean, 49-category
-    // categorical, high-cardinality text — the cases where an HLL error
-    // WOULD flip classification if not exact-refined
     val df = (0 until 2000).map { i =>
       (Seq("yes", "no", "y")(i % 3),
+        Seq("yes", "no", "y", "n")(i % 4),
         s"cat${i % 49}",
+        s"cat${i % 50}",
         s"unique free text value number $i")
-    }.toDF("b", "cat", "txt")
-    val exact = Detector.detect(df, DetectorConfig())
-      .map { case (n, (t, _)) => n -> t.name }
-    val approx = Detector.detect(df, DetectorConfig(approxDistinct = true))
-      .map { case (n, (t, _)) => n -> t.name }
-    assert(approx === exact)
-    assert(exact("b") === "boolean")
-    assert(exact("cat") === "categorical")
-    // low-cardinality columns are exact even in approx mode
-    val sig = Detector.signals(df, DetectorConfig(approxDistinct = true))
-      .map(s => s.name -> s).toMap
+    }.toDF("b", "b4", "cat", "cat50", "txt")
+    val types = Detector.detect(df).map { case (n, (t, _)) => n -> t.name }
+    assert(types === Map("b" -> "boolean", "b4" -> "categorical",
+      "cat" -> "categorical", "cat50" -> "text", "txt" -> "text"))
+    val sig = Detector.signals(df).map(s => s.name -> s).toMap
     assert(sig("b").nDistinctNorm === 3L)
     assert(sig("cat").nDistinct === 49L)
+    assert(sig("cat50").nDistinct === 50L)
+  }
+
+  test("ratio thresholds: one column just over and one just under each") {
+    // 20 rows, so each ratio moves in steps of 0.05; `k` of them carry
+    // the signal, the rest are distinct filler words (text)
+    val n = 20
+    def col(k: Int)(f: Int => String): Seq[String] =
+      (0 until n).map(i => if (i < k) f(i) else s"filler$i")
+    val email = (i: Int) => s"user$i@example.com"
+    val phone = (i: Int) => f"555-123-45$i%02d"
+    val int = (i: Int) => s"${i + 1}"
+    val month = (i: Int) => s"Jan ${i + 1}, 2024"
+    val cols = Seq(
+      // email/phone: ratio > 0.7
+      "email_over" -> col(15)(email), "email_at" -> col(14)(email),
+      "phone_over" -> col(15)(phone), "phone_at" -> col(14)(phone),
+      // numeric strings: ratio >= 0.9
+      "num_at" -> col(18)(int), "num_under" -> col(17)(int),
+      // integral share of the numeric values: >= 0.95
+      "int_at" -> (0 until n).map(i => if (i < 19) int(i) else "0.5"),
+      "int_under" -> (0 until n).map(i => if (i < 18) int(i) else s"$i.5"),
+      // parsed dates: ratio >= 0.8
+      "date_at" -> col(16)(month), "date_under" -> col(15)(month),
+      // categorical: unique ratio <= 0.3
+      "cat_at" -> (0 until n).map(i => s"c${i % 6}"),
+      "cat_over" -> (0 until n).map(i => s"c${i % 7}"))
+    val rows = (0 until n).map(i => org.apache.spark.sql.Row(cols.map(_._2(i)): _*))
+    val schema = org.apache.spark.sql.types.StructType(cols.map { case (c, _) =>
+      org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType) })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    val types = Detector.detect(df).map { case (c, (t, _)) => c -> t.name }
+    assert(types === Map(
+      "email_over" -> "email", "email_at" -> "text",
+      "phone_over" -> "phone", "phone_at" -> "text",
+      "num_at" -> "integer", "num_under" -> "text",
+      "int_at" -> "integer", "int_under" -> "float",
+      "date_at" -> "datetime", "date_under" -> "text",
+      "cat_at" -> "categorical", "cat_over" -> "text"))
   }
 
   test("lenient date formats: slashed ISO, dotted, English month names") {

@@ -722,24 +722,6 @@ class CorpusSpec extends SparkSpec {
     assert(lens.forall { case (d, l) => d === l })
   }
 
-  test("maxDupSpansFast: identical spans to the md5 form on a mixed fixture") {
-    val docs = Seq(
-      (1L, "abcdefghijklmnop THE REPEATED BLOCK xyz tail one"),
-      (2L, "prefix two THE REPEATED BLOCK and some more text"),
-      (3L, "no duplicated content here at all, unique words"),
-      (4L, "self self self self self self self self self"))
-      .toDF("id", "t")
-    def spans(f: (org.apache.spark.sql.DataFrame, String, String, Int) =>
-        org.apache.spark.sql.DataFrame) =
-      f(docs, "id", "t", 10).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(x => (x._1, x._2)).toSeq
-    val md5Spans = spans(Corpus.maxDupSpans)
-    val fastSpans = spans(Corpus.maxDupSpansFast)
-    assert(md5Spans.nonEmpty)
-    assert(fastSpans === md5Spans)
-  }
-
   test("decontaminateSubstrings: test spans cut everywhere, clean text untouched, no election") {
     val leak = "THE SECRET BENCHMARK ANSWER SEQUENCE XYZ"  // 40 chars
     assert(leak.length === 40)

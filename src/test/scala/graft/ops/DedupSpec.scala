@@ -186,9 +186,6 @@ class DedupSpec extends SparkSpec {
       (3L, "HEADER\nepsilon\nFOOTER"),
       (4L, "HEADER\nFOOTER"))
       .toDF("id", "text")
-    val bp = Dedup.boilerplateLines(lined, "id", "text", minDocs = 3)
-      .collect().map(_.getString(0)).toSet
-    assert(bp === Set("HEADER", "FOOTER"))
     val out = Dedup.stripBoilerplate(lined, "id", "text", minDocs = 3)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(out(1L) === (("alpha beta", 2L)))
@@ -205,9 +202,6 @@ class DedupSpec extends SparkSpec {
     val kept = Dedup.decontaminate(train, "id", test, "text")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 3L)) // 2 leaked (tokens equal after normalize)
-    val pairs = Dedup.crossCorpusExact(train, "id", test, "id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((2L, 100L)))
     val plan = Dedup.decontaminate(train, "id", test, "text")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
@@ -258,16 +252,6 @@ class DedupSpec extends SparkSpec {
     // the scale point: map-side filter, NO join operator in the plan
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"bloom decontaminate should not join:\n$plan")
-  }
-
-  test("embedding near-dup finds the duplicated vector") {
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.0f, 0.0f)), (2L, Array(1.0f, 0.0f, 0.0f)),
-      (3L, Array(0.0f, 1.0f, 0.0f)), (4L, Array(0.9f, 0.1f, 0.0f)))
-      .toDF("id", "v")
-    val pairs = Dedup.embeddingNearDup(vecs, "id", "v", 0.999)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((1L, 2L)))
   }
 
   test("containment join: finds snippet-in-doc pairs Jaccard misses, brute-force exact") {

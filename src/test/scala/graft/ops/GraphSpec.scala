@@ -69,18 +69,6 @@ class GraphSpec extends SparkSpec {
     assert(kept.size == 2 || kept.size == 3)
   }
 
-  test("dedupCorpusJaccard keeps one representative per shingle-overlap cluster") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta"),  // exact dup
-      (5L, "one two three four five six seven eight nine"),
-      (6L, "completely unrelated words about something else")
-    ).toDF("doc_id", "text")
-    val kept = Dedup.dedupCorpusJaccard(docs, "doc_id", "text", minJaccard = 0.8)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 5L, 6L))
-  }
-
   test("grouped numeric profile matches a hand-computed group") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0),
       ("b", 10.0), ("c", 1.4), ("c", 1.6)).toDF("k", "v")

@@ -178,35 +178,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows(back).exists { case (_, _, n, _) => n == 37L })
   }
 
-  test("PQ CDC: delete+upsert-then-searchPq equals rebuild ivfPqTopKAdc over the edited corpus") {
-    val path = tmpPath("cdcpq")
-    IvfIndex.buildPq(corpus.filter(col("id") < 20), "id", "v", path,
-      dim = 8, m = 2, k = 4, iterations = 0, nCells = 4)
-    IvfIndex.appendPq(spark, path, corpus.filter(col("id") >= 20), "id", "v",
-      dim = 8, m = 2)
-    val newVec = { val a = Array.fill(8)(0.0f); a(4) = 1.0f; a }
-    val changes = ((36 to 39).map(i => (i.toLong, Array.empty[Float], 1L, "delete")) :+
-      ((20L, newVec, 1L, "upsert"))).toDF("id", "v", "seq", "op")
-    IvfIndex.applyChangesPq(spark, path, changes, "id", "v", "seq", "op",
-      dim = 8, m = 2)
-    val edited = corpus.filter(col("id") < 36 && col("id") =!= 20L)
-      .unionByName(Seq((20L, newVec)).toDF("id", "v"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        math.round(r.getDouble(3) * 1e9))).toSet
-    val got = rows(IvfIndex.searchPq(spark, path, queries, "id", "v",
-      dim = 8, m = 2, nProbe = 2, topK = 5))
-    val want = rows(Quantize.ivfPqTopKAdc(queries, edited, "id", "v", "id", "v",
-      dim = 8, m = 2, k = 4, iterations = 0, nCells = 4, nProbe = 2, topK = 5))
-    assert(got === want)
-    // compaction preserves the PQ layout (cell partitioning) + results
-    IvfIndex.compact(spark, path, cellCol = "cell")
-    assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(spark.read.parquet(s"$path/codes").count() === 36)
-    assert(rows(IvfIndex.searchPq(spark, path, queries, "id", "v",
-      dim = 8, m = 2, nProbe = 2, topK = 5)) === want)
-  }
-
   test("lifecycle: refined build → shifted append → drift fires → rebuild → recall recovers") {
     val path = tmpPath("life")
     // production build mode: Lloyd-refined coarse quantizer, frozen

@@ -47,23 +47,4 @@ class LayoutSpec extends SparkSpec {
     val big = morton(65536L, 0L)
     assert(small < big)
   }
-
-  test("zorder re-layout yields disjoint sorted z-ranges per partition") {
-    val df = (0L until 4096L).map(i => (i % 64, (i * 37) % 64)).toDF("x", "y")
-    val laid = Layout.zorder(df, "x", "y", partitions = 8)
-    val ranges = laid
-      .select(Layout.zvalue(col("x"), col("y")).as("z"))
-      .rdd.mapPartitionsWithIndex { (i, it) =>
-        val zs = it.map(_.getLong(0)).toArray
-        if (zs.isEmpty) Iterator.empty
-        else Iterator((i, zs.min, zs.max, zs.sameElements(zs.sorted)))
-      }.collect()
-    assert(ranges.forall(_._4), "each partition must be internally z-sorted")
-    val sorted = ranges.sortBy(_._2)
-    sorted.sliding(2).foreach {
-      case Array((_, _, hi, _), (_, lo, _, _)) => assert(hi <= lo,
-        "partitions must own disjoint z ranges (min/max pruning boxes)")
-      case _ => ()
-    }
-  }
 }

@@ -443,24 +443,4 @@ class MultimodalSpec extends SparkSpec {
     assert(h === 64 + (u(2) * 256 + u(3)) % 1985)
     assert(d === 1000L + (u(4).toLong * 65536 + u(5) * 256 + u(6)) % 600000L)
   }
-
-  test("bytes-aware repartition sizes partitions by payload bytes") {
-    val df = Seq.fill(64)("x" * 100000).zipWithIndex
-      .map { case (s, i) => (i.toLong, s) }.toDF("id", "txt")
-      .select(col("id"), encode(col("txt"), "UTF-8").as("payload"))
-    val ingested = Multimodal.ingest(df, "payload", "image", "image/png")
-    // 64 x 100 KB = 6.4 MB at 1 MB target → >1 partition, ≤ 64
-    val parts = Multimodal
-      .repartitionForPayloads(ingested, col("meta.n_bytes"), targetMB = 1)
-      .rdd.getNumPartitions
-    assert(parts >= 2 && parts <= 64, s"parts=$parts")
-  }
-
-  test("frame sampling offsets") {
-    val df = Seq(5000L, 0L).toDF("dur")
-      .select(Multimodal.frameSampleOffsets(col("dur"), 1000).as("o"))
-    val rows = df.collect().map(_.getSeq[Long](0))
-    assert(rows(0) === Seq(0L, 1000L, 2000L, 3000L, 4000L))
-    assert(rows(1) === Seq.empty)
-  }
 }

@@ -22,16 +22,6 @@ class ProjectionSpec extends SparkSpec {
     assert(pc(1L).length === 2)
   }
 
-  test("pcaCompare projects original and synthetic into one shared space") {
-    val orig = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("id", "v")
-    val synth = Seq((10L, Array(1.0f, 1.0f))).toDF("id", "v")
-    val out = Projection.pcaCompare(orig, synth, "id", "v", k = 2)
-    val rows = out.collect()
-    assert(rows.length === 3)
-    assert(rows.map(_.getString(1)).toSet === Set("original", "synthetic"))
-    assert(rows.forall(_.getSeq[Double](2).length == 2))
-  }
-
   test("whiten: output is zero-mean with identity covariance") {
     import spark.implicits._
     // deterministic correlated 3-dim data: x2 = x0-ish mix

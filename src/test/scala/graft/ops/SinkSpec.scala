@@ -4,28 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class SinkSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-sink").resolve("out").toString
 
   private def parquetFiles(path: String): Array[java.io.File] =
     new java.io.File(path).listFiles.filter(_.getName.endsWith(".parquet"))
-
-  test("writeSizedParquet: file count follows data volume, not input partitioning") {
-    // ~6 MB of raw string data arriving in 64 tiny partitions; at a
-    // 1 MB target the sink must coalesce to a handful of files, not 64
-    val df = Seq.fill(6000)("x" * 1000).toDF("s").repartition(64)
-    val out = tmpDir()
-    val parts = Sink.writeSizedParquet(df, out, targetMB = 1, encodingRatio = 1.0)
-    assert(parts >= 2 && parts < 64, s"parts=$parts")
-    assert(parquetFiles(out).length === parts)
-    assert(spark.read.parquet(out).count() === 6000L)
-    // empty frame: one file, no crash
-    val empty = tmpDir()
-    assert(Sink.writeSizedParquet(df.limit(0), empty, targetMB = 1) === 1)
-    assert(spark.read.parquet(empty).count() === 0L)
-  }
 
   test("compactParquet: many small files collapse to few, data intact") {
     val out = tmpDir()

@@ -34,6 +34,35 @@ class SketchSpec extends SparkSpec {
     assert(a.getDouble(4) === b.getDouble(4))
   }
 
+  test("bottom_k_distinct: duplicate-heavy partitions, serialize/merge round trip") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = 16
+    val agg = graft.expressions.BottomKDistinct(BoundReference(0, StringType, nullable = true), k)
+    // 4 partitions of 500 rows, 40 distinct values each (160 overall),
+    // every value repeated 12-13 times; the global bottom k draws from
+    // all four partitions
+    val parts = (0 until 4).map(p => (0 until 500).map(i => f"v${(i * 7 % 40) * 4 + p}%03d"))
+    val bufs = parts.map { vals =>
+      val buf = agg.createAggregationBuffer()
+      // one reused byte array stands in for the scan's row buffer, the
+      // value at an offset inside it as in an UnsafeRow: a value the set
+      // kept without copying would change with the next row
+      val row = new Array[Byte](16)
+      vals.foreach { v =>
+        System.arraycopy(v.getBytes("UTF-8"), 0, row, 8, 4)
+        agg.update(buf, InternalRow(UTF8String.fromBytes(row, 8, 4)))
+      }
+      agg.deserialize(agg.serialize(buf))
+    }
+    val got = agg.eval(bufs.reduce(agg.merge)).asInstanceOf[GenericArrayData]
+      .array.map(_.toString).toSeq
+    assert(got === parts.flatten.distinct.sorted.take(k))
+  }
+
   test("kmvDistinct matches the legacy distinct+orderBy+limit carrier digest-for-digest") {
     // the r18 BottomKDistinct aggregate must keep EXACTLY the digests
     // the three-stage carrier kept: k smallest distinct md5s per column
@@ -116,40 +145,6 @@ class SketchSpec extends SparkSpec {
     // linear counting is exact at this size barring a 2-in-256 collision
     assert(math.abs(got("s") - 2.0) < 0.1)
     assert(math.abs(got("n") - 2.0) < 0.1)
-  }
-
-  test("hllDistinctFast (xxhash64) matches hllDistinct's error envelope") {
-    val df = (0 until 50000).map(i => s"u$i").toDF("x").repartition(16)
-    val r = Sketch.hllDistinctFast(df, Seq("x")).collect()(0)
-    val est = r.getDouble(4)
-    // same register layout, same estimator — same 4-sigma envelope as
-    // the md5 form (the hash differs, the statistics must not)
-    assert(math.abs(est - 50000.0) / 50000.0 < 0.26, s"est=$est")
-    assert(r.getInt(2) === 256)
-    // small range: linear counting near-exact
-    val s = Sketch.hllDistinctFast(
-      (0 until 1000).map(i => i % 20).toDF("x").repartition(8), Seq("x"))
-      .collect()(0)
-    assert(s.getInt(2) >= 18 && s.getInt(2) <= 20)
-    assert(math.abs(s.getDouble(4) - 20.0) < 2.5, s"est=${s.getDouble(4)}")
-  }
-
-  test("hllDistinctFast excludes nulls (xxhash64(NULL) = seed trap)") {
-    val df = Seq((Some("a"), Some(1)), (Some("b"), None), (Some("a"), Some(2)))
-      .toDF("s", "n")
-    val got = Sketch.hllDistinctFast(df, Seq("s", "n"))
-      .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap
-    assert(math.abs(got("s") - 2.0) < 0.1)
-    assert(math.abs(got("n") - 2.0) < 0.1) // a counted null would read 3
-  }
-
-  test("hllDistinctFast is partition-invariant") {
-    val vals = (0 until 3000).map(i => s"k$i")
-    val a = Sketch.hllDistinctFast(vals.toDF("x").repartition(1), Seq("x")).collect()(0)
-    val b = Sketch.hllDistinctFast(vals.toDF("x").repartition(32), Seq("x")).collect()(0)
-    assert(a.getInt(2) === b.getInt(2))
-    assert(a.getInt(3) === b.getInt(3))
-    assert(a.getDouble(4) === b.getDouble(4))
   }
 
   test("hllDistinctBy tracks per-group truth; groups never bleed") {

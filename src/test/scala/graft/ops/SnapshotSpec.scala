@@ -28,11 +28,6 @@ class SnapshotSpec extends SparkSpec {
       4L -> "changed", 6L -> "added"))
   }
 
-  test("diffSummary counts each class") {
-    val r = Snapshot.diffSummary(old, neu, Seq("k")).collect()(0)
-    assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((1L, 1L, 2L)))
-  }
-
   test("null keys are excluded from both sides") {
     val o = Seq((Some(1L), "a"), (None, "x")).toDF("k", "s")
     val n = Seq((Some(1L), "a"), (None, "y")).toDF("k", "s")
