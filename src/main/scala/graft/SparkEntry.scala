@@ -1906,7 +1906,7 @@ object SparkEntry {
       val eStats = stats(9, 10, mnE.toDouble, r.getDouble(11), 2, off = mnE.toDouble)
       val dtStats = DatetimeStats(eStats, "", "", "YYYY-MM-DD")
       val pBool = r.getLong(12).toDouble / n
-      val catStats = Profiler.profileCategorical(o, "o_orderstatus")
+      val catStats = Profiler.profileCategoricals(o, Seq("o_orderstatus"))("o_orderstatus")
       val id = col("id")
       val D = Generators.Deterministic
       s.range(Q159N).select(
@@ -2597,7 +2597,7 @@ object SparkEntry {
     // --- collocation mining: top-k adjacent-token pairs by PMI —
     // the phrase-induction pass of tokenizer/vocab pipelines ---
     "q134_collocations" -> ((s, d) =>
-      Corpus.collocations(t(s, d, "documents"), "doc_id", "text",
+      Corpus.collocations(t(s, d, "documents"), "text",
           minCount = 5L, k = 30)
         .orderBy(desc("pmi"), col("w1"), col("w2"))),
 
@@ -3590,7 +3590,7 @@ object SparkEntry {
       val train = t(s, d, "documents")
       val test = train.filter(col("doc_id") % 10 === 0)
         .select(col("text"))
-      Dedup.decontaminate(train, "doc_id", test, "text")
+      Dedup.decontaminate(train, test, "text")
         .select("doc_id", "n_chars")
         .orderBy("doc_id")
     }),

@@ -133,7 +133,7 @@ object Detector {
     def static(v: Double): Column = max(when(c.isNotNull, lit(v)))
     def staticL(v: Long): Column = max(when(c.isNotNull, lit(v)))
     val isNum = isNumericType(field.dataType)
-    val isDt = isDatetimeType(field.dataType)
+    val isDt = isDatetime(field.dataType)
     val isBool = field.dataType == BooleanType
     val stringLike = !isNum && !isDt && !isBool
 
@@ -228,7 +228,7 @@ object Detector {
     // needs the normalized stream.
     def needsNorm(f: StructField) = f.dataType match {
       case BooleanType => false
-      case t if isNumericType(t) || isDatetimeType(t) => false
+      case t if isNumericType(t) || isDatetime(t) => false
       case _ => true
     }
     val pairs = fields.flatMap { f =>
@@ -278,7 +278,7 @@ object Detector {
       if (row.isNullAt(idx(s"$n#$s"))) 0L else row.getLong(idx(s"$n#$s"))
     // phase 2: exact parse ratio for shape-screen survivors (one agg)
     val stringLike = fields.filter(f => !isNumericType(f.dataType) &&
-      !isDatetimeType(f.dataType) && f.dataType != BooleanType)
+      !isDatetime(f.dataType) && f.dataType != BooleanType)
     val dateCandidates = stringLike.filter(f => d(f.name, "date") >= DateThreshold)
     val parsedRatios: Map[String, Double] =
       if (dateCandidates.isEmpty) Map.empty
@@ -318,8 +318,12 @@ object Detector {
          FloatType | DoubleType | _: DecimalType => true
     case _ => false
   }
-  private def isDatetimeType(t: DataType): Boolean = t match {
-    case _: TimestampType | DateType => true
+  /** Physical datetime types: their rows need no string parse.
+    * TIMESTAMP_NTZ is what Spark 4 reads an un-adjusted Parquet
+    * timestamp as; with the session timezone at UTC its cast to
+    * TimestampType gives the instants its rendered string parses to. */
+  def isDatetime(t: DataType): Boolean = t match {
+    case _: TimestampType | TimestampNTZType | DateType => true
     case _ => false
   }
 
@@ -343,12 +347,12 @@ object Detector {
     else if (sig.dataType == BooleanType) Boolean
     else if (sig.nDistinctNorm <= 3 && sig.allBoolTokens) Boolean
     else if (cfg.strictFormats && !isNumericType(sig.dataType)
-             && (isDatetimeType(sig.dataType) || sig.dateRatio >= DateThreshold)) Datetime
+             && (isDatetime(sig.dataType) || sig.dateRatio >= DateThreshold)) Datetime
     else if (sig.emailRatio > t) Email
     else if (sig.phoneRatio > t && !(cfg.strictFormats && isNumericType(sig.dataType))) Phone
     else if (isNumericType(sig.dataType)) numericSplit
     else if (sig.numericRatio >= NumericThreshold && sig.n > 0) numericSplit
-    else if (isDatetimeType(sig.dataType) || sig.dateRatio >= DateThreshold) Datetime
+    else if (isDatetime(sig.dataType) || sig.dateRatio >= DateThreshold) Datetime
     else if (sig.uniqueRatio <= UniqueThreshold && sig.nDistinct < MaxCategories) Categorical
     else Text
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Per-type statistical profilers (`Latanova_v1.py:173-298`), fused:
   * all numeric, datetime and boolean columns of a table are profiled in
-  * ONE aggregation pass (the reference re-scans per column); only
-  * categorical columns need their own (tiny) groupBy each.
+  * ONE aggregation pass (the reference re-scans per column), and all
+  * categorical columns in one more (tiny) grouped count.
   *
   * Numerical parity choices (SURVEY.md §4.5): `stddev_pop` (np.std is
   * ddof=0), exact `percentile` with linear interpolation
@@ -57,12 +57,12 @@ object Profiler {
     case _ => Detector.tryNumeric(trim(col(field.name).cast(StringType)))
   }
 
-  /** Epoch-seconds expression for a datetime column
-    * (`dates.astype(np.int64) // 10**9`, `Latanova_v1.py:281`). */
-  def epochValue(field: StructField): Column = field.dataType match {
-    case _: TimestampType | DateType => unix_timestamp(col(field.name))
-    case _ => unix_timestamp(Detector.tryParseDate(trim(col(field.name).cast(StringType))))
-  }
+  /** Timestamp expression for a datetime column: a physical datetime
+    * type casts, anything else goes through the multi-format parse
+    * (pd.to_datetime errors='coerce', `Latanova_v1.py:278`). */
+  private def datetimeValue(field: StructField): Column =
+    if (Detector.isDatetime(field.dataType)) col(field.name).cast(TimestampType)
+    else Detector.tryParseDate(trim(col(field.name).cast(StringType)))
 
   /** Profile many numeric/datetime/boolean columns in one scan.
     * Returns partial ColumnProfiles (categorical/text filled by the
@@ -80,10 +80,7 @@ object Profiler {
     val exprs: Seq[Column] =
       numericCols.flatMap(n => numericExprs(numericValue(fields(n)), n)) ++
       datetimeCols.flatMap { n =>
-        val parsed = fields(n).dataType match {
-          case _: TimestampType | DateType => col(n).cast(TimestampType)
-          case _ => Detector.tryParseDate(trim(col(n).cast(StringType)))
-        }
+        val parsed = datetimeValue(fields(n))
         numericExprs(unix_timestamp(parsed), n) ++ Seq(
           date_format(min(parsed), "yyyy-MM-dd HH:mm:ss").as(s"$n#mindate"),
           date_format(max(parsed), "yyyy-MM-dd HH:mm:ss").as(s"$n#maxdate"),
@@ -105,7 +102,8 @@ object Profiler {
     val ps = Seq(0.25, 0.5, 0.75)
     val quantileValues =
       numericCols.map(n => n -> numericValue(fields(n))) ++
-        datetimeCols.map(n => n -> epochValue(fields(n)))
+        // epoch seconds (`dates.astype(np.int64) // 10**9`, `Latanova_v1.py:281`)
+        datetimeCols.map(n => n -> unix_timestamp(datetimeValue(fields(n))))
     val counts = (numericCols ++ datetimeCols)
       .map(n => n -> row.getLong(idx(s"$n#n"))).toMap
     val quantiles = Quantiles.exactMulti(df, quantileValues, ps, counts)
@@ -138,27 +136,46 @@ object Profiler {
     (numericProfiles ++ datetimeProfiles ++ booleanProfiles).toMap
   }
 
-  /** value_counts(normalize=True) (`Latanova_v1.py:255-271`): one
-    * (tiny, < 50-row — the Detector's category cap) groupBy per
-    * categorical column.
-    * Order: count desc, then value asc — pandas breaks count ties by
-    * first-seen order, which is not reproducible distributed; we
-    * document value-order instead (SURVEY.md §2.4). */
-  def profileCategorical(df: DataFrame, column: String): CategoricalStats = {
-    val rows = df.filter(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("value"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("value"))
-      .collect()
-    val total = rows.map(_.getLong(1)).sum
-    val cats = rows.map(_.getString(0)).toSeq
-    val counts = rows.map(_.getLong(1)).toSeq
-    val probs = counts.map(_.toDouble / total)
-    CategoricalStats(
-      categories = cats, probabilities = probs, counts = counts,
-      mostCommon = cats.headOption.orNull,
-      mostCommonProb = probs.headOption.getOrElse(0.0),
-      count = total)
+  /** value_counts(normalize=True) (`Latanova_v1.py:255-271`) of every
+    * column in `columns`, in ONE pass: rows explode to a narrow
+    * (column, value) stream, one groupBy counts it, one collect brings
+    * the counts back — fewer than 50 rows per column (the Detector's
+    * category cap) — and the driver orders each column's values.
+    * Nulls are excluded; values are not trimmed.
+    * Order: count desc, then value asc in Spark's binary UTF-8 string
+    * order — pandas breaks count ties by first-seen order, which is
+    * not reproducible distributed; we document value-order instead
+    * (SURVEY.md §2.4). No columns, no Spark job. */
+  def profileCategoricals(df: DataFrame,
+                          columns: Seq[String]): Map[String, CategoricalStats] = {
+    val counted: Map[String, Array[(String, Long)]] =
+      if (columns.isEmpty) Map.empty
+      else {
+        val pairs = columns.map(c =>
+          struct(lit(c).as("c"), col(c).cast(StringType).as("v")))
+        df.select(explode(array(pairs: _*)).as("p"))
+          .select(col("p.c").as("c"), col("p.v").as("v"))
+          .filter(col("v").isNotNull)
+          .groupBy("c", "v").agg(count(lit(1)).as("cnt"))
+          .collect()
+          .groupMap(_.getString(0))(r => r.getString(1) -> r.getLong(2))
+      }
+    def utf8(v: String) = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    columns.map { c =>
+      val rows = counted.getOrElse(c, Array.empty[(String, Long)]).sortWith {
+        case ((va, na), (vb, nb)) =>
+          na > nb || (na == nb && java.util.Arrays.compareUnsigned(utf8(va), utf8(vb)) < 0)
+      }
+      val total = rows.map(_._2).sum
+      val cats = rows.map(_._1).toSeq
+      val counts = rows.map(_._2).toSeq
+      val probs = counts.map(_.toDouble / total)
+      c -> CategoricalStats(
+        categories = cats, probabilities = probs, counts = counts,
+        mostCommon = cats.headOption.orNull,
+        mostCommonProb = probs.headOption.getOrElse(0.0),
+        count = total)
+    }.toMap
   }
 
   /** Grouped numeric profile: the full per-column numeric profile of

@@ -8,8 +8,9 @@ import graft.text.{EmbeddingModel, TextProfiler, TextSynth, Vocab}
   * `Latanova_v1.py:630-739`), Spark-first:
   *
   *   profile:  seeded sample → ONE detection scan (Detector) → ONE
-  *             scalar-profile scan (Profiler) → small per-categorical
-  *             groupBys → text/embedding tree-aggregate (TextProfiler).
+  *             scalar-profile scan (Profiler) → ONE small grouped count
+  *             of all categoricals → text/embedding tree-aggregate
+  *             (TextProfiler).
   *   generate: every column is a projection over one `spark.range(n)` —
   *             no shuffle, codegen'd, embarrassingly parallel
   *             (SURVEY.md §4.3).
@@ -51,6 +52,8 @@ object SyntheticPipeline {
     try {
       val detected = Detector.detect(df, cfg.detector)
       val scalars = Profiler.profileScalars(df, detected)
+      val categoricals = Profiler.profileCategoricals(df,
+        detected.collect { case (n, (SemanticType.Categorical, _)) => n }.toSeq)
       val model = EmbeddingModel(cfg.embedDim, cfg.seed)
       detected.map { case (name, (st, sig)) =>
         import SemanticType._
@@ -58,7 +61,7 @@ object SyntheticPipeline {
           ColumnProfile(name, st, sig))
         val full = st match {
           case Categorical =>
-            base.copy(categorical = Some(Profiler.profileCategorical(df, name)))
+            base.copy(categorical = categoricals.get(name))
           case Email | Phone =>
             // the reference vectorizes email/phone columns too
             // (`Latanova_v1.py:640-643`) — their embedding-space profile
@@ -147,6 +150,8 @@ object SyntheticPipeline {
     import SemanticType._
     val detected = profiles.map { case (n, p) => n -> (p.semanticType, p.signals) }
     val synthProfiles = Profiler.profileScalars(synthetic, detected)
+    val synthCategoricals = Profiler.profileCategoricals(synthetic,
+      profiles.collect { case (n, p) if p.semanticType == Categorical => n }.toSeq)
     lazy val model = EmbeddingModel(cfg.embedDim, cfg.seed)
     profiles.flatMap { case (name, p) =>
       val metrics: Option[Map[String, Double]] = p.semanticType match {
@@ -174,8 +179,7 @@ object SyntheticPipeline {
           for (o <- p.boolean; s <- synthProfiles.get(name).flatMap(_.boolean)) yield Map(
             "true_prob_error" -> math.abs(o.trueProb - s.trueProb))
         case Categorical =>
-          p.categorical.map { o =>
-            val s = Profiler.profileCategorical(synthetic, name)
+          for (o <- p.categorical; s <- synthCategoricals.get(name)) yield {
             val sm = s.categories.zip(s.probabilities).toMap
             val err = o.categories.zip(o.probabilities).map { case (c, op) =>
               math.abs(op - sm.getOrElse(c, 0.0))

@@ -191,7 +191,7 @@ object Corpus {
     * vocab-bounded aggs), the two stream totals as broadcast 1-row
     * frames, component-word lookups as keyed joins on the word, and a
     * distributed top-k — no driver state at any size. */
-  def collocations(df: DataFrame, idCol: String, textCol: String,
+  def collocations(df: DataFrame, textCol: String,
                    minCount: Long, k: Int): DataFrame = {
     val text = col(textCol).cast("string")
     // both count tables feed a total AND a join — pinned once, like

@@ -762,7 +762,7 @@ object Dedup {
     * rows) composes the same way from [[simhashNearDup]]-style pairs
     * over the unioned corpus; the exact form is the standard first
     * line of defense. */
-  def decontaminate(train: DataFrame, trainId: String, test: DataFrame,
+  def decontaminate(train: DataFrame, test: DataFrame,
                     textCol: String): DataFrame = {
     val testFp = test
       .select(TextAnalysis.fingerprint(col(textCol)).as("fp")).distinct()

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Golden detection tests against the reference's own fixture
   * (`/root/reference/customer_data_test.csv`) — expected types verified
@@ -146,6 +146,24 @@ class DetectorSpec extends SparkSpec {
       === SemanticType.Datetime)
   }
 
+  test("TIMESTAMP_NTZ classifies like the same instants as TIMESTAMP, in both ladders") {
+    import org.apache.spark.sql.types.NullType
+    val df = DetectorSpec.timestampTwins(spark)
+    def strip(s: ColumnSignals) = s.copy(name = "", dataType = NullType)
+    for (cfg <- Seq(DetectorConfig(), DetectorConfig(strictFormats = true))) {
+      val d = Detector.detect(df, cfg)
+      for ((ntz, ts) <- Seq("ntz_frac" -> "ts_frac", "ntz_whole" -> "ts_whole")) {
+        assert(d(ntz)._1 === d(ts)._1, s"$ntz vs $ts, $cfg")
+        assert(strip(d(ntz)._2) === strip(d(ts)._2), s"$ntz vs $ts, $cfg")
+      }
+      // a sub-second render has 19+ digits, past the phone rule's 15
+      assert(d("ntz_frac")._1 === SemanticType.Datetime, cfg)
+      assert(d("ntz_frac")._2.dateRatio === 1.0, cfg)
+    }
+    val strict = Detector.detect(df, DetectorConfig(strictFormats = true))
+    assert(strict.values.map(_._1).toSet === Set(SemanticType.Datetime))
+  }
+
   test("boolean coercion expression matches reference token sets") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -154,5 +172,23 @@ class DetectorSpec extends SparkSpec {
     val got = df.collect().map(r => if (r.isNullAt(0)) null else r.getBoolean(0))
     assert(got.toSeq === Seq(true, true, true, true, true,
       false, false, false, false, false, null))
+  }
+}
+
+object DetectorSpec {
+  /** 200 hourly instants from 2024-01-01 00:00 UTC, each with a distinct
+    * sub-second part, as TIMESTAMP (`ts_frac`) and TIMESTAMP_NTZ
+    * (`ntz_frac`), plus the same hours at whole seconds in both types
+    * (`ts_whole`, `ntz_whole`). The session timezone is UTC, so each NTZ
+    * column holds the wall clock of its TIMESTAMP twin. */
+  def timestampTwins(spark: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+    import org.apache.spark.sql.types.TimestampNTZType
+    val whole = lit(1704067200000000L) + col("id") * 3600000000L
+    val frac = timestamp_micros(whole + col("id") * 123L + 1L)
+    spark.range(200).select(
+      frac.as("ts_frac"), frac.cast(TimestampNTZType).as("ntz_frac"),
+      timestamp_micros(whole).as("ts_whole"),
+      timestamp_micros(whole).cast(TimestampNTZType).as("ntz_whole"))
   }
 }

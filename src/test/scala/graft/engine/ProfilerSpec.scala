@@ -47,13 +47,65 @@ class ProfilerSpec extends SparkSpec {
   }
 
   test("categorical profile: normalized value_counts over segment") {
-    val c = Profiler.profileCategorical(fixture, "segment")
+    val c = Profiler.profileCategoricals(fixture, Seq("segment"))("segment")
     assert(c.categories.toSet === Set("A", "B", "C"))
     assert(math.abs(c.probabilities.sum - 1.0) < 1e-9)
     assert(c.counts.sum === 500L)
     assert(c.mostCommon === c.categories.head)
     // descending count order
     assert(c.counts === c.counts.sorted.reverse)
+  }
+
+  test("TIMESTAMP_NTZ datetime profile equals the TIMESTAMP profile of the same instants") {
+    val df = DetectorSpec.timestampTwins(spark)
+    val p = Profiler.profileScalars(df, Detector.detect(df, DetectorConfig(strictFormats = true)))
+    for ((ntz, ts) <- Seq("ntz_frac" -> "ts_frac", "ntz_whole" -> "ts_whole")) {
+      assert(p(ntz).datetime.isDefined, ntz)
+      assert(p(ntz).datetime === p(ts).datetime, s"$ntz vs $ts")
+    }
+    val d = p("ntz_frac").datetime.get
+    assert(d.minDate === "2024-01-01 00:00:00")
+    assert(d.maxDate === "2024-01-09 07:00:00")
+    assert(d.format === "YYYY-MM-DD")
+    assert(d.epoch.min === 1704067200.0)
+    assert(d.epoch.count === 200L)
+  }
+
+  test("profileCategoricals: one pass equals the per-column value counts") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{asc, count, desc}
+    import org.apache.spark.sql.types.StringType
+    val grin = "\uD83D\uDE00" // U+1F600, outside the BMP
+    val fullA = "\uFF21"       // U+FF21: before U+1F600 in UTF-8, after it in UTF-16
+    val a = Seq.fill(3)("a") ++ Seq.fill(3)(" a") ++ Seq.fill(2)("b") ++
+      Seq.fill(2)(grin) ++ Seq.fill(2)(fullA) ++ Seq(null, null)
+    val b = Seq.fill(4)("x") ++ Seq.fill(4)("y") ++ Seq.fill(4)(null) ++ Seq("x ", "z")
+    val n = Seq.fill(5)(1) ++ Seq.fill(5)(10) ++ Seq.fill(4)(2)
+    val df = a.indices.map(i => (a(i), b(i), n(i))).toDF("a", "b", "n").repartition(3)
+    // the per-column groupBy/orderBy each column used to run
+    def perColumn(c: String): CategoricalStats = {
+      val rows = df.filter(col(c).isNotNull)
+        .groupBy(col(c).cast(StringType).as("value"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), asc("value"))
+        .collect()
+      val total = rows.map(_.getLong(1)).sum
+      val cats = rows.map(_.getString(0)).toSeq
+      val counts = rows.map(_.getLong(1)).toSeq
+      val probs = counts.map(_.toDouble / total)
+      CategoricalStats(cats, probs, counts, cats.headOption.orNull,
+        probs.headOption.getOrElse(0.0), total)
+    }
+    val cols = Seq("a", "b", "n")
+    val got = Profiler.profileCategoricals(df, cols)
+    assert(got === cols.map(c => c -> perColumn(c)).toMap)
+    assert(got("a").categories === Seq(" a", "a", "b", fullA, grin))
+    assert(got("a").counts === Seq(3L, 3L, 2L, 2L, 2L))
+    assert(got("a").mostCommon === " a" && got("a").count === 12L)
+    assert(got("b").categories === Seq("x", "y", "x ", "z"))
+    assert(got("n").categories === Seq("1", "10", "2"))
+    val (none, jobs) = withJobCount(Profiler.profileCategoricals(df, Nil))
+    assert(none.isEmpty && jobs === 0)
   }
 
   test("correlationMatrix matches df.stat.corr pairwise, one row per unordered pair") {

@@ -77,4 +77,35 @@ class SyntheticPipelineSpec extends SparkSpec {
     assert(feedback("mean_error") < math.max(0.05, math.abs(o.overallMean) * 0.5),
       s"mean_error=${feedback("mean_error")} overallMean=${o.overallMean}")
   }
+
+  /** Spark jobs profileTable starts on the orders-shaped table below:
+    * 14 as measured with the one-pass categorical counts and the native
+    * TIMESTAMP_NTZ datetime path (22 with a grouped count per categorical
+    * column and the date column parsed as text). */
+  private val JobBudget = 14
+
+  test("profileTable on an orders-shaped table stays within its Spark job budget") {
+    import org.apache.spark.sql.functions.{col, element_at, lit, timestamp_micros, typedLit}
+    import org.apache.spark.sql.types.TimestampNTZType
+    val day = 86400000000L
+    val orders = spark.range(2000).select(
+      col("id").as("o_orderkey"),
+      (col("id") * 7919 % 500).as("o_custkey"),
+      element_at(typedLit(Seq("F", "O", "P")), (col("id") % 3 + 1).cast("int"))
+        .as("o_orderstatus"),
+      ((col("id") * 104729 % 49900000 + 100000) / 100.0).as("o_totalprice"),
+      timestamp_micros(lit(788918400000000L) + col("id") * 6151 % 2404 * day)
+        .cast(TimestampNTZType).as("o_orderdate"),
+      element_at(typedLit(Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")),
+        (col("id") * 13 % 5 + 1).cast("int")).as("o_orderpriority"))
+    // the benchmark's synth_tables settings: whole table, strict ladder
+    val cfg = SyntheticPipeline.Config(detector = DetectorConfig(strictFormats = true),
+      sampleCap = 0, textColumns = false)
+    val (profiles, jobs) = withJobCount(SyntheticPipeline.profileTable(orders, cfg))
+    assert(profiles.map { case (n, p) => n -> p.semanticType } === Map(
+      "o_orderkey" -> SemanticType.Integer, "o_custkey" -> SemanticType.Integer,
+      "o_orderstatus" -> SemanticType.Categorical, "o_totalprice" -> SemanticType.Float,
+      "o_orderdate" -> SemanticType.Datetime, "o_orderpriority" -> SemanticType.Categorical))
+    assert(jobs <= JobBudget, s"profileTable ran $jobs Spark jobs")
+  }
 }

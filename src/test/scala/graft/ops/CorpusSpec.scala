@@ -291,7 +291,7 @@ class CorpusSpec extends SparkSpec {
     ).toDF("id", "text")
     // unigrams: new 3, york 3, city 2, hall 1, deal 1 -> Nu = 10
     // bigrams: "new york" 2, "york city" 2, others 1 -> Nb = 7
-    val out = Corpus.collocations(corpus, "id", "text", minCount = 2L, k = 5)
+    val out = Corpus.collocations(corpus, "text", minCount = 2L, k = 5)
       .collect().map(r =>
         (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
     // only the two pairs at cxy >= 2 survive
@@ -307,11 +307,11 @@ class CorpusSpec extends SparkSpec {
     assert(m(("york", "city"))._1 === 2L && m(("new", "york"))._1 === 2L)
 
     // k truncates below the survivor count
-    assert(Corpus.collocations(corpus, "id", "text", 1L, 2).count() === 2)
+    assert(Corpus.collocations(corpus, "text", 1L, 2).count() === 2)
   }
 
   test("collocations plan: global top-k is TakeOrdered, not a window") {
-    val plan = Corpus.collocations(docs, "id", "text", 1L, 5)
+    val plan = Corpus.collocations(docs, "text", 1L, 5)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"no TakeOrdered:\n$plan")
     assert(!plan.contains("Window"), s"window in plan:\n$plan")

@@ -199,10 +199,10 @@ class DedupSpec extends SparkSpec {
       (3L, "eta theta iota")).toDF("id", "text")
     val test = Seq((100L, "Delta  Epsilon   ZETA"), // normalized dup of 2
       (101L, "totally different")).toDF("id", "text")
-    val kept = Dedup.decontaminate(train, "id", test, "text")
+    val kept = Dedup.decontaminate(train, test, "text")
       .collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 3L)) // 2 leaked (tokens equal after normalize)
-    val plan = Dedup.decontaminate(train, "id", test, "text")
+    val plan = Dedup.decontaminate(train, test, "text")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"anti-join should broadcast the test side:\n$plan")
