@@ -109,7 +109,10 @@ object GraftExtensions {
     columnFn("graft_lang_id", 1)(cs => TextAnalysis.langId(cs.head)),
     columnFn("graft_fingerprint", 1)(cs => TextAnalysis.fingerprint(cs.head)),
     columnFn("graft_rolling_hash", 1)(cs => TextAnalysis.rollingHash(cs.head)),
-    columnFn("graft_simhash", 1)(cs => TextAnalysis.simHash16(cs.head)),
+    // lower() keeps the tokenizer's input contract: atomic types cast
+    // to string, arrays/maps/structs are rejected at analysis
+    columnFn("graft_simhash", 1)(cs =>
+      TextAnalysis.simHashRow(org.apache.spark.sql.functions.lower(cs.head), 16)),
     columnFn("graft_shingles", 1)(cs => Dedup.shingles(cs.head)),
     columnFn("graft_minhash", 1)(cs => Dedup.minhashSignature(cs.head)))
 

@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.chaining._
-
 import graft.SparkEntry._
 import graft.ops.{Dedup, Sketch, TextAnalysis}
 
@@ -108,7 +106,7 @@ object Oracle {
     * MSB-first string ↔ weight 2^(nBits−1−j), signed 64-bit word) — the
     * form the Hamming-band oracle shifts and masks. Bit j draws on bit
     * (j/32) of md5 hex digit (j%32), matching
-    * `TextAnalysis.simHashAgg`; at nBits=64 the j=0 weight is
+    * `TextAnalysis.simHashRow`; at nBits=64 the j=0 weight is
     * Long.MinValue, which DuckDB parses as a BIGINT literal, and being
     * the leftmost term of the sum no intermediate overflows. */
   private def simhashIntSql(toksExpr: String, nBits: Int): String =
@@ -136,7 +134,7 @@ object Oracle {
       .mkString(",\n")
   }
 
-  /** DuckDB twin of TextAnalysis.simHash16. */
+  /** DuckDB twin of TextAnalysis.simHashRow at 16 bits. */
   private def simhashSql(toksExpr: String): String = {
     val bits = (0 until 16).map { j =>
       s"CASE WHEN list_sum(list_transform($toksExpr, t -> ((instr('0123456789abcdef', substr(md5(t), ${j + 1}, 1)) - 1) % 2) * 2 - 1)) > 0 THEN '1' ELSE '0' END"
@@ -402,7 +400,7 @@ object Oracle {
           |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
 
       "q112_hyperplane_buckets" -> {
-        // the same deterministic hyperplanes the Spark expression uses,
+        // the same deterministic hyperplanes the Spark kernel uses,
         // baked into the SQL as double literals; addition stays
         // left-associated in both engines, so the sign bits agree
         // bit-for-bit
@@ -1010,32 +1008,9 @@ object Oracle {
       // Histogram-sketch replay: same two-pass frame, the identical
       // divide-then-scale bin expression, RANGE cumulative sum over
       // unique bins, and the pinned interpolation order.
-      "q182_hist_quantiles" ->
-        """WITH x AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x
-          |    FROM lineitem WHERE l_extendedprice IS NOT NULL
-          |      AND NOT isnan(CAST(l_extendedprice AS DOUBLE))),
-          |f AS (SELECT min(x) AS lo, max(x) AS hi, count(*) AS n FROM x),
-          |b AS (SELECT CASE WHEN hi = lo THEN 0
-          |      ELSE least(greatest(CAST(floor((x - lo) / (hi - lo) * 256)
-          |        AS BIGINT), 0), 255) END AS bin
-          |    FROM x, f),
-          |c AS (SELECT bin, count(*) AS cnt FROM b GROUP BY bin),
-          |cc AS (SELECT bin, cnt, sum(cnt) OVER (ORDER BY bin) AS cum FROM c),
-          |qs AS (SELECT unnest([CAST(0.01 AS DOUBLE), CAST(0.25 AS DOUBLE),
-          |    CAST(0.5 AS DOUBLE), CAST(0.75 AS DOUBLE),
-          |    CAST(0.99 AS DOUBLE)]) AS q),
-          |t AS (SELECT q, n, lo, hi,
-          |    greatest(CAST(ceil(q * n) AS BIGINT), 1) AS target_rank
-          |  FROM qs, f),
-          |pick AS (SELECT t.q, t.n, t.lo, t.hi, t.target_rank,
-          |    min(cc.bin) AS bin
-          |  FROM t JOIN cc ON cc.cum >= t.target_rank
-          |  GROUP BY 1, 2, 3, 4, 5)
-          |SELECT p.q, p.n, p.target_rank, p.bin,
-          |  p.lo + (p.bin + CAST(p.target_rank - (cc.cum - cc.cnt) AS DOUBLE)
-          |    / cc.cnt) * ((p.hi - p.lo) / 256) AS est
-          |FROM pick p JOIN cc ON cc.bin = p.bin
-          |ORDER BY p.q""".stripMargin,
+      "q182_hist_quantiles" -> histQuantilesSql(
+        "NOT isnan(CAST(l_extendedprice AS DOUBLE))", 256,
+        Seq(0.01, 0.25, 0.5, 0.75, 0.99)),
 
       // Per-group histogram-quantile replay: q182's ladder with the
       // group key threaded through frame, bins, cumulative window,
@@ -1135,7 +1110,7 @@ object Oracle {
       },
 
       // Fertility replay: the 10-stage BPE CTE chain (shared with
-      // q155/q156/q158), piece counts from the final segmentation,
+      // q155/q156), piece counts from the final segmentation,
       // integer sums, two exact final divisions.
       "q184_bpe_fertility" ->
         s"""WITH ${bpeStagesSql(10)},
@@ -1229,31 +1204,8 @@ object Oracle {
       // Streaming-histq replay: the update-mode state max-merges to
       // the plain batch bin table, so the batch sketch of the same
       // subset (64 bins, known frame) is the oracle.
-      "q187_streaming_histq" ->
-        """WITH x AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x
-          |    FROM lineitem WHERE l_extendedprice IS NOT NULL
-          |      AND l_orderkey % 20 = 0),
-          |f AS (SELECT min(x) AS lo, max(x) AS hi, count(*) AS n FROM x),
-          |b AS (SELECT CASE WHEN hi = lo THEN 0
-          |      ELSE least(greatest(CAST(floor((x - lo) / (hi - lo) * 64)
-          |        AS BIGINT), 0), 63) END AS bin
-          |    FROM x, f),
-          |c AS (SELECT bin, count(*) AS cnt FROM b GROUP BY bin),
-          |cc AS (SELECT bin, cnt, sum(cnt) OVER (ORDER BY bin) AS cum FROM c),
-          |qs AS (SELECT unnest([CAST(0.25 AS DOUBLE), CAST(0.5 AS DOUBLE),
-          |    CAST(0.9 AS DOUBLE), CAST(0.99 AS DOUBLE)]) AS q),
-          |t AS (SELECT q, n, lo, hi,
-          |    greatest(CAST(ceil(q * n) AS BIGINT), 1) AS target_rank
-          |  FROM qs, f),
-          |pick AS (SELECT t.q, t.n, t.lo, t.hi, t.target_rank,
-          |    min(cc.bin) AS bin
-          |  FROM t JOIN cc ON cc.cum >= t.target_rank
-          |  GROUP BY 1, 2, 3, 4, 5)
-          |SELECT p.q, p.n, p.target_rank, p.bin,
-          |  p.lo + (p.bin + CAST(p.target_rank - (cc.cum - cc.cnt) AS DOUBLE)
-          |    / cc.cnt) * ((p.hi - p.lo) / 64) AS est
-          |FROM pick p JOIN cc ON cc.bin = p.bin
-          |ORDER BY p.q""".stripMargin,
+      "q187_streaming_histq" -> histQuantilesSql(
+        "l_orderkey % 20 = 0", 64, Seq(0.25, 0.5, 0.9, 0.99)),
 
       // Streaming count–min replay: update-mode counters max-merge to
       // the plain batch sketch, so the batch CM of the same token
@@ -1315,17 +1267,7 @@ object Oracle {
       // 0-seeded left fold). Certifies the gated composition the
       // corpus-scale pass runs — no quadratic kernel anywhere.
       "q195_knn_density_ivf" ->
-        s"""WITH v AS (SELECT vec_id,
-           |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
-           |  FROM embeddings WHERE embedding IS NOT NULL),
-           |amx AS (SELECT vec_id, vv,
-           |    list_max(list_transform(vv, x -> abs(x))) AS amax FROM v),
-           |sc AS (SELECT vec_id, vv, amax, amax / 127.0 AS scale FROM amx),
-           |qz AS (SELECT vec_id,
-           |    CASE WHEN amax = 0 THEN list_transform(vv, x -> CAST(0 AS DOUBLE))
-           |         ELSE list_transform(vv, x ->
-           |           least(greatest(floor(x / scale + 0.5), -127.0), 127.0)) END AS qv
-           |  FROM sc),
+        s"""WITH ${int8QuantizedSql("amx", "sc")},
            |n AS (SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS nrm FROM qz),
            |cent AS (SELECT vec_id AS centroid_id, qv AS cv, nrm AS cn
            |         FROM n ORDER BY vec_id
@@ -2222,28 +2164,18 @@ object Oracle {
       // dot products (exact in doubles — far below 2^53), so sim is
       // bit-identical with no float-sum-order caveat anywhere.
       "q128_ann_int8" ->
-        """WITH v AS (SELECT vec_id,
-          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
-          |  FROM embeddings WHERE embedding IS NOT NULL),
-          |a AS (SELECT vec_id, vv,
-          |    list_max(list_transform(vv, x -> abs(x))) AS amax FROM v),
-          |s AS (SELECT vec_id, vv, amax, amax / 127.0 AS scale FROM a),
-          |qz AS (SELECT vec_id,
-          |    CASE WHEN amax = 0 THEN list_transform(vv, x -> CAST(0 AS DOUBLE))
-          |         ELSE list_transform(vv, x ->
-          |           least(greatest(floor(x / scale + 0.5), -127.0), 127.0)) END AS qv
-          |  FROM s),
-          |n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nn FROM qz),
-          |q AS (SELECT * FROM n WHERE vec_id < 5 AND nn > 0),
-          |c AS (SELECT * FROM n WHERE vec_id >= 5 AND nn > 0),
-          |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    list_dot_product(q.qv, c.qv) / (sqrt(q.nn) * sqrt(c.nn)) AS sim
-          |  FROM q CROSS JOIN c)
-          |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
-          |  SELECT query_id, neighbor_id, sim,
-          |    row_number() OVER (PARTITION BY query_id
-          |      ORDER BY sim DESC, neighbor_id ASC) AS rank FROM p)
-          |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+        s"""WITH ${int8QuantizedSql("a", "s")},
+           |n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nn FROM qz),
+           |q AS (SELECT * FROM n WHERE vec_id < 5 AND nn > 0),
+           |c AS (SELECT * FROM n WHERE vec_id >= 5 AND nn > 0),
+           |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           |    list_dot_product(q.qv, c.qv) / (sqrt(q.nn) * sqrt(c.nn)) AS sim
+           |  FROM q CROSS JOIN c)
+           |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
+           |  SELECT query_id, neighbor_id, sim,
+           |    row_number() OVER (PARTITION BY query_id
+           |      ORDER BY sim DESC, neighbor_id ASC) AS rank FROM p)
+           |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
       // int8 auto-gate IVF-route replay: q128's quantizer CTEs feed
       // q30's IVF algebra — centroids = 16 lowest-id QUANTIZED corpus
@@ -2251,51 +2183,41 @@ object Oracle {
       // convention of the engine's pairSim, integer dot products exact
       // in doubles so sims are bit-identical cross-engine.
       "q147_ann_int8_ivf" ->
-        """WITH v AS (SELECT vec_id,
-          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
-          |  FROM embeddings WHERE embedding IS NOT NULL),
-          |a AS (SELECT vec_id, vv,
-          |    list_max(list_transform(vv, x -> abs(x))) AS amax FROM v),
-          |s AS (SELECT vec_id, vv, amax, amax / 127.0 AS scale FROM a),
-          |qz AS (SELECT vec_id,
-          |    CASE WHEN amax = 0 THEN list_transform(vv, x -> CAST(0 AS DOUBLE))
-          |         ELSE list_transform(vv, x ->
-          |           least(greatest(floor(x / scale + 0.5), -127.0), 127.0)) END AS qv
-          |  FROM s),
-          |n AS (SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS nrm FROM qz),
-          |q AS (SELECT * FROM n WHERE vec_id < 5),
-          |c AS (SELECT * FROM n WHERE vec_id >= 5),
-          |cent AS (SELECT vec_id AS centroid_id, qv AS cv, nrm AS cn
-          |         FROM c ORDER BY vec_id LIMIT 16),
-          |assigned AS (
-          |  SELECT vec_id AS id, qv AS vec, nrm AS vn, centroid_id FROM (
-          |    SELECT c.vec_id, c.qv, c.nrm, ct.centroid_id,
-          |      row_number() OVER (PARTITION BY c.vec_id ORDER BY
-          |        (CASE WHEN c.nrm = 0 OR ct.cn = 0 THEN 0.0
-          |              ELSE list_dot_product(c.qv, ct.cv) / (c.nrm * ct.cn) END) DESC,
-          |        ct.centroid_id ASC) AS rn
-          |    FROM c CROSS JOIN cent ct)
-          |  WHERE rn = 1),
-          |probes AS (
-          |  SELECT vec_id AS query_id, qv, nrm AS qn, centroid_id FROM (
-          |    SELECT q.vec_id, q.qv, q.nrm, ct.centroid_id,
-          |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-          |        (CASE WHEN q.nrm = 0 OR ct.cn = 0 THEN 0.0
-          |              ELSE list_dot_product(q.qv, ct.cv) / (q.nrm * ct.cn) END) DESC,
-          |        ct.centroid_id ASC) AS rn
-          |    FROM q CROSS JOIN cent ct)
-          |  WHERE rn <= 4),
-          |scored AS (
-          |  SELECT p.query_id, a.id AS neighbor_id,
-          |    CASE WHEN p.qn = 0 OR a.vn = 0 THEN 0.0
-          |         ELSE list_dot_product(p.qv, a.vec) / (p.qn * a.vn) END AS sim
-          |  FROM probes p JOIN assigned a ON p.centroid_id = a.centroid_id)
-          |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
-          |  SELECT query_id, neighbor_id, sim,
-          |    row_number() OVER (PARTITION BY query_id
-          |      ORDER BY sim DESC, neighbor_id ASC) AS rank
-          |  FROM scored)
-          |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+        s"""WITH ${int8QuantizedSql("a", "s")},
+           |n AS (SELECT vec_id, qv, sqrt(list_dot_product(qv, qv)) AS nrm FROM qz),
+           |q AS (SELECT * FROM n WHERE vec_id < 5),
+           |c AS (SELECT * FROM n WHERE vec_id >= 5),
+           |cent AS (SELECT vec_id AS centroid_id, qv AS cv, nrm AS cn
+           |         FROM c ORDER BY vec_id LIMIT 16),
+           |assigned AS (
+           |  SELECT vec_id AS id, qv AS vec, nrm AS vn, centroid_id FROM (
+           |    SELECT c.vec_id, c.qv, c.nrm, ct.centroid_id,
+           |      row_number() OVER (PARTITION BY c.vec_id ORDER BY
+           |        (CASE WHEN c.nrm = 0 OR ct.cn = 0 THEN 0.0
+           |              ELSE list_dot_product(c.qv, ct.cv) / (c.nrm * ct.cn) END) DESC,
+           |        ct.centroid_id ASC) AS rn
+           |    FROM c CROSS JOIN cent ct)
+           |  WHERE rn = 1),
+           |probes AS (
+           |  SELECT vec_id AS query_id, qv, nrm AS qn, centroid_id FROM (
+           |    SELECT q.vec_id, q.qv, q.nrm, ct.centroid_id,
+           |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
+           |        (CASE WHEN q.nrm = 0 OR ct.cn = 0 THEN 0.0
+           |              ELSE list_dot_product(q.qv, ct.cv) / (q.nrm * ct.cn) END) DESC,
+           |        ct.centroid_id ASC) AS rn
+           |    FROM q CROSS JOIN cent ct)
+           |  WHERE rn <= 4),
+           |scored AS (
+           |  SELECT p.query_id, a.id AS neighbor_id,
+           |    CASE WHEN p.qn = 0 OR a.vn = 0 THEN 0.0
+           |         ELSE list_dot_product(p.qv, a.vec) / (p.qn * a.vn) END AS sim
+           |  FROM probes p JOIN assigned a ON p.centroid_id = a.centroid_id)
+           |SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
+           |  SELECT query_id, neighbor_id, sim,
+           |    row_number() OVER (PARTITION BY query_id
+           |      ORDER BY sim DESC, neighbor_id ASC) AS rank
+           |  FROM scored)
+           |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
       // PQ replay: grouped Lloyd per subspace (L2 assignment, ties →
       // lowest centroid id — list_distance is monotone with the
@@ -3705,8 +3627,15 @@ object Oracle {
            |WHERE list_cosine_similarity(CAST(l.embedding AS DOUBLE[]), CAST(r.embedding AS DOUBLE[])) >= 0.99
            |ORDER BY id_a, id_b""".stripMargin,
 
-      "q28_ann_topk" -> annTopkSql,
-      "q29_ann_topk_scalable" -> annTopkSql,
+      "q28_ann_topk" ->
+        """SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
+          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim,
+          |    row_number() OVER (PARTITION BY q.vec_id
+          |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id ASC) AS rank
+          |  FROM (SELECT * FROM embeddings WHERE vec_id < 5) q
+          |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id >= 5) c)
+          |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
 
       "q37_neardup_bucketed" -> q37Sql,
       "q38_kmeans_centroids" -> q38Sql,
@@ -4245,9 +4174,6 @@ object Oracle {
            |  64 + ((${hd(5)} * 16 + ${hd(6)}) * 256 + (${hd(7)} * 16 + ${hd(8)})) % 1985 AS height,
            |  CAST(NULL AS BIGINT) AS duration_ms
            |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin)
-      // q158 is bpeTrainLocal — bit-identical-by-contract to q155's
-      // bpeTrain (spec-enforced), so it shares q155's oracle replay
-      .pipe(m => m + ("q158_bpe_train_fast" -> m("q155_bpe_train")))
   }
 
 
@@ -5022,6 +4948,56 @@ object Oracle {
       |    AS density_score
       |FROM f ORDER BY id""".stripMargin
 
+  /** Histogram-quantile replay shared by q182 and q187: lineitem
+    * prices passing `filter`, `bins` equi-width bins over the frame
+    * [min, max] (the identical divide-then-scale bin expression), a
+    * RANGE cumulative sum over the occupied bins, and the pinned
+    * interpolation order, at each of `qs`. */
+  private def histQuantilesSql(filter: String, bins: Int, qs: Seq[Double]): String = {
+    val qList = qs.map(q => s"CAST($q AS DOUBLE)").grouped(2)
+      .map(_.mkString(", ")).mkString(",\n    ")
+    s"""WITH x AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x
+       |    FROM lineitem WHERE l_extendedprice IS NOT NULL
+       |      AND $filter),
+       |f AS (SELECT min(x) AS lo, max(x) AS hi, count(*) AS n FROM x),
+       |b AS (SELECT CASE WHEN hi = lo THEN 0
+       |      ELSE least(greatest(CAST(floor((x - lo) / (hi - lo) * $bins)
+       |        AS BIGINT), 0), ${bins - 1}) END AS bin
+       |    FROM x, f),
+       |c AS (SELECT bin, count(*) AS cnt FROM b GROUP BY bin),
+       |cc AS (SELECT bin, cnt, sum(cnt) OVER (ORDER BY bin) AS cum FROM c),
+       |qs AS (SELECT unnest([$qList]) AS q),
+       |t AS (SELECT q, n, lo, hi,
+       |    greatest(CAST(ceil(q * n) AS BIGINT), 1) AS target_rank
+       |  FROM qs, f),
+       |pick AS (SELECT t.q, t.n, t.lo, t.hi, t.target_rank,
+       |    min(cc.bin) AS bin
+       |  FROM t JOIN cc ON cc.cum >= t.target_rank
+       |  GROUP BY 1, 2, 3, 4, 5)
+       |SELECT p.q, p.n, p.target_rank, p.bin,
+       |  p.lo + (p.bin + CAST(p.target_rank - (cc.cum - cc.cnt) AS DOUBLE)
+       |    / cc.cnt) * ((p.hi - p.lo) / $bins) AS est
+       |FROM pick p JOIN cc ON cc.bin = p.bin
+       |ORDER BY p.q""".stripMargin
+  }
+
+  /** int8 quantizer CTEs shared by q128, q147 and q195 — the engine's
+    * op order (cast to double, amax/127 scale, round-half-up clamp):
+    * `v(vec_id, vv)` through `qz(vec_id, qv)`. The caller names the two
+    * middle CTEs so they never shadow a later table alias. */
+  private def int8QuantizedSql(absMax: String, scaled: String): String =
+    s"""v AS (SELECT vec_id,
+       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
+       |  FROM embeddings WHERE embedding IS NOT NULL),
+       |$absMax AS (SELECT vec_id, vv,
+       |    list_max(list_transform(vv, x -> abs(x))) AS amax FROM v),
+       |$scaled AS (SELECT vec_id, vv, amax, amax / 127.0 AS scale FROM $absMax),
+       |qz AS (SELECT vec_id,
+       |    CASE WHEN amax = 0 THEN list_transform(vv, x -> CAST(0 AS DOUBLE))
+       |         ELSE list_transform(vv, x ->
+       |           least(greatest(floor(x / scale + 0.5), -127.0), 127.0)) END AS qv
+       |  FROM $scaled)""".stripMargin
+
   /** Islands-and-gaps span removal shared by q141, q198 and q210:
     * expects CTEs `b(doc_id, text)` and `rem(doc_id, off)`, the
     * 40-char windows to drop; overlapping windows merge into spans
@@ -5206,16 +5182,6 @@ object Oracle {
        |  round(CAST(sum(CAST(s AS DECIMAL(38,12))) AS DOUBLE) / count(*), 6)
        |    AS mean_sil
        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private val annTopkSql: String =
-    """SELECT query_id, rank, neighbor_id, round(sim, 6) AS sim FROM (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS sim,
-      |    row_number() OVER (PARTITION BY q.vec_id
-      |      ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id ASC) AS rank
-      |  FROM (SELECT * FROM embeddings WHERE vec_id < 5) q
-      |  CROSS JOIN (SELECT * FROM embeddings WHERE vec_id >= 5) c)
-      |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
   /** DuckDB twin of Dedup.minhashCandidates' signature aggregation:
     * one hash31 per shingle, 16 universal-hash mins. */

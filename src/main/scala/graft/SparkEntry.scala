@@ -101,14 +101,15 @@ object SparkEntry {
   }
 
   /** Numeric profile: one scan for the exact moment sums, one
-    * range-partitioned sort for the exact quantiles (Quantiles.exact —
+    * range-partitioned sort for the exact quantiles (Quantiles.exactMulti —
     * Spark's in-memory percentile buffer doesn't scale past executor
     * memory; the sort does). Derived stats stay Spark expressions so
     * the scalar formula is shared with the oracle verbatim. */
   private def numericProfile(df: DataFrame, colName: String): DataFrame = {
     val m = momentAgg(df, col(colName)).collect()(0)
     val n = m.getLong(0)
-    val qs = graft.engine.Quantiles.exact(df, colName, Seq(0.25, 0.5, 0.75), n)
+    val qs = graft.engine.Quantiles.exactMulti(df, Seq(colName -> col(colName)),
+      Seq(0.25, 0.5, 0.75), Map(colName -> n))(colName)
     val base = df.sparkSession.range(1).select(
       lit(n).as("n"),
       lit(m.getDouble(1)).as("s1"), lit(m.getDouble(2)).as("s2"),
@@ -563,8 +564,8 @@ object SparkEntry {
     // exactly ---
     "q112_hyperplane_buckets" -> ((s, d) => {
       val e = t(s, d, "embeddings").filter(col("embedding").isNotNull)
-      e.select(Similarity.hyperplaneBucket(col("embedding"),
-          dim = 64, nBits = 6, seed = 42L).as("bucket"))
+      val bucket = Similarity.hyperplaneBucket(s, dim = 64, nBits = 6, seed = 42L)
+      e.select(bucket(transform(col("embedding"), _.cast("double"))).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n"))
         .orderBy("bucket")
     }),
@@ -751,8 +752,8 @@ object SparkEntry {
       val base = ev.filter(col("ts") < split)
         .select(col("value").cast("double").as("v"))
       val nBase = base.count()
-      val cuts = graft.engine.Quantiles.exactExpr(base, col("v"),
-        (1 until bins).map(_.toDouble / bins), nBase)
+      val cuts = graft.engine.Quantiles.exactMulti(base, Seq("v" -> col("v")),
+        (1 until bins).map(_.toDouble / bins), Map("v" -> nBase))("v")
       val binE = cuts.foldLeft(lit(0)) { (acc, c) =>
         acc + when(col("v") >= lit(c), 1).otherwise(0) }
       val baseCounts = base.groupBy(binE.as("bin"))
@@ -1697,19 +1698,12 @@ object SparkEntry {
 
     // --- FULL BPE tokenizer training (q136 is round one of this):
     // iteratively merge the globally most frequent adjacent symbol
-    // pair and rewrite the vocabulary, ten rounds — the merge table is
+    // pair and rewrite the vocabulary, ten rounds — one distributed
+    // vocab scan, then a driver-local merge loop. The merge table is
     // the trained tokenizer, and the oracle replays every round with
-    // the identical marker-string replace algebra ---
+    // the marker-string replace algebra ---
     "q155_bpe_train" -> ((s, d) =>
       Corpus.bpeTrain(t(s, d, "documents"), "text", nMerges = 10)
-        .orderBy("merge_rank")),
-
-    // --- BPE training, production form: one distributed vocab scan +
-    // driver-local delta-recount merge loop (zero Spark jobs per merge
-    // round vs q155's one-job-per-round) — same merge table by
-    // contract, same oracle replay as q155 ---
-    "q158_bpe_train_fast" -> ((s, d) =>
-      Corpus.bpeTrainLocal(t(s, d, "documents"), "text", nMerges = 10)
         .orderBy("merge_rank")),
 
     // --- BPE encode with the trained table: merges applied in rank
@@ -2043,7 +2037,7 @@ object SparkEntry {
         .orderBy(desc("bm25"), asc("id")).limit(50)
         .select(col("id"), col("bm25").as("score"))
       val emb = t(s, d, "embeddings")
-      val dense = Similarity.bruteForceTopKLarge(
+      val dense = Similarity.bruteForceTopK(
           emb.filter(col("vec_id") === 0), emb,
           "vec_id", "embedding", "vec_id", "embedding", k = 50)
         .select(col("neighbor_id").as("id"), col("sim").as("score"))
@@ -2244,7 +2238,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 5)
       val c = e.filter(col("vec_id") >= 5)
-      val truth = Similarity.bruteForceTopKLarge(q, c,
+      val truth = Similarity.bruteForceTopK(q, c,
         "vec_id", "embedding", "vec_id", "embedding", k = 10)
       val retr = Similarity.ivfTopK(q, c,
         "vec_id", "embedding", "vec_id", "embedding",
@@ -2263,7 +2257,7 @@ object SparkEntry {
     // integer sums over the vocabulary-bounded (lang, word) join ---
     "q184_bpe_fertility" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val merges = Corpus.bpeTrainLocal(docs, "text", nMerges = 10)
+      val merges = Corpus.bpeTrain(docs, "text", nMerges = 10)
         .orderBy("merge_rank").collect()
         .map(r => (r.getString(1), r.getString(2)))
       Corpus.bpeFertility(docs, "text", "lang", merges.toSeq)
@@ -2389,7 +2383,7 @@ object SparkEntry {
           pmod(col("vec_id"), lit((n + maxExactQueries - 1) / maxExactQueries))
             === 0)
       Similarity.knnDensity(
-          Similarity.bruteForceTopKLarge(q, e,
+          Similarity.bruteForceTopK(q, e,
             "vec_id", "embedding", "vec_id", "embedding", k = 11),
           k = 10)
         .orderBy("id")
@@ -3180,14 +3174,12 @@ object SparkEntry {
     "q22_fingerprints" -> ((s, d) => {
       val c = col("text")
       val docs = t(s, d, "documents")
-      val rowWise = docs.select(
+      docs.select(
         col("doc_id"),
         TextAnalysis.fingerprint(c).as("fp"),
-        TextAnalysis.rollingHash(c).as("rolling"))
-      // simhash via the exploded aggregation (one md5 per token, not 16)
-      val sketch = TextAnalysis.simHash16Agg(docs, "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-      rowWise.join(sketch, "doc_id").orderBy("doc_id")
+        TextAnalysis.rollingHash(c).as("rolling"),
+        TextAnalysis.simHashRow(c, 16).as("simhash"))
+        .orderBy("doc_id")
     }),
 
     // --- deduplication (north star) ---
@@ -3216,9 +3208,8 @@ object SparkEntry {
 
     "q26_dedup_simhash" -> ((s, d) => {
       val dup = withDups(t(s, d, "documents"), "doc_id", 50, 10000)
-      TextAnalysis.simHash16Agg(dup, "doc_id", "text")
-        .groupBy("simhash")
-        .agg(min(col("id")).as("keep_id"), count(lit(1)).as("n_docs"))
+      dup.groupBy(TextAnalysis.simHashRow(col("text"), 16).as("simhash"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_docs"))
         .filter(col("n_docs") > 1)
         .orderBy("keep_id")
     }),
@@ -3241,16 +3232,6 @@ object SparkEntry {
     "q28_ann_topk" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       Similarity.bruteForceTopK(
-        e.filter(col("vec_id") < 5), e.filter(col("vec_id") >= 5),
-        "vec_id", "embedding", "vec_id", "embedding", k = 10)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("sim"), 6).as("sim"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "q29_ann_topk_scalable" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Similarity.bruteForceTopKLarge(
         e.filter(col("vec_id") < 5), e.filter(col("vec_id") >= 5),
         "vec_id", "embedding", "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("rank"), col("neighbor_id"),

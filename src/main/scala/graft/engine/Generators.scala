@@ -53,14 +53,6 @@ object Generators {
     chain.otherwise(lit(stats.categories.last))
   }
 
-  /** Convenience: seeded categorical column over a fresh generation
-    * frame — materializes the uniform draw before the when-chain. */
-  def categoricalFrame(spark: SparkSession, stats: CategoricalStats,
-                       n: Long, seed: Long, outName: String): DataFrame = {
-    spark.range(n).withColumn("__u", rand(seed))
-      .select(col("id"), categorical(stats, col("__u")).as(outName))
-  }
-
   /** Clipped-Gaussian datetime rendered in the detected format
     * (`generate_synthetic_datetime`, `Latanova_v1.py:404-423`);
     * σ=0 falls back to 30 days exactly like the reference (`:411`). */

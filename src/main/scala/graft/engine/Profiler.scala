@@ -21,7 +21,7 @@ object Profiler {
     * WITHOUT the quantiles. Spark's exact `percentile` buffers every
     * value per aggregate; k columns × 3 quantiles in one agg was the
     * dominant profiling cost at 600k rows (measured ~100 s). Quantiles
-    * come from the distributed sort (Quantiles.exactExpr) instead.
+    * come from the distributed sort (Quantiles.exactMulti) instead.
     * Aliases are `<prefix>#<stat>`. */
   def numericExprs(value: Column, prefix: String): Seq[Column] = Seq(
     avg(value).as(s"$prefix#mean"),
@@ -375,7 +375,7 @@ object Profiler {
     * column into its [pLo, pHi] quantile range — the robust-moments
     * summary that survives the heavy tails raw means drown in. Two
     * scans: the cut points come from the distributed sort kernel
-    * ([[Quantiles.exactExpr]] — quantile_cont semantics, never a
+    * ([[Quantiles.exactMulti]] — quantile_cont semantics, never a
     * buffered percentile), then one moment pass over the clamped
     * expression. Output: (n, mean, std, lo_cut, hi_cut). */
   def winsorizedProfile(df: DataFrame, colName: String,
@@ -385,7 +385,7 @@ object Profiler {
     val x = col(colName).cast(DoubleType)
     val clean = df.filter(x.isNotNull)
     val n = clean.count()
-    val cuts = Quantiles.exactExpr(clean, x, Seq(pLo, pHi), n)
+    val cuts = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(pLo, pHi), Map("x" -> n))("x")
     val v = greatest(lit(cuts.head), least(lit(cuts.last), x))
     clean.agg(
       count(v).as("n"),
@@ -411,8 +411,9 @@ object Profiler {
     val x = col(colName).cast(DoubleType)
     val clean = df.filter(x.isNotNull)
     val n = clean.count()
-    val med = Quantiles.exactExpr(clean, x, Seq(0.5), n).head
-    val mad = Quantiles.exactExpr(clean, abs(x - med), Seq(0.5), n).head
+    val med = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(0.5), Map("x" -> n))("x").head
+    val mad = Quantiles.exactMulti(clean, Seq("d" -> abs(x - med)), Seq(0.5),
+      Map("d" -> n))("d").head
     // left-assoc (k * 1.4826) * mad — the oracle spells it the same way
     val thr = k * 1.4826 * mad
     clean.agg(

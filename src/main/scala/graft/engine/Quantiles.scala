@@ -4,21 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact distributed quantiles via range-partitioned sort + targeted
-  * index lookup — O(n log n) shuffle but only the handful of rows at
+  * rank lookup — O(n log n) shuffle but only the handful of rows at
   * the quantile positions ever reach the driver.
   *
   * Spark's built-in exact `percentile` aggregate buffers every value in
   * an in-memory map per aggregate (fine for grouped small states,
-  * ~7 s for 600k ungrouped doubles); this sort path is the shape that
-  * scales to 100 TB: sortBy is a distributed range sort, zipWithIndex
-  * is metadata-only, and the filter ships ≤ 2·|ps| doubles.
+  * ~7 s for 600k ungrouped doubles); the sort is the shape that
+  * scales to 100 TB.
   *
   * Interpolation is NumPy/DuckDB `quantile_cont` semantics:
   * h = (n−1)·p, v = v_lo + (v_hi − v_lo)·(h − ⌊h⌋). */
 object Quantiles {
-
-  def exact(df: DataFrame, colName: String, ps: Seq[Double], n: Long): Seq[Double] =
-    exactExpr(df, col(colName), ps, n)
 
   /** Exact quantiles for MANY value expressions in ONE pass: the
     * columns explode into a narrow (column-id, value) stream, ONE
@@ -28,7 +24,7 @@ object Quantiles {
     * offsets, and a second pass over the sorted stream — persisted
     * (memory-and-disk) between the passes so neither the shuffle nor
     * the post-shuffle sort re-executes — emits only the rows at needed
-    * ranks. k separate exactExpr calls re-deserialize and re-shuffle
+    * ranks. k separate per-column sorts re-deserialize and re-shuffle
     * the frame k×3 times (measured 80 s for 10 columns at 600k rows vs
     * ~8 s fused); a `Window.partitionBy(column)` rank would funnel each
     * column's every row through a single task — the 100 TB
@@ -109,32 +105,6 @@ object Quantiles {
       })
     }.toMap
     } finally sorted.unpersist(blocking = false)
-  }
-
-  /** Same, over an arbitrary value expression (e.g. epoch seconds of a
-    * parsed datetime column). */
-  def exactExpr(df: DataFrame, value: org.apache.spark.sql.Column,
-                ps: Seq[Double], n: Long): Seq[Double] = {
-    if (n == 0) return ps.map(_ => 0.0)
-    val hs = ps.map(p => (n - 1) * p)
-    val needed = hs.flatMap(h => Seq(math.floor(h).toLong, math.ceil(h).toLong)).toSet
-    // isNotNull (NOT na.drop, which also drops NaN): n comes from
-    // count(), which includes NaN — the stream must too, or the needed
-    // rank can overrun it. NaN sorts last in both Spark and Scala.
-    val vals: Map[Long, Double] = df
-      .select(value.cast("double").as("__q"))
-      .filter(col("__q").isNotNull)
-      .rdd.map(_.getDouble(0))
-      .sortBy(identity)
-      .zipWithIndex()
-      .filter { case (_, i) => needed(i) }
-      .map(_.swap)
-      .collectAsMap().toMap
-    hs.map { h =>
-      val lo = math.floor(h).toLong
-      val vlo = vals(lo); val vhi = vals(math.ceil(h).toLong)
-      vlo + (vhi - vlo) * (h - lo)
-    }
   }
 
   /** Exact WEIGHTED quantiles, windowless: the q-th weighted quantile

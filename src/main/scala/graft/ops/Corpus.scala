@@ -252,93 +252,28 @@ object Corpus {
     * `nMerges` times (Sennrich et al. 2016). Returns the merge table
     * (merge_rank, lhs, rhs, merged, cnt) — the trained tokenizer.
     *
-    * Scale shape: the corpus collapses to its (word, freq) vocabulary
-    * ONCE (the only scan of the text); every round then runs over
-    * |vocab| rows — one pair-explode + one keyed agg (map-side
-    * combinable) + a driver top-1 (one row per round; the merge table
-    * IS the O(nMerges) driver artifact, like a kmeans centroid set).
-    * Lineage is cut every `checkpointEvery` rounds (the Graph-loop
-    * cadence) so the replace-chain plan never deepens unboundedly.
+    * Scale shape: the corpus collapses to (word, freq) in ONE
+    * distributed text scan (the only data-volume-dependent step); the
+    * merge loop then runs driver-local over that vocabulary with the
+    * standard delta-recount structure (lazy max-heap over pair counts +
+    * inverted index pair → words containing it; each round touches only
+    * the words containing the merged pair) — how SentencePiece /
+    * HuggingFace tokenizer trainers work. The Spark job count does not
+    * grow with `nMerges`.
     *
-    * Symbol state per word is a marker-delimited string
-    * (`<h><e><l><l><o>`): symbols are [a-z]+ (the tokenizer's
-    * alphabet), so `<`/`>` never collide and applying a merge is ONE
-    * codegen'd `replace` of `<a><b>` with `<ab>` — string replace's
-    * leftmost non-overlapping semantics are exactly BPE's greedy
-    * merge scan, and the identical call replays in any engine. */
-  def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
-               checkpointEvery: Int = 3): DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val spark = df.sparkSession
-    import spark.implicits._
-    var state = df
-      .select(explode(tokens(col(textCol).cast("string"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("st", concat(lit("<"),
-        concat_ws("><", transform(sequence(lit(1), length(col("w"))),
-          i => col("w").substr(i, lit(1)))), lit(">")))
-      .transform(Checkpoints.cut)
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
-      val syms = split(expr("btrim(st, '><')"), "><")
-      val top = state
-        .filter(size(syms) >= 2)
-        .select(col("freq"), explode(
-          transform(sequence(lit(0), size(syms) - 2),
-            i => concat(lit("<"), element_at(syms, i + 1), lit("><"),
-              element_at(syms, i + 2), lit(">")))).as("pair"))
-        .groupBy("pair").agg(sum(col("freq")).as("cnt"))
-        .orderBy(desc("cnt"), col("pair")).limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true // every word fully merged
-      else {
-        val pair = top(0).getString(0)
-        val cnt = top(0).getLong(1)
-        val Array(left, right) =
-          pair.stripPrefix("<").stripSuffix(">").split("><")
-        val merged = s"<$left$right>"
-        merges += ((r, left, right, left + right, cnt))
-        val next = state.withColumn("st",
-          org.apache.spark.sql.functions.replace(
-            col("st"), lit(pair), lit(merged)))
-        state =
-          if (r % checkpointEvery == 0 || r == nMerges)
-            next.transform(Checkpoints.cut)
-          else next
-        r += 1
-      }
-    }
-    merges.result()
-      .toDF("merge_rank", "lhs", "rhs", "merged", "cnt")
-  }
-
-  /** [[bpeTrain]] with the merge loop run DRIVER-LOCAL over the
-    * aggregated vocabulary — the production-scale form. The corpus
-    * collapses to (word, freq) in ONE distributed text scan (the only
-    * data-volume-dependent step, exactly as [[bpeTrain]]); the merge
-    * loop then runs in memory with the standard delta-recount
-    * structure (lazy max-heap over pair counts + inverted index
-    * pair → words containing it; each round touches only the words
-    * containing the merged pair) — this is how SentencePiece /
-    * HuggingFace tokenizer trainers work, and it removes [[bpeTrain]]'s
-    * one-Spark-job-plus-one-collect PER MERGE ROUND: a 32k-merge
-    * production vocab costs 32k sequential jobs there and ZERO here.
-    *
-    * Output is bit-identical to [[bpeTrain]] (spec-enforced): same
-    * tokenizer, same greedy leftmost non-overlapping merge application,
-    * and the same tie-break — count desc, then the marker-delimited
-    * pair string `<l><r>` ascending (NOT (l, r) lexicographic: `<`
-    * sorts below letters, so `<a><bc>` < `<ab><c>`).
+    * Merges apply greedy leftmost non-overlapping (the semantics of
+    * string replace on the marker-delimited `<h><e><l><l><o>` form the
+    * DuckDB oracle replays), and ties break count desc, then the
+    * marker-delimited pair string `<l><r>` ascending (NOT (l, r)
+    * lexicographic: `<` sorts below letters, so `<a><bc>` < `<ab><c>`).
     *
     * `vocabCap` bounds driver memory: top-cap words by (freq desc,
-    * word asc). Exact equivalence holds when |vocab| <= cap; a 100 TB
+    * word asc). The result is exact when |vocab| <= cap; a 100 TB
     * corpus's [a-z]{2,15} vocabulary is itself bounded (well under
     * 10^7 real words), so the default cap is a safety rail, not a
     * sampling step. */
-  def bpeTrainLocal(df: DataFrame, textCol: String, nMerges: Int,
-                    vocabCap: Int = 2000000): DataFrame = {
+  def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
+               vocabCap: Int = 2000000): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
@@ -353,7 +288,7 @@ object Corpus {
   }
 
   /** The driver-local delta-recount merge loop shared by
-    * [[bpeTrainLocal]] (char symbols) and [[bpeTrainBytesLocal]] (hex
+    * [[bpeTrain]] (char symbols) and [[bpeTrainBytesLocal]] (hex
     * byte symbols): lazy max-heap over pair counts + inverted index
     * pair → words containing it; each round touches only the words
     * containing the merged pair. Tie-break: count desc, then the
@@ -453,7 +388,7 @@ object Corpus {
     * each word becomes its UTF-8 byte sequence with a 256-symbol base
     * alphabet, so NOTHING is ever out-of-vocabulary: any string in
     * any script decomposes to bytes. Merges then run exactly as in
-    * [[bpeTrainLocal]] (same [[bpeMergeLoop]], same count-desc /
+    * [[bpeTrain]] (same [[bpeMergeLoop]], same count-desc /
     * pair-asc tie-break), so a merge can span UTF-8 continuation
     * bytes and multibyte characters coalesce like any other pair.
     *
@@ -464,7 +399,7 @@ object Corpus {
     * orderings compare hex strings, never raw multibyte words (the
     * UTF-16-vs-UTF-8 collation trap the unigram trainer documents).
     *
-    * Scale shape: identical to [[bpeTrainLocal]] — ONE distributed
+    * Scale shape: identical to [[bpeTrain]] — ONE distributed
     * scan collapses the corpus to (word, freq); the merge loop is
     * driver-local with delta recounts. */
   def bpeTrainBytesLocal(df: DataFrame, textCol: String, nMerges: Int,
@@ -569,7 +504,7 @@ object Corpus {
   }
 
   /** Shared core of [[unigramTrainLocal]]/[[unigramEncode]] — the
-    * driver-local EM (the [[bpeTrainLocal]] discipline: ONE distributed
+    * driver-local EM (the [[bpeTrain]] discipline: ONE distributed
     * text scan collapses the corpus to (word, freq), everything after
     * runs in memory; zero per-iteration Spark jobs).
     *
@@ -689,7 +624,7 @@ object Corpus {
     * segments with. See [[unigramCore]] for the algorithm and the
     * exact-integer replay contract. Reference scope: the reference
     * ships no tokenizer trainer — this extends the LLM-pipeline
-    * surface beside [[bpeTrainLocal]] (r11 verdict #7).
+    * surface beside [[bpeTrain]] (r11 verdict #7).
     *
     * ASCII replay contract: input text may be arbitrary, but the word
     * stream is [[graft.text.Tokenize.tokens]] — every token matches
@@ -1543,7 +1478,7 @@ object Corpus {
     * Shape: ONE trigram agg over train is the whole model — every
     * other table (continuation bigrams/unigrams, per-context N-bands,
     * count-of-count scalars) derives from it by narrow keyed aggs, so
-    * the expensive scan happens once ([[bpeTrainLocal]]'s one-scan
+    * the expensive scan happens once ([[bpeTrain]]'s one-scan
     * discipline, but nothing collects: all tables stay distributed,
     * observed-ngram-bounded). Discount constants ride in-plan as ONE
     * broadcast 1-row frame; scoring joins the per-doc trigram tf

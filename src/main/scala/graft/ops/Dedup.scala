@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.LongType
   *    explode bands → self-join on (band, bucket) — the join keys are
   *    tiny band digests, and candidate verification happens only within
   *    buckets, turning the O(n²) pair space into near-linear work.
-  *  - SimHash: map-only 16-bit sketch (TextAnalysis.simHash16), bucket
+  *  - SimHash: map-only row sketch (TextAnalysis.simHashRow), bucket
   *    by sketch.
   *  - n-gram Jaccard: exact verification kernel for LSH candidates.
   *  - embedding cosine: near-dup by vector similarity (Similarity.scala

@@ -482,7 +482,7 @@ object Quantize {
     *     memory); per-query `cand` nearest by Hamming distance, ties
     *     toward the lower neighbor id. The scan shuffles per-partition
     *     bounded heaps only (|Q|·cand·P rows — the
-    *     [[Similarity.bruteForceTopKLarge]] discipline), never the
+    *     [[Similarity.bruteForceTopK]] discipline), never the
     *     |Q|·|C| score space.
     *  2. '''Rerank''': the |Q|·cand candidate id pairs broadcast-join
     *     back to the full float vectors and re-score with exact double

@@ -10,11 +10,8 @@ import org.apache.spark.sql.functions._
   * Scale strategy:
   *  - [[bruteForceTopK]] — exact cosine top-k; the QUERY side must be
   *    small (it is broadcast), the corpus side streams. Cost O(|Q|·|C|·d)
-  *    but fully codegen'd (zip_with/aggregate, no UDF) and shuffle-free
-  *    until the final per-query top-k (a tiny window over |Q|·|C| rows
-  *    pre-filtered by rank — at real scale swap the window for a
-  *    per-partition top-k + global merge, which [[bruteForceTopKLarge]]
-  *    does).
+  *    in native codegen'd kernels, then per-partition bounded heaps
+  *    merged by one tiny |Q|·k·P-row shuffle — no global window.
   *  - [[ivfTopK]] — IVF-style two-stage search: assign every vector to
   *    its nearest of K centroids (one broadcast pass), then search only
   *    the probed clusters. At 100 TB this is the difference between
@@ -103,28 +100,14 @@ object Similarity {
   private[ops] def pairSim(va: Column, vb: Column, na: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dotNative(va, vb) / (na * nb))
 
-  /** Exact top-k neighbors for each query vector. `queries` is collected
-    * and broadcast (must be small); ties broken by corpus id ascending. */
+  /** Exact top-k neighbors for each query vector. `queries` is
+    * collected and broadcast (must be small); ties broken by corpus id
+    * ascending. No global window: per-partition top-k heaps merged by
+    * one tiny shuffle of |Q|·k·P rows — the form that survives a
+    * 1000-executor corpus scan. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      qId: String, qVec: String, cId: String, cVec: String,
                      k: Int): DataFrame = {
-    val joined = withNorm(queries, qId, qVec, "query_id", "__qv", "__qn")
-      .hint("broadcast")
-      .crossJoin(denseFloor(
-        withNorm(corpus, cId, cVec, "neighbor_id", "__cv", "__cn"), "neighbor_id"))
-      .withColumn("sim", pairSim(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-    val w = Window.partitionBy("query_id").orderBy(desc("sim"), col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "sim")
-  }
-
-  /** Same result as [[bruteForceTopK]] but without the global window:
-    * per-partition top-k heaps merged by one tiny shuffle of |Q|·k·P
-    * rows — the form that survives a 1000-executor corpus scan. */
-  def bruteForceTopKLarge(queries: DataFrame, corpus: DataFrame,
-                          qId: String, qVec: String, cId: String, cVec: String,
-                          k: Int): DataFrame = {
     val scored = withNorm(queries, qId, qVec, "query_id", "__qv", "__qn")
       .hint("broadcast")
       .crossJoin(denseFloor(
@@ -263,7 +246,7 @@ object Similarity {
     * vector, the top-k most-similar corpus vectors carrying a DIFFERENT
     * label (near-miss negatives — the pairs that teach an embedding to
     * discriminate, per the standard dense-retrieval recipe). Same
-    * mechanics as [[bruteForceTopKLarge]] — broadcast queries, ONE
+    * mechanics as [[bruteForceTopK]] — broadcast queries, ONE
     * corpus scan, per-partition bounded heaps, |Q|·k·P-row final
     * shuffle — with the label-mismatch predicate applied at the scan,
     * before anything shuffles (a same-label corpus row costs one
@@ -534,47 +517,38 @@ object Similarity {
     }
   }
 
-  /** Random-hyperplane LSH bucket for a vector column: `nBits` sign bits
-    * of projections onto deterministic md5-seeded hyperplanes — the
-    * bucketed (near-linear) path for [[cosinePairs]] at scale. Vectors
-    * agreeing on all bits land in one bucket; cos similarity ⇒ high
-    * collision probability (Charikar's SimHash for vectors). */
-  def hyperplaneBucket(vec: Column, dim: Int, nBits: Int = 8, seed: Long = 42L): Column = {
-    val bits = (0 until nBits).map { b =>
-      // hyperplane component j for bit b: deterministic in [-1,1)
-      val proj = (0 until dim).map { j =>
-        val h = graft.text.HashEmbeddings.component(s"$b#$j", 0, seed)
-        element_at(vec, j + 1).cast("double") * lit(h)
-      }.reduce(_ + _)
-      when(proj >= 0, lit("1")).otherwise(lit("0"))
-    }
-    concat(bits: _*)
-  }
-
-  /** Tight-loop twin of [[hyperplaneBucket]]: same deterministic
-    * hyperplanes (broadcast as a primitive matrix), same bit string —
-    * but O(nBits·dim) multiply-adds per row instead of an
-    * nBits·dim-term expression tree, which blows past codegen method
-    * limits at real embedding widths (768+). */
-  private def hyperplaneBucketFast(spark: org.apache.spark.sql.SparkSession,
-                                   dim: Int, nBits: Int, seed: Long): Column => Column = {
+  /** Random-hyperplane LSH bucket for a double-array vector column:
+    * `nBits` sign bits of projections onto deterministic md5-seeded
+    * hyperplanes — the bucketed (near-linear) path for [[cosinePairs]]
+    * at scale. Vectors agreeing on all bits land in one bucket; cos
+    * similarity ⇒ high collision probability (Charikar's SimHash for
+    * vectors). The hyperplanes are broadcast as a primitive matrix and
+    * each row costs O(nBits·dim) multiply-adds in a tight loop (an
+    * expression tree of nBits·dim terms blows past codegen method
+    * limits at real embedding widths, 768+). A NULL vector has no
+    * bucket (NULL). */
+  def hyperplaneBucket(spark: org.apache.spark.sql.SparkSession,
+                       dim: Int, nBits: Int = 8, seed: Long = 42L): Column => Column = {
     val planes = Array.tabulate(nBits, dim) { (b, j) =>
       graft.text.HashEmbeddings.component(s"$b#$j", 0, seed)
     }
     val bc = spark.sparkContext.broadcast(planes)
     val f = udf { (v: Seq[Double]) =>
-      val p = bc.value
-      val sb = new java.lang.StringBuilder(p.length)
-      var b = 0
-      while (b < p.length) {
-        val row = p(b)
-        var s = 0.0; var j = 0
-        val n = math.min(row.length, v.length)
-        while (j < n) { s += v(j) * row(j); j += 1 }
-        sb.append(if (s >= 0) '1' else '0')
-        b += 1
+      if (v == null) null
+      else {
+        val p = bc.value
+        val sb = new java.lang.StringBuilder(p.length)
+        var b = 0
+        while (b < p.length) {
+          val row = p(b)
+          var s = 0.0; var j = 0
+          val n = math.min(row.length, v.length)
+          while (j < n) { s += v(j) * row(j); j += 1 }
+          sb.append(if (s >= 0) '1' else '0')
+          b += 1
+        }
+        sb.toString
       }
-      sb.toString
     }
     c => f(c)
   }
@@ -624,8 +598,8 @@ object Similarity {
     // consumer re-runs the (nBits+extBits)·dim hyperplane projections
     // over the corpus (measured ~3 s/scan at the 10× tree, ~4 scans)
     val tabled = (0 until nTables).map { t =>
-      val bucket = hyperplaneBucketFast(spark, dim, nBits, seed + t)
-      val ext = hyperplaneBucketFast(spark, dim, extBits, seed + 7791L + t)
+      val bucket = hyperplaneBucket(spark, dim, nBits, seed + t)
+      val ext = hyperplaneBucket(spark, dim, extBits, seed + 7791L + t)
       v.select(col("id"), lit(t).as("tbl"), bucket(col("v")).as("bucket"),
         ext(col("v")).as("__ext"))
     }.reduce(_ unionByName _).localCheckpoint()

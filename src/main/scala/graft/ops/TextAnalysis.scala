@@ -300,49 +300,17 @@ object TextAnalysis {
   private[ops] def tokenHash31(t: Column): Column =
     graft.expressions.Kernels.hexSliceLong(md5(t.cast("binary")), 1, 7)
 
-  /** [[simHash16]] as an exploded aggregation: (id, simhash) via one
-    * explode + groupBy with 16 sums. Identical output; the row-wise
-    * expression form re-walks the token array once per bit (16x), so
-    * use this one when sketching a whole corpus. Map-side partial sums
-    * keep the shuffle at one row per document. */
-  def simHash16Agg(df: org.apache.spark.sql.DataFrame, idCol: String,
-                   textCol: String): org.apache.spark.sql.DataFrame =
-    simHashAgg(df, idCol, textCol, 16)
-
-  /** Generalized [[simHash16Agg]]: an `nBits`-bit sketch (nBits ≤ 128).
-    * Bit j draws on bit (j/32) of md5 hex digit (j%32), so the first 32
-    * bits are the historical one-parity-bit-per-digit family and wider
-    * sketches extend it without changing existing bits. 16 bits suffices
-    * for a bounded-vocab fixture; corpus-scale Hamming dedup wants 64 so
-    * the band keys don't saturate (see [[graft.ops.Dedup.simhashNearDup]]). */
-  def simHashAgg(df: org.apache.spark.sql.DataFrame, idCol: String,
-                 textCol: String, nBits: Int): org.apache.spark.sql.DataFrame = {
-    require(nBits >= 1 && nBits <= 128, s"nBits $nBits outside md5's 128 bits")
-    val tok = df.select(col(idCol).as("id"),
-      explode(tokens(col(textCol))).as("t"))
-      .withColumn("h", md5(col("t").cast("binary")))
-    val sums = (0 until nBits).map { j =>
-      val digit = instr(lit("0123456789abcdef"), substring(col("h"), (j % 32) + 1, 1)) - 1
-      sum(shiftright(digit, j / 32).bitwiseAND(lit(1))
-        .cast("long") * 2L - 1L).as(s"s$j")
-    }
-    val agg = tok.groupBy("id").agg(sums.head, sums.tail: _*)
-    val bits = (0 until nBits).map(j =>
-      when(col(s"s$j") > 0, lit("1")).otherwise(lit("0")))
-    // empty-token docs never reach the groupBy; reattach with all-zero
-    // sketch (aggregate-over-empty semantics of the expression form)
-    val ids = df.select(col(idCol).as("id")).distinct()
-    ids.join(agg, Seq("id"), "left")
-      .select(col("id"), coalesce(concat(bits: _*), lit("0" * nBits)).as("simhash"))
-  }
-
-  /** Row-wise `nBits` sketch in ONE pass over the tokens (UDF kernel):
-    * the [[simHash16]] expression form re-walks the token array once
-    * per bit (16×), and the [[simHashAgg]] form needs a groupBy — this
-    * is the map-only row-wise form for streams and per-row pipelines,
-    * and the only practical way to sketch at 64 bits row-wise.
-    * Bit-identical to [[simHashAgg]] (same md5-digit/bit family, same
-    * MSB-first '0'/'1' string). */
+  /** `nBits`-bit SimHash (nBits ≤ 128) in ONE pass over the tokens.
+    * Bit j is the sign of Σ_tokens (2·b_j(tok) − 1), where b_j(tok) is
+    * bit (j/32) of md5(tok)'s hex digit (j%32) — an engine-portable LSH
+    * family member, so the first 32 bits are one parity bit per digit
+    * and wider sketches extend it without changing existing bits.
+    * Returned as an nBits-char '0'/'1' string (MSB first); near-
+    * duplicates differ in few bits (Hamming distance on the string).
+    * A NULL or token-free text sketches to all zeros. 16 bits suffices
+    * for a bounded-vocab fixture; corpus-scale Hamming dedup wants 64
+    * so the band keys don't saturate (see
+    * [[graft.ops.Dedup.simhashNearDup]]). */
   def simHashRow(c: Column, nBits: Int = 64): Column = {
     require(nBits >= 1 && nBits <= 128, s"nBits $nBits outside md5's 128 bits")
     val f = udf { (t: String) =>
@@ -366,23 +334,6 @@ object TextAnalysis {
       sb.toString
     }
     f(c)
-  }
-
-  /** 16-bit SimHash over the token stream. Bit j is the sign of
-    * Σ_tokens (2·b_j(tok) − 1) where b_j(tok) is the parity of hex digit
-    * j of md5(tok) — an engine-portable LSH family member. Returned as a
-    * 16-char '0'/'1' string (MSB first); near-duplicates differ in few
-    * bits (Hamming distance on the string). */
-  def simHash16(c: Column): Column = {
-    val toks = tokens(c)
-    val bits = (0 until 16).map { j =>
-      val perTok = transform(toks, t =>
-        ((instr(lit("0123456789abcdef"), substring(md5(t.cast("binary")), j + 1, 1)) - 1) % 2)
-          .cast("long") * 2L - 1L)
-      val s = aggregate(perTok, lit(0L), _ + _)
-      when(s > 0, lit("1")).otherwise(lit("0"))
-    }
-    concat(bits: _*)
   }
 
   // ---- PII redaction (corpus scrubbing before training) ----

@@ -28,13 +28,32 @@ class GraftExtensionsSpec extends SparkSpec {
         round(TextAnalysis.qualityScore(col("text")), 6).as("q"),
         TextAnalysis.fingerprint(col("text")).as("fp"),
         TextAnalysis.rollingHash(col("text")).as("rh"),
-        TextAnalysis.simHash16(col("text")).as("sh"),
+        TextAnalysis.simHashRow(col("text"), 16).as("sh"),
         size(graft.ops.Dedup.shingles(col("text"))).as("nsh"),
         size(graft.ops.Dedup.minhashSignature(col("text"))).as("nmh"))
       .orderBy("id").collect()
     assert(viaSql.map(_.toString).toSeq === viaCol.map(_.toString).toSeq)
     assert(viaSql.head.getAs[String]("lang") === "en")
     assert(viaSql(1).getAs[String]("lang") === "de")
+  }
+
+  test("graft_simhash in SQL: NULL, empty, DuckDB golden, input types") {
+    GraftExtensions.registerInto(spark)
+    def sh(arg: String): String =
+      spark.sql(s"SELECT graft_simhash($arg)").collect()(0).getString(0)
+    assert(sh("CAST(NULL AS STRING)") === "0" * 16)
+    assert(sh("NULL") === "0" * 16)
+    assert(sh("''") === "0" * 16)
+    // DuckDB-computed 16-bit sketch (TextAnalysisSpec pins the same)
+    assert(sh("'Hello, brave new World 42!'") === "1101001110100100")
+    // atomic arguments sketch their string form ...
+    assert(sh("42") === "0110000011001101")
+    assert(sh("42") === sh("'42'"))
+    assert(sh("true") === "1100110001010001")
+    // ... and nested types are rejected at analysis, not stringified
+    Seq("array('a b')", "map('a', 'b')", "named_struct('a', 'b')").foreach { a =>
+      intercept[org.apache.spark.sql.AnalysisException](sh(a))
+    }
   }
 
   test("graft_cosine works in SQL over array columns") {

@@ -48,7 +48,10 @@ class GeneratorsSpec extends SparkSpec {
     val stats = CategoricalStats(
       categories = Seq("A", "B", "C"), probabilities = Seq(0.5, 0.3, 0.2),
       counts = Seq(50, 30, 20), mostCommon = "A", mostCommonProb = 0.5, count = 100)
-    val df = Generators.categoricalFrame(spark, stats, n, seed = 10, "c")
+    // SyntheticPipeline.generate's composition: the uniform draw is
+    // materialized in its own projection before the when-chain reads it
+    val df = spark.range(n).withColumn("u", rand(10))
+      .select(Generators.categorical(stats, col("u")).as("c"))
     val counts = df.groupBy("c").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(math.abs(counts("A").toDouble / n - 0.5) < 0.02)

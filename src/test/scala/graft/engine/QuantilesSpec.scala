@@ -11,7 +11,8 @@ class QuantilesSpec extends SparkSpec {
       .select((rand(3) * 1e5 - 5e4).as("x")).cache()
     try {
       val n = df.count()
-      val ours = Quantiles.exact(df, "x", Seq(0.01, 0.25, 0.5, 0.75, 0.99), n)
+      val ours = Quantiles.exactMulti(df, Seq("x" -> col("x")),
+        Seq(0.01, 0.25, 0.5, 0.75, 0.99), Map("x" -> n))("x")
       val builtin = df.agg(percentile(col("x"),
         array(lit(0.01), lit(0.25), lit(0.5), lit(0.75), lit(0.99))))
         .collect()(0).getSeq[Double](0)
@@ -38,9 +39,12 @@ class QuantilesSpec extends SparkSpec {
         "c" -> df.agg(count(col("c"))).collect()(0).getLong(0))
       val multi = Quantiles.exactMulti(df,
         Seq("a" -> col("a"), "b" -> col("b"), "c" -> col("c")), ps, ns)
+      // reference: Spark's built-in exact percentile per column, which
+      // also skips nulls and sorts NaN last
       for (c <- Seq("a", "b", "c")) {
-        val single = Quantiles.exactExpr(df, col(c), ps, ns(c))
-        multi(c).zip(single).foreach { case (m, s) =>
+        val builtin = df.agg(percentile(col(c), array(ps.map(lit): _*)))
+          .collect()(0).getSeq[Double](0)
+        multi(c).zip(builtin).foreach { case (m, s) =>
           assert(java.lang.Double.doubleToLongBits(m) ===
             java.lang.Double.doubleToLongBits(s), s"col $c: $m vs $s")
         }
@@ -52,12 +56,14 @@ class QuantilesSpec extends SparkSpec {
   }
 
   test("edge cases: single row, exact-index quantiles, empty") {
+    def exact(df: org.apache.spark.sql.DataFrame, ps: Seq[Double], n: Long) =
+      Quantiles.exactMulti(df, Seq("x" -> col("x")), ps, Map("x" -> n))("x")
     val one = Seq(42.0).toDF("x")
-    assert(Quantiles.exact(one, "x", Seq(0.0, 0.5, 1.0), 1L) === Seq(42.0, 42.0, 42.0))
+    assert(exact(one, Seq(0.0, 0.5, 1.0), 1L) === Seq(42.0, 42.0, 42.0))
     // n=5, p=0.25 → h=1.0 exactly (no interpolation)
     val five = Seq(1.0, 2.0, 3.0, 4.0, 5.0).toDF("x")
-    assert(Quantiles.exact(five, "x", Seq(0.25, 1.0), 5L) === Seq(2.0, 5.0))
-    assert(Quantiles.exact(five.filter(col("x") > 99), "x", Seq(0.5), 0L) === Seq(0.0))
+    assert(exact(five, Seq(0.25, 1.0), 5L) === Seq(2.0, 5.0))
+    assert(exact(five.filter(col("x") > 99), Seq(0.5), 0L) === Seq(0.0))
   }
 
   test("weighted quantiles: ground truth by expansion, repeated values merge, weight 0 drops") {

@@ -441,13 +441,23 @@ class CorpusSpec extends SparkSpec {
     assert(enc1("ab") === (("ab", 1L)))
   }
 
+  /** 200 generated three-word docs over a 12-word vocabulary. */
+  private def bpeCorpus = spark.range(200).select(col("id").as("doc_id"),
+    concat_ws(" ",
+      element_at(typedLit(Seq("alpha", "beta", "gamma", "delta", "epsilon")),
+        (col("id") % 5 + 1).cast("int")),
+      element_at(typedLit(Seq("red", "green", "blue")),
+        (col("id") % 3 + 1).cast("int")),
+      element_at(typedLit(Seq("apple", "banana", "cherry", "date")),
+        (col("id") % 4 + 1).cast("int"))).as("text"))
+
   test("bpeTrainLocal: bit-identical merge table to bpeTrain (hand case, " +
     "tie-breaks, exhaustion) and on a realistic corpus; vocabCap bound") {
     import spark.implicits._
     // same hand-computed fixture as the bpeTrain test — ties and
     // greedy-leftmost must resolve identically in the driver-local loop
     val docs = Seq((1L, "ab ab ab aaab aaab")).toDF("doc_id", "text")
-    val local = Corpus.bpeTrainLocal(docs, "text", nMerges = 10)
+    val local = Corpus.bpeTrain(docs, "text", nMerges = 10)
       .orderBy("merge_rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4)))
@@ -455,27 +465,75 @@ class CorpusSpec extends SparkSpec {
       (1, "a", "b", "ab", 5L),
       (2, "a", "a", "aa", 2L),
       (3, "aa", "ab", "aaab", 2L)))
-    // realistic corpus: 40 merges over generated multi-word docs must
-    // match the distributed loop row-for-row (the q158-vs-q155 contract)
-    val corpus = spark.range(200).select(col("id").as("doc_id"),
-      concat_ws(" ",
-        element_at(typedLit(Seq("alpha", "beta", "gamma", "delta", "epsilon")),
-          (col("id") % 5 + 1).cast("int")),
-        element_at(typedLit(Seq("red", "green", "blue")),
-          (col("id") % 3 + 1).cast("int")),
-        element_at(typedLit(Seq("apple", "banana", "cherry", "date")),
-          (col("id") % 4 + 1).cast("int"))).as("text"))
-    val a = Corpus.bpeTrain(corpus, "text", nMerges = 40)
-      .orderBy("merge_rank").collect().map(_.toSeq).toSeq
-    val b = Corpus.bpeTrainLocal(corpus, "text", nMerges = 40)
-      .orderBy("merge_rank").collect().map(_.toSeq).toSeq
-    assert(a === b)
+    // realistic corpus: the 40-merge table of the per-round Spark-job
+    // trainer (one replace + recount job per merge, the marker-string
+    // algebra the oracle replays), frozen row for row
+    val want = Seq(
+      (1, "r", "e", "re", 134L),
+      (2, "a", "n", "an", 100L),
+      (3, "t", "a", "ta", 80L),
+      (4, "e", "n", "en", 67L),
+      (5, "g", "re", "gre", 67L),
+      (6, "gre", "en", "green", 67L),
+      (7, "re", "d", "red", 67L),
+      (8, "b", "l", "bl", 66L),
+      (9, "bl", "u", "blu", 66L),
+      (10, "blu", "e", "blue", 66L),
+      (11, "a", "p", "ap", 50L),
+      (12, "a", "t", "at", 50L),
+      (13, "an", "a", "ana", 50L),
+      (14, "an", "ana", "anana", 50L),
+      (15, "ap", "p", "app", 50L),
+      (16, "app", "l", "appl", 50L),
+      (17, "appl", "e", "apple", 50L),
+      (18, "at", "e", "ate", 50L),
+      (19, "b", "anana", "banana", 50L),
+      (20, "c", "h", "ch", 50L),
+      (21, "ch", "e", "che", 50L),
+      (22, "che", "r", "cher", 50L),
+      (23, "cher", "r", "cherr", 50L),
+      (24, "cherr", "y", "cherry", 50L),
+      (25, "d", "ate", "date", 50L),
+      (26, "a", "l", "al", 40L),
+      (27, "a", "m", "am", 40L),
+      (28, "al", "p", "alp", 40L),
+      (29, "alp", "h", "alph", 40L),
+      (30, "alph", "a", "alpha", 40L),
+      (31, "am", "m", "amm", 40L),
+      (32, "amm", "a", "amma", 40L),
+      (33, "b", "e", "be", 40L),
+      (34, "be", "ta", "beta", 40L),
+      (35, "d", "e", "de", 40L),
+      (36, "de", "l", "del", 40L),
+      (37, "del", "ta", "delta", 40L),
+      (38, "e", "p", "ep", 40L),
+      (39, "ep", "s", "eps", 40L),
+      (40, "eps", "i", "epsi", 40L))
+    val got = Corpus.bpeTrain(bpeCorpus, "text", nMerges = 40)
+      .orderBy("merge_rank").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).toSeq
+    assert(got === want)
     // vocabCap keeps only the top words — with cap 1 ("alpha"-family
     // loses to nothing deterministic here, just assert it still runs
     // and returns a valid non-empty table over the single kept word)
-    val capped = Corpus.bpeTrainLocal(corpus, "text", nMerges = 3, vocabCap = 1)
+    val capped = Corpus.bpeTrain(bpeCorpus, "text", nMerges = 3, vocabCap = 1)
       .collect()
     assert(capped.nonEmpty && capped.length <= 3)
+  }
+
+  test("bpeTrain: Spark job count does not grow with nMerges") {
+    val corpus = bpeCorpus.cache()
+    try {
+      corpus.count()
+      val (few, jobsFew) = withJobCount(
+        Corpus.bpeTrain(corpus, "text", nMerges = 3).collect())
+      val (many, jobsMany) = withJobCount(
+        Corpus.bpeTrain(corpus, "text", nMerges = 30).collect())
+      assert(few.length === 3 && many.length === 30)
+      assert(jobsMany === jobsFew,
+        s"$jobsFew jobs at 3 merges vs $jobsMany at 30: a job per merge round")
+    } finally corpus.unpersist()
   }
 
   test("bigramLogProb scores seen transitions above unseen, add-one exact") {
@@ -628,7 +686,7 @@ class CorpusSpec extends SparkSpec {
     // becomes one piece, "cd" stays... train 1 merge and hand-check.
     val docs = Seq(("g1", "ab ab cd"), ("g1", "ab cd cd"), ("g2", "ab"))
       .toDF("g", "text")
-    val merges = Corpus.bpeTrainLocal(docs, "text", nMerges = 1)
+    val merges = Corpus.bpeTrain(docs, "text", nMerges = 1)
       .orderBy("merge_rank").collect().map(r => (r.getString(1), r.getString(2)))
     assert(merges.length === 1) // one winning pair
     val out = Corpus.bpeFertility(docs, "text", "g", merges.toSeq)

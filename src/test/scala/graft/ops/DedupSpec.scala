@@ -147,9 +147,9 @@ class DedupSpec extends SparkSpec {
   test("simhash Hamming near-dup guarantee: ALL pairs within dist 3 are found (pigeonhole)") {
     // brute-force ground truth over the sketches themselves (the op's
     // default 64-bit width; parse the MSB-first bit string directly)
-    val sk = TextAnalysis.simHashAgg(docs, "id", "text", 64)
-      .collect().map(r => r.getAs[Long]("id") ->
-        java.lang.Long.parseUnsignedLong(r.getAs[String]("simhash"), 2)).toMap
+    val sk = docs.select(col("id"), TextAnalysis.simHashRow(col("text"), 64))
+      .collect().map(r => r.getLong(0) ->
+        java.lang.Long.parseUnsignedLong(r.getString(1), 2)).toMap
     val want = (for {
       a <- sk.keys; b <- sk.keys if a < b
       if java.lang.Long.bitCount(sk(a) ^ sk(b)) <= 3
@@ -160,10 +160,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("128-bit simhash near-dup: pigeonhole ground truth over two-word sketches") {
-    val sk = TextAnalysis.simHashAgg(docs, "id", "text", 128)
+    val sk = docs.select(col("id"), TextAnalysis.simHashRow(col("text"), 128))
       .collect().map { r =>
-        val s = r.getAs[String]("simhash")
-        r.getAs[Long]("id") -> ((java.lang.Long.parseUnsignedLong(s.substring(0, 64), 2),
+        val s = r.getString(1)
+        r.getLong(0) -> ((java.lang.Long.parseUnsignedLong(s.substring(0, 64), 2),
           java.lang.Long.parseUnsignedLong(s.substring(64), 2)))
       }.toMap
     val want = (for {
@@ -218,9 +218,9 @@ class DedupSpec extends SparkSpec {
       (101L, "an eval question about something else entirely unrelated to anything"))
       .toDF("id", "text")
     def sketches(df: org.apache.spark.sql.DataFrame, idc: String): Map[Long, Long] =
-      TextAnalysis.simHashAgg(df, idc, "text", 64)
-        .collect().map(r => r.getAs[Long]("id") ->
-          java.lang.Long.parseUnsignedLong(r.getAs[String]("simhash"), 2)).toMap
+      df.select(col(idc), TextAnalysis.simHashRow(col("text"), 64))
+        .collect().map(r => r.getLong(0) ->
+          java.lang.Long.parseUnsignedLong(r.getString(1), 2)).toMap
     val trainSk = sketches(docs, "id")
     val testSk = sketches(test, "id")
     val shouldDrop = trainSk.filter { case (_, h) =>

@@ -26,11 +26,21 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("scalable top-k variant returns identical results") {
-    val a = Similarity.bruteForceTopK(queries, corpus, "id", "v", "id", "v", 3)
-      .orderBy("rank").collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-    val b = Similarity.bruteForceTopKLarge(queries, corpus, "id", "v", "id", "v", 3)
-      .orderBy("rank").collect().map(r => (r.getInt(1), r.getLong(2))).toSeq
-    assert(a === b)
+    // hand-computed case over a corpus spread across 4 partitions, with
+    // exact sim ties (20 duplicates 10; 21 is 11 scaled) that must break
+    // toward the lower id across partition heaps
+    val spread = corpus.union(Seq((20L, Array(1.0f, 0.0f)), (21L, Array(0.0f, 2.0f)))
+      .toDF("id", "v")).repartition(4)
+    val qs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("id", "v")
+    val got = Similarity.bruteForceTopK(qs, spread, "id", "v", "id", "v", 3)
+      .orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val (x, y) = (0.9f.toDouble, 0.1f.toDouble) // vector 14, as stored
+    val want = Seq(
+      (1L, 1, 10L, 1.0), (1L, 2, 20L, 1.0), (1L, 3, 14L, x / math.sqrt(x * x + y * y)),
+      (2L, 1, 11L, 1.0), (2L, 2, 21L, 1.0), (2L, 3, 12L, 1.0 / math.sqrt(2.0)))
+    assert(got.map(g => (g._1, g._2, g._3)) === want.map(w => (w._1, w._2, w._3)))
+    got.zip(want).foreach { case (g, w) => assert(math.abs(g._4 - w._4) < 1e-12, s"$g vs $w") }
   }
 
   test("IVF top-k finds the exact-match neighbor with few probes") {
@@ -260,13 +270,21 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("hyperplane LSH bucket: deterministic, groups identical vectors") {
+    val bucket = Similarity.hyperplaneBucket(spark, dim = 3, nBits = 8)
     val df = Seq((1L, Array(1.0f, 2.0f, 3.0f)), (2L, Array(1.0f, 2.0f, 3.0f)),
-      (3L, Array(-1.0f, -2.0f, -3.0f))).toDF("id", "v")
-      .select(col("id"), Similarity.hyperplaneBucket(col("v"), dim = 3, nBits = 8).as("b"))
+      (3L, Array(-1.0f, -2.0f, -3.0f)), (4L, Array(0.3f, -0.7f, 0.2f)),
+      (5L, Array(0.0f, 0.0f, 0.0f)), (6L, null)).toDF("id", "v")
+      .select(col("id"), bucket(transform(col("v"), _.cast("double"))).as("b"))
     val m = df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(m(1L) === m(2L))
     assert(m(1L) !== m(3L)) // antipodal vectors flip every bit
     assert(m(1L).length === 8 && m(1L).forall(c => c == '0' || c == '1'))
+    // golden bit strings of the q112 oracle's formula: the sum of
+    // element·component terms, left to right, bit = (sum >= 0)
+    assert(m(1L) === "10010110")
+    assert(m(4L) === "01101001")
+    assert(m(5L) === "11111111") // a zero projection counts as >= 0
+    assert(m(6L) === null)
   }
 
   test("rrfFuse: known ranks fuse to exact reciprocal sums") {
@@ -331,7 +349,7 @@ class SimilaritySpec extends SparkSpec {
     val vecs = (0L to 4L).map(i => (i, Array(1f, 0.01f * i, 0f))) :+
       (5L, Array(0f, 0f, 1f))
     val df = vecs.toDF("vec_id", "embedding")
-    val topk = Similarity.bruteForceTopKLarge(df, df,
+    val topk = Similarity.bruteForceTopK(df, df,
       "vec_id", "embedding", "vec_id", "embedding", k = 4)
     val out = Similarity.knnDensity(topk, k = 3)
       .collect().map(r => r.getLong(0) ->

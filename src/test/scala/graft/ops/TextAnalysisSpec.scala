@@ -48,7 +48,7 @@ class TextAnalysisSpec extends SparkSpec {
     val r = row1(Seq(doc).toDF("t").select(
       TextAnalysis.fingerprint(col("t")).as("fp"),
       TextAnalysis.rollingHash(col("t")).as("rh"),
-      TextAnalysis.simHash16(col("t")).as("sh")))
+      TextAnalysis.simHashRow(col("t"), 16).as("sh")))
     assert(r("fp") === "7c32565e18d2acd284e0945e075371fe")
     assert(r("rh") === 1863709792L)
     assert(r("sh") === "1101001110100100")
@@ -59,7 +59,8 @@ class TextAnalysisSpec extends SparkSpec {
     val b = "hello world! foo, bar; baz. qux"
     val r = Seq((a, b)).toDF("a", "b").select(
       (TextAnalysis.fingerprint(col("a")) === TextAnalysis.fingerprint(col("b"))).as("same_fp"),
-      (TextAnalysis.simHash16(col("a")) === TextAnalysis.simHash16(col("b"))).as("same_sh"))
+      (TextAnalysis.simHashRow(col("a"), 16) === TextAnalysis.simHashRow(col("b"), 16))
+        .as("same_sh"))
     val row = r.collect()(0)
     assert(row.getBoolean(0)); assert(row.getBoolean(1))
   }
@@ -70,19 +71,26 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "completely different content about spark partitions"),
       (3L, ""), (4L, "one"), (5L, "Unicode stays out: caffè 123 naïve"))
       .toDF("id", "text")
+    // 128-bit sketches computed in DuckDB from the same md5 digit/bit
+    // family (list_transform over md5 hex digits of each token); a
+    // narrower sketch is the prefix of the wider one by construction
+    val golden = Map(
+      1L -> ("01101010010000001100000010001110010010100001111110011011100101110" +
+        "111111011001111110001001011000001100111011100000110000010111101"),
+      2L -> ("00011001001100001101001010000111011001101000000001000100100000000" +
+        "000000000000101000010100011011011100001110001101100100001010000"),
+      3L -> "0" * 128,
+      4L -> ("11101101101111110110100101000100101000100001110111011001000111011" +
+        "011110001001000011000011001000011010101100111010111101001001110"),
+      5L -> ("00001100001100110011101110111010111110111100001001010000001001101" +
+        "100100101000100100001011000100011110110110101010000001001011000"))
     Seq(16, 32, 64, 128).foreach { nb =>
       val viaRow = docs.select(col("id"),
         TextAnalysis.simHashRow(col("text"), nb).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val viaAgg = TextAnalysis.simHashAgg(docs, "id", "text", nb)
-        .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("simhash")).toMap
-      assert(viaRow === viaAgg, s"row/agg sketch divergence at $nb bits")
+      assert(viaRow === golden.map { case (id, g) => id -> g.take(nb) },
+        s"sketch divergence from the DuckDB golden at $nb bits")
     }
-    val via16 = docs.select(col("id"), TextAnalysis.simHash16(col("text")).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val viaRow16 = docs.select(col("id"), TextAnalysis.simHashRow(col("text"), 16).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(viaRow16 === via16)
   }
 
   test("urlParts decomposes real URLs; junk yields null fields") {
