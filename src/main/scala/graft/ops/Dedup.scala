@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for training-data pipelines, each designed
   * around Spark's shuffle model:
@@ -11,13 +11,14 @@ import org.apache.spark.sql.types.LongType
   *  - exact: hash-groupBy on a 128-bit content fingerprint — ONE shuffle
   *    keyed on the digest (never on raw text; at 100 TB the shuffle
   *    payload is 16 bytes + id per row).
-  *  - MinHash + LSH banding: shingle → minhash signature (map-only) →
-  *    explode bands → self-join on (band, bucket) — the join keys are
-  *    tiny band digests, and candidate verification happens only within
-  *    buckets, turning the O(n²) pair space into near-linear work.
+  *  - MinHash + LSH banding: one per-document pass (shingles →
+  *    signature → band digests) → one groupBy on (band, bucket);
+  *    candidates are generated, and verified, only within buckets,
+  *    turning the O(n²) pair space into near-linear work.
   *  - SimHash: map-only row sketch (TextAnalysis.simHashRow), bucket
   *    by sketch.
-  *  - n-gram Jaccard: exact verification kernel for LSH candidates.
+  *  - n-gram Jaccard: exact verification of LSH and prefix-filter
+  *    candidates.
   *  - embedding cosine: near-dup by vector similarity (Similarity.scala
   *    kernel under a threshold).
   *
@@ -274,96 +275,156 @@ object Dedup {
   }
 
   /** MinHash-LSH candidate pairs (a < b): documents sharing at least one
-    * band bucket. The self-join runs on exploded (band, bucket) keys —
-    * shuffle payload is (16B digest, id); bucket sizes bound the pair
-    * blow-up. Returns distinct (id_a, id_b).
+    * band bucket, each pair once. Returns (id_a, id_b).
     *
-    * Physical shape: shingles are EXPLODED once and the signature is one
-    * groupBy with numHashes min() aggregates — not the per-row nested
-    * array expression of [[minhashSignature]], which Catalyst would
-    * re-evaluate (tokens + shingles + distinct) once per hash function
-    * (measured 16x slower). Map-side partial min() makes the shuffle
-    * carry one signature row per document. */
+    * Physical shape: ONE per-document pass (the [[minhashDoc]] kernel:
+    * tokens, shingles, signature and band keys in one loop), then ONE
+    * grouped shuffle on (band, bucket) in which every bucket streams
+    * its pairs. A pair is emitted only in the FIRST band its two
+    * documents share, so no `distinct` runs. Buckets are bit-identical
+    * to the signature the DuckDB oracle replays.
+    *
+    * PRECONDITION (all dedup operators): one row per document id; rows
+    * with a NULL id pair with nothing. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16, bands: Int = 4, k: Int = 3): DataFrame =
-    candidatesFromShingleStream(
-      df.select(col(idCol).as("id"),
-        explode(shingleStreamFast(col(textCol).cast("string"), k)).as("s")),
-      numHashes, bands)
-
-  /** Candidate pairs from a pre-exploded (id, s) shingle stream. min()
-    * is duplicate-insensitive, so both the distinct and non-distinct
-    * shingle streams produce identical signatures. */
-  private def candidatesFromShingleStream(sh: DataFrame, numHashes: Int,
-                                          bands: Int): DataFrame = {
-    val r = numHashes / bands
-    val hashed = sh.withColumn("v", TextAnalysis.tokenHash31(col("s")))
-    val minExprs = minhashParams(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min((col("v") * a + b) % MinhashP).as(s"h$i")
-    }
-    val sig = hashed.groupBy("id").agg(minExprs.head, minExprs.tail: _*)
-    val bandStructs = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", (0 until r).map(j => col(s"h${b * r + j}")): _*)
-          .cast("binary")).as("bucket"))
-    }: _*)
-    val banded = sig.select(col("id"), explode(bandStructs).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bucket"))
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-  }
-
-  /** Exact n-gram Jaccard similarity for given pairs — the verification
-    * kernel after LSH: |A∩B| / |A∪B| over k-shingle sets. Computed via
-    * exploded shingle join + per-doc set sizes (no arrays shuffled). */
-  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 3, minJaccard: Double = 0.0): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
-        explode(shinglesFast(col(textCol).cast("string"), k)).as("s"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("l").join(sh.as("r"),
-        col("l.s") === col("r.s") && col("l.id") < col("r.id"))
-      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")
-  }
+    bucketPairs(df, idCol, textCol, numHashes, bands, k, minJaccard = None)
 
   /** The production near-dup pipeline: MinHash-LSH candidates verified
-    * with exact n-gram Jaccard — all-pairs work never happens; the
-    * Jaccard join runs only on the (near-linear) candidate set. This is
-    * the composition to use at scale; [[jaccardPairs]] alone is the
-    * exact all-pairs fallback for small n. */
+    * with exact n-gram Jaccard — all-pairs work never happens. Each
+    * candidate is verified inside the bucket that generates it: the
+    * band rows carry their document's sorted distinct shingle set, and
+    * |A∩B| is one merge over the two sets, so the shingle stream is
+    * never exploded, checkpointed or re-joined. jaccard =
+    * |A∩B| / (|A| + |B| − |A∩B|), the same double as the prefix joins'
+    * verification. Same precondition as [[minhashCandidates]]. */
   def lshJaccardDedup(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 16, bands: Int = 4, k: Int = 3,
-                      minJaccard: Double = 0.8): DataFrame = {
-    // ONE tokenize+shingle pass, materialized with localCheckpoint: the
-    // signature, size, and intersection stages all re-read the exploded
-    // (id, shingle) stream; unmaterialized, each re-runs the full
-    // tokenize+shingle+distinct expression tree (3x the scan, measured).
-    // Unlike .cache() (removed in r2: leaked into the caller's session
-    // with no safe unpersist point), localCheckpoint blocks are owned by
-    // this frame and freed by the ContextCleaner once it's unreachable.
-    // Signatures over the distinct stream equal those over the raw
-    // stream (min() is duplicate-insensitive), so candidates share it.
-    val sh = df.select(col(idCol).as("id"),
-      explode(shinglesFast(col(textCol).cast("string"), k)).as("s"))
-      .localCheckpoint()
-    val cand = candidatesFromShingleStream(sh, numHashes, bands)
-    verifyExactJaccard(sh, cand, minJaccard)
+                      minJaccard: Double = 0.8): DataFrame =
+    bucketPairs(df, idCol, textCol, numHashes, bands, k, Some(minJaccard))
+
+  /** One document's MinHash-LSH state: its `bands` bucket keys (raw md5
+    * digests) and its `n` distinct shingles, ascending by UTF-8 bytes,
+    * packed as (4-byte length, UTF-8 bytes) records. */
+  private final class MinhashDoc(val keys: Array[Array[Byte]], val shingles: Array[Byte],
+                                 val n: Int)
+
+  /** Tokens, shingles, signature and band keys of one text in ONE pass.
+    * Shingles follow [[shingleArrayLocal]] (NULL, empty and
+    * shorter-than-k texts are one shingle), each shingle's base value is
+    * [[TextAnalysis.tokenHash31]] (the first 28 bits of its md5), the
+    * signature is [[minhashParams]]' min over the set, and band `b`'s key
+    * is md5 of its `numHashes / bands` values joined by '|' — the
+    * bucket the oracle computes, as raw bytes instead of hex. */
+  private def minhashDoc(text: String, k: Int, a: Array[Long], b: Array[Long],
+                         bands: Int, md: java.security.MessageDigest): MinhashDoc = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val sh = shingleArrayLocal(text, k, distinct = false).map(_.getBytes(utf8))
+    java.util.Arrays.sort(sh, (x: Array[Byte], y: Array[Byte]) =>
+      java.util.Arrays.compareUnsigned(x, y))
+    var n = 0
+    for (s <- sh) if (n == 0 || !java.util.Arrays.equals(s, sh(n - 1))) { sh(n) = s; n += 1 }
+    val set = sh.take(n)
+    val packed = java.nio.ByteBuffer.allocate(set.map(_.length + 4).sum)
+    val sig = Array.fill(a.length)(Long.MaxValue)
+    for (s <- set) {
+      packed.putInt(s.length).put(s)
+      val d = md.digest(s)
+      val v = ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
+        ((d(2) & 0xffL) << 4) | ((d(3) & 0xffL) >>> 4)
+      var i = 0
+      while (i < sig.length) {
+        val h = (v * a(i) + b(i)) % MinhashP
+        if (h < sig(i)) sig(i) = h
+        i += 1
+      }
+    }
+    val r = a.length / bands
+    val keys = Array.tabulate(bands) { band =>
+      md.digest(sig.slice(band * r, band * r + r).mkString("|").getBytes(utf8))
+    }
+    new MinhashDoc(keys, packed.array(), n)
+  }
+
+  /** |A ∩ B| of two packed shingle sets ([[MinhashDoc]]): a merge that
+    * compares the shingles' bytes. */
+  private def mergeIntersect(x: Array[Byte], y: Array[Byte]): Int = {
+    val (bx, by) = (java.nio.ByteBuffer.wrap(x), java.nio.ByteBuffer.wrap(y))
+    var i = 0; var j = 0; var inter = 0
+    while (i < x.length && j < y.length) {
+      val (ei, ej) = (i + 4 + bx.getInt(i), j + 4 + by.getInt(j))
+      val c = java.util.Arrays.compareUnsigned(x, i + 4, ei, y, j + 4, ej)
+      if (c == 0) { inter += 1; i = ei; j = ej }
+      else if (c < 0) i = ei
+      else j = ej
+    }
+    inter
+  }
+
+  /** Shared body of the MinHash-LSH family. One [[minhashDoc]] pass
+    * emits a (band, bucket, id, keys, shingles, n) row per band; one
+    * groupByKey on (band, bucket) hands each bucket, sorted by id, to a
+    * lazy pair iterator (a bucket's rows are buffered, its pairs are
+    * not). A pair (a < b) is emitted at the first band whose keys the
+    * two documents share. With `minJaccard` set, the rows carry the
+    * shingle sets and a pair is kept iff the two documents share a
+    * shingle and its Jaccard reaches the threshold (a bucket shared
+    * only through a 28-bit hash collision yields nothing, even at
+    * minJaccard 0); without it, the pairs are returned unverified. */
+  private def bucketPairs(df: DataFrame, idCol: String, textCol: String,
+                          numHashes: Int, bands: Int, k: Int,
+                          minJaccard: Option[Double]): DataFrame = {
+    val idField = df.select(col(idCol)).schema.head
+    val (a, b) = minhashParams(numHashes).toArray.unzip
+    val bandRow = StructType(Seq(
+      StructField("band", IntegerType, nullable = false),
+      StructField("bucket", BinaryType, nullable = false),
+      StructField("id", idField.dataType, idField.nullable),
+      StructField("keys", ArrayType(BinaryType, containsNull = false), nullable = false),
+      StructField("sh", BinaryType, nullable = false),
+      StructField("n", IntegerType, nullable = false)))
+    val perDoc: Iterator[Row] => Iterator[Row] = rows => {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      rows.filter(!_.isNullAt(0)).flatMap { r =>
+        val d = minhashDoc(r.getString(1), k, a, b, bands, md)
+        val sh = if (minJaccard.isDefined) d.shingles else Array.emptyByteArray
+        Iterator.tabulate(bands)(band => Row(band, d.keys(band), r.get(0), d.keys, sh, d.n))
+      }
+    }
+    val out = StructType(Seq(
+      StructField("id_a", idField.dataType, idField.nullable),
+      StructField("id_b", idField.dataType, idField.nullable)) ++
+      minJaccard.map(_ => StructField("jaccard", DoubleType)))
+    val pairs: ((Int, Array[Byte]), Iterator[Row]) => IterableOnce[Row] = {
+      case ((band, _), rows) =>
+        val m = rows.toArray
+        def keys(r: Row) = r.getSeq[Array[Byte]](3)
+        def firstShared(x: Row, y: Row): Boolean =
+          (0 until band).forall(e => !java.util.Arrays.equals(keys(x)(e), keys(y)(e)))
+        Iterator.range(0, m.length).flatMap { i =>
+          Iterator.range(i + 1, m.length).flatMap { j =>
+            val (x, y) = (m(i), m(j))
+            if (java.util.Objects.deepEquals(x.get(2), y.get(2)) || !firstShared(x, y)) None
+            else minJaccard match {
+              case None => Some(Row(x.get(2), y.get(2)))
+              case Some(t) =>
+                val inter = mergeIntersect(x.getAs[Array[Byte]](4), y.getAs[Array[Byte]](4))
+                val jac = inter.toDouble / (x.getInt(5).toLong + y.getInt(5) - inter)
+                if (inter > 0 && jac >= t) Some(Row(x.get(2), y.get(2), jac)) else None
+            }
+          }
+        }
+    }
+    df.select(col(idCol), col(textCol).cast("string"))
+      .mapPartitions(perDoc)(Encoders.row(bandRow))
+      .groupByKey((r: Row) => (r.getInt(0), r.getAs[Array[Byte]](1)))(
+        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
+      .flatMapSortedGroups(col("id"))(pairs)(Encoders.row(out))
   }
 
   /** Exact |A∩B| per (id_a, id_b) candidate pair over the exploded
-    * (id, shingle) stream — the shared verification kernel of every
-    * candidate-based set join (Jaccard and containment apply their own
+    * (id, shingle) stream — the shared verification kernel of the
+    * prefix-filter joins (Jaccard and containment apply their own
     * measure on top). The joins re-read `sh` — callers checkpoint it. */
   private def candIntersections(sh: DataFrame, cand: DataFrame): DataFrame = {
     val shB = sh.select(col("id").as("__idb"), col("s").as("__sb"))
@@ -374,8 +435,8 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
-  /** Shared verification tail of the candidate-based Jaccard joins:
-    * exact |A∩B| / |A∪B| for the candidate pairs only, filtered at
+  /** Verification tail of the prefix-filter Jaccard join: exact
+    * |A∩B| / |A∪B| for the candidate pairs only, filtered at
     * `minJaccard`. */
   private def verifyExactJaccard(sh: DataFrame, cand: DataFrame,
                                  minJaccard: Double): DataFrame = {
@@ -477,8 +538,8 @@ object Dedup {
     * wider pays the same cliff, and this router is what makes it
     * unreachable: production callers get the banded route past the
     * gate while the exact kernel stays the ≤N ground truth. Both
-    * routes END in the same exact verification kernel, so every
-    * emitted pair's jaccard value is exact; only recall differs, and
+    * routes END in an exact verification with the same formula, so
+    * every emitted pair's jaccard value is exact; only recall differs, and
     * only above the gate. Exact-duplicate pairs (J = 1) have
     * identical MinHash signatures, hence identical band buckets —
     * they are detected with probability 1 on BOTH routes (the

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -88,12 +90,37 @@ object Similarity {
     * scan supplies >= cores splits and this is the identity; the
     * repartition hashes on the id column (no round-robin pre-sort),
     * and every consumer below is partition-invariant (per-row scores,
-    * mergeable bounded-heap top-k with deterministic tie-breaks). */
+    * mergeable bounded-heap top-k with deterministic tie-breaks).
+    *
+    * PRECONDITION: `df` is scan-rooted — its physical plan has no
+    * shuffle exchange other than an explicit `repartition(n)`. Below a
+    * planner-inserted exchange (aggregate, join, sort) or a
+    * `repartition(col)` the planned partition count is
+    * spark.sql.shuffle.partitions, not the count AQE coalesces to at
+    * run time, and the floor would silently do nothing; such a frame
+    * throws [[NotScanRootedException]]. `repartition(n)` fixes its
+    * count, which AQE never coalesces. */
   private[ops] def denseFloor(df: DataFrame, keyCol: String): DataFrame = {
+    val qe = df.queryExecution
+    val planned = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    planned.collectFirst {
+      case e: ShuffleExchangeLike if e.shuffleOrigin != REPARTITION_BY_NUM => e
+    }.foreach { e =>
+      throw new NotScanRootedException(s"denseFloor needs a scan-rooted " +
+        s"frame, found ${e.nodeName} (${e.shuffleOrigin}) in its plan")
+    }
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want, col(keyCol))
+    if (qe.toRdd.getNumPartitions < want) df.repartition(want, col(keyCol))
     else df
   }
+
+  /** A frame given to [[denseFloor]] has a shuffle exchange whose
+    * partition count AQE may change. */
+  final class NotScanRootedException(message: String)
+    extends IllegalArgumentException(message)
 
   /** sim = dot/(na*nb) with precomputed norms — same expression shape
     * (sqrt'd norms multiplied, then one division) as [[cosine]]. */

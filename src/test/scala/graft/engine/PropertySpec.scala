@@ -103,7 +103,7 @@ class PropertySpec extends SparkSpec {
       def canon(d: org.apache.spark.sql.DataFrame) = d.collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9)))
         .toSet
-      val brute = canon(graft.ops.Dedup.jaccardPairs(df, "id", "text",
+      val brute = canon(graft.ops.DedupSpec.jaccardPairs(df, "id", "text",
         k = 2, minJaccard = t))
       val pref = canon(graft.ops.Dedup.jaccardJoinPrefix(df, "id", "text",
         minJaccard = t, k = 2))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -44,8 +45,72 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.contains((4L, 6L)))
   }
 
+  private val fox = "the quick brown fox jumps over the lazy dog near the river bank today"
+
+  /** Edge inputs of the MinHash-LSH family: NULL, empty and
+    * shorter-than-k texts (one shingle each), a text repeating its
+    * shingles next to a shorter one with the same distinct set, a
+    * 3-document exact-duplicate cluster (6, 7, 8 — 8 differs only in
+    * case and punctuation), a near-dup (9), a doc sharing bands 1 and 3
+    * but not band 0 with the cluster (13), an unrelated doc and a NULL
+    * id. */
+  private def edgeDocs = (Seq(
+      1L -> null, 2L -> "", 3L -> "hello world", 4L -> "Hello, World!",
+      5L -> "a b c a b c a b c a b c", 6L -> fox, 7L -> fox,
+      8L -> "THE QUICK brown fox jumps over the lazy dog near the river bank today!!",
+      9L -> "the quick brown fox jumps over the lazy dog near the river bank tonight",
+      10L -> "entirely unrelated text mentioning embeddings vectors and cosine distance",
+      11L -> "a b c a b c",
+      12L -> "the quick brown fox leaps over the lazy cat near the river bank today",
+      13L -> "yy quick brown fox jumps over the lazy dog near the river bank today")
+    .map { case (i, t) => (Option(i), t) } :+ ((None, fox)))
+    .toDF("id", "text")
+
+  /** (id_a, id_b) -> jaccard of `edgeDocs` at numHashes 16, bands 4,
+    * k 3, minJaccard 0, frozen from the exploded-stream plan (explode +
+    * localCheckpoint, signature groupBy, band self-join + distinct,
+    * shingle intersection joins) that the per-document kernel replaced. */
+  private val edgePairs = Map(
+    (1L, 2L) -> 1.0, (3L, 4L) -> 1.0, (5L, 11L) -> 1.0,
+    (6L, 7L) -> 1.0, (6L, 8L) -> 1.0, (7L, 8L) -> 1.0,
+    (6L, 9L) -> 11.0 / 13, (7L, 9L) -> 11.0 / 13, (8L, 9L) -> 11.0 / 13,
+    (6L, 13L) -> 11.0 / 13, (7L, 13L) -> 11.0 / 13, (8L, 13L) -> 11.0 / 13,
+    (9L, 13L) -> 10.0 / 14)
+
+  test("MinHash-LSH edge inputs: frozen pairs, each once, Jaccard equal to brute force") {
+    def triples(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toSeq
+    val all = triples(Dedup.lshJaccardDedup(edgeDocs, "id", "text",
+      numHashes = 16, bands = 4, k = 3, minJaccard = 0.0))
+    assert(all.map(_._1).distinct.size === all.size)
+    assert(all.toMap === edgePairs)
+    val brute = DedupSpec.jaccardPairs(edgeDocs, "id", "text", k = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    all.foreach { case (p, j) => assert(j == brute(p), s"$p") }
+    assert(triples(Dedup.lshJaccardDedup(edgeDocs, "id", "text")).toMap ===
+      edgePairs.filter(_._2 >= 0.8))
+    val cand = Dedup.minhashCandidates(edgeDocs, "id", "text", numHashes = 16, bands = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(cand.sorted === edgePairs.keys.toSeq.sorted)
+    // 6 and 13 collide in bands 1 and 3 only: the pair is emitted at
+    // band 1, once
+    val sig = edgeDocs.filter(col("id").isin(6L, 13L))
+      .select(col("id"), Dedup.minhashSignature(col("text"), 16, 3))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert((0 until 4).filter(b => sig(6L).slice(4 * b, 4 * b + 4) ==
+      sig(13L).slice(4 * b, 4 * b + 4)) === Seq(1, 3))
+  }
+
+  test("lshJaccardDedup stays within its Spark job budget") {
+    // one per-document pass and one grouped shuffle: 2 jobs under AQE
+    // (8 with the checkpointed shingle stream and its joins)
+    val (pairs, jobs) = withJobCount(Dedup.lshJaccardDedup(edgeDocs, "id", "text").collect())
+    assert(pairs.length === edgePairs.count(_._2 >= 0.8))
+    assert(jobs <= 2, s"lshJaccardDedup ran $jobs Spark jobs")
+  }
+
   test("jaccard verification: dup=1.0, near-dup high, unrelated low") {
-    val j = Dedup.jaccardPairs(docs, "id", "text", k = 3)
+    val j = DedupSpec.jaccardPairs(docs, "id", "text", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(math.abs(j((1L, 2L)) - 1.0) < 1e-9)
     assert(math.abs(j((1L, 3L)) - 1.0) < 1e-9)
@@ -55,7 +120,7 @@ class DedupSpec extends SparkSpec {
 
   test("prefix-filtered jaccard join is identical to brute force at every threshold") {
     for (tau <- Seq(0.3, 0.5, 0.8, 1.0)) {
-      val brute = Dedup.jaccardPairs(docs, "id", "text", k = 3, minJaccard = tau)
+      val brute = DedupSpec.jaccardPairs(docs, "id", "text", k = 3, minJaccard = tau)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9)))
         .toSet
@@ -77,7 +142,7 @@ class DedupSpec extends SparkSpec {
     val df = Seq(
       (1L, toksB.take(55).mkString(" ")),
       (2L, toksB.mkString(" "))).toDF("id", "text")
-    val brute = Dedup.jaccardPairs(df, "id", "text", k = 1, minJaccard = 0.55)
+    val brute = DedupSpec.jaccardPairs(df, "id", "text", k = 1, minJaccard = 0.55)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute === Set((1L, 2L)))
     val pref = Dedup.jaccardJoinPrefix(df, "id", "text", minJaccard = 0.55, k = 1)
@@ -97,7 +162,7 @@ class DedupSpec extends SparkSpec {
       ((i * 4 + v).toLong, s"$base $tail".trim)
     }
     val df = rows.toDF("id", "text")
-    val brute = Dedup.jaccardPairs(df, "id", "text", k = 3, minJaccard = 0.6)
+    val brute = DedupSpec.jaccardPairs(df, "id", "text", k = 3, minJaccard = 0.6)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9)))
       .toSet
@@ -411,5 +476,29 @@ class DedupSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.lshCalibration(spark, 16, Seq(1.5))
     }
+  }
+}
+
+object DedupSpec {
+  /** Brute-force n-gram Jaccard over ALL pairs (a < b) sharing a
+    * shingle: |A∩B| / |A∪B| over distinct k-shingle sets, from an
+    * exploded shingle self-join plus per-doc set sizes. The reference
+    * the candidate-based joins are checked against. */
+  def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                   k: Int = 3, minJaccard: Double = 0.0): DataFrame = {
+    val sh = df.select(col(idCol).as("id"),
+        explode(Dedup.shinglesFast(col(textCol).cast("string"), k)).as("s"))
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
+    val inter = sh.as("l").join(sh.as("r"),
+        col("l.s") === col("r.s") && col("l.id") < col("r.id"))
+      .groupBy(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= minJaccard)
+      .select("id_a", "id_b", "jaccard")
   }
 }

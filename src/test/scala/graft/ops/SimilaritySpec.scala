@@ -43,6 +43,18 @@ class SimilaritySpec extends SparkSpec {
     got.zip(want).foreach { case (g, w) => assert(math.abs(g._4 - w._4) < 1e-12, s"$g vs $w") }
   }
 
+  test("denseFloor: scan-rooted and repartition(n) frames pass, a post-aggregate frame is rejected") {
+    val want = spark.sparkContext.defaultParallelism
+    assert(Similarity.denseFloor(corpus, "id").rdd.getNumPartitions >= want)
+    assert(Similarity.denseFloor(corpus.repartition(want + 1), "id")
+      .rdd.getNumPartitions === want + 1)
+    val agg = corpus.groupBy("id").agg(first(col("v")).as("v"))
+    val e = intercept[Similarity.NotScanRootedException](Similarity.denseFloor(agg, "id"))
+    assert(e.getMessage.contains("ENSURE_REQUIREMENTS"))
+    intercept[Similarity.NotScanRootedException](
+      Similarity.denseFloor(corpus.repartition(col("id")), "id"))
+  }
+
   test("IVF top-k finds the exact-match neighbor with few probes") {
     // 40-vector corpus: 4 obvious clusters along axes
     val base = (0 until 40).map { i =>
