@@ -11,12 +11,15 @@ import org.apache.spark.sql.types._
   *  - exact: hash-groupBy on a 128-bit content fingerprint — ONE shuffle
   *    keyed on the digest (never on raw text; at 100 TB the shuffle
   *    payload is 16 bytes + id per row).
-  *  - MinHash + LSH banding: one per-document pass (shingles →
-  *    signature → band digests) → one groupBy on (band, bucket);
-  *    candidates are generated, and verified, only within buckets,
-  *    turning the O(n²) pair space into near-linear work.
-  *  - SimHash: map-only row sketch (TextAnalysis.simHashRow), bucket
-  *    by sketch.
+  *  - LSH near-dups, two families on ONE pair generator
+  *    ([[lshPairs]]): a per-document pass yields (id, band keys,
+  *    payload), one groupBy on (band, bucket) streams each bucket's
+  *    pairs, and every candidate is verified inside the bucket that
+  *    generates it — the O(n²) pair space becomes near-linear work.
+  *    MinHash: shingles → signature → band digests, verified by exact
+  *    shingle Jaccard. SimHash: one 64-bit sketch word per document
+  *    ([[sketchWord]]), band keys cut from it ([[bandKey]]), verified
+  *    by Hamming distance.
   *  - n-gram Jaccard: exact verification of LSH and prefix-filter
   *    candidates.
   *  - embedding cosine: near-dup by vector similarity (Similarity.scala
@@ -69,12 +72,6 @@ object Dedup {
       if (toks.length < k) Array(toks.mkString(" "))
       else Array.tabulate(toks.length - k + 1)(i => joinTokens(toks, i, k))
     if (distinct) out.distinct else out
-  }
-
-  /** UDF column form of [[shingleArrayLocal]] (non-distinct stream). */
-  def shingleStreamFast(c: Column, k: Int = 3): Column = {
-    val f = udf((t: String) => shingleArrayLocal(t, k, distinct = false))
-    f(c)
   }
 
   /** UDF column form of [[shingleArrayLocal]] with set semantics. */
@@ -361,12 +358,9 @@ object Dedup {
     inter
   }
 
-  /** Shared body of the MinHash-LSH family. One [[minhashDoc]] pass
-    * emits a (band, bucket, id, keys, shingles, n) row per band; one
-    * groupByKey on (band, bucket) hands each bucket, sorted by id, to a
-    * lazy pair iterator (a bucket's rows are buffered, its pairs are
-    * not). A pair (a < b) is emitted at the first band whose keys the
-    * two documents share. With `minJaccard` set, the rows carry the
+  /** Shared body of the MinHash-LSH family: one [[minhashDoc]] pass
+    * emits a (id, band keys, shingles, n) row per document and
+    * [[lshPairs]] pairs them. With `minJaccard` set, the rows carry the
     * shingle sets and a pair is kept iff the two documents share a
     * shingle and its Jaccard reaches the threshold (a bucket shared
     * only through a 28-bit hash collision yields nothing, even at
@@ -376,50 +370,78 @@ object Dedup {
                           minJaccard: Option[Double]): DataFrame = {
     val idField = df.select(col(idCol)).schema.head
     val (a, b) = minhashParams(numHashes).toArray.unzip
-    val bandRow = StructType(Seq(
-      StructField("band", IntegerType, nullable = false),
-      StructField("bucket", BinaryType, nullable = false),
+    val docRow = StructType(Seq(
       StructField("id", idField.dataType, idField.nullable),
       StructField("keys", ArrayType(BinaryType, containsNull = false), nullable = false),
       StructField("sh", BinaryType, nullable = false),
       StructField("n", IntegerType, nullable = false)))
     val perDoc: Iterator[Row] => Iterator[Row] = rows => {
       val md = java.security.MessageDigest.getInstance("MD5")
-      rows.filter(!_.isNullAt(0)).flatMap { r =>
+      rows.map { r =>
         val d = minhashDoc(r.getString(1), k, a, b, bands, md)
         val sh = if (minJaccard.isDefined) d.shingles else Array.emptyByteArray
-        Iterator.tabulate(bands)(band => Row(band, d.keys(band), r.get(0), d.keys, sh, d.n))
+        // keys as a Seq, the form a decoded row holds: Spark may hand
+        // this very Row to the generator's flatMap without a round trip
+        Row(r.get(0), d.keys.toSeq, sh, d.n)
       }
     }
-    val out = StructType(Seq(
-      StructField("id_a", idField.dataType, idField.nullable),
-      StructField("id_b", idField.dataType, idField.nullable)) ++
-      minJaccard.map(_ => StructField("jaccard", DoubleType)))
-    val pairs: ((Int, Array[Byte]), Iterator[Row]) => IterableOnce[Row] = {
-      case ((band, _), rows) =>
-        val m = rows.toArray
-        def keys(r: Row) = r.getSeq[Array[Byte]](3)
-        def firstShared(x: Row, y: Row): Boolean =
-          (0 until band).forall(e => !java.util.Arrays.equals(keys(x)(e), keys(y)(e)))
-        Iterator.range(0, m.length).flatMap { i =>
-          Iterator.range(i + 1, m.length).flatMap { j =>
-            val (x, y) = (m(i), m(j))
-            if (java.util.Objects.deepEquals(x.get(2), y.get(2)) || !firstShared(x, y)) None
-            else minJaccard match {
-              case None => Some(Row(x.get(2), y.get(2)))
-              case Some(t) =>
-                val inter = mergeIntersect(x.getAs[Array[Byte]](4), y.getAs[Array[Byte]](4))
-                val jac = inter.toDouble / (x.getInt(5).toLong + y.getInt(5) - inter)
-                if (inter > 0 && jac >= t) Some(Row(x.get(2), y.get(2), jac)) else None
-            }
-          }
+    val docs = df.select(col(idCol), col(textCol).cast("string"))
+      .mapPartitions(perDoc)(Encoders.row(docRow))
+    minJaccard match {
+      case None => lshPairs(docs, Nil)((_, _) => Some(Row.empty))
+      case Some(t) =>
+        lshPairs(docs, Seq(StructField("jaccard", DoubleType))) { (x, y) =>
+          val inter = mergeIntersect(x.getAs[Array[Byte]](2), y.getAs[Array[Byte]](2))
+          val jac = inter.toDouble / (x.getInt(3).toLong + y.getInt(3) - inter)
+          if (inter > 0 && jac >= t) Some(Row(jac)) else None
         }
     }
-    df.select(col(idCol), col(textCol).cast("string"))
-      .mapPartitions(perDoc)(Encoders.row(bandRow))
-      .groupByKey((r: Row) => (r.getInt(0), r.getAs[Array[Byte]](1)))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY))
-      .flatMapSortedGroups(col("id"))(pairs)(Encoders.row(out))
+  }
+
+  /** The one LSH pair generator of both near-dup families (MinHash and
+    * SimHash). `docs` holds one row per document: (id, band keys,
+    * payload...). A typed flatMap emits one (band, bucket, document)
+    * row per band — never a Generate, whose inferred
+    * `size(array(...)) > 0` filter would copy the per-document kernel
+    * below it — and ONE groupBy on (band, bucket) hands each bucket,
+    * sorted by id, to a lazy pair iterator (a bucket's rows are
+    * buffered, its pairs are not). A pair (a < b) is emitted only at
+    * the first band whose keys the two documents share, so no
+    * `distinct` runs; NULL ids and same-id pairs are dropped. `score`
+    * sees the two document rows and returns the pair's `measures`, or
+    * None to drop it. Returns (id_a, id_b, measures...). */
+  private def lshPairs(docs: DataFrame, measures: Seq[StructField])(
+      score: (Row, Row) => Option[Row]): DataFrame = {
+    val idField = docs.schema.head
+    val keyType = docs.schema(1).dataType.asInstanceOf[ArrayType].elementType
+    val bucketKey = StructType(Seq(
+      StructField("band", IntegerType, nullable = false),
+      StructField("bucket", keyType, nullable = false)))
+    val bandRow = bucketKey.add("doc", docs.schema, nullable = false)
+    val out = StructType(Seq(
+      StructField("id_a", idField.dataType, idField.nullable),
+      StructField("id_b", idField.dataType, idField.nullable)) ++ measures)
+    val pairs: (Row, Iterator[Row]) => IterableOnce[Row] = (key, rows) => {
+      val band = key.getInt(0)
+      val m = rows.map(_.getStruct(2)).toArray
+      val keys = m.map(_.getSeq[Any](1))
+      def firstShared(i: Int, j: Int): Boolean =
+        (0 until band).forall(e => !java.util.Objects.deepEquals(keys(i)(e), keys(j)(e)))
+      Iterator.range(0, m.length).flatMap { i =>
+        Iterator.range(i + 1, m.length).flatMap { j =>
+          val (x, y) = (m(i), m(j))
+          if (java.util.Objects.deepEquals(x.get(0), y.get(0)) || !firstShared(i, j)) None
+          else score(x, y).map(s => Row.fromSeq(Seq(x.get(0), y.get(0)) ++ s.toSeq))
+        }
+      }
+    }
+    docs
+      .flatMap((d: Row) =>
+        if (d.isNullAt(0)) Iterator.empty
+        else d.getSeq[Any](1).iterator.zipWithIndex.map { case (k, band) => Row(band, k, d) })(
+        Encoders.row(bandRow))
+      .groupBy("band", "bucket").as(Encoders.row(bucketKey), Encoders.row(bandRow))
+      .flatMapSortedGroups(col("doc.id"))(pairs)(Encoders.row(out))
   }
 
   /** Exact |A∩B| per (id_a, id_b) candidate pair over the exploded
@@ -607,61 +629,56 @@ object Dedup {
   }
 
   /** SimHash near-duplicates within Hamming distance `maxDist` — the
-    * tolerance-based form of the exact-sketch-match dedup. The
-    * `nBits`-bit sketch is split into `bands` contiguous blocks; any
-    * pair within Hamming distance < `bands` agrees exactly on ≥ 1 block
-    * (pigeonhole), so candidates come from `bands` narrow (block, value)
-    * equality self-joins — never an all-pairs scan — verified by
-    * popcount(xor). For `maxDist` ≥ `bands` the block guarantee weakens
-    * to LSH-style recall; the verification stays exact either way.
+    * tolerance-based form of the exact-sketch-match dedup. Each
+    * document's `nBits`-bit sketch is one long ([[sketchWord]]), split
+    * into `bands` contiguous blocks ([[bandKey]]); any pair within
+    * Hamming distance < `bands` agrees exactly on ≥ 1 block
+    * (pigeonhole), so candidates come from the (band, block) buckets of
+    * the shared generator [[lshPairs]] — never an all-pairs scan — and
+    * each is verified inside its bucket by popcount(xor). For
+    * `maxDist` ≥ `bands` the block guarantee weakens to LSH-style
+    * recall; the verification stays exact either way. Returns
+    * (id_a, id_b, dist), a < b, each pair once.
+    *
     * Width matters at scale: the pigeonhole guarantee holds at ANY band
     * width, so wider keys are free recall-wise and directly divide the
     * candidate volume. 16 bits in 4 bands leaves 4-bit keys — 16
     * buckets per band, saturated by a few hundred docs (measured 24 s
     * at 5.5 k docs); 32 bits gives 8-bit keys (256 buckets/band) whose
     * random-collision candidate count still grows ~4·n²/256 — quadratic
-    * at 100× corpus scale. The 64-bit default leaves 16-bit keys
-    * (65,536 buckets per band): random band collisions stay ~linear
-    * until n approaches millions of docs per content cluster, which is
-    * the regime where the docs genuinely ARE near-dups. Corpora that
-    * saturate even 16-bit bands can go to nBits=128 (4 bands of 32 →
-    * ~4·n²/2³² random collisions; the sketch rides as two 64-bit
-    * words, verified by a two-popcount sum). Shuffle rows: `bands`
-    * per doc (a long each) — 100 TB-safe. */
+    * at 100× corpus scale. The 64-bit default (also the maximum: one
+    * word) leaves 16-bit keys (65,536 buckets per band): random band
+    * collisions stay ~linear until n approaches millions of docs per
+    * content cluster, which is the regime where the docs genuinely ARE
+    * near-dups. Shuffle rows: `bands` per doc, each an id, the word and
+    * its band keys.
+    *
+    * PRECONDITION (all dedup operators): one row per document id; rows
+    * with a NULL id pair with nothing. */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      maxDist: Int = 3, nBits: Int = 64,
                      bands: Int = 4): DataFrame = {
-    val cand = simhashCandidates(df, idCol, textCol, nBits, bands)
-    val dist =
-      if (nBits <= 64) bit_count(col("h_a").bitwiseXOR(col("h_b")))
-      else bit_count(col("h_hi_a").bitwiseXOR(col("h_hi_b"))) +
-        bit_count(col("h_lo_a").bitwiseXOR(col("h_lo_b")))
-    cand.withColumn("dist", dist)
-      .filter(col("dist") <= maxDist)
-      .select("id_a", "id_b", "dist")
+    require(nBits <= 64, s"simhashNearDup keeps one 64-bit sketch word: nBits $nBits > 64")
+    hammingPairs(sketchTable(df, idCol, textCol, nBits), maxDist, nBits, bands)
   }
 
   /** Near-dup decontamination: remove from `train` every document
     * within Hamming distance `maxDist` of ANY `test` document's sketch
     * — the paraphrase-tolerant layer the exact [[decontaminate]] (and
     * its bloom form) cannot provide. Both corpora sketch map-only;
-    * candidates come from a train×test band join (never a self-join,
-    * never all-pairs — same pigeonhole recall as [[simhashNearDup]]
-    * for maxDist < bands), verified by popcount; matched train ids
-    * anti-join away. Test-side ids are irrelevant (only its sketches
-    * matter), so `test` needs just the text column. */
+    * candidates come from a train×test band join ([[nearSketchIds]]:
+    * never a self-join, never all-pairs — same pigeonhole recall as
+    * [[simhashNearDup]] for maxDist < bands), verified by popcount;
+    * matched train ids anti-join away. Test-side ids are irrelevant
+    * (only its sketches matter), so `test` needs just the text
+    * column. */
   def decontaminateNearDup(train: DataFrame, trainId: String,
                            test: DataFrame, textCol: String,
                            maxDist: Int = 3, nBits: Int = 64,
                            bands: Int = 4): DataFrame = {
-    val (bt, words) = bandedSketch(train, trainId, textCol, nBits, bands)
-    val (be, _) = bandedSketch(
-      test.select(lit(0L).as("__tid"), col(textCol)), "__tid", textCol, nBits, bands)
-    val contaminated = bt.as("l").join(be.as("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key"))
-      .filter(hammingDist(words, "l", "r") <= maxDist)
-      .select(col("l.id").as(trainId)).distinct()
-    train.join(contaminated, Seq(trainId), "left_anti")
+    val contaminated = nearSketchIds(sketchTable(train, trainId, textCol, nBits),
+      test.select(sketchWord(col(textCol), nBits).as("h")), maxDist, nBits, bands)
+    train.join(contaminated.withColumnRenamed("id", trainId), Seq(trainId), "left_anti")
   }
 
   /** Persistable sketch table (id, h) — the state [[admitIncremental]]
@@ -673,18 +690,22 @@ object Dedup {
                   nBits: Int = 64): DataFrame =
     df.select(col(idCol).as("id"), sketchWord(col(textCol), nBits).as("h"))
 
-  /** One-word SimHash sketch as a pure Column expression — the kernel
-    * behind [[sketchTable]]; streams reuse it (no state, no UDF-side
-    * driver dependence). */
+  /** One-word SimHash sketch as a pure Column expression — the sketch
+    * of every SimHash route (batch, sketch table, streams): no state,
+    * no UDF-side driver dependence. Declared non-null (the kernel maps
+    * a NULL text to the all-zero word and never yields NULL): a
+    * nullable word lets a join on it infer `isnotnull(h)` and push that
+    * filter below the sketch projection, running the md5-per-token
+    * kernel twice per row. */
   private[graft] def sketchWord(text: Column, nBits: Int): Column = {
     require(nBits >= 1 && nBits <= 64, s"nBits $nBits outside 1..64")
-    bitsToLong(TextAnalysis.simHashRow(text.cast("string"), nBits), nBits)
+    coalesce(bitsToLong(TextAnalysis.simHashRow(text.cast("string"), nBits), nBits), lit(0L))
   }
 
-  /** Band `b`'s key cut arithmetically from a stored sketch word —
-    * the same contiguous MSB-first bit block [[bandedSketch]] cuts
-    * from the bit string, so sketch-table routes and text routes
-    * always agree. */
+  /** Band `b`'s key: the `b`-th contiguous MSB-first block of
+    * `nBits / bands` bits of a sketch word — the one band-key
+    * definition of every SimHash route, so text routes and sketch-table
+    * routes always agree. */
   private[graft] def bandKey(h: Column, nBits: Int, bands: Int, b: Int): Column = {
     require(nBits % bands == 0, s"bands $bands must divide nBits $nBits")
     val bandBits = nBits / bands
@@ -697,13 +718,15 @@ object Dedup {
   }
 
   /** Incremental near-dup ADMISSION — the daily-append production
-    * shape: sketch ONLY the incoming shard, reject anything within
-    * Hamming `maxDist` of the persisted PRIOR sketch table
-    * ([[sketchTable]] — history is never re-read, let alone
-    * re-sketched; the band join runs on arithmetic keys cut from the
-    * stored word), then collapse the shard's internal near-dups to
-    * their lowest id (pairs → connected components, the
-    * [[dedupCorpus]] tail). Returns the admitted incoming rows; append
+    * shape: sketch ONLY the incoming shard (once: the md5-per-token
+    * sketch is the dominant map cost, so its (id, word) frame is
+    * pinned), reject anything within Hamming `maxDist` of the persisted
+    * PRIOR sketch table ([[sketchTable]] — history is never re-read,
+    * let alone re-sketched; [[nearSketchIds]] joins on band keys cut
+    * from the stored word), then collapse the shard's internal
+    * near-dups ([[lshPairs]] over the surviving sketches) to their
+    * lowest id (pairs → connected components, the [[dedupCorpus]]
+    * tail). Returns the admitted incoming rows; append
     * `sketchTable(admitted)` to the prior table for the next shard.
     * Same pigeonhole recall as [[simhashNearDup]] (guaranteed for
     * maxDist < bands). Shuffle volume: O(|shard| · bands) keyed longs
@@ -713,29 +736,10 @@ object Dedup {
                        priorSketches: DataFrame, maxDist: Int = 3,
                        nBits: Int = 64, bands: Int = 4,
                        ccRounds: Int = 3): DataFrame = {
-    require(nBits % bands == 0, s"bands $bands must divide nBits $nBits")
     require(nBits <= 64, s"incremental admission keeps one word: nBits $nBits > 64")
-    val bPrior = priorSketches.select(col("id").as("__pid"), col("h").as("__ph"))
-      .select(col("__pid"), col("__ph"),
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          bandKey(col("__ph"), nBits, bands, b).as("key"))): _*)).as("bk"))
-      .select(col("__pid"), col("__ph"),
-        col("bk.band").as("__pband"), col("bk.key").as("__pkey"))
-    val (bIn, _) = bandedSketch(incoming, idCol, textCol, nBits, bands)
-    val hit = bIn.as("l").join(bPrior,
-        col("l.band") === col("__pband") && col("l.key") === col("__pkey"))
-      .filter(bit_count(col("l.h").bitwiseXOR(col("__ph"))) <= maxDist)
-      .select(col("l.id").as("id")).distinct()
-    // intra-shard pairs REUSE the checkpointed banded sketches (the
-    // md5-per-token sketch is the dominant map cost — never pay it
-    // twice for one shard): band self-join over surviving rows only
-    val bFresh = bIn.join(hit, Seq("id"), "left_anti")
-    val pairs = bFresh.as("l").join(bFresh.as("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-        col("l.id") < col("r.id"))
-      .filter(hammingDist(Seq("h"), "l", "r") <= maxDist)
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
+    val sk = sketchTable(incoming, idCol, textCol, nBits).localCheckpoint()
+    val hit = nearSketchIds(sk, priorSketches, maxDist, nBits, bands)
+    val pairs = hammingPairs(sk.join(hit, Seq("id"), "left_anti"), maxDist, nBits, bands)
     val fresh = incoming.join(hit.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
     keepRepresentatives(fresh, idCol, pairs, ccRounds)
   }
@@ -748,72 +752,33 @@ object Dedup {
   private def bitsToLong(bits: Column, width: Int): Column =
     graft.expressions.Kernels.binSliceLong(bits, 1, width)
 
-  /** The banded candidate pairs of [[simhashNearDup]] BEFORE the
-    * Hamming verify — distinct ids sharing ≥ 1 band, each carrying its
-    * sketch word(s): (id_a, h_a, id_b, h_b) up to 64 bits, or hi/lo
-    * word pairs above. Sketching is a PURE MAP (the one-pass
-    * [[TextAnalysis.simHashRow]] kernel — no explode, no groupBy
-    * shuffle, no empty-doc reattach join); the only exchanges are the
-    * banded self-join's. Exposed separately so the candidate volume
-    * (the term that must stay ~linear in corpus size for the op to
-    * scale) is measurable on its own.
-    *
-    * PRECONDITION (all dedup operators): one row per document id. The
-    * former aggregation form silently merged the token streams of rows
-    * sharing an id; the map form sketches each row, so duplicate ids
-    * with different text would emit one sketch per row and duplicate
-    * (id_a, id_b) pairs downstream — concatenate or dedup such rows
-    * upstream. */
-  def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        nBits: Int = 64, bands: Int = 4): DataFrame = {
-    val (banded, wordCols) = bandedSketch(df, idCol, textCol, nBits, bands)
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a") +: wordCols.map(c => col(s"l.$c").as(s"${c}_a")) ++:
-        (col("r.id").as("id_b") +: wordCols.map(c => col(s"r.$c").as(s"${c}_b"))): _*)
-      .distinct()
+  /** Pairs (id_a, id_b, dist) of a sketch frame (id, h) within Hamming
+    * `maxDist`: [[lshPairs]] over the [[bandKey]] buckets, verified by
+    * popcount(xor) inside the bucket. */
+  private def hammingPairs(sk: DataFrame, maxDist: Int, nBits: Int,
+                           bands: Int): DataFrame = {
+    val keys = (0 until bands).map(b => bandKey(col("h"), nBits, bands, b))
+    lshPairs(sk.select(col("id"), array(keys: _*).as("keys"), col("h")),
+        Seq(StructField("dist", IntegerType, nullable = false))) { (x, y) =>
+      val d = java.lang.Long.bitCount(x.getLong(2) ^ y.getLong(2))
+      if (d <= maxDist) Some(Row(d)) else None
+    }
   }
 
-  /** Sketch + band a corpus for the Hamming family: one row per
-    * (doc, band) with the doc's sketch word(s) and the band key. Band
-    * keys come off the bit string (a band is at most 64 bits wide so
-    * its key always fits a long). Materialized once (localCheckpoint):
-    * every consumer joins this frame at least twice, and its lineage
-    * re-runs the md5-per-token sketch UDF — id + 1-2 longs + `bands`
-    * keys per doc, cheap to pin. Returns (frame, sketch word column
-    * names: "h" up to 64 bits, "h_hi"/"h_lo" above). */
-  private def bandedSketch(df: DataFrame, idCol: String, textCol: String,
-                           nBits: Int, bands: Int): (DataFrame, Seq[String]) = {
-    require(nBits % bands == 0, s"bands $bands must divide nBits $nBits")
-    require(nBits <= 128, s"nBits $nBits outside md5's 128 bits")
-    val bandBits = nBits / bands
-    val sk0 = df.select(col(idCol).as("id"),
-      graft.ops.TextAnalysis.simHashRow(col(textCol).cast("string"), nBits).as("sh"))
-    val (sk, wordCols) =
-      if (nBits <= 64)
-        (sk0.select(col("id"), bitsToLong(col("sh"), nBits).as("h"), col("sh")),
-          Seq("h"))
-      else
-        (sk0.select(col("id"),
-          bitsToLong(substring(col("sh"), 1, nBits - 64), nBits - 64).as("h_hi"),
-          bitsToLong(substring(col("sh"), nBits - 63, 64), 64).as("h_lo"),
-          col("sh")), Seq("h_hi", "h_lo"))
-    val banded = sk.select(col("id") +: wordCols.map(col) :+
-        explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-          bitsToLong(substring(col("sh"), b * bandBits + 1, bandBits), bandBits)
-            .as("key"))): _*)).as("bk"): _*)
-      .select(col("id") +: wordCols.map(col) :+
-        col("bk.band").as("band") :+ col("bk.key").as("key"): _*)
-      .localCheckpoint()
-    (banded, wordCols)
+  /** Distinct ids of the sketch frame `sk` (id, h) within Hamming
+    * `maxDist` of ANY sketch in `other` (h): the cross-corpus band join
+    * of the SimHash routes, both sides keyed by [[bandKey]]. */
+  private def nearSketchIds(sk: DataFrame, other: DataFrame, maxDist: Int,
+                            nBits: Int, bands: Int): DataFrame = {
+    def banded(d: DataFrame, cols: Column*): DataFrame =
+      d.select(cols :+ explode(array((0 until bands).map(b => struct(lit(b).as("band"),
+          bandKey(col("h"), nBits, bands, b).as("key"))): _*)).as("bk"): _*)
+    val l = banded(sk, col("id"), col("h"))
+    val r = banded(other, col("h").as("__oh"))
+    l.join(r, l("bk") === r("bk"))
+      .filter(bit_count(col("h").bitwiseXOR(col("__oh"))) <= maxDist)
+      .select(col("id")).distinct()
   }
-
-  /** Hamming distance between the sketch word columns of two aliased
-    * sides of a band join. */
-  private def hammingDist(wordCols: Seq[String], l: String, r: String): Column =
-    wordCols.map(c => bit_count(col(s"$l.$c").bitwiseXOR(col(s"$r.$c"))))
-      .reduce(_ + _)
 
   /** Train/test decontamination: remove from `train` every document
     * whose exact content fingerprint appears in `test` (benchmark /

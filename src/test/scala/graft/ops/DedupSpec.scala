@@ -224,24 +224,65 @@ class DedupSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("128-bit simhash near-dup: pigeonhole ground truth over two-word sketches") {
-    val sk = docs.select(col("id"), TextAnalysis.simHashRow(col("text"), 128))
-      .collect().map { r =>
-        val s = r.getString(1)
-        r.getLong(0) -> ((java.lang.Long.parseUnsignedLong(s.substring(0, 64), 2),
-          java.lang.Long.parseUnsignedLong(s.substring(64), 2)))
-      }.toMap
-    val want = (for {
-      a <- sk.keys; b <- sk.keys if a < b
-      d = java.lang.Long.bitCount(sk(a)._1 ^ sk(b)._1) +
-        java.lang.Long.bitCount(sk(a)._2 ^ sk(b)._2)
-      if d <= 3
-    } yield (a, b)).toSet
-    val got = Dedup.simhashNearDup(docs, "id", "text", maxDist = 3, nBits = 128)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === want)
-    // exact dups still collide at full width
-    assert(got.contains((1L, 2L)) && got.contains((1L, 3L)))
+  /** Edge inputs of the SimHash family: a NULL and an empty text (both
+    * sketch to all zeros), a 3-document exact-duplicate cluster (3, 4,
+    * 5 — 5 differs only in case and punctuation), a near-dup sharing
+    * bands 0 and 1 with the cluster (6), one sharing bands 2 and 3 (9),
+    * two farther variants (7, 8), two texts one token apart whose
+    * sketches share no band (10, 11), an unrelated doc and a NULL id. */
+  private def simEdgeDocs = (Seq(
+      1L -> null, 2L -> "", 3L -> fox, 4L -> fox,
+      5L -> "THE QUICK brown fox jumps over the lazy dog near the river bank today!!",
+      6L -> "the quick brown fox jumps over the lazy dog near the river bank tonight",
+      7L -> "the quick brown fox leaps over the lazy cat near the river bank today",
+      8L -> "yy quick brown fox jumps over the lazy dog near the river bank today",
+      9L -> "the quick brown fox jumps over the lazy dog by the river bank today",
+      10L -> "entirely unrelated text mentioning embeddings vectors and cosine distance",
+      11L -> "entirely unrelated text mentioning embeddings vectors and cosine distances",
+      12L -> "a completely different document about spark shuffles and partition sizes")
+    .map { case (i, t) => (Option(i), t) } :+ ((None, fox)))
+    .toDF("id", "text")
+
+  /** (id_a, id_b, dist) of `simEdgeDocs` per (maxDist, nBits, bands),
+    * frozen from the checkpointed band self-join + distinct plan that
+    * the shared pair generator replaced. */
+  private val simEdgePairs = Map(
+    (3, 64, 4) -> Seq((1L, 2L, 0), (3L, 4L, 0), (3L, 5L, 0), (3L, 6L, 2), (3L, 9L, 3),
+      (4L, 5L, 0), (4L, 6L, 2), (4L, 9L, 3), (5L, 6L, 2), (5L, 9L, 3)),
+    (0, 64, 4) -> Seq((1L, 2L, 0), (3L, 4L, 0), (3L, 5L, 0), (4L, 5L, 0)),
+    (3, 64, 1) -> Seq((1L, 2L, 0), (3L, 4L, 0), (3L, 5L, 0), (4L, 5L, 0)),
+    (6, 64, 8) -> Seq((1L, 2L, 0), (3L, 4L, 0), (3L, 5L, 0), (3L, 6L, 2), (3L, 7L, 5),
+      (3L, 8L, 6), (3L, 9L, 3), (4L, 5L, 0), (4L, 6L, 2), (4L, 7L, 5), (4L, 8L, 6),
+      (4L, 9L, 3), (5L, 6L, 2), (5L, 7L, 5), (5L, 8L, 6), (5L, 9L, 3), (6L, 8L, 4),
+      (6L, 9L, 5)))
+
+  test("simhash near-dup edge inputs: frozen pairs, each once, at every banding") {
+    for (((maxDist, nBits, bands), want) <- simEdgePairs) {
+      val got = Dedup.simhashNearDup(simEdgeDocs, "id", "text", maxDist, nBits, bands)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      assert(got.sorted === want, s"(maxDist, nBits, bands) = ($maxDist, $nBits, $bands)")
+    }
+    // 3 and 6 share bands 0 and 1, 3 and 9 bands 2 and 3 (64 bits, 4
+    // bands): each pair is emitted at its first shared band, once
+    val sk = simEdgeDocs.filter(col("id").isin(3L, 6L, 9L))
+      .select(col("id"), TextAnalysis.simHashRow(col("text"), 64))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def shared(a: Long, b: Long) =
+      (0 until 4).filter(k => sk(a).slice(16 * k, 16 * k + 16) == sk(b).slice(16 * k, 16 * k + 16))
+    assert(shared(3L, 6L) === Seq(0, 1))
+    assert(shared(3L, 9L) === Seq(2, 3))
+    val e = intercept[IllegalArgumentException](
+      Dedup.simhashNearDup(simEdgeDocs, "id", "text", nBits = 128))
+    assert(e.getMessage.contains("one 64-bit sketch word"))
+  }
+
+  test("simhashNearDup stays within its Spark job budget") {
+    // one sketch pass and one grouped shuffle: 2 jobs under AQE (4 with
+    // the checkpointed banded frame and its self-join + distinct)
+    val (pairs, jobs) = withJobCount(
+      Dedup.simhashNearDup(simEdgeDocs, "id", "text", maxDist = 3).collect())
+    assert(pairs.length === simEdgePairs((3, 64, 4)).length)
+    assert(jobs <= 2, s"simhashNearDup ran $jobs Spark jobs")
   }
 
   test("boilerplate strip removes common lines, keeps order, handles all-boilerplate docs") {
