@@ -109,7 +109,7 @@ object SparkEntry {
     val m = momentAgg(df, col(colName)).collect()(0)
     val n = m.getLong(0)
     val qs = graft.engine.Quantiles.exactMulti(df, Seq(colName -> col(colName)),
-      Seq(0.25, 0.5, 0.75), Map(colName -> n))(colName)
+      Seq(0.25, 0.5, 0.75))(colName)
     val base = df.sparkSession.range(1).select(
       lit(n).as("n"),
       lit(m.getDouble(1)).as("s1"), lit(m.getDouble(2)).as("s2"),
@@ -753,7 +753,7 @@ object SparkEntry {
         .select(col("value").cast("double").as("v"))
       val nBase = base.count()
       val cuts = graft.engine.Quantiles.exactMulti(base, Seq("v" -> col("v")),
-        (1 until bins).map(_.toDouble / bins), Map("v" -> nBase))("v")
+        (1 until bins).map(_.toDouble / bins))("v")
       val binE = cuts.foldLeft(lit(0)) { (acc, c) =>
         acc + when(col("v") >= lit(c), 1).otherwise(0) }
       val baseCounts = base.groupBy(binE.as("bin"))

@@ -104,9 +104,7 @@ object Profiler {
       numericCols.map(n => n -> numericValue(fields(n))) ++
         // epoch seconds (`dates.astype(np.int64) // 10**9`, `Latanova_v1.py:281`)
         datetimeCols.map(n => n -> unix_timestamp(datetimeValue(fields(n))))
-    val counts = (numericCols ++ datetimeCols)
-      .map(n => n -> row.getLong(idx(s"$n#n"))).toMap
-    val quantiles = Quantiles.exactMulti(df, quantileValues, ps, counts)
+    val quantiles = Quantiles.exactMulti(df, quantileValues, ps)
 
     val numericProfiles = numericCols.map { n =>
       n -> ColumnProfile(n, detected(n)._1, detected(n)._2,
@@ -198,9 +196,9 @@ object Profiler {
     * `hotGroupRowBound` do NOT take that path: a keyed pre-count (one
     * narrow map-side-combined scan) identifies them, the percentile
     * input is masked to null for their rows (nothing buffers), and
-    * their quantiles come from ONE fused pass of
-    * [[Quantiles.exactMulti]] — the range-partitioned sort where a
-    * dominant group's values spread across all partitions — stitched
+    * their quantiles come from ONE sort keyed by the group
+    * ([[Quantiles.groupedExact]] — the range-partitioned sort where a
+    * dominant group's values spread across all partitions) — stitched
     * back as literal CASE expressions (hot groups are few by
     * definition: at most |rows|/bound of them exist). Both paths use
     * the same (n−1)·p linear interpolation. A null group key never
@@ -209,39 +207,28 @@ object Profiler {
   def groupedNumericProfile(df: DataFrame, keyCol: String,
                             valueCol: String,
                             hotGroupRowBound: Long = 2000000L): DataFrame = {
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale == 0
-      case _ => false
-    }
-    val xd = col(valueCol).cast(DoubleType)
-    val x = if (integral) col(valueCol).cast(DecimalType(38, 0)) else xd
+    val (x, xd) = momentOperands(df, valueCol)
     val clean = df.filter(xd.isNotNull)
     val ps = Seq(0.25, 0.5, 0.75)
     // a null group key never routes hot (filtered here): isin/=== can't
     // address null rows, so a null group stays on the buffered path by
     // construction — and the masking below must not let three-valued
     // logic null OTHER groups out (hence the <=> true)
-    val hot: Seq[(Any, Long)] = clean.groupBy(col(keyCol)).count()
+    val hot: Seq[Any] = clean.groupBy(col(keyCol)).count()
       .filter(col("count") > hotGroupRowBound && col(keyCol).isNotNull)
-      .collect().map(r => r.get(0) -> r.getLong(1)).toSeq
+      .collect().map(_.get(0)).toSeq
     // percentile input masked to null for hot groups — their values
     // never enter aggregation state
     val qIn = if (hot.isEmpty) xd
-      else when(col(keyCol).isin(hot.map(_._1): _*) <=> lit(true),
+      else when(col(keyCol).isin(hot: _*) <=> lit(true),
         lit(null).cast(DoubleType)).otherwise(xd)
     val qsCol = if (hot.isEmpty)
       percentile(xd, array(ps.map(lit): _*))
     else {
-      val hotQs = Quantiles.exactMulti(
-        clean.filter(col(keyCol).isin(hot.map(_._1): _*)),
-        hot.map { case (k, _) =>
-          s"__g_$k" -> when(col(keyCol) === lit(k), xd) },
-        ps, hot.map { case (k, n) => s"__g_$k" -> n }.toMap)
-      hot.foldLeft(percentile(qIn, array(ps.map(lit): _*))) {
-        case (acc, (k, _)) =>
-          when(col(keyCol) === lit(k),
-            array(hotQs(s"__g_$k").map(lit): _*)).otherwise(acc)
+      val hotQs = Quantiles.groupedExact(
+        clean.filter(col(keyCol).isin(hot: _*)).select(col(keyCol), xd), ps)
+      hotQs.foldLeft(percentile(qIn, array(ps.map(lit): _*))) { case (acc, (k, qs)) =>
+        when(col(keyCol) === lit(k), array(qs.map(lit): _*)).otherwise(acc)
       }
     }
     val g = clean.groupBy(col(keyCol)).agg(
@@ -263,6 +250,20 @@ object Profiler {
       round(element_at(col("qs"), 2), 6).as("median"),
       round(element_at(col("qs"), 1), 6).as("q1"),
       round(element_at(col("qs"), 3), 6).as("q3"))
+  }
+
+  /** The two value forms moment sums need: (x, the operand of the
+    * s1..s4 sums, and xd, the DOUBLE value). Integral columns sum in
+    * DECIMAL(38,0), exact at any scale; every other column sums its
+    * double — DECIMAL(38,0) would round a fraction away. */
+  private def momentOperands(df: DataFrame, valueCol: String): (Column, Column) = {
+    val integral = df.schema(valueCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0
+      case _ => false
+    }
+    val xd = col(valueCol).cast(DoubleType)
+    (if (integral) col(valueCol).cast(DecimalType(38, 0)) else xd, xd)
   }
 
   /** Shared scalar moment formula over columns n, s1..s4 — the same
@@ -298,13 +299,7 @@ object Profiler {
     * needed). */
   def partialMoments(df: DataFrame, shardCol: String,
                      valueCol: String): DataFrame = {
-    val integral = df.schema(valueCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale == 0
-      case _ => false
-    }
-    val xd = col(valueCol).cast(DoubleType)
-    val x = if (integral) col(valueCol).cast(DecimalType(38, 0)) else xd
+    val (x, xd) = momentOperands(df, valueCol)
     df.filter(xd.isNotNull && col(shardCol).isNotNull)
       .groupBy(col(shardCol).as("shard"))
       .agg(count(xd).as("n"),
@@ -384,8 +379,7 @@ object Profiler {
       s"need 0 <= pLo < pHi <= 1, got ($pLo, $pHi)")
     val x = col(colName).cast(DoubleType)
     val clean = df.filter(x.isNotNull)
-    val n = clean.count()
-    val cuts = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(pLo, pHi), Map("x" -> n))("x")
+    val cuts = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(pLo, pHi))("x")
     val v = greatest(lit(cuts.head), least(lit(cuts.last), x))
     clean.agg(
       count(v).as("n"),
@@ -410,10 +404,8 @@ object Profiler {
     require(k > 0, s"k must be > 0, got $k")
     val x = col(colName).cast(DoubleType)
     val clean = df.filter(x.isNotNull)
-    val n = clean.count()
-    val med = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(0.5), Map("x" -> n))("x").head
-    val mad = Quantiles.exactMulti(clean, Seq("d" -> abs(x - med)), Seq(0.5),
-      Map("d" -> n))("d").head
+    val med = Quantiles.exactMulti(clean, Seq("x" -> x), Seq(0.5))("x").head
+    val mad = Quantiles.exactMulti(clean, Seq("d" -> abs(x - med)), Seq(0.5))("d").head
     // left-assoc (k * 1.4826) * mad — the oracle spells it the same way
     val thr = k * 1.4826 * mad
     clean.agg(

@@ -7,6 +7,15 @@ import org.apache.spark.sql.functions._
   * rank lookup — O(n log n) shuffle but only the handful of rows at
   * the quantile positions ever reach the driver.
   *
+  * One kernel ([[pickRanks]]) does the sort-and-pick for every caller:
+  * a keyed (key, value) stream is range-sorted on (key, value) — so a
+  * dominant key spreads over ALL partitions instead of funnelling
+  * through one task, the 100 TB killer of a `Window.partitionBy(key)`
+  * rank — and two passes over the persisted sort count each key's rows
+  * and then emit only the rows at the ranks each key needs. The key is
+  * a column name ([[exactMulti]]: many columns' quantiles in one sort)
+  * or a group value ([[groupedPick]], the grouped profile's hot groups).
+  *
   * Spark's built-in exact `percentile` aggregate buffers every value in
   * an in-memory map per aggregate (fine for grouped small states,
   * ~7 s for 600k ungrouped doubles); the sort is the shape that
@@ -16,95 +25,126 @@ import org.apache.spark.sql.functions._
   * h = (n−1)·p, v = v_lo + (v_hi − v_lo)·(h − ⌊h⌋). */
 object Quantiles {
 
-  /** Exact quantiles for MANY value expressions in ONE pass: the
-    * columns explode into a narrow (column-id, value) stream, ONE
-    * range-partitioned shuffle on (column, value) sorts every column
-    * across ALL partitions simultaneously, per-partition column counts
-    * (a few hundred scalars) come back to the driver to fix global rank
-    * offsets, and a second pass over the sorted stream — persisted
-    * (memory-and-disk) between the passes so neither the shuffle nor
-    * the post-shuffle sort re-executes — emits only the rows at needed
-    * ranks. k separate per-column sorts re-deserialize and re-shuffle
-    * the frame k×3 times (measured 80 s for 10 columns at 600k rows vs
-    * ~8 s fused); a `Window.partitionBy(column)` rank would funnel each
-    * column's every row through a single task — the 100 TB
-    * scale-killer this shape exists to avoid.
-    *
-    * NaN policy: NaN is a VALUE (kept, sorts last — Spark and Scala
-    * double ordering agree), matching `count()` which includes NaN in
-    * n; dropping it would make ranks overrun the stream. */
-  def exactMulti(df: DataFrame, values: Seq[(String, Column)],
-                 ps: Seq[Double], ns: Map[String, Long]): Map[String, Seq[Double]] = {
-    if (values.isEmpty) return Map.empty
-    val neededMap: Map[String, Set[Long]] = values.flatMap { case (name, _) =>
-      val n = ns.getOrElse(name, 0L)
-      if (n == 0) None
-      else Some(name -> ps.flatMap { p =>
-        val h = (n - 1) * p
-        Seq(math.floor(h).toLong, math.ceil(h).toLong)
-      }.toSet)
-    }.toMap
-    if (neededMap.isEmpty) return values.map(_._1 -> ps.map(_ => 0.0)).toMap
-    val spark = df.sparkSession
-    val pairs = values.map { case (name, v) =>
-      struct(lit(name).as("c"), v.cast("double").as("v"))
-    }
+  /** The rank-pick kernel. `keyed` has two columns, a key of any type
+    * and a DOUBLE value; rows with a NULL key or value are dropped, NaN
+    * is a VALUE (kept, sorts last — Spark and Scala double ordering
+    * agree). ONE range-partitioned shuffle on (key, value) sorts every
+    * key across all partitions; the sorted stream is persisted
+    * (memory-and-disk) so neither the shuffle nor the post-shuffle sort
+    * re-executes between the two passes. Pass 1 collects per-(partition,
+    * key) row counts — O(P·|keys|) scalars — whose prefix scan gives each
+    * partition's rank offsets and, in its last row, each key's n.
+    * `ranksOf(n)` names the 0-based ranks a key of n rows needs; they
+    * are broadcast and pass 2 emits only those rows. Output: key →
+    * (n, rank → value); a key with no rows is absent, and all NaN keys
+    * are one key, as in Spark's grouping. */
+  private[engine] def pickRanks(
+      keyed: DataFrame,
+      ranksOf: Long => Iterable[Long]): Map[Any, (Long, Map[Long, Double])] = {
+    val spark = keyed.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val sorted = df.select(explode(array(pairs: _*)).as("p"))
-      .select(col("p.c").as("c"), col("p.v").as("v"))
-      .filter(col("v").isNotNull)
-      .repartitionByRange(nPart, col("c"), col("v"))
-      .sortWithinPartitions("c", "v")
-      .rdd.map(r => (r.getString(0), r.getDouble(1)))
+    val sorted = keyed.toDF("k", "v")
+      .filter(col("k").isNotNull && col("v").isNotNull)
+      .repartitionByRange(nPart, col("k"), col("v"))
+      .sortWithinPartitions("k", "v")
+      .rdd.map(r => (mapKey(r.get(0)), r.getDouble(1)))
       // persist across the two passes: without it the count pass and the
       // emit pass each re-run the post-shuffle SORT (only the map stage
       // is skipped by shuffle-file reuse) — disk-backed, unpersisted on
       // return
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    // pass 1: per-(partition, column) row counts — O(P·k) scalars
-    val counts: Array[Map[String, Long]] = sorted
-      .mapPartitionsWithIndex { (i, it) =>
-        val m = scala.collection.mutable.Map.empty[String, Long]
-        it.foreach { case (c, _) => m.update(c, m.getOrElse(c, 0L) + 1L) }
-        Iterator((i, m.toMap))
-      }.collect().sortBy(_._1).map(_._2)
-    // offsets(i)(c) = rows of column c in partitions before i
-    val offsets: Array[Map[String, Long]] =
-      counts.scanLeft(Map.empty[String, Long]) { (acc, m) =>
+      // pass 1: per-(partition, key) row counts
+      val counts: Array[Map[Any, Long]] = sorted
+        .mapPartitionsWithIndex { (i, it) =>
+          val m = scala.collection.mutable.Map.empty[Any, Long]
+          it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1L) }
+          Iterator((i, m.toMap))
+        }.collect().sortBy(_._1).map(_._2)
+      // scan(i)(g) = rows of key g in partitions before i; the last
+      // row holds every key's n
+      val scan = counts.scanLeft(Map.empty[Any, Long]) { (acc, m) =>
         (acc.keySet ++ m.keySet).iterator
-          .map(k => k -> (acc.getOrElse(k, 0L) + m.getOrElse(k, 0L))).toMap
-      }.init
-    val neededB = spark.sparkContext.broadcast(neededMap)
-    val offB = spark.sparkContext.broadcast(offsets)
-    // pass 2 (shuffle reuse): emit only rows whose global rank is needed
-    val vals: Map[(String, Long), Double] =
-      try {
-        sorted.mapPartitionsWithIndex { (i, it) =>
-          val off = scala.collection.mutable.Map[String, Long](offB.value(i).toSeq: _*)
-          val nd = neededB.value
-          it.flatMap { case (c, v) =>
-            val r = off.getOrElse(c, 0L)
-            off.update(c, r + 1L)
-            if (nd.get(c).exists(_.contains(r))) Iterator(((c, r), v))
-            else Iterator.empty
-          }
-        }.collect().toMap
-      } finally {
-        // single-use: release driver+executor copies immediately
-        neededB.destroy(); offB.destroy()
+          .map(g => g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
       }
-    values.map { case (name, _) =>
-      val n = ns.getOrElse(name, 0L)
-      name -> (if (n == 0) ps.map(_ => 0.0)
-      else ps.map { p =>
+      val ns = scan.last
+      val neededB = spark.sparkContext.broadcast(
+        ns.map { case (g, n) => g -> ranksOf(n).toSet })
+      val offB = spark.sparkContext.broadcast(scan.init)
+      // pass 2 (shuffle reuse): emit only rows whose global rank is needed
+      val picked: Array[((Any, Long), Double)] =
+        try {
+          sorted.mapPartitionsWithIndex { (i, it) =>
+            val off = scala.collection.mutable.Map[Any, Long](offB.value(i).toSeq: _*)
+            val nd = neededB.value
+            it.flatMap { case (g, x) =>
+              val r = off.getOrElse(g, 0L)
+              off.update(g, r + 1L)
+              if (nd.get(g).exists(_.contains(r))) Iterator(((g, r), x))
+              else Iterator.empty
+            }
+          }.collect()
+        } finally {
+          // single-use: release driver+executor copies immediately
+          neededB.destroy(); offB.destroy()
+        }
+      val byKey = picked.groupMap(_._1._1) { case ((_, r), x) => r -> x }
+      ns.map { case (g, n) => outKey(g) -> (n, byKey.getOrElse(g, Array.empty).toMap) }
+    } finally { sorted.unpersist(blocking = false); () }
+  }
+
+  /** Spark groups every NaN key together, but Scala `==` never equates
+    * two NaNs, so inside [[pickRanks]]'s maps a NaN key is a marker. */
+  private case object DoubleNaN
+  private case object FloatNaN
+  private def mapKey(k: Any): Any = k match {
+    case d: java.lang.Double if d.isNaN => DoubleNaN
+    case f: java.lang.Float if f.isNaN => FloatNaN
+    case _ => k
+  }
+  private def outKey(k: Any): Any = k match {
+    case DoubleNaN => Double.NaN
+    case FloatNaN => Float.NaN
+    case _ => k
+  }
+
+  /** Exact interpolated quantiles `ps` of every key of `keyed` (the
+    * [[pickRanks]] input shape) from one sort: each key picks ranks
+    * ⌊(n−1)p⌋ and ⌈(n−1)p⌉ and interpolates between them. Keys with no
+    * rows are absent. */
+  private[engine] def groupedExact(keyed: DataFrame,
+                                   ps: Seq[Double]): Map[Any, Seq[Double]] =
+    pickRanks(keyed, n => ps.flatMap { p =>
+      val h = (n - 1) * p
+      Seq(math.floor(h).toLong, math.ceil(h).toLong)
+    }).map { case (g, (n, at)) =>
+      g -> ps.map { p =>
         val h = (n - 1) * p
         val lo = math.floor(h).toLong
-        val vlo = vals((name, lo)); val vhi = vals((name, math.ceil(h).toLong))
+        val vlo = at(lo); val vhi = at(math.ceil(h).toLong)
         vlo + (vhi - vlo) * (h - lo)
-      })
+      }
+    }
+
+  /** Exact quantiles for MANY value expressions in ONE sort: the
+    * columns explode into a narrow (column-name, value) stream and
+    * [[groupedExact]] keys it by column name, so every column's ranks
+    * come out of one shuffle and two passes. k separate per-column
+    * sorts re-deserialize and re-shuffle the frame k×3 times (measured
+    * 80 s for 10 columns at 600k rows vs ~8 s fused). Each column's n
+    * is its non-NULL value count (NaN included), counted by the sort's
+    * own first pass. A column with no values reports 0.0 for every p. */
+  def exactMulti(df: DataFrame, values: Seq[(String, Column)],
+                 ps: Seq[Double]): Map[String, Seq[Double]] = {
+    if (values.isEmpty) return Map.empty
+    val pairs = values.map { case (name, v) =>
+      struct(lit(name).as("c"), v.cast("double").as("v"))
+    }
+    val qs = groupedExact(df.select(explode(array(pairs: _*)).as("p"))
+      .select(col("p.c").as("c"), col("p.v").as("v")), ps)
+    values.map { case (name, _) =>
+      name -> qs.getOrElse(name, ps.map(_ => 0.0))
     }.toMap
-    } finally sorted.unpersist(blocking = false)
   }
 
   /** Exact WEIGHTED quantiles, windowless: the q-th weighted quantile
@@ -151,92 +191,37 @@ object Quantiles {
       .select(col("__p.quantile").as("quantile"), col("__p.value").as("value"))
   }
 
-  /** Exact PER-GROUP element pick at a count-derived rank — the grouped
-    * twin of [[exactMulti]], for "median per category"-shaped reads
-    * (Hampel/MAD fences, per-type robust centers). A
-    * `Window.partitionBy(group)` rank funnels each group's every row
-    * through ONE task — the 100 TB killer when one group holds most of
-    * the data; here ONE range-partitioned shuffle on (group, value)
-    * sorts every group across ALL partitions simultaneously,
-    * per-(partition, group) counts (O(P·|G|) scalars) fix global rank
-    * offsets on the driver, and a shuffle-reusing second pass emits
-    * only each group's picked row.
+  /** Exact PER-GROUP element pick at a count-derived rank, for "median
+    * per category"-shaped reads (Hampel/MAD fences, per-type robust
+    * centers): [[pickRanks]] keyed by the group column, so a group
+    * holding most of the data is sorted across all partitions.
     *
     * `rank1Of(n)` maps a group's row count to the 1-indexed rank to
     * pick (e.g. `n => (n + 1) / 2` = the lower-median element pick).
     * Output: one (group, `outCol`) row per group, group column typed
     * as in the input. Contract: the RESULT is group-cardinality-sized
-    * and driver-collected (exactMulti's discipline — the rows at
-    * needed ranks, nothing data-proportional); callers broadcast-join
-    * it back. Null groups/values are excluded; NaN is a value and
-    * sorts last (matching count semantics). */
+    * and driver-collected (the rows at needed ranks, nothing
+    * data-proportional); callers broadcast-join it back. Null groups
+    * and values are excluded — the value after its DOUBLE cast, so a
+    * non-numeric string is a NULL, not an error; NaN is a value and
+    * sorts last. */
   def groupedPick(df: DataFrame, gCol: String, vCol: String,
                   rank1Of: Long => Long, outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    // filter on the CAST value, not the raw column: a non-null input
-    // whose double cast yields null (e.g. a non-numeric string) would
-    // otherwise survive to getDouble → NPE (exactMulti's rule). NaN
-    // casts to NaN, not null, so the NaN-is-a-value policy holds.
-    val base = df
-      .filter(col(gCol).isNotNull && col(vCol).cast("double").isNotNull)
-      .select(col(gCol).as("__g"), col(vCol).cast("double").as("__v"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val sorted = base.repartitionByRange(nPart, col("__g"), col("__v"))
-      .sortWithinPartitions("__g", "__v")
-      .rdd.map(r => (r.get(0), r.getDouble(1)))
-      // persist across the two passes (exactMulti's rationale: only the
-      // map stage of the shuffle is reused, the post-shuffle sort would
-      // re-run)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts: Array[Map[Any, Long]] = sorted
-        .mapPartitionsWithIndex { (i, it) =>
-          val m = scala.collection.mutable.Map.empty[Any, Long]
-          it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1L) }
-          Iterator((i, m.toMap))
-        }.collect().sortBy(_._1).map(_._2)
-      val scan = counts.scanLeft(Map.empty[Any, Long]) { (acc, m) =>
-        (acc.keySet ++ m.keySet).iterator
-          .map(k => k -> (acc.getOrElse(k, 0L) + m.getOrElse(k, 0L))).toMap
-      }
-      val offsets: Array[Map[Any, Long]] = scan.init
-      // 0-indexed rank to emit per group; an out-of-range rank would
-      // silently emit NO row for the group (a caller joining back
-      // would misread absence as "group not in input"), so fail fast
-      val needed: Map[Any, Long] =
-        scan.last.map { case (g, n) =>
-          val r = rank1Of(n)
-          require(r >= 1 && r <= n,
-            s"rank1Of($n) = $r outside [1, $n] for group $g")
-          g -> (r - 1L)
-        }
-      val neededB = spark.sparkContext.broadcast(needed)
-      val offB = spark.sparkContext.broadcast(offsets)
-      val picked: Array[(Any, Double)] =
-        try {
-          sorted.mapPartitionsWithIndex { (i, it) =>
-            val off = scala.collection.mutable.Map[Any, Long](
-              offB.value(i).toSeq: _*)
-            val nd = neededB.value
-            it.flatMap { case (g, v) =>
-              val r = off.getOrElse(g, 0L)
-              off.update(g, r + 1L)
-              if (nd.get(g).contains(r)) Iterator((g, v)) else Iterator.empty
-            }
-          }.collect()
-        } finally {
-          // single-use broadcasts: release driver+executor copies now
-          // rather than letting 4 per madOutliers call pile up across
-          // a 232-query suite
-          neededB.destroy(); offB.destroy()
-        }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        base.schema("__g").copy(name = gCol),
-        org.apache.spark.sql.types.StructField(
-          outCol, org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(
-        java.util.Arrays.asList(picked.map { case (g, v) =>
-          org.apache.spark.sql.Row(g, v) }: _*), schema)
-    } finally { sorted.unpersist(blocking = false); () }
+    val keyed = df.select(col(gCol).as("__g"), col(vCol).cast("double").as("__v"))
+    // an out-of-range rank would silently emit NO row for the group (a
+    // caller joining back would misread absence as "group not in
+    // input"), so fail fast
+    val picked = pickRanks(keyed, { n =>
+      val r = rank1Of(n)
+      require(r >= 1 && r <= n, s"rank1Of($n) = $r outside [1, $n]")
+      Seq(r - 1L)
+    })
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      keyed.schema("__g").copy(name = gCol),
+      org.apache.spark.sql.types.StructField(
+        outCol, org.apache.spark.sql.types.DoubleType)))
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(picked.toSeq.map { case (g, (_, at)) =>
+        org.apache.spark.sql.Row(g, at.values.head) }: _*), schema)
   }
 }

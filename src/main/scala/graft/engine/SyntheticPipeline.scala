@@ -65,12 +65,12 @@ object SyntheticPipeline {
           case Email | Phone =>
             // the reference vectorizes email/phone columns too
             // (`Latanova_v1.py:640-643`) — their embedding-space profile
-            // backs the same validation metrics as text columns
-            base.copy(
-              rawSample = Profiler.rawSample(df, name, cfg.rawSampleCap),
-              text = if (cfg.textColumns)
-                TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
-              else None)
+            // backs the same validation metrics as text columns and
+            // already carries the raw sample (None = no non-null rows)
+            if (cfg.textColumns) {
+              val text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
+              base.copy(rawSample = text.fold(Seq.empty[String])(_.rawSample), text = text)
+            } else base.copy(rawSample = Profiler.rawSample(df, name, cfg.rawSampleCap))
           case Text if cfg.textColumns =>
             base.copy(text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap))
           case _ => base

@@ -69,10 +69,8 @@ object Drift {
       .filter(col("v").isNotNull && col("g").isNotNull)
       .localCheckpoint() // two passes (cuts, counts) over one scan
     val base = rows.filter(col("g"))
-    val nBase = base.count()
     val ps = (1 until bins).map(_.toDouble / bins)
-    val cuts = graft.engine.Quantiles.exactMulti(base, Seq("v" -> col("v")), ps,
-      Map("v" -> nBase))("v")
+    val cuts = graft.engine.Quantiles.exactMulti(base, Seq("v" -> col("v")), ps)("v")
     // bin = number of cuts <= v (duplicate cuts collapse naturally)
     val bin = cuts.foldLeft(lit(0)) { (acc, c) =>
       acc + when(col("v") >= lit(c), 1).otherwise(0)

@@ -644,12 +644,12 @@ object TextAnalysis {
       .filter(col("n_occur") > 0)
   }
 
-  /** PII patterns shared by [[piiRedact]] and its oracle: restricted
-    * to constructs with IDENTICAL semantics in Java regex and RE2
-    * (character classes, bounded repetition, ASCII \b), so the DuckDB
-    * replay is bit-equal. Deliberately high-precision/ASCII-simple —
-    * production recall tuning swaps patterns, not plumbing. */
-  val PiiEmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  /** PII patterns of [[piiRedact]] (beside [[EmailPattern]]) and its
+    * oracle: restricted to constructs with IDENTICAL semantics in Java
+    * regex and RE2 (character classes, bounded repetition, ASCII \b),
+    * so the DuckDB replay is bit-equal. Deliberately
+    * high-precision/ASCII-simple — production recall tuning swaps
+    * patterns, not plumbing. */
   val PiiIpRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
   val PiiPhoneRe = "\\b\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b"
 
@@ -673,10 +673,10 @@ object TextAnalysis {
     df.select(col(idCol).as("id"),
       regexp_replace(
         regexp_replace(
-          regexp_replace(t, PiiEmailRe, "<EMAIL>"),
+          regexp_replace(t, EmailPattern, "<EMAIL>"),
           PiiIpRe, "<IP>"),
         PiiPhoneRe, "<PHONE>").as("clean_text"),
-      n(PiiEmailRe).as("n_emails"),
+      n(EmailPattern).as("n_emails"),
       n(PiiIpRe).as("n_ips"),
       n(PiiPhoneRe).as("n_phones"))
   }

@@ -181,6 +181,24 @@ class ProfilerSpec extends SparkSpec {
     assert(r.getLong(3) === 0L)
   }
 
+  /** Spark jobs of the robust profiles below, each counted through its
+    * collect, as measured: the quantile sort counts its own rows, so
+    * no separate count() runs (it would add three jobs). */
+  private val WinsorizedJobBudget = 8
+  private val MadJobBudget = 13
+
+  test("winsorizedProfile and madProfile stay within their Spark job budgets") {
+    import spark.implicits._
+    val df = ((1 to 400).map(i => (i * 7919 % 1000).toDouble) ++ Seq(1e9, -1e9))
+      .toDF("v").repartition(4)
+    val (w, wJobs) = withJobCount(Profiler.winsorizedProfile(df, "v").collect())
+    assert(w(0).getLong(0) === 402L)
+    assert(wJobs <= WinsorizedJobBudget, s"winsorizedProfile ran $wJobs Spark jobs")
+    val (m, mJobs) = withJobCount(Profiler.madProfile(df, "v").collect())
+    assert(m(0).getLong(0) === 402L)
+    assert(mJobs <= MadJobBudget, s"madProfile ran $mJobs Spark jobs")
+  }
+
   test("datetime profile under strictFormats: ISO render format detected") {
     val detected = Detector.detect(fixture, DetectorConfig(strictFormats = true))
     val p = Profiler.profileScalars(fixture, detected)

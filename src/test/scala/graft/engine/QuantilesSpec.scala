@@ -10,9 +10,8 @@ class QuantilesSpec extends SparkSpec {
     val df = spark.range(10007)
       .select((rand(3) * 1e5 - 5e4).as("x")).cache()
     try {
-      val n = df.count()
       val ours = Quantiles.exactMulti(df, Seq("x" -> col("x")),
-        Seq(0.01, 0.25, 0.5, 0.75, 0.99), Map("x" -> n))("x")
+        Seq(0.01, 0.25, 0.5, 0.75, 0.99))("x")
       val builtin = df.agg(percentile(col("x"),
         array(lit(0.01), lit(0.25), lit(0.5), lit(0.75), lit(0.99))))
         .collect()(0).getSeq[Double](0)
@@ -33,12 +32,8 @@ class QuantilesSpec extends SparkSpec {
     val df = rows.toDF("a", "b", "c").cache()
     try {
       val ps = Seq(0.25, 0.5, 0.75)
-      val ns = Map(
-        "a" -> df.agg(count(col("a"))).collect()(0).getLong(0),
-        "b" -> df.agg(count(col("b"))).collect()(0).getLong(0),
-        "c" -> df.agg(count(col("c"))).collect()(0).getLong(0))
       val multi = Quantiles.exactMulti(df,
-        Seq("a" -> col("a"), "b" -> col("b"), "c" -> col("c")), ps, ns)
+        Seq("a" -> col("a"), "b" -> col("b"), "c" -> col("c")), ps)
       // reference: Spark's built-in exact percentile per column, which
       // also skips nulls and sorts NaN last
       for (c <- Seq("a", "b", "c")) {
@@ -56,14 +51,50 @@ class QuantilesSpec extends SparkSpec {
   }
 
   test("edge cases: single row, exact-index quantiles, empty") {
-    def exact(df: org.apache.spark.sql.DataFrame, ps: Seq[Double], n: Long) =
-      Quantiles.exactMulti(df, Seq("x" -> col("x")), ps, Map("x" -> n))("x")
+    def exact(df: org.apache.spark.sql.DataFrame, ps: Seq[Double]) =
+      Quantiles.exactMulti(df, Seq("x" -> col("x")), ps)("x")
     val one = Seq(42.0).toDF("x")
-    assert(exact(one, Seq(0.0, 0.5, 1.0), 1L) === Seq(42.0, 42.0, 42.0))
+    assert(exact(one, Seq(0.0, 0.5, 1.0)) === Seq(42.0, 42.0, 42.0))
     // n=5, p=0.25 → h=1.0 exactly (no interpolation)
     val five = Seq(1.0, 2.0, 3.0, 4.0, 5.0).toDF("x")
-    assert(exact(five, Seq(0.25, 1.0), 5L) === Seq(2.0, 5.0))
-    assert(exact(five.filter(col("x") > 99), Seq(0.5), 0L) === Seq(0.0))
+    assert(exact(five, Seq(0.25, 1.0)) === Seq(2.0, 5.0))
+    assert(exact(five.filter(col("x") > 99), Seq(0.5)) === Seq(0.0))
+  }
+
+  test("grouped interpolated quantiles match Spark's percentile per group bit-for-bit") {
+    val rnd = new scala.util.Random(17)
+    // one group holds 90% of the rows with heavy ties (values on a
+    // 0.25 grid); NaN and NULL values sit in several groups; a 1-row
+    // group, an all-NULL-value group and a NULL key complete the edges
+    val rows: Seq[(Option[String], Option[Double])] =
+      (0 until 9000).map(i => (Some("hot"),
+        if (i % 211 == 0) None else if (i % 307 == 0) Some(Double.NaN)
+        else Some(math.floor(rnd.nextDouble() * 40) / 4.0))) ++
+      (0 until 900).map(i => (Some("warm"),
+        if (i % 50 == 0) Some(Double.NaN) else Some(rnd.nextGaussian() * 100))) ++
+      (0 until 37).map(i => (Some("ties"), Some((i % 3).toDouble))) ++
+      Seq((Some("one"), Some(-2.5)), (Some("nulls"), None), (Some("nulls"), None)) ++
+      (0 until 60).map(i => (None, Some(i.toDouble)))
+    val df = rows.toDF("g", "v").repartition(5).cache()
+    try {
+      val ps = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
+      val got = Quantiles.groupedExact(df, ps)
+      val want = df.filter(col("g").isNotNull)
+        .groupBy("g").agg(percentile(col("v"), array(ps.map(lit): _*)))
+        .collect().map(r => r.getString(0) -> Option(r.getSeq[Double](1))).toMap
+      // NULL key excluded; a group without values has no row (Spark: NULL)
+      assert(got.keySet === Set[Any]("hot", "warm", "ties", "one"))
+      assert(want("nulls") === None)
+      for ((g, qs) <- got) {
+        assert(qs.size === ps.size)
+        qs.zip(want(g.asInstanceOf[String]).get).foreach { case (a, b) =>
+          assert(java.lang.Double.doubleToLongBits(a) ===
+            java.lang.Double.doubleToLongBits(b), s"group $g: $a vs $b")
+        }
+      }
+      assert(got("one") === ps.map(_ => -2.5))
+      assert(got("hot").last.isNaN) // NaN sorts last
+    } finally df.unpersist()
   }
 
   test("weighted quantiles: ground truth by expansion, repeated values merge, weight 0 drops") {
@@ -125,5 +156,20 @@ class QuantilesSpec extends SparkSpec {
       assert(got("one") === 7.5)   // n=1 → rank 1
       assert(got("two") === 1.0)   // n=2 → lower median
     } finally df.unpersist()
+  }
+
+  test("NaN group keys form one group, as in Spark's groupBy") {
+    val df = ((1 to 30).map(i => (Double.NaN, i.toDouble)) ++
+      (1 to 10).map(i => (1.5, i.toDouble))).toDF("g", "v").repartition(3)
+    val picked = Quantiles.groupedPick(df, "g", "v", n => (n + 1) / 2, "med")
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1))
+    assert(picked.length === 2)
+    assert(picked.exists { case (g, m) => g.isNaN && m === 15.0 })
+    assert(picked.contains((1.5, 5.0)))
+    // the grouped profile's hot path sorts by the same kernel
+    def m(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getDouble(0).toString -> r.toSeq.tail).toMap
+    assert(m(Profiler.groupedNumericProfile(df, "g", "v", hotGroupRowBound = 5L)) ===
+      m(Profiler.groupedNumericProfile(df, "g", "v")))
   }
 }

@@ -84,6 +84,33 @@ class SyntheticPipelineSpec extends SparkSpec {
     * column and the date column parsed as text). */
   private val JobBudget = 14
 
+  /** Spark jobs profileTable starts on the contacts table below (an id,
+    * an email and a phone column, text profiles on), as measured: the
+    * email and phone raw samples come from their text profiles, so no
+    * second LIMIT collect runs per column (two jobs each). */
+  private val ContactsJobBudget = 18
+
+  test("email/phone raw samples come from the text profile, no second collect per column") {
+    import org.apache.spark.sql.functions.{col, concat, format_string, lit}
+    val contacts = spark.range(300).select(
+      col("id").as("c_id"),
+      concat(lit("user"), col("id"), lit("@example.com")).as("c_email"),
+      format_string("+1 (555) %03d-%04d", col("id") % 1000, col("id") * 37 % 10000)
+        .as("c_phone"))
+    val cfg = SyntheticPipeline.Config(detector = DetectorConfig(strictFormats = true),
+      sampleCap = 0)
+    val (profiles, jobs) = withJobCount(SyntheticPipeline.profileTable(contacts, cfg))
+    assert(profiles("c_email").semanticType === SemanticType.Email)
+    assert(profiles("c_phone").semanticType === SemanticType.Phone)
+    for (c <- Seq("c_email", "c_phone")) {
+      val p = profiles(c)
+      assert(p.text.isDefined, s"$c has no text profile")
+      assert(p.rawSample.size === 300)
+      assert(p.rawSample === Profiler.rawSample(contacts.na.drop("any"), c, cfg.rawSampleCap))
+    }
+    assert(jobs <= ContactsJobBudget, s"profileTable ran $jobs Spark jobs")
+  }
+
   test("profileTable on an orders-shaped table stays within its Spark job budget") {
     import org.apache.spark.sql.functions.{col, element_at, lit, timestamp_micros, typedLit}
     import org.apache.spark.sql.types.TimestampNTZType

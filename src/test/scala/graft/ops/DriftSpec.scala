@@ -101,6 +101,19 @@ class DriftSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("n_base")).sum === 4000L)
   }
 
+  /** Spark jobs of one psi collect, as measured: the cut points' sort
+    * counts its own baseline rows, so no separate count() runs (it
+    * would add two jobs). */
+  private val PsiJobBudget = 10
+
+  test("psi stays within its Spark job budget") {
+    val rnd = new scala.util.Random(4)
+    val df = Seq.fill(2000)((rnd.nextGaussian(), rnd.nextBoolean())).toDF("v", "g")
+    val (rows, jobs) = withJobCount(Drift.psi(df, col("v"), col("g"), bins = 10).collect())
+    assert(rows.map(_.getAs[Long]("n_base")).sum + rows.map(_.getAs[Long]("n_cur")).sum === 2000L)
+    assert(jobs <= PsiJobBudget, s"psi ran $jobs Spark jobs")
+  }
+
   test("chiSquare matches the hand formula on a small contingency, ~0 on independence") {
     // dependent: b == a for 90% of rows
     val rnd = new scala.util.Random(2)
