@@ -21,8 +21,8 @@ object Bench {
     * `fn` into the `noop` sink and returns its wall seconds, or the
     * error it threw. Afterwards it drops the query's residual cached
     * state so no query taxes the next: clearCache covers SQL-cached
-    * relations; localCheckpoint blocks (Checkpoints.cut, the
-    * prefix/range-sort kernels) are plain persisted RDDs the
+    * relations; localCheckpoint blocks (Checkpoints.cut) and the
+    * range-scan kernel's pinned sorts are plain persisted RDDs the
     * ContextCleaner only reaps at GC time — at the 10x tree they are
     * 10x bigger and were observed lingering across dozens of queries
     * (storage pressure + old-gen growth taxing mid-suite queries with
@@ -379,7 +379,9 @@ object Bench {
         s""""n_compared":${certified.size - noHist},"n_no_history":$noHist,""" +
         s""""flagged":[${flagged.mkString(",")}]}"""
     }
-    try {
+    // a run whose record cannot be written fails like a throwing query
+    // does: the summary line alone would pass for a logged run
+    val recorded = try {
       // headline artifact only from FULL runs — a SPARK_GRAFT_ONLY dev
       // probe must not replace the certified full-suite line
       if (only.isEmpty)
@@ -400,7 +402,12 @@ object Bench {
           .getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Throwable => () }
+      true
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] could not write the run record: $e")
+        false
+    }
     // stop BEFORE printing the summary: the compact JSON line must be
     // the process's final stdout line (the driver json-parses the last
     // line of a ~2,000-char stdout tail — three rounds of
@@ -413,6 +420,6 @@ object Bench {
     System.out.flush()
     // a throwing query fails the run (after its record is written), so
     // the regression gate cannot pass on a suite that did not complete
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty || !recorded) sys.exit(1)
   }
 }

@@ -47,7 +47,7 @@ object Oracle {
        |  mn, mx$qCols""".stripMargin
   }
 
-  /** Oracle-side twin of [[numericProfile]]. */
+  /** Oracle-side twin of [[graft.engine.Profiler.numericProfile]]. */
   private def numericProfileSql(table: String, c: String): String =
     s"""WITH s AS (
        |  SELECT count($c) AS n,

@@ -63,63 +63,6 @@ object SparkEntry {
 
   private val dec = DecimalType(38, 6)
 
-  /** Moment sums for a double column — ONE codegen'd scan. Plain double
-    * sums: the downstream statistics are normalized (÷n, ÷σᵏ), so the
-    * order-dependent last-ulp summation noise is ~1e-12 of the rounded
-    * 6-dp output — decimal exactness is only needed where a RAW sum is
-    * the output (revenue/sum_qty queries keep DECIMAL). Decimal here
-    * costs ~10x (per-row Decimal allocation, measured). */
-  private def momentAgg(df: DataFrame, x: Column): DataFrame =
-    df.agg(
-      count(x).as("n"),
-      sum(x).as("s1"),
-      sum(x * x).as("s2"),
-      sum(x * x * x).as("s3"),
-      sum(x * x * x * x).as("s4"),
-      min(x).as("mn"), max(x).as("mx"))
-
-  /** mean/std/skew/kurt from exact sums — identical formula in oracle. */
-  private def momentSelect(withQuantiles: DataFrame): DataFrame = {
-    val n = col("n").cast("double")
-    val mean = col("s1").cast("double") / n
-    val m2 = col("s2").cast("double") / n
-    val m3 = col("s3").cast("double") / n
-    val m4 = col("s4").cast("double") / n
-    val variance = m2 - mean * mean
-    val std = sqrt(variance)
-    withQuantiles.select(
-      col("n"),
-      round(mean, 6).as("mean"),
-      round(std, 6).as("std"),
-      round((m3 - lit(3.0) * mean * m2 + lit(2.0) * mean * mean * mean) / (std * std * std), 6).as("skew"),
-      round((m4 - lit(4.0) * mean * m3 + lit(6.0) * mean * mean * m2
-        - lit(3.0) * mean * mean * mean * mean) / (variance * variance) - lit(3.0), 6).as("kurt"),
-      col("mn"), col("mx"),
-      round(element_at(col("qs"), 2), 6).as("median"),
-      round(element_at(col("qs"), 1), 6).as("q1"),
-      round(element_at(col("qs"), 3), 6).as("q3"))
-  }
-
-  /** Numeric profile: one scan for the exact moment sums, one
-    * range-partitioned sort for the exact quantiles (Quantiles.exactMulti —
-    * Spark's in-memory percentile buffer doesn't scale past executor
-    * memory; the sort does). Derived stats stay Spark expressions so
-    * the scalar formula is shared with the oracle verbatim. */
-  private def numericProfile(df: DataFrame, colName: String): DataFrame = {
-    val m = momentAgg(df, col(colName)).collect()(0)
-    val n = m.getLong(0)
-    val qs = graft.engine.Quantiles.exactMulti(df, Seq(colName -> col(colName)),
-      Seq(0.25, 0.5, 0.75))(colName)
-    val base = df.sparkSession.range(1).select(
-      lit(n).as("n"),
-      lit(m.getDouble(1)).as("s1"), lit(m.getDouble(2)).as("s2"),
-      lit(m.getDouble(3)).as("s3"), lit(m.getDouble(4)).as("s4"),
-      lit(if (m.isNullAt(5)) null else m.get(5)).cast("double").as("mn"),
-      lit(if (m.isNullAt(6)) null else m.get(6)).cast("double").as("mx"),
-      array(lit(qs(0)), lit(qs(1)), lit(qs(2))).as("qs"))
-    momentSelect(base)
-  }
-
   /** value_counts(normalize=True): count + probability per value. The
     * total comes from a 1-row agg over the grouped counts joined back by
     * broadcast — NOT a partition-less window, which would funnel every
@@ -2965,9 +2908,9 @@ object SparkEntry {
         .orderBy("l_orderkey", "l_linenumber")),
 
     // --- per-column statistical profiling (engine core) ---
-    "q01_profile_extendedprice" -> ((s, d) => numericProfile(t(s, d, "lineitem"), "l_extendedprice")),
-    "q02_profile_totalprice" -> ((s, d) => numericProfile(t(s, d, "orders"), "o_totalprice")),
-    "q03_profile_quantity" -> ((s, d) => numericProfile(t(s, d, "lineitem"), "l_quantity")),
+    "q01_profile_extendedprice" -> ((s, d) => Profiler.numericProfile(t(s, d, "lineitem"), "l_extendedprice")),
+    "q02_profile_totalprice" -> ((s, d) => Profiler.numericProfile(t(s, d, "orders"), "o_totalprice")),
+    "q03_profile_quantity" -> ((s, d) => Profiler.numericProfile(t(s, d, "lineitem"), "l_quantity")),
 
     "q04_value_counts_priority" -> ((s, d) => valueCounts(t(s, d, "orders"), "o_orderpriority")),
     "q05_value_counts_mktsegment" -> ((s, d) => valueCounts(t(s, d, "customer"), "c_mktsegment")),

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * NTILE as a SINGLE-task window — every row of the table through one
   * partition, the same scale-killer the grouped-quantile and prefix-sum
   * paths avoid. Here the rank comes from
-  * [[graft.ops.Prefix.rowNumber]]'s two-pass range-sort (one shuffle,
-  * O(P) scalars to the driver), and the per-bucket reduction is an
-  * ordinary keyed agg over b groups.
+  * [[graft.ops.Prefix.runningTotals]]' two-pass range-sort (one
+  * shuffle, O(P) scalars to the driver, and n from its first pass),
+  * and the per-bucket reduction is an ordinary keyed agg over b
+  * groups.
   *
   * The id tie-break makes bucket assignment deterministic on duplicate
   * values (any engine's NTILE is free to split ties arbitrarily — with
@@ -34,15 +35,18 @@ object Histogram {
     val rows = df.select(col(valueCol).cast("double").as("v"),
         col(idCol).as("id"))
       .filter(col("v").isNotNull)
-    val n = rows.count()
+    // rk = 1-based row number; the scan's first pass counts n
+    val ranked = graft.ops.Prefix.runningTotals(rows, None, Seq("v", "id"),
+      Seq("rk" -> lit(1L)))
+    val n = ranked.total.rows
     if (n == 0)
       return rows.select(lit(0L).as("bucket"), lit(0L).as("cnt"),
         col("v").as("lo"), col("v").as("hi")).limit(0)
     // integer division (Spark's `/` on longs is DOUBLE division — at
     // 100 TB row counts rk·b exceeds double's 2^53 integer range, so
     // floor(double) would misbucket; `div` stays in long arithmetic)
-    graft.ops.Prefix.rowNumber(rows, Seq("v", "id"), "rk")
-      .withColumn("bucket", expr(s"rk * ${buckets.toLong} div ${n}L"))
+    ranked.rows
+      .withColumn("bucket", expr(s"(rk - 1) * ${buckets.toLong} div ${n}L"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("cnt"), min(col("v")).as("lo"), max(col("v")).as("hi"))
   }

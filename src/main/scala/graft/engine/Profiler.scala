@@ -231,17 +231,41 @@ object Profiler {
         when(col(keyCol) === lit(k), array(qs.map(lit): _*)).otherwise(acc)
       }
     }
-    val g = clean.groupBy(col(keyCol)).agg(
-      count(xd).as("n"),
-      sum(x).as("s1"), sum(x * x).as("s2"),
-      sum(x * x * x).as("s3"), sum(x * x * x * x).as("s4"),
-      min(xd).as("mn"), max(xd).as("mx"),
-      qsCol.as("qs"))
-    // degenerate groups (n too small, or zero variance) report 0 like
-    // the reference's len-guards (`Latanova_v1.py:185-186`) — and the
-    // guard keeps ANSI mode from raising on the zero divisor
+    val sums = momentSums(x, xd)
+    profileSelect(clean.groupBy(col(keyCol))
+      .agg(sums.head, sums.tail :+ qsCol.as("qs"): _*), Seq(col(keyCol)))
+  }
+
+  /** The numeric profile of one column (`Latanova_v1.py:173-191`): n,
+    * moments, min/max and exact quartiles — the ungrouped
+    * [[groupedNumericProfile]]. The moment sums are one aggregation;
+    * the quartiles come from the sort kernel ([[Quantiles.exactMulti]]),
+    * whose sort never holds more than a partition however large the
+    * column. One output row. */
+  def numericProfile(df: DataFrame, valueCol: String): DataFrame = {
+    val (x, xd) = momentOperands(df, valueCol)
+    val qs = Quantiles.exactMulti(df, Seq(valueCol -> xd),
+      Seq(0.25, 0.5, 0.75))(valueCol)
+    val sums = momentSums(x, xd)
+    profileSelect(df.agg(sums.head, sums.tail :+ array(qs.map(lit): _*).as("qs"): _*),
+      Seq.empty)
+  }
+
+  /** n, s1..s4, mn, mx: the moment sums of `x` (see [[momentOperands]]). */
+  private def momentSums(x: Column, xd: Column): Seq[Column] = Seq(
+    count(xd).as("n"),
+    sum(x).as("s1"), sum(x * x).as("s2"),
+    sum(x * x * x).as("s3"), sum(x * x * x * x).as("s4"),
+    min(xd).as("mn"), max(xd).as("mx"))
+
+  /** The numeric profile's columns over [[momentSums]] and `qs` (the
+    * quartiles' array), after the `lead` columns. Degenerate rows (n
+    * too small, or zero variance) report 0 like the reference's
+    * len-guards (`Latanova_v1.py:185-186`) — and the guard keeps ANSI
+    * mode from raising on the zero divisor. */
+  private def profileSelect(g: DataFrame, lead: Seq[Column]): DataFrame = {
     val (mean, std, skew, kurt) = momentStatCols()
-    g.select(col(keyCol), col("n"),
+    g.select(lead ++ Seq(col("n"),
       round(mean, 6).as("mean"),
       round(std, 6).as("std"),
       round(skew, 6).as("skew"),
@@ -249,7 +273,7 @@ object Profiler {
       col("mn"), col("mx"),
       round(element_at(col("qs"), 2), 6).as("median"),
       round(element_at(col("qs"), 1), 6).as("q1"),
-      round(element_at(col("qs"), 3), 6).as("q3"))
+      round(element_at(col("qs"), 3), 6).as("q3")): _*)
   }
 
   /** The two value forms moment sums need: (x, the operand of the
@@ -300,12 +324,10 @@ object Profiler {
   def partialMoments(df: DataFrame, shardCol: String,
                      valueCol: String): DataFrame = {
     val (x, xd) = momentOperands(df, valueCol)
+    val sums = momentSums(x, xd)
     df.filter(xd.isNotNull && col(shardCol).isNotNull)
       .groupBy(col(shardCol).as("shard"))
-      .agg(count(xd).as("n"),
-        sum(x).as("s1"), sum(x * x).as("s2"),
-        sum(x * x * x).as("s3"), sum(x * x * x * x).as("s4"),
-        min(xd).as("mn"), max(xd).as("mx"))
+      .agg(sums.head, sums.tail: _*)
   }
 
   /** Fold [[partialMoments]] rows into the final profile: one 1-row

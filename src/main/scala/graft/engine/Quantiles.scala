@@ -7,14 +7,17 @@ import org.apache.spark.sql.functions._
   * rank lookup — O(n log n) shuffle but only the handful of rows at
   * the quantile positions ever reach the driver.
   *
-  * One kernel ([[pickRanks]]) does the sort-and-pick for every caller:
-  * a keyed (key, value) stream is range-sorted on (key, value) — so a
-  * dominant key spreads over ALL partitions instead of funnelling
+  * Every pick rides the engine's one range-scan kernel
+  * ([[graft.ops.Prefix.rangeScan]]) as [[pickRanks]], a keyed running
+  * count: a keyed (key, value) stream is range-sorted on (key, value) —
+  * so a dominant key spreads over ALL partitions instead of funnelling
   * through one task, the 100 TB killer of a `Window.partitionBy(key)`
-  * rank — and two passes over the persisted sort count each key's rows
-  * and then emit only the rows at the ranks each key needs. The key is
-  * a column name ([[exactMulti]]: many columns' quantiles in one sort)
-  * or a group value ([[groupedPick]], the grouped profile's hot groups).
+  * rank — pass 1 counts each key's rows and pass 2 over the pinned sort
+  * emits only the rows at the ranks each key needs. The key is a
+  * column name ([[exactMulti]]: many columns' quantiles in one sort) or
+  * a group value ([[groupedPick]], the grouped profile's hot groups).
+  * The weighted form ([[weightedExact]]) is the kernel's running-total
+  * instance, and reads its total weight from the same pass 1.
   *
   * Spark's built-in exact `percentile` aggregate buffers every value in
   * an in-memory map per aggregate (fine for grouped small states,
@@ -25,87 +28,49 @@ import org.apache.spark.sql.functions._
   * h = (n−1)·p, v = v_lo + (v_hi − v_lo)·(h − ⌊h⌋). */
 object Quantiles {
 
-  /** The rank-pick kernel. `keyed` has two columns, a key of any type
-    * and a DOUBLE value; rows with a NULL key or value are dropped, NaN
-    * is a VALUE (kept, sorts last — Spark and Scala double ordering
-    * agree). ONE range-partitioned shuffle on (key, value) sorts every
-    * key across all partitions; the sorted stream is persisted
-    * (memory-and-disk) so neither the shuffle nor the post-shuffle sort
-    * re-executes between the two passes. Pass 1 collects per-(partition,
-    * key) row counts — O(P·|keys|) scalars — whose prefix scan gives each
-    * partition's rank offsets and, in its last row, each key's n.
-    * `ranksOf(n)` names the 0-based ranks a key of n rows needs; they
-    * are broadcast and pass 2 emits only those rows. Output: key →
-    * (n, rank → value); a key with no rows is absent, and all NaN keys
-    * are one key, as in Spark's grouping. */
+  /** The rank pick: the keyed-running-count instance of the shared
+    * range scan ([[graft.ops.Prefix.rangeScan]]). `keyed` has two
+    * columns, a key of any type and a DOUBLE value; rows with a NULL key
+    * or value are dropped, NaN is a VALUE (kept, sorts last — Spark and
+    * Scala double ordering agree). The scan sorts on (key, value), so
+    * every key spreads across all partitions; pass 1 counts each key's
+    * rows, which gives each key's n and each partition's rank carry.
+    * `ranksOf(n)` names the 0-based ranks a key of n rows needs, and
+    * pass 2 emits only those rows. Output: key → (n, rank → value); a
+    * key with no rows is absent, and all NaN keys are one key, as in
+    * Spark's grouping. */
   private[engine] def pickRanks(
       keyed: DataFrame,
       ranksOf: Long => Iterable[Long]): Map[Any, (Long, Map[Long, Double])] = {
-    val spark = keyed.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val sorted = keyed.toDF("k", "v")
-      .filter(col("k").isNotNull && col("v").isNotNull)
-      .repartitionByRange(nPart, col("k"), col("v"))
-      .sortWithinPartitions("k", "v")
-      .rdd.map(r => (mapKey(r.get(0)), r.getDouble(1)))
-      // persist across the two passes: without it the count pass and the
-      // emit pass each re-run the post-shuffle SORT (only the map stage
-      // is skipped by shuffle-file reuse) — disk-backed, unpersisted on
-      // return
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import graft.ops.Prefix
+    val scan = Prefix.rangeScan(keyed.toDF("k", "v")
+        .filter(col("k").isNotNull && col("v").isNotNull),
+      Seq(col("k"), col("v")))(Prefix.keyRuns(0, Array.empty))
     try {
-      // pass 1: per-(partition, key) row counts
-      val counts: Array[Map[Any, Long]] = sorted
-        .mapPartitionsWithIndex { (i, it) =>
-          val m = scala.collection.mutable.Map.empty[Any, Long]
-          it.foreach { case (g, _) => m.update(g, m.getOrElse(g, 0L) + 1L) }
-          Iterator((i, m.toMap))
-        }.collect().sortBy(_._1).map(_._2)
-      // scan(i)(g) = rows of key g in partitions before i; the last
-      // row holds every key's n
-      val scan = counts.scanLeft(Map.empty[Any, Long]) { (acc, m) =>
-        (acc.keySet ++ m.keySet).iterator
-          .map(g => g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
+      val (carries, totals) = Prefix.carryIn(scan.summaries)
+      val needed = totals.map { case (g, t) => g -> ranksOf(t.rows).toSet }
+      // each partition ships its first key's carry and the needed ranks
+      // of the keys it holds: O(|keys| + P) in all
+      val seeds = scan.summaries.zip(carries).map { case (runs, carry) =>
+        (carry, runs.map(r => r.key -> needed(r.key)).toMap)
       }
-      val ns = scan.last
-      val neededB = spark.sparkContext.broadcast(
-        ns.map { case (g, n) => g -> ranksOf(n).toSet })
-      val offB = spark.sparkContext.broadcast(scan.init)
-      // pass 2 (shuffle reuse): emit only rows whose global rank is needed
-      val picked: Array[((Any, Long), Double)] =
-        try {
-          sorted.mapPartitionsWithIndex { (i, it) =>
-            val off = scala.collection.mutable.Map[Any, Long](offB.value(i).toSeq: _*)
-            val nd = neededB.value
-            it.flatMap { case (g, x) =>
-              val r = off.getOrElse(g, 0L)
-              off.update(g, r + 1L)
-              if (nd.get(g).exists(_.contains(r))) Iterator(((g, r), x))
-              else Iterator.empty
-            }
-          }.collect()
-        } finally {
-          // single-use: release driver+executor copies immediately
-          neededB.destroy(); offB.destroy()
+      val picked = scan.seeded(seeds) { case ((carry, nd), it) =>
+        val running = new Prefix.Running(0, Array.empty, carry)
+        var cur: Prefix.Run = null
+        var want = Set.empty[Long]
+        it.flatMap { r =>
+          val run = running.step(r)
+          if (run ne cur) { cur = run; want = nd(run.key) }
+          val rank = run.rows - 1L
+          if (want.contains(rank)) Iterator(((run.key, rank), r.getDouble(1)))
+          else Iterator.empty
         }
+      }.collect()
       val byKey = picked.groupMap(_._1._1) { case ((_, r), x) => r -> x }
-      ns.map { case (g, n) => outKey(g) -> (n, byKey.getOrElse(g, Array.empty).toMap) }
-    } finally { sorted.unpersist(blocking = false); () }
-  }
-
-  /** Spark groups every NaN key together, but Scala `==` never equates
-    * two NaNs, so inside [[pickRanks]]'s maps a NaN key is a marker. */
-  private case object DoubleNaN
-  private case object FloatNaN
-  private def mapKey(k: Any): Any = k match {
-    case d: java.lang.Double if d.isNaN => DoubleNaN
-    case f: java.lang.Float if f.isNaN => FloatNaN
-    case _ => k
-  }
-  private def outKey(k: Any): Any = k match {
-    case DoubleNaN => Double.NaN
-    case FloatNaN => Float.NaN
-    case _ => k
+      totals.map { case (g, t) =>
+        Prefix.outKey(g) -> (t.rows, byKey.getOrElse(g, Array.empty).toMap)
+      }
+    } finally scan.release()
   }
 
   /** Exact interpolated quantiles `ps` of every key of `keyed` (the
@@ -151,10 +116,10 @@ object Quantiles {
     * is the smallest value whose cumulative weight reaches q·W (the
     * left-continuous inverse CDF — PERCENTILE_DISC convention, no
     * interpolation). The raw table collapses to distinct (value,
-    * Σweight) at the scan; cumulative weights ride the shared
-    * range-sorted prefix pass ([[graft.ops.Prefix.runningTotals]] — no
-    * single-task window); the final pick is |qs| min-when aggregates
-    * over the distinct-value frame. Weights are fixed-point at 1e-6
+    * Σweight) at the scan; cumulative weights and the total W ride the
+    * shared range scan ([[graft.ops.Prefix.runningTotals]] — no
+    * single-task window, no separate total); the final pick is |qs|
+    * min-when aggregates over the distinct-value frame. Weights are fixed-point at 1e-6
     * resolution (the prefix kernel sums longs exactly; double running
     * sums would drift order-dependently), rows with null value/weight
     * or weight rounding to ≤ 0 are excluded. Capacity: Σweight must
@@ -170,10 +135,9 @@ object Quantiles {
     val wfp = round(col(weightCol).cast("double") * 1e6).cast("long")
     val g = df.filter(v.isNotNull && col(weightCol).isNotNull && wfp > 0)
       .groupBy(v.as("__v")).agg(sum(wfp).as("__w"))
-      .localCheckpoint() // feeds the total AND the prefix pass
-    val wTot = g.agg(coalesce(sum("__w"), lit(0L))).collect()(0).getLong(0)
-    val cum = graft.ops.Prefix.runningTotals(g, Seq("__v"),
+    val cum = graft.ops.Prefix.runningTotals(g, None, Seq("__v"),
       Seq("__cum" -> col("__w")))
+    val wTot = cum.total.sums(0)
     val picks = qs.zipWithIndex.map { case (q, i) =>
       // q·W in doubles can overshoot an exactly-reached boundary by one
       // ulp (0.55·60e6 = 33000000.000000004 → ceil 33000001, skipping
@@ -183,7 +147,7 @@ object Quantiles {
       min(when(col("__cum") >= lit(math.ceil(x - x * 1e-12).toLong), col("__v")))
         .as(s"__q$i")
     }
-    val one = cum.agg(picks.head, picks.tail: _*)
+    val one = cum.rows.agg(picks.head, picks.tail: _*)
     val pairs = qs.zipWithIndex.map { case (q, i) =>
       struct(lit(q).as("quantile"), col(s"__q$i").as("value"))
     }

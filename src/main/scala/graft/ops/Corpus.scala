@@ -1741,9 +1741,10 @@ object Corpus {
     * non-empty source.
     *
     * Windowless at scale: the per-source cumulative token sums come
-    * from ONE shared range-sort prefix pass plus |sources|-bounded
-    * offsets (the [[Drift.percentRankBy]] shape) — never a per-source
-    * sort task, so one dominant source cannot funnel the selection.
+    * from ONE range-sort prefix pass keyed by the source (the
+    * [[Drift.percentRankBy]] shape) — never a per-source sort task, so
+    * one dominant source spans many partitions instead of funnelling
+    * the selection.
     *
     * Returns (id, source, n_tokens, cum_tokens incl. the doc). */
   def tokenBudgetSample(df: DataFrame, idCol: String, textCol: String,
@@ -1756,15 +1757,8 @@ object Corpus {
         TextAnalysis.tokenCount(col(textCol)).cast(LongType).as("n_tokens"))
       .withColumn("__sk",
         md5(concat(lit(seed), col("id").cast("string")).cast("binary")))
-      .localCheckpoint() // the prefix pass and the per-source totals both read it
-    val cum = Prefix.runningTotals(base, Seq("src", "__sk", "id"),
-      Seq("__cum" -> col("n_tokens")))
-    val stot = base.groupBy("src").agg(sum("n_tokens").as("__st"))
-    val soff = Prefix.runningTotals(stot, Seq("src"),
-      Seq("__scum" -> col("__st")))
-      .select(col("src"), (col("__scum") - col("__st")).as("__soff"))
-    cum.join(broadcast(soff), "src")
-      .withColumn("cum_tokens", col("__cum") - col("__soff"))
+    Prefix.runningTotals(base, Some("src"), Seq("__sk", "id"),
+        Seq("cum_tokens" -> col("n_tokens"))).rows
       .filter(col("cum_tokens") - col("n_tokens") < budgetPerSource)
       .select(col("id"), col("src").as("source"), col("n_tokens"),
         col("cum_tokens"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The composed end-to-end training-data curation pipeline — the
@@ -115,29 +115,40 @@ object Curation {
     // shuffle key (~34 copies in the optimized plan, measured). The
     // cleaned/featured frame is also the stage output a production
     // pipeline persists between curation steps.
-    // One fused in-kernel curation triple per row (r18): lang + quality
-    // + n_tokens from a single [[TextAnalysis.tokenCurateStats]] call
-    // (bit-equal to the score-ladder composition, parity spec'd) —
-    // the HOF chains tokenized the cleaned text ~6x; the kernel scans
-    // its bytes once and the consumers are cheap getFields.
-    val cleaned = df.select(col(idCol).as("id"),
-      TextAnalysis.redactPii(TextAnalysis.stripMarkup(col(textCol)))
-        .as("text_clean"))
+    val filtered = cleanAndFilter(df, Seq(col(idCol).as("id")), textCol, cfg)(
+      _.localCheckpoint())
+    val deduped = Dedup.exactDedup(filtered, "id", "text_clean")
+    if (cfg.sampleFraction >= 1.0) deduped
+    else Sampling.hashSample(deduped, "id", cfg.sampleFraction)
+  }
+
+  /** The clean → featurize → filter stages batch [[curate]] and
+    * [[graft.streaming.StreamingProfile.streamingCurate]] share: the
+    * `lead` columns, then text_clean, lang, quality and n_tokens, with
+    * the rows that fail `cfg`'s language, quality and length gates
+    * dropped. `pin` runs on the featured frame before the gates (batch
+    * materializes it; a stream cannot). One fused in-kernel curation
+    * triple per row (r18): lang + quality + n_tokens from a single
+    * [[TextAnalysis.tokenCurateStats]] call (bit-equal to the
+    * score-ladder composition, parity spec'd) — the HOF chains
+    * tokenized the cleaned text ~6x; the kernel scans its bytes once
+    * and the consumers are cheap getFields, so the predicates Catalyst
+    * pushes into the stage stay small (the projected score-ladder form
+    * overflowed the 64 KB codegen method limit on the stream). */
+  private[graft] def cleanAndFilter(df: DataFrame, lead: Seq[Column],
+                                    textCol: String, cfg: CurationConfig)(
+      pin: DataFrame => DataFrame): DataFrame =
+    pin(df.select(lead :+ TextAnalysis.redactPii(
+        TextAnalysis.stripMarkup(col(textCol))).as("text_clean"): _*)
       .withColumn("__cs", TextAnalysis.tokenCurateStats(col("text_clean")))
       .withColumn("lang", col("__cs").getField("lang"))
       .withColumn("quality", col("__cs").getField("quality"))
       .withColumn("n_tokens",
         col("__cs").getField("n_tokens").cast("long"))
-      .drop("__cs")
-      .localCheckpoint()
-    val filtered = cleaned
+      .drop("__cs"))
       .filter(cfg.lang.map(l => col("lang") === l).getOrElse(lit(true)))
       .filter(col("quality") >= cfg.minQuality &&
         col("n_tokens") >= cfg.minTokens)
-    val deduped = Dedup.exactDedup(filtered, "id", "text_clean")
-    if (cfg.sampleFraction >= 1.0) deduped
-    else Sampling.hashSample(deduped, "id", cfg.sampleFraction)
-  }
 
   /** One-call corpus datasheet — the summary table a dataset card /
     * ingestion review wants before any deeper audit: doc and

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distribution-drift and dependency validation — the statistical
   * tests a curation pipeline runs between dataset versions ("did this
@@ -14,10 +16,11 @@ import org.apache.spark.sql.functions._
   *
   * Every operator here is exact and oracle-replayable, and none uses a
   * partition-less window: ECDFs come from grouped prefix sums
-  * ([[Prefix.runningTotals]] — one range sort, O(P) driver traffic),
-  * contingency tables from narrow keyed aggs over DISTINCT levels
-  * (map-side combine absorbs the raw rows), so everything survives a
-  * 100 TB input whose distinct-value footprint fits a shuffle.
+  * ([[Prefix.runningTotals]] — one range sort, O(|keys| + P) driver
+  * traffic), contingency tables from narrow keyed aggs over DISTINCT
+  * levels (map-side combine absorbs the raw rows), so everything
+  * survives a 100 TB input whose distinct-value footprint fits a
+  * shuffle.
   */
 object Drift {
 
@@ -27,9 +30,10 @@ object Drift {
     *
     * Shape: ONE narrow groupBy(value) computes per-distinct-value
     * counts for both samples (the raw table never leaves the scan);
-    * the shared-sort prefix pass turns them into ECDF numerators; the
-    * max reduces. Ties are handled exactly: the ECDF difference is
-    * evaluated only at complete distinct values, never mid-run.
+    * the shared-sort prefix pass turns them into ECDF numerators and
+    * its first pass yields n_a and n_b; the max reduces. Ties are
+    * handled exactly: the ECDF difference is evaluated only at complete
+    * distinct values, never mid-run.
     * Output (1 row): (n_a, n_b, ks). */
   def ksTwoSample(df: DataFrame, value: Column, group: Column): DataFrame = {
     val spark = df.sparkSession
@@ -39,15 +43,13 @@ object Drift {
       .groupBy("v").agg(
         sum(when(col("g"), 1L).otherwise(0L)).as("ca"),
         sum(when(!col("g"), 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint() // feeds the totals agg AND the prefix pass
-    val tot = counts.agg(coalesce(sum("ca"), lit(0L)),
-      coalesce(sum("cb"), lit(0L))).collect()(0)
-    val (na, nb) = (tot.getLong(0), tot.getLong(1))
+    val cum = Prefix.runningTotals(counts, None, Seq("v"),
+      Seq("cum_a" -> col("ca"), "cum_b" -> col("cb")))
+    val (na, nb) = (cum.total.sums(0), cum.total.sums(1))
     if (na == 0L || nb == 0L)
       return spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
         lit(null).cast("double").as("ks"))
-    Prefix.runningTotals(counts, Seq("v"),
-      Seq("cum_a" -> col("ca"), "cum_b" -> col("cb")))
+    cum.rows
       .agg(max(abs(col("cum_a").cast("double") / lit(na.toDouble)
         - col("cum_b").cast("double") / lit(nb.toDouble))).as("ks"))
       .select(lit(na).as("n_a"), lit(nb).as("n_b"), round(col("ks"), 6).as("ks"))
@@ -95,7 +97,8 @@ object Drift {
     * Spark plans `percent_rank() OVER (ORDER BY v)` as a SINGLE-task
     * window. Here the rank table is distinct-value-bounded: ONE narrow
     * groupBy(value) count, a shared-sort prefix pass turns counts into
-    * ranks (rank(v) = rows before v's run), and the fact rows take the
+    * ranks (rank(v) = rows before v's run) and counts n and the
+    * distinct values on its first pass, and the fact rows take the
     * percentile back via an equi-join on value — which AQE broadcasts
     * whenever the distinct table is small (the common case for the
     * discrete features this transform targets). Null values pass
@@ -106,15 +109,15 @@ object Drift {
       s"input already has a column named '$outCol'")
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).as("__pr_v")).agg(count(lit(1)).as("__pr_cnt"))
-      .localCheckpoint() // feeds the total AND the prefix pass
-    val n = counts.agg(coalesce(sum("__pr_cnt"), lit(0L))).collect()(0).getLong(0)
-    val ranked = Prefix.runningTotals(counts, Seq("__pr_v"),
+    val cum = Prefix.runningTotals(counts, None, Seq("__pr_v"),
       Seq("__pr_cum" -> col("__pr_cnt")))
+    val n = cum.total.sums(0)
+    val ranked = cum.rows
       .select(col("__pr_v"),
         (when(lit(n) > 1L,
           (col("__pr_cum") - col("__pr_cnt")).cast("double") / lit(math.max(n - 1L, 1L).toDouble))
           .otherwise(lit(0.0))).as(outCol))
-    df.join(maybeBroadcastRank(ranked, counts.count()),
+    df.join(maybeBroadcastRank(ranked, cum.total.rows),
         df(valueCol) === col("__pr_v"), "left")
       .drop("__pr_v")
   }
@@ -134,10 +137,9 @@ object Drift {
     * percentile WITHIN its segment" (per-language quality ranks,
     * per-domain score normalization). Same windowless construction,
     * one level deeper: the rank table is distinct-(group, value)-
-    * bounded and rides ONE shared range sort; per-group rank offsets
-    * come from a second prefix pass over the |groups|-row totals
-    * frame (rank-in-group = global cum − count − mass of prior
-    * groups). Spark's `percent_rank() OVER (PARTITION BY g ORDER BY
+    * bounded and rides ONE shared range sort keyed by the group
+    * (rank-in-group = the group's running count − count), whose first
+    * pass also counts each group's size. Spark's `percent_rank() OVER (PARTITION BY g ORDER BY
     * v)` sorts each group in one task — fine for many small groups,
     * a funnel when one group dominates; this shape never holds more
     * than a sort partition regardless of group skew. Rows with a
@@ -150,21 +152,19 @@ object Drift {
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint() // feeds the shared-sort pass AND the group totals
-    val cum = Prefix.runningTotals(counts, Seq("__g", "__v"),
+    val cum = Prefix.runningTotals(counts, Some("__g"), Seq("__v"),
       Seq("__cum" -> col("__cnt")))
-    val gtot = counts.groupBy("__g").agg(sum("__cnt").as("__gt"))
-    val goff = Prefix.runningTotals(gtot, Seq("__g"),
-      Seq("__gcum" -> col("__gt")))
-      .select(col("__g"), (col("__gcum") - col("__gt")).as("__goff"),
-        col("__gt"))
-    val ranked = cum.join(broadcast(goff), "__g")
+    // per-group totals from the scan's first pass: |groups| rows
+    val gt = df.sparkSession.createDataFrame(
+      cum.byKey.toSeq.map { case (g, t) => Row(g, t.sums(0)) }.asJava,
+      StructType(Seq(counts.schema("__g"), StructField("__gt", LongType))))
+    val ranked = cum.rows.join(broadcast(gt), "__g")
       .select(col("__g"), col("__v"),
         when(col("__gt") > 1L,
-          (col("__cum") - col("__cnt") - col("__goff")).cast("double") /
+          (col("__cum") - col("__cnt")).cast("double") /
             (col("__gt") - 1L).cast("double"))
           .otherwise(lit(0.0)).as(outCol))
-    df.join(maybeBroadcastRank(ranked, counts.count()),
+    df.join(maybeBroadcastRank(ranked, cum.total.rows),
         df(groupCol) === col("__g") && df(valueCol) === col("__v"), "left")
       .drop("__g", "__v")
   }
@@ -545,8 +545,8 @@ object Drift {
     val counts = base.groupBy("__s")
       .agg(count(lit(1)).as("__cnt"),
         sum(col("__y").cast("long")).as("__pos"))
-    val cum = Prefix.runningTotals(counts, Seq("__s"),
-      Seq("__cum" -> col("__cnt")))
+    val cum = Prefix.runningTotals(counts, None, Seq("__s"),
+      Seq("__cum" -> col("__cnt"))).rows
     val d = (c: Column) => c.cast("decimal(38,0)")
     cum.agg(
         coalesce(sum(col("__pos")), lit(0L)).cast("long").as("__np"),

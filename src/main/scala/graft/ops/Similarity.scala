@@ -620,7 +620,7 @@ object Similarity {
     // bucket of true exact copies cannot split (identical extensions)
     // — its verify work is genuine duplicate mass, not skew.
     val extBits = 16
-    // materialized once: counts, the audit, and BOTH sides of the
+    // materialized once: counts and BOTH sides of the
     // candidate self-join read this frame — unmaterialized, each
     // consumer re-runs the (nBits+extBits)·dim hyperplane projections
     // over the corpus (measured ~3 s/scan at the 10× tree, ~4 scans)
@@ -631,14 +631,6 @@ object Similarity {
         ext(col("v")).as("__ext"))
     }.reduce(_ unionByName _).localCheckpoint()
     val counts = tabled.groupBy("tbl", "bucket").agg(count(lit(1)).as("__m"))
-    // candidate-volume audit receipt (stderr): the counts frame is
-    // ≤ nTables·2^nBits rows — bounded driver state
-    try {
-      val a = counts.agg(max("__m").as("mx"),
-        sum(col("__m") * (col("__m") - 1) / 2).as("cand")).collect()(0)
-      System.err.println(s"[cosineNearDupBucketed] maxBucket=${a.get(0)} " +
-        s"rawCandidates=${a.get(1)} (cap=$maxBucketRows, resplit<=$extBits bits)")
-    } catch { case _: Throwable => () }
     val refined = tabled.join(counts, Seq("tbl", "bucket"))
       .withColumn("__need",
         when(col("__m") <= maxBucketRows, lit(0))

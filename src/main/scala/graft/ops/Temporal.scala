@@ -23,12 +23,12 @@ import org.apache.spark.sql.types.DecimalType
   * rows. The window form funnels each key through one task (fine while
   * per-key data fits a task's sort budget); for hot keys,
   * [[Temporal.asofJoinBackward]] with `hotKeyRowBound` switches to the
-  * range-partitioned two-pass form: ONE repartitionByRange on
-  * (key, time) lets a hot key span many sorted partitions, a P-row
+  * engine's one range-scan kernel ([[Prefix.rangeScan]]): a range sort
+  * on (key, time) lets a hot key span many sorted partitions, a P-row
   * boundary summary fixes the carry-in payload each partition inherits
   * for the single key that can straddle its leading edge, and a second
-  * pass runs the running-last scan per partition. Same total order,
-  * same results, no single-task key.
+  * pass over the pinned sort runs the running-last scan per partition.
+  * Same total order, same results, no single-task key.
   */
 object Temporal {
 
@@ -140,97 +140,77 @@ object Temporal {
         col("__e").as(endCol))
   }
 
-  /** The hot-key form of the running-last match: instead of one window
-    * task per key, range-repartition the tagged union on
+  /** The hot-key form of the running-last match, the as-of instance of
+    * the shared range scan ([[Prefix.rangeScan]]): instead of one
+    * window task per key, the tagged union is range-sorted on
     * (key, time, side, tieBreak) — the SAME total order the window
     * uses, but a hot key now spans as many consecutive sorted
     * partitions as its volume needs. Because keys are contiguous in
     * that order, the only key whose state can straddle a partition
     * boundary is the last key of the previous partition; pass 1
-    * collects one (lastKey, lastPayloadOfThatKey) summary row per
-    * partition (P rows to the driver, independent of data size), a
-    * prefix walk turns those into the carry-in payload each partition
-    * starts from, and pass 2 re-runs the per-partition running-last
-    * scan seeded with that carry. Output schema matches the window
-    * branch: the union columns plus the matched payload `__m`. */
+    * summarizes each partition as its (lastKey, lastPayloadOfThatKey),
+    * a prefix walk on the driver turns those into the carry-in payload
+    * each partition starts from, and pass 2 runs the per-partition
+    * running-last scan seeded with that carry. Output schema matches
+    * the window branch: the union columns plus the matched payload
+    * `__m`. */
   private def asofViaRangeScan(u: DataFrame): DataFrame = {
-    val spark = u.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val sortCols = Seq(col("__k"), col("__t"), col("__s"), col("__p.__tb"))
-    val sorted = u.repartitionByRange(nPart, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      // both passes consume this exchange+sort; pin it so pass 2 reuses
-      // the shuffle files instead of re-sorting
-      .localCheckpoint()
-    val schema = sorted.schema
-    val kIdx = schema.fieldIndex("__k")
-    val pIdx = schema.fieldIndex("__p")
-    import java.util.Objects
+    val kIdx = u.schema.fieldIndex("__k")
+    val pIdx = u.schema.fieldIndex("__p")
     // pass 1: per partition, the last key present and the last right
     // payload within that key's trailing run (null if that run has no
-    // right rows). Empty partitions yield no row and inherit later.
-    val summaries = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
+    // right rows); an empty partition summarizes as null
+    val scan = Prefix.rangeScan(u,
+        Seq(col("__k"), col("__t"), col("__s"), col("__p.__tb"))) { it =>
       var any = false
       var lastKey: Any = null
       var lastPay: Row = null
       it.foreach { r =>
-        val k = r.get(kIdx)
-        if (!any || !Objects.equals(k, lastKey)) { lastKey = k; lastPay = null; any = true }
+        val k = Prefix.scanKey(r.get(kIdx))
+        if (!any || k != lastKey) { lastKey = k; lastPay = null; any = true }
         if (!r.isNullAt(pIdx)) lastPay = r.getStruct(pIdx)
       }
-      if (any) Iterator((i, lastKey, lastPay)) else Iterator.empty
-    }.collect().map(t => t._1 -> ((t._2, t._3))).toMap
-    // fill empty partitions with the previous summary, then prefix-walk:
+      if (any) (lastKey, lastPay) else null
+    }
+    // empty partitions take the previous summary, then prefix-walk:
     // partition i's carry key is partition i-1's last key; its payload
     // is the most recent non-null payload among the contiguous earlier
     // partitions ending in that same key.
-    val filled = new Array[(Any, Row)](nPart)
-    var prev: (Any, Row) = null
-    (0 until nPart).foreach { i =>
-      prev = summaries.get(i) match {
-        case Some(s) => s
-        case None    => prev
-      }
-      filled(i) = prev
-    }
-    val carries = new Array[(Any, Row)](math.max(nPart, 1))
-    carries(0) = null
-    (1 until nPart).foreach { i =>
-      carries(i) = filled(i - 1) match {
+    val filled = scan.summaries.scanLeft(null: (Any, Row)) { (prev, sm) =>
+      if (sm == null) prev else sm
+    }.tail
+    val carries = Array.tabulate(filled.length) { i =>
+      if (i == 0) null
+      else filled(i - 1) match {
         case null => null
         case (ck, pay0) =>
           var pay = pay0
           var j = i - 1
           while (pay == null && j > 0 && filled(j - 1) != null &&
-            Objects.equals(filled(j - 1)._1, ck)) { pay = filled(j - 1)._2; j -= 1 }
+            filled(j - 1)._1 == ck) { pay = filled(j - 1)._2; j -= 1 }
           (ck, pay)
       }
     }
-    val carriesB = spark.sparkContext.broadcast(carries)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        "__m", schema.fields(pIdx).dataType, nullable = true))
     // pass 2: running last() per partition, seeded with the carry for
     // rows of the straddling key; resets whenever the key changes.
-    val rdd = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-      val carry = carriesB.value(i)
+    val rdd = scan.seeded(carries) { (carry, it) =>
       var any = false
       var curKey: Any = null
       var lastPay: Row = null
       it.map { r =>
-        val k = r.get(kIdx)
-        if (!any || !Objects.equals(k, curKey)) {
+        val k = Prefix.scanKey(r.get(kIdx))
+        if (!any || k != curKey) {
           curKey = k; any = true
-          lastPay = carry match {
-            case (ck, cp) if Objects.equals(k, ck) => cp
-            case _                                 => null
-          }
+          lastPay = if (carry != null && carry._1 == k) carry._2 else null
         }
         if (!r.isNullAt(pIdx)) lastPay = r.getStruct(pIdx)
         Row.fromSeq(r.toSeq :+ lastPay)
       }
     }
-    spark.createDataFrame(rdd, outSchema).filter(col("__s") === 1)
+    val outSchema = org.apache.spark.sql.types.StructType(
+      u.schema.fields :+ org.apache.spark.sql.types.StructField(
+        "__m", u.schema.fields(pIdx).dataType, nullable = true))
+    u.sparkSession.createDataFrame(rdd, outSchema).filter(col("__s") === 1)
   }
 
   /** Ordered funnel analysis — "of the users who did step 1, how many

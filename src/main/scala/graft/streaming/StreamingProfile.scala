@@ -212,7 +212,8 @@ object StreamingProfile {
 
   /** Streaming twin of [[graft.ops.Curation.curate]]: the cleaning and
     * filtering stages are stateless projections/predicates that run
-    * unchanged on a stream (same Column expressions, same codegen); the
+    * unchanged on a stream (the same [[graft.ops.Curation]] stage
+    * function, same codegen), and so is the hash sample; the
     * exact-dedup stage swaps in the watermark-bounded
     * `dropDuplicatesWithinWatermark` keyed on the content fingerprint —
     * the batch window-on-fingerprint form has no streaming equivalent,
@@ -222,35 +223,16 @@ object StreamingProfile {
                       cfg: graft.ops.Curation.CurationConfig =
                         graft.ops.Curation.CurationConfig(),
                       watermark: String = "2 hours"): DataFrame = {
-    import graft.ops.{Sampling, TextAnalysis}
-    // one fused in-kernel curation triple per row (r18): lang, quality
-    // and n_tokens are plain getFields, so the quality/lang predicates
-    // Catalyst pushes down into this stage stay SMALL — the projected
-    // score-ladder form overflowed the 64 KB codegen method limit here
-    // (no checkpoint barrier on a stream) and dropped the whole stage
-    // to interpreted mode
-    val cleaned = docs.select(col(tsCol).as("ts"), col(idCol).as("id"),
-      TextAnalysis.redactPii(TextAnalysis.stripMarkup(col(textCol)))
-        .as("text_clean"))
-      .withColumn("__cs", TextAnalysis.tokenCurateStats(col("text_clean")))
-      .withColumn("lang", col("__cs").getField("lang"))
-      .withColumn("quality", col("__cs").getField("quality"))
-      .withColumn("n_tokens",
-        col("__cs").getField("n_tokens").cast("long"))
-      .drop("__cs")
-    val filtered = cleaned
-      .filter(cfg.lang.map(l => col("lang") === l)
-        .getOrElse(org.apache.spark.sql.functions.lit(true)))
-      .filter(col("quality") >= cfg.minQuality &&
-        col("n_tokens") >= cfg.minTokens)
+    import graft.ops.{Curation, Sampling, TextAnalysis}
+    val filtered = Curation.cleanAndFilter(docs,
+      Seq(col(tsCol).as("ts"), col(idCol).as("id")), textCol, cfg)(identity)
     val deduped = filtered
       .withWatermark("ts", watermark)
       .withColumn("__fp", TextAnalysis.fingerprint(col("text_clean")))
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
     if (cfg.sampleFraction >= 1.0) deduped
-    else deduped.filter(Sampling.hashBucket(col("id"), 10000) <
-      org.apache.spark.sql.functions.lit((cfg.sampleFraction * 10000).round))
+    else Sampling.hashSample(deduped, "id", cfg.sampleFraction)
   }
 
   /** Streaming PSI drift monitor — the incremental twin of

@@ -53,8 +53,8 @@ object Probe {
 
   /** Append one probe measurement to PROBE_LOG.jsonl (cwd, committed
     * alongside BENCH_LOG.jsonl): a scale claim without a logged row
-    * does not exist. Best-effort: a read-only cwd must not fail the
-    * probe itself. Fields: ts, sha (Session.sha, the bench pooling
+    * does not exist. A failed write is reported on stderr; a read-only
+    * cwd does not fail the probe itself. Fields: ts, sha (Session.sha, the bench pooling
     * key), probe (the subcommand), sf (the dir the sample ran
     * against), q, run, sec + free-form extras. */
   private def probeLog(probe: String, sf: String, q: String, run: Int,
@@ -66,7 +66,10 @@ object Probe {
         f""""sec":$sec%.3f$extras}""" + "\n").getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND): Unit
-  } catch { case _: Throwable => () }
+  } catch {
+    case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[probe] could not append to PROBE_LOG.jsonl: $e")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -53,6 +53,17 @@ class HistogramSpec extends SparkSpec {
     assert((one(0).getLong(1), one(0).getDouble(2), one(0).getDouble(3)) === ((3L, 1.0, 9.0)))
   }
 
+  /** Spark jobs of one equiDepth collect, as measured: n comes from the
+    * rank scan's first pass, with no count() of the input. */
+  private val EquiDepthJobBudget = 5
+
+  test("equiDepth stays within its Spark job budget") {
+    val df = (1 to 200).map(i => (i.toLong, (i % 37).toDouble)).toDF("id", "v")
+    val (rows, jobs) = withJobCount(Histogram.equiDepth(df, "v", "id", 8).collect())
+    assert(rows.map(_.getAs[Long]("cnt")).sum === 200L)
+    assert(jobs <= EquiDepthJobBudget, s"equiDepth ran $jobs Spark jobs")
+  }
+
   test("2-d equi-width histogram: known cells, edge clamp, degenerate axis") {
     // x in [0, 10], y in [0, 4]; 2x2 grid → cell width 5 and 2
     val df = Seq(

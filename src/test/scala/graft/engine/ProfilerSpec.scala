@@ -181,6 +181,16 @@ class ProfilerSpec extends SparkSpec {
     assert(r.getLong(3) === 0L)
   }
 
+  test("numericProfile: hand-computed moments and quartiles; a constant column reports 0, not a divide-by-zero") {
+    import spark.implicits._
+    val r = row1(Profiler.numericProfile(Seq(1.0, 2.0, 3.0, 4.0).toDF("x"), "x"))
+    assert(r === Map("n" -> 4L, "mean" -> 2.5, "std" -> 1.118034, "skew" -> 0.0,
+      "kurt" -> -1.36, "mn" -> 1.0, "mx" -> 4.0, "median" -> 2.5, "q1" -> 1.75, "q3" -> 3.25))
+    // ANSI mode raises on a double 0/0: the guards must hold it off
+    val c = row1(Profiler.numericProfile(Seq.fill(5)(3.5).toDF("x"), "x"))
+    assert((c("n"), c("std"), c("skew"), c("kurt"), c("median")) === ((5L, 0.0, 0.0, 0.0, 3.5)))
+  }
+
   /** Spark jobs of the robust profiles below, each counted through its
     * collect, as measured: the quantile sort counts its own rows, so
     * no separate count() runs (it would add three jobs). */

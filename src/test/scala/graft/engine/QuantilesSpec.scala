@@ -61,6 +61,19 @@ class QuantilesSpec extends SparkSpec {
     assert(exact(five.filter(col("x") > 99), Seq(0.5)) === Seq(0.0))
   }
 
+  /** Spark jobs of one weightedExact collect, as measured: the total
+    * weight comes from the prefix scan's first pass, with no checkpoint
+    * and no separate total. */
+  private val WeightedJobBudget = 6
+
+  test("weightedExact stays within its Spark job budget") {
+    val we = (1 to 200).map(i => ((i % 41).toDouble, (i % 5 + 1).toDouble)).toDF("v", "w")
+    val (rows, jobs) = withJobCount(
+      Quantiles.weightedExact(we, "v", "w", Seq(0.25, 0.5, 0.9)).collect())
+    assert(rows.length === 3)
+    assert(jobs <= WeightedJobBudget, s"weightedExact ran $jobs Spark jobs")
+  }
+
   test("grouped interpolated quantiles match Spark's percentile per group bit-for-bit") {
     val rnd = new scala.util.Random(17)
     // one group holds 90% of the rows with heavy ties (values on a

@@ -258,6 +258,20 @@ class CorpusSpec extends SparkSpec {
     assert(g5(5L) === 2L)
   }
 
+  /** Spark jobs of one tokenBudgetSample collect, as measured: one
+    * prefix scan keyed by source, with no checkpoint and no per-source
+    * totals or offsets pass. */
+  private val TokenBudgetJobBudget = 4
+
+  test("tokenBudgetSample stays within its Spark job budget") {
+    val docs = (1 to 120).map(i => (i.toLong, s"src${i % 3}", "word " * (i % 7 + 1)))
+      .toDF("id", "src", "text")
+    val (rows, jobs) = withJobCount(
+      Corpus.tokenBudgetSample(docs, "id", "text", "src", 20L).collect())
+    assert(rows.map(_.getAs[String]("source")).toSet === Set("src0", "src1", "src2"))
+    assert(jobs <= TokenBudgetJobBudget, s"tokenBudgetSample ran $jobs Spark jobs")
+  }
+
   test("tokenBudgetSample: greedy per-source fill, deterministic, boundary doc kept") {
     val corpus = Seq(
       (1L, "a b c d e", "web"),    // 5 tokens each

@@ -114,6 +114,38 @@ class DriftSpec extends SparkSpec {
     assert(jobs <= PsiJobBudget, s"psi ran $jobs Spark jobs")
   }
 
+  /** Spark jobs of one collect each, as measured: every total these
+    * operators need (n, n_a and n_b, the distinct values, each group's
+    * size) comes from the first pass of their one range scan, so none
+    * checkpoints, aggregates or counts its input for it. */
+  private val PercentRankJobBudget = 6
+  private val PercentRankByJobBudget = 7
+  private val KsJobBudget = 6
+
+  test("percentRank stays within its Spark job budget") {
+    val df = (1 to 200).map(i => (i.toLong, (i % 17).toDouble)).toDF("id", "v")
+    val (rows, jobs) = withJobCount(Drift.percentRank(df, "v").collect())
+    assert(rows.length === 200)
+    assert(jobs <= PercentRankJobBudget, s"percentRank ran $jobs Spark jobs")
+  }
+
+  test("percentRankBy stays within its Spark job budget") {
+    // one group holds 90% of the rows
+    val df = (1 to 300).map(i => (i.toLong, if (i % 10 < 9) "hot" else s"g${i % 3}",
+      (i % 23).toDouble)).toDF("id", "g", "v")
+    val (rows, jobs) = withJobCount(Drift.percentRankBy(df, "g", "v").collect())
+    assert(rows.length === 300)
+    assert(jobs <= PercentRankByJobBudget, s"percentRankBy ran $jobs Spark jobs")
+  }
+
+  test("ksTwoSample stays within its Spark job budget") {
+    val df = (1 to 200).map(i => (i.toLong, (i % 31).toDouble)).toDF("id", "v")
+    val (rows, jobs) = withJobCount(
+      Drift.ksTwoSample(df, col("v"), col("id") % 2 === 0).collect())
+    assert((rows(0).getLong(0), rows(0).getLong(1)) === ((100L, 100L)))
+    assert(jobs <= KsJobBudget, s"ksTwoSample ran $jobs Spark jobs")
+  }
+
   test("chiSquare matches the hand formula on a small contingency, ~0 on independence") {
     // dependent: b == a for 90% of rows
     val rnd = new scala.util.Random(2)

@@ -32,6 +32,51 @@ class PrefixSpec extends SparkSpec {
     assert(got === Array((1L, "row1", 5L), (2L, "row2", 5L), (3L, "row3", 12L)))
   }
 
+  test("keyed runningTotals match SUM OVER (PARTITION BY k ORDER BY o ROWS UNBOUNDED PRECEDING), totals included") {
+    import org.apache.spark.sql.expressions.Window
+    // 40 rows, 12 distinct (k, o) sort keys, 64 shuffle partitions: the
+    // range partitioner cuts one partition per distinct sort key, so
+    // the hot key (30 rows) spans five partitions and one partition is
+    // empty. A NULL key, a NaN key and NULL values ride along. Tied
+    // rows (same k and o) carry the same v, so the running totals are
+    // the same multiset whatever order the ties take.
+    val rows: Seq[(Long, Option[Double], Long, Option[Long])] =
+      (1L to 30L).map(i => (i, Some(2.0), i % 5, if (i % 5 == 3) None else Some(i % 5 * 10))) ++
+        Seq((31L, Some(1.0), 1L, Some(5L)), (32L, Some(1.0), 1L, Some(5L)),
+          (33L, Some(1.0), 0L, Some(7L)),
+          (34L, Some(Double.NaN), 3L, Some(1L)), (35L, Some(Double.NaN), 3L, Some(1L)),
+          (36L, Some(Double.NaN), 2L, None), (37L, Some(Double.NaN), 9L, Some(4L)),
+          (38L, None, 4L, Some(10L)), (39L, None, 4L, Some(10L)), (40L, None, 1L, Some(30L)))
+    val df = rows.toDF("id", "k", "o", "v")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try {
+      // the fixture has the shape it claims
+      val parts = Prefix.rangeScan(df, Seq(col("k"), col("o")))(
+        it => it.map(r => Option(r.get(1)).map(_.toString)).toSet)
+      parts.release()
+      assert(parts.summaries.exists(_.isEmpty))
+      assert(parts.summaries.count(_.contains(Some("2.0"))) > 1)
+      val got = Prefix.runningTotals(df, Some("k"), Seq("o"),
+        Seq("cum" -> col("v"), "n" -> lit(1L)))
+      assert(got.rows.columns.toSeq === Seq("id", "k", "o", "v", "cum", "n"))
+      val w = Window.partitionBy("k").orderBy("o")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val want = df.withColumn("cum", sum(coalesce(col("v"), lit(0L))).over(w))
+        .withColumn("n", count(lit(1)).over(w))
+      def multiset(d: org.apache.spark.sql.DataFrame) =
+        d.select("k", "o", "v", "cum", "n").collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString(","))
+      assert(multiset(got.rows) === multiset(want))
+      // the totals pass 1 counted equal a groupBy's (keys as strings:
+      // NaN never equals itself in a Scala map)
+      val byKey = df.groupBy("k").agg(sum(coalesce(col("v"), lit(0L))), count(lit(1)))
+        .collect().map(r => String.valueOf(r.get(0)) ->
+          Prefix.Totals(IndexedSeq(r.getLong(1), r.getLong(2)), r.getLong(2))).toMap
+      assert(got.byKey.map { case (k, t) => String.valueOf(k) -> t } === byKey)
+      assert(got.total === Prefix.Totals(IndexedSeq(rows.flatMap(_._4).sum, 40L), 40L))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("packSequences: bins, offsets and boundary crossings from hand-computed layout") {
     // budget 10; docs of 4, 5, 3, 10, 0, 2 tokens at positions
     // [0,4) [4,9) [9,12) [12,22) [22,22) [22,24)

@@ -210,6 +210,22 @@ class SimilaritySpec extends SparkSpec {
     assert(bucketed === exact)             // full recall at these settings
   }
 
+  /** Spark jobs of one cosineNearDupBucketed collect on the fixture
+    * above, as measured: no side action beyond the result's own. */
+  private val BucketedJobBudget = 9
+
+  test("cosineNearDupBucketed stays within its Spark job budget") {
+    val rnd = new scala.util.Random(11)
+    val base = (0 until 80).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    val dups = (0 until 20).map { i =>
+      (1000L + i, base(i)._2.map(x => x + 1e-4f * rnd.nextGaussian().toFloat)) }
+    val df = (base ++ dups).toDF("id", "v")
+    val (rows, jobs) = withJobCount(
+      Similarity.cosineNearDupBucketed(df, "id", "v", 0.999).collect())
+    assert(rows.length >= 20)
+    assert(jobs <= BucketedJobBudget, s"cosineNearDupBucketed ran $jobs Spark jobs")
+  }
+
   test("cosineNearDupBucketed: hot-bucket re-split keeps exact parity on a clustered corpus") {
     // the q27 sf1 failure shape: a clustered corpus concentrates sign
     // buckets, and occupancy m costs m(m-1)/2 candidates. Fixture: two

@@ -121,6 +121,22 @@ class TemporalSpec extends SparkSpec {
     assert(got.values.forall(_ === Some(42.0)))
   }
 
+  /** Spark jobs of one hot-path as-of collect, as measured: the hot-key
+    * probe, then the range scan's two passes over one pinned sort. */
+  private val AsofHotJobBudget = 7
+
+  test("hot-key path stays within its Spark job budget") {
+    val lDf = (1L to 300L).map(i => (i, "only", i * 10L)).toDF("lid", "k", "t")
+    val rDf = (1L to 300L).map(i => (i + 9000L, "only", i * 10L - 5L, i.toDouble))
+      .toDF("rid", "k", "rt", "px")
+    val (rows, jobs) = withJobCount(Temporal.asofJoinBackward(lDf, rDf, "k", "k", "t", "rt",
+      payloadCols = Seq("px"), tieBreak = "rid", hotKeyRowBound = Some(100L)).collect())
+    // every left row t = 10i sees the right row at 10i - 5, px = i
+    assert(rows.map(r => r.getLong(0) -> r.getDouble(3)).toMap ===
+      (1L to 300L).map(i => i -> i.toDouble).toMap)
+    assert(jobs <= AsofHotJobBudget, s"hot-path as-of ran $jobs Spark jobs")
+  }
+
   test("range join: binned equijoin matches the theta-join ground truth, no nested loop in plan") {
     val rnd = new scala.util.Random(17)
     val pts = (1L to 2000L).map(i => (i, rnd.nextDouble() * 1000)).toDF("pid", "t")
