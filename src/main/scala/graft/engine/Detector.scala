@@ -1,15 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftActions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Semantic type detection — the reference's priority ladder
   * (`detect_column_type`, `Latanova_v1.py:124-170`) re-expressed as
   * ONE fused whole-table aggregation producing every signal for every
-  * column in a single scan, followed by a driver-side fold through the
-  * ladder. The reference scans each column up to ~6 times per column;
-  * at 100 TB one shared scan is the structural win (SURVEY.md §4.1).
+  * column, plus one narrow distinct-cardinality pass, run together;
+  * then a driver-side fold through the ladder. The reference scans
+  * each column up to ~6 times per column; at 100 TB two shared scans
+  * are the structural win (SURVEY.md §4.1).
   */
 object Detector {
 
@@ -252,7 +253,9 @@ object Detector {
 
   /** Compute every detection signal for every requested column in ONE
     * aggregation (one table scan, partial+final HashAggregate) plus one
-    * narrow distinct-cardinality pass.
+    * narrow distinct-cardinality pass. The two are independent and run
+    * as concurrent actions ([[GraftActions.together]]), after any
+    * unbuilt cache `df` reads is built once.
     *
     * Date detection is two-phase: the fused agg carries only the cheap
     * shape-regex ratio (an upper bound on the parse ratio); columns
@@ -269,8 +272,10 @@ object Detector {
       if (columns.isEmpty) df.schema.fields.toSeq
       else columns.map(n => df.schema(n))
     val exprs = fields.flatMap(f => signalExprs(f, cfg))
-    val row: Row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    val distincts = distinctCounts(df, fields)
+    GraftActions.built(df)
+    val (row, distincts) = GraftActions.together(
+      df.agg(exprs.head, exprs.tail: _*).collect()(0),
+      distinctCounts(df, fields))
     val idx = row.schema.fieldNames.zipWithIndex.toMap
     def d(n: String, s: String): Double =
       if (row.isNullAt(idx(s"$n#$s"))) 0.0 else row.getDouble(idx(s"$n#$s"))
@@ -357,7 +362,7 @@ object Detector {
     else Text
   }
 
-  /** Detect all columns of a table: one scan + driver fold. */
+  /** Detect all columns of a table: the [[signals]] scans + driver fold. */
   def detect(df: DataFrame, cfg: DetectorConfig = DetectorConfig(),
              columns: Seq[String] = Nil): Map[String, (SemanticType, ColumnSignals)] = {
     signals(df, cfg, columns).map(s => s.name -> (classify(s, cfg), s)).toMap

@@ -1,13 +1,15 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftActions, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Per-type statistical profilers (`Latanova_v1.py:173-298`), fused:
-  * all numeric, datetime and boolean columns of a table are profiled in
-  * ONE aggregation pass (the reference re-scans per column), and all
-  * categorical columns in one more (tiny) grouped count.
+  * all numeric, datetime and boolean columns of a table are profiled by
+  * ONE moment aggregation plus ONE quantile sort of all their values
+  * (the reference re-scans per column), the two run together as
+  * concurrent actions; all categorical columns take one more (tiny)
+  * grouped count.
   *
   * Numerical parity choices (SURVEY.md §4.5): `stddev_pop` (np.std is
   * ddof=0), exact `percentile` with linear interpolation
@@ -64,9 +66,12 @@ object Profiler {
     if (Detector.isDatetime(field.dataType)) col(field.name).cast(TimestampType)
     else Detector.tryParseDate(trim(col(field.name).cast(StringType)))
 
-  /** Profile many numeric/datetime/boolean columns in one scan.
-    * Returns partial ColumnProfiles (categorical/text filled by the
-    * dedicated paths below). */
+  /** Profile many numeric/datetime/boolean columns: one moment
+    * aggregation and one [[Quantiles.exactMulti]] sort, independent of
+    * each other and run as concurrent actions
+    * ([[GraftActions.together]]) after any unbuilt cache `df` reads is
+    * built once. Returns partial ColumnProfiles (categorical/text filled
+    * by the dedicated paths below). */
   def profileScalars(
       df: DataFrame,
       detected: Map[String, (SemanticType, ColumnSignals)]): Map[String, ColumnProfile] = {
@@ -96,15 +101,16 @@ object Profiler {
       }
 
     if (exprs.isEmpty) return Map.empty
-    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    val idx = row.schema.fieldNames.zipWithIndex.toMap
-
     val ps = Seq(0.25, 0.5, 0.75)
     val quantileValues =
       numericCols.map(n => n -> numericValue(fields(n))) ++
         // epoch seconds (`dates.astype(np.int64) // 10**9`, `Latanova_v1.py:281`)
         datetimeCols.map(n => n -> unix_timestamp(datetimeValue(fields(n))))
-    val quantiles = Quantiles.exactMulti(df, quantileValues, ps)
+    GraftActions.built(df)
+    val (row, quantiles) = GraftActions.together(
+      df.agg(exprs.head, exprs.tail: _*).collect()(0),
+      Quantiles.exactMulti(df, quantileValues, ps))
+    val idx = row.schema.fieldNames.zipWithIndex.toMap
 
     val numericProfiles = numericCols.map { n =>
       n -> ColumnProfile(n, detected(n)._1, detected(n)._2,

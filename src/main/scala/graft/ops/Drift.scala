@@ -63,7 +63,8 @@ object Drift {
     * finite; PSI = Σ (p−q)·ln(p/q). Rule of thumb: <0.1 stable,
     * 0.1–0.25 moderate, >0.25 shifted.
     * Output: one row per bin (bin, n_base, n_cur, psi_contrib) —
-    * Σ psi_contrib is the PSI. */
+    * Σ psi_contrib is the PSI — computed when psi is called and
+    * returned as a local frame. */
   def psi(df: DataFrame, value: Column, group: Column, bins: Int): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
     val rows = df
@@ -80,12 +81,15 @@ object Drift {
     val counted = rows.groupBy(bin.as("bin")).agg(
       sum(when(col("g"), 1L).otherwise(0L)).as("n_base"),
       sum(when(!col("g"), 1L).otherwise(0L)).as("n_cur"))
-    val tot = counted.agg(sum("n_base"), sum("n_cur")).collect()(0)
-    val (na, nc) = (tot.getLong(0), tot.getLong(1))
+    // at most `bins` rows: collected once, they give the totals and
+    // are the result, so no second aggregate runs over them
+    val binRows = counted.collect()
+    val (na, nc) = (binRows.map(_.getLong(1)).sum, binRows.map(_.getLong(2)).sum)
     val p = (col("n_base").cast("double") + 0.5) / (lit(na.toDouble) + lit(0.5 * bins))
     val q = (col("n_cur").cast("double") + 0.5) / (lit(nc.toDouble) + lit(0.5 * bins))
-    counted.select(col("bin"), col("n_base"), col("n_cur"),
-      round((p - q) * log(p / q), 6).as("psi_contrib"))
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(binRows: _*), counted.schema)
+      .select(col("bin"), col("n_base"), col("n_cur"),
+        round((p - q) * log(p / q), 6).as("psi_contrib"))
   }
 
   /** Windowless PERCENT_RANK over the whole table — the rank/quantile

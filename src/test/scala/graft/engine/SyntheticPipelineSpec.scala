@@ -81,7 +81,9 @@ class SyntheticPipelineSpec extends SparkSpec {
   /** Spark jobs profileTable starts on the orders-shaped table below:
     * 14 as measured with the one-pass categorical counts and the native
     * TIMESTAMP_NTZ datetime path (22 with a grouped count per categorical
-    * column and the date column parsed as text). */
+    * column and the date column parsed as text); the same 14 whether
+    * its actions run one after another or together, because the pinned
+    * sample is built before they start. */
   private val JobBudget = 14
 
   /** Spark jobs profileTable starts on the contacts table below (an id,
@@ -111,11 +113,13 @@ class SyntheticPipelineSpec extends SparkSpec {
     assert(jobs <= ContactsJobBudget, s"profileTable ran $jobs Spark jobs")
   }
 
-  test("profileTable on an orders-shaped table stays within its Spark job budget") {
+  /** The benchmark's orders table in small: two integer keys, two
+    * categoricals, a float and a TIMESTAMP_NTZ date. */
+  private lazy val orders = {
     import org.apache.spark.sql.functions.{col, element_at, lit, timestamp_micros, typedLit}
     import org.apache.spark.sql.types.TimestampNTZType
     val day = 86400000000L
-    val orders = spark.range(2000).select(
+    spark.range(2000).select(
       col("id").as("o_orderkey"),
       (col("id") * 7919 % 500).as("o_custkey"),
       element_at(typedLit(Seq("F", "O", "P")), (col("id") % 3 + 1).cast("int"))
@@ -125,14 +129,81 @@ class SyntheticPipelineSpec extends SparkSpec {
         .cast(TimestampNTZType).as("o_orderdate"),
       element_at(typedLit(Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")),
         (col("id") * 13 % 5 + 1).cast("int")).as("o_orderpriority"))
-    // the benchmark's synth_tables settings: whole table, strict ladder
-    val cfg = SyntheticPipeline.Config(detector = DetectorConfig(strictFormats = true),
-      sampleCap = 0, textColumns = false)
-    val (profiles, jobs) = withJobCount(SyntheticPipeline.profileTable(orders, cfg))
+  }
+  // the benchmark's synth_tables settings: whole table, strict ladder
+  private val ordersCfg = SyntheticPipeline.Config(
+    detector = DetectorConfig(strictFormats = true), sampleCap = 0, textColumns = false)
+  private lazy val ordersProfiles = SyntheticPipeline.profileTable(orders, ordersCfg)
+  /** `body` over the generated frame, cached and built as the
+    * benchmark builds it before validating. */
+  private def withOrdersSynth[T](body: org.apache.spark.sql.DataFrame => T): T = {
+    val s = SyntheticPipeline.generate(spark, ordersProfiles, ordersCfg).cache()
+    try {
+      assert(s.count() === ordersCfg.nSamples)
+      body(s)
+    } finally s.unpersist()
+  }
+
+  /** Spark jobs validate starts on the generated orders frame, as
+    * measured: the scalar profile (moment aggregate and quantile sort)
+    * and the one categorical count, the same 8 whether they run one
+    * after another or together. */
+  private val ValidateJobBudget = 8
+
+  test("profileTable on an orders-shaped table stays within its Spark job budget") {
+    val (profiles, jobs) = withJobCount(SyntheticPipeline.profileTable(orders, ordersCfg))
     assert(profiles.map { case (n, p) => n -> p.semanticType } === Map(
       "o_orderkey" -> SemanticType.Integer, "o_custkey" -> SemanticType.Integer,
       "o_orderstatus" -> SemanticType.Categorical, "o_totalprice" -> SemanticType.Float,
       "o_orderdate" -> SemanticType.Datetime, "o_orderpriority" -> SemanticType.Categorical))
     assert(jobs <= JobBudget, s"profileTable ran $jobs Spark jobs")
+    // its actions run concurrently; the count must not depend on timing
+    val (_, again) = withJobCount(SyntheticPipeline.profileTable(orders, ordersCfg))
+    assert(again === jobs, s"profileTable ran $jobs, then $again Spark jobs")
+  }
+
+  test("validate on the generated orders frame stays within its Spark job budget") {
+    withOrdersSynth { synth =>
+      val (validation, jobs) = withJobCount(
+        SyntheticPipeline.validate(synth, ordersProfiles, ordersCfg))
+      assert(validation.keySet === ordersProfiles.keySet)
+      assert(jobs <= ValidateJobBudget, s"validate ran $jobs Spark jobs")
+      val (again, jobs2) = withJobCount(
+        SyntheticPipeline.validate(synth, ordersProfiles, ordersCfg))
+      assert(again === validation)
+      assert(jobs2 === jobs, s"validate ran $jobs, then $jobs2 Spark jobs")
+    }
+  }
+
+  test("every job profileTable and validate start carries the caller's job group and local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = props.add(e.properties)
+    }
+    val tag = s"tag-${java.util.UUID.randomUUID()}"
+    withOrdersSynth { synth =>
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("caller-group", "caller-group")
+        sc.setLocalProperty("graft.spec.tag", tag)
+        try {
+          SyntheticPipeline.validate(synth, SyntheticPipeline.profileTable(orders, ordersCfg),
+            ordersCfg)
+        } finally {
+          sc.clearJobGroup()
+          sc.setLocalProperty("graft.spec.tag", null)
+        }
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = props.asScala.toSeq
+    assert(seen.nonEmpty)
+    for (p <- seen) {
+      assert(Option(p).map(_.getProperty("spark.jobGroup.id")) === Some("caller-group"))
+      assert(p.getProperty("graft.spec.tag") === tag)
+    }
   }
 }
