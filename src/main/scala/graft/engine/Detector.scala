@@ -254,8 +254,7 @@ object Detector {
   /** Compute every detection signal for every requested column in ONE
     * aggregation (one table scan, partial+final HashAggregate) plus one
     * narrow distinct-cardinality pass. The two are independent and run
-    * as concurrent actions ([[GraftActions.together]]), after any
-    * unbuilt cache `df` reads is built once.
+    * as concurrent actions ([[GraftActions.together]]).
     *
     * Date detection is two-phase: the fused agg carries only the cheap
     * shape-regex ratio (an upper bound on the parse ratio); columns
@@ -272,7 +271,6 @@ object Detector {
       if (columns.isEmpty) df.schema.fields.toSeq
       else columns.map(n => df.schema(n))
     val exprs = fields.flatMap(f => signalExprs(f, cfg))
-    GraftActions.built(df)
     val (row, distincts) = GraftActions.together(
       df.agg(exprs.head, exprs.tail: _*).collect()(0),
       distinctCounts(df, fields))

@@ -69,9 +69,8 @@ object Profiler {
   /** Profile many numeric/datetime/boolean columns: one moment
     * aggregation and one [[Quantiles.exactMulti]] sort, independent of
     * each other and run as concurrent actions
-    * ([[GraftActions.together]]) after any unbuilt cache `df` reads is
-    * built once. Returns partial ColumnProfiles (categorical/text filled
-    * by the dedicated paths below). */
+    * ([[GraftActions.together]]). Returns partial ColumnProfiles
+    * (categorical/text filled by the dedicated paths below). */
   def profileScalars(
       df: DataFrame,
       detected: Map[String, (SemanticType, ColumnSignals)]): Map[String, ColumnProfile] = {
@@ -106,7 +105,6 @@ object Profiler {
       numericCols.map(n => n -> numericValue(fields(n))) ++
         // epoch seconds (`dates.astype(np.int64) // 10**9`, `Latanova_v1.py:281`)
         datetimeCols.map(n => n -> unix_timestamp(datetimeValue(fields(n))))
-    GraftActions.built(df)
     val (row, quantiles) = GraftActions.together(
       df.agg(exprs.head, exprs.tail: _*).collect()(0),
       Quantiles.exactMulti(df, quantileValues, ps))

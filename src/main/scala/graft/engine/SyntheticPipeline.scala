@@ -10,20 +10,20 @@ import graft.text.{EmbeddingModel, TextProfiler, TextSynth, Vocab}
   *   profile:  seeded sample, cached and built once → detection
   *             (Detector: the fused signal aggregate ∥ the distinct
   *             pass, then the exact date parse for shape-screen
-  *             survivors) → three independent groups run together:
-  *             the scalar profile (Profiler: the moment aggregate ∥
-  *             the quantile sort), ONE small grouped count of all
-  *             categoricals, and each text/email/phone column's
-  *             text/embedding tree-aggregate (TextProfiler).
+  *             survivors) → the scalar profile (Profiler: the moment
+  *             aggregate ∥ the quantile sort) ∥ ONE small grouped
+  *             count of all categoricals → text/embedding
+  *             tree-aggregate per text/email/phone column
+  *             (TextProfiler), one after another.
   *   generate: every column is a projection over one `spark.range(n)` —
   *             no shuffle, codegen'd, embarrassingly parallel
   *             (SURVEY.md §4.3).
   *   validate: the reference's moment-diff metrics
   *             (`validate_synthetic_data`, `Latanova_v1.py:425-494`)
-  *             recomputed on the generated frame by the same three
-  *             groups, run together.
+  *             recomputed on the generated frame: the scalar profile
+  *             ∥ the categorical count, then each text column.
   *
-  * "∥" and "together" mean concurrent Spark actions
+  * "∥" means concurrent Spark actions
   * ([[org.apache.spark.sql.GraftActions]]): the same plans and jobs as
   * run one after another, but a one-split table's single-task jobs
   * share the cores instead of queueing.
@@ -58,38 +58,37 @@ object SyntheticPipeline {
     * with the deterministic hash-embedding stand-in (the reference's
     * FastText artifact is not published — SURVEY.md §6). */
   def profileTable(df0: DataFrame, cfg: Config = Config()): Map[String, ColumnProfile] = {
-    import SemanticType._
-    val df = GraftActions.built(sample(df0.na.drop("any"), cfg).cache())
+    val df = sample(df0.na.drop("any"), cfg).cache()
     try {
+      // detection and the profiles below read the cache from concurrent
+      // actions: build it once here so none of them plans its build
+      GraftActions.built(df)
       val detected = Detector.detect(df, cfg.detector)
-      val model = EmbeddingModel(cfg.embedDim, cfg.seed)
-      // each text-side column's profile, as a patch on its base profile
-      val textSide: Seq[() => (String, ColumnProfile => ColumnProfile)] =
-        detected.toSeq.collect {
-          // the reference vectorizes email/phone columns too
-          // (`Latanova_v1.py:640-643`) — their embedding-space profile
-          // backs the same validation metrics as text columns and
-          // already carries the raw sample (None = no non-null rows)
-          case (name, (Email | Phone, _)) if cfg.textColumns => () =>
-            val text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
-            name -> (_.copy(rawSample = text.fold(Seq.empty[String])(_.rawSample), text = text))
-          case (name, (Email | Phone, _)) => () =>
-            val raw = Profiler.rawSample(df, name, cfg.rawSampleCap)
-            name -> (_.copy(rawSample = raw))
-          case (name, (Text, _)) if cfg.textColumns => () =>
-            val text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
-            name -> (_.copy(text = text))
-        }
-      val (scalars, categoricals, texts) = GraftActions.together(
+      val (scalars, categoricals) = GraftActions.together(
         Profiler.profileScalars(df, detected),
         Profiler.profileCategoricals(df,
-          detected.collect { case (n, (Categorical, _)) => n }.toSeq),
-        GraftActions.all(textSide).toMap)
+          detected.collect { case (n, (SemanticType.Categorical, _)) => n }.toSeq))
+      val model = EmbeddingModel(cfg.embedDim, cfg.seed)
       detected.map { case (name, (st, sig)) =>
-        val base = scalars.getOrElse(name, ColumnProfile(name, st, sig))
-        val full =
-          if (st == Categorical) base.copy(categorical = categoricals.get(name))
-          else texts.get(name).fold(base)(_(base))
+        import SemanticType._
+        val base = scalars.getOrElse(name,
+          ColumnProfile(name, st, sig))
+        val full = st match {
+          case Categorical =>
+            base.copy(categorical = categoricals.get(name))
+          case Email | Phone =>
+            // the reference vectorizes email/phone columns too
+            // (`Latanova_v1.py:640-643`) — their embedding-space profile
+            // backs the same validation metrics as text columns and
+            // already carries the raw sample (None = no non-null rows)
+            if (cfg.textColumns) {
+              val text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
+              base.copy(rawSample = text.fold(Seq.empty[String])(_.rawSample), text = text)
+            } else base.copy(rawSample = Profiler.rawSample(df, name, cfg.rawSampleCap))
+          case Text if cfg.textColumns =>
+            base.copy(text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap))
+          case _ => base
+        }
         name -> full
       }
     } finally df.unpersist()
@@ -164,25 +163,25 @@ object SyntheticPipeline {
                cfg: Config = Config()): Map[String, Map[String, Double]] = {
     import SemanticType._
     val detected = profiles.map { case (n, p) => n -> (p.semanticType, p.signals) }
-    val model = EmbeddingModel(cfg.embedDim, cfg.seed)
-    // text/email/phone validate in embedding space: vectorize the
-    // synthetic column, diff the mean-of-per-dim moment roll-ups
-    // (`validate_synthetic_data`, `Latanova_v1.py:430-454`)
-    val textSide: Seq[() => (String, Option[TextStats])] = profiles.toSeq.collect {
-      case (name, p) if Set[SemanticType](Text, Email, Phone)(p.semanticType) && p.text.isDefined =>
-        () => name -> TextProfiler.profile(synthetic, name, model, cfg.maxTokens,
-          rawSampleCap = 1)
-    }
+    // the scalar profile's two actions and the categorical count read
+    // `synthetic` concurrently: build any cache it holds once first
     GraftActions.built(synthetic)
-    val (synthProfiles, synthCategoricals, synthTexts) = GraftActions.together(
+    val (synthProfiles, synthCategoricals) = GraftActions.together(
       Profiler.profileScalars(synthetic, detected),
       Profiler.profileCategoricals(synthetic,
-        profiles.collect { case (n, p) if p.semanticType == Categorical => n }.toSeq),
-      GraftActions.all(textSide).toMap)
+        profiles.collect { case (n, p) if p.semanticType == Categorical => n }.toSeq))
+    lazy val model = EmbeddingModel(cfg.embedDim, cfg.seed)
     profiles.flatMap { case (name, p) =>
       val metrics: Option[Map[String, Double]] = p.semanticType match {
+        // text/email/phone validate in embedding space: vectorize the
+        // synthetic column, diff the mean-of-per-dim moment roll-ups
+        // (`validate_synthetic_data`, `Latanova_v1.py:430-454`)
         case Text | Email | Phone if p.text.isDefined =>
-          for (o <- p.text; s <- synthTexts(name)) yield Map(
+          for {
+            o <- p.text
+            s <- TextProfiler.profile(synthetic, name, model, cfg.maxTokens,
+              rawSampleCap = 1)
+          } yield Map(
             "mean_error" -> math.abs(o.overallMean - s.overallMean),
             "std_error" -> math.abs(o.overallStd - s.overallStd),
             "skew_error" -> math.abs(o.overallSkew - s.overallSkew),
