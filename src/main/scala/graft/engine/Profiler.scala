@@ -474,10 +474,14 @@ object Profiler {
   }
 
   /** Bounded sample of raw string entries for bootstrap generation
-    * (`raw_entries`, `Latanova_v1.py:225,306-309`). At 100 TB the raw
-    * column cannot live on the driver — cap and document. */
+    * (`raw_entries`, `Latanova_v1.py:225,306-309`): the first `cap`
+    * non-null values as strings, one LIMIT collect — the engine's only
+    * one (the text profile takes its sample here too). At 100 TB the
+    * raw column cannot live on the driver — cap and document. A cap
+    * ≤ 0 asks for nothing and starts no Spark job. */
   def rawSample(df: DataFrame, column: String, cap: Int = 10000): Seq[String] =
-    df.filter(col(column).isNotNull)
+    if (cap <= 0) Seq.empty
+    else df.filter(col(column).isNotNull)
       .select(col(column).cast(StringType))
       .limit(cap)
       .collect()

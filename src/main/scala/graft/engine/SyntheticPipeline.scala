@@ -18,10 +18,11 @@ import graft.text.{EmbeddingModel, TextProfiler, TextSynth, Vocab}
   *   generate: every column is a projection over one `spark.range(n)` —
   *             no shuffle, codegen'd, embarrassingly parallel
   *             (SURVEY.md §4.3).
-  *   validate: the reference's moment-diff metrics
+  *   validate: the generated frame profiled with the source's types
+  *             by the same routine as the source (no raw samples),
+  *             then the reference's moment-diff metrics
   *             (`validate_synthetic_data`, `Latanova_v1.py:425-494`)
-  *             recomputed on the generated frame: the scalar profile
-  *             ∥ the categorical count, then each text column.
+  *             as a pure diff of each column's two profiles.
   *
   * "∥" means concurrent Spark actions
   * ([[org.apache.spark.sql.GraftActions]]): the same plans and jobs as
@@ -63,35 +64,43 @@ object SyntheticPipeline {
       // detection and the profiles below read the cache from concurrent
       // actions: build it once here so none of them plans its build
       GraftActions.built(df)
-      val detected = Detector.detect(df, cfg.detector)
-      val (scalars, categoricals) = GraftActions.together(
-        Profiler.profileScalars(df, detected),
-        Profiler.profileCategoricals(df,
-          detected.collect { case (n, (SemanticType.Categorical, _)) => n }.toSeq))
-      val model = EmbeddingModel(cfg.embedDim, cfg.seed)
-      detected.map { case (name, (st, sig)) =>
-        import SemanticType._
-        val base = scalars.getOrElse(name,
-          ColumnProfile(name, st, sig))
-        val full = st match {
-          case Categorical =>
-            base.copy(categorical = categoricals.get(name))
-          case Email | Phone =>
-            // the reference vectorizes email/phone columns too
-            // (`Latanova_v1.py:640-643`) — their embedding-space profile
-            // backs the same validation metrics as text columns and
-            // already carries the raw sample (None = no non-null rows)
-            if (cfg.textColumns) {
-              val text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
-              base.copy(rawSample = text.fold(Seq.empty[String])(_.rawSample), text = text)
-            } else base.copy(rawSample = Profiler.rawSample(df, name, cfg.rawSampleCap))
-          case Text if cfg.textColumns =>
-            base.copy(text = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap))
-          case _ => base
-        }
-        name -> full
-      }
+      profileTyped(df, Detector.detect(df, cfg.detector), cfg)
     } finally df.unpersist()
+  }
+
+  /** The profiles of `df`'s columns, their semantic types known — the
+    * one place a semantic type picks its profile, for the source table
+    * and the synthetic frame alike: the scalar profile ∥ ONE grouped
+    * count of all categoricals, then the embedding-space profile of
+    * each text/email/phone column, one after another. Email/phone
+    * columns keep up to `cfg.rawSampleCap` raw entries for bootstrap
+    * generation (`Latanova_v1.py:640-643`). */
+  private def profileTyped(df: DataFrame,
+                           detected: Map[String, (SemanticType, ColumnSignals)],
+                           cfg: Config): Map[String, ColumnProfile] = {
+    import SemanticType._
+    // the scalar profile's two actions and the categorical count read
+    // `df` concurrently: build any cache it holds once first
+    GraftActions.built(df)
+    val (scalars, categoricals) = GraftActions.together(
+      Profiler.profileScalars(df, detected),
+      Profiler.profileCategoricals(df,
+        detected.collect { case (n, (Categorical, _)) => n }.toSeq))
+    lazy val model = EmbeddingModel(cfg.embedDim, cfg.seed)
+    detected.map { case (name, (st, sig)) =>
+      val base = scalars.getOrElse(name, ColumnProfile(name, st, sig))
+      name -> (st match {
+        case Categorical => base.copy(categorical = categoricals.get(name))
+        // an email/phone column's raw sample is its text profile's
+        // (None = no non-null rows)
+        case Text | Email | Phone if cfg.textColumns =>
+          val t = TextProfiler.profile(df, name, model, cfg.maxTokens, cfg.rawSampleCap)
+          base.copy(text = t,
+            rawSample = if (st == Text) Nil else t.fold(Seq.empty[String])(_.rawSample))
+        case Email | Phone => base.copy(rawSample = Profiler.rawSample(df, name, cfg.rawSampleCap))
+        case _ => base
+      })
+    }
   }
 
   /** Synthesis phase: one range frame, every column a projection.
@@ -155,63 +164,64 @@ object SyntheticPipeline {
   }
 
   /** Validation phase: absolute moment errors of the synthetic frame vs
-    * the source profiles — the reference's metrics, enforceable.
-    * `cfg` must carry the same embedding parameters as the profiling
-    * run (the text metrics re-vectorize the synthetic column). */
+    * the source profiles — the reference's metrics, enforceable. The
+    * synthetic frame is profiled with the source's types by the same
+    * routine as the source, then each column's two profiles are
+    * diffed ([[metrics]]). `cfg` must carry the same embedding
+    * parameters as the profiling run (the text metrics re-vectorize
+    * the synthetic column). */
   def validate(synthetic: DataFrame,
                profiles: Map[String, ColumnProfile],
                cfg: Config = Config()): Map[String, Map[String, Double]] = {
+    // only columns whose source profile holds the piece their metrics
+    // read — exactly those whose self-diff is defined — are profiled
+    val compared = profiles.filter { case (_, p) => metrics(p, p).isDefined }
+    val synthProfiles = profileTyped(synthetic,
+      compared.map { case (n, p) => n -> (p.semanticType, p.signals) },
+      cfg.copy(textColumns = true, rawSampleCap = 0))
+    compared.flatMap { case (name, p) => metrics(p, synthProfiles(name)).map(name -> _) }
+  }
+
+  /** The reference's validation metrics for one column
+    * (`validate_synthetic_data`, `Latanova_v1.py:425-494`): absolute
+    * differences of the two profiles' moments, by semantic type. None
+    * when either side lacks the stats piece its type's metrics read. */
+  def metrics(original: ColumnProfile, synthetic: ColumnProfile): Option[Map[String, Double]] = {
     import SemanticType._
-    val detected = profiles.map { case (n, p) => n -> (p.semanticType, p.signals) }
-    // the scalar profile's two actions and the categorical count read
-    // `synthetic` concurrently: build any cache it holds once first
-    GraftActions.built(synthetic)
-    val (synthProfiles, synthCategoricals) = GraftActions.together(
-      Profiler.profileScalars(synthetic, detected),
-      Profiler.profileCategoricals(synthetic,
-        profiles.collect { case (n, p) if p.semanticType == Categorical => n }.toSeq))
-    lazy val model = EmbeddingModel(cfg.embedDim, cfg.seed)
-    profiles.flatMap { case (name, p) =>
-      val metrics: Option[Map[String, Double]] = p.semanticType match {
-        // text/email/phone validate in embedding space: vectorize the
-        // synthetic column, diff the mean-of-per-dim moment roll-ups
-        // (`validate_synthetic_data`, `Latanova_v1.py:430-454`)
-        case Text | Email | Phone if p.text.isDefined =>
-          for {
-            o <- p.text
-            s <- TextProfiler.profile(synthetic, name, model, cfg.maxTokens,
-              rawSampleCap = 1)
-          } yield Map(
-            "mean_error" -> math.abs(o.overallMean - s.overallMean),
-            "std_error" -> math.abs(o.overallStd - s.overallStd),
-            "skew_error" -> math.abs(o.overallSkew - s.overallSkew),
-            "kurt_error" -> math.abs(o.overallKurt - s.overallKurt))
-        case Integer | Float =>
-          for (o <- p.numeric; s <- synthProfiles.get(name).flatMap(_.numeric)) yield Map(
-            "mean_error" -> math.abs(o.mean - s.mean),
-            "std_error" -> math.abs(o.std - s.std),
-            "median_error" -> math.abs(o.median - s.median),
-            "skew_error" -> math.abs(o.skewness - s.skewness),
-            "kurt_error" -> math.abs(o.kurtosis - s.kurtosis))
-        case Boolean =>
-          for (o <- p.boolean; s <- synthProfiles.get(name).flatMap(_.boolean)) yield Map(
-            "true_prob_error" -> math.abs(o.trueProb - s.trueProb))
-        case Categorical =>
-          for (o <- p.categorical; s <- synthCategoricals.get(name)) yield {
-            val sm = s.categories.zip(s.probabilities).toMap
-            val err = o.categories.zip(o.probabilities).map { case (c, op) =>
-              math.abs(op - sm.getOrElse(c, 0.0))
-            }.sum / math.max(1, o.categories.size)
-            Map("avg_prob_error" -> err,
-              "top_category_match" -> (if (s.mostCommon == o.mostCommon) 1.0 else 0.0))
-          }
-        case Datetime =>
-          for (o <- p.datetime; s <- synthProfiles.get(name).flatMap(_.datetime)) yield Map(
-            "mean_epoch_error" -> math.abs(o.epoch.mean - s.epoch.mean),
-            "std_epoch_error" -> math.abs(o.epoch.std - s.epoch.std))
-        case _ => None
-      }
-      metrics.map(name -> _)
+    val (o, s) = (original, synthetic)
+    o.semanticType match {
+      // text/email/phone validate in embedding space: the
+      // mean-of-per-dim moment roll-ups (`Latanova_v1.py:430-454`)
+      case Text | Email | Phone =>
+        for (ot <- o.text; st <- s.text) yield Map(
+          "mean_error" -> math.abs(ot.overallMean - st.overallMean),
+          "std_error" -> math.abs(ot.overallStd - st.overallStd),
+          "skew_error" -> math.abs(ot.overallSkew - st.overallSkew),
+          "kurt_error" -> math.abs(ot.overallKurt - st.overallKurt))
+      case Integer | Float =>
+        for (on <- o.numeric; sn <- s.numeric) yield Map(
+          "mean_error" -> math.abs(on.mean - sn.mean),
+          "std_error" -> math.abs(on.std - sn.std),
+          "median_error" -> math.abs(on.median - sn.median),
+          "skew_error" -> math.abs(on.skewness - sn.skewness),
+          "kurt_error" -> math.abs(on.kurtosis - sn.kurtosis))
+      case Boolean =>
+        for (ob <- o.boolean; sb <- s.boolean) yield Map(
+          "true_prob_error" -> math.abs(ob.trueProb - sb.trueProb))
+      case Categorical =>
+        for (oc <- o.categorical; sc <- s.categorical) yield {
+          val sm = sc.categories.zip(sc.probabilities).toMap
+          val err = oc.categories.zip(oc.probabilities).map { case (c, op) =>
+            math.abs(op - sm.getOrElse(c, 0.0))
+          }.sum / math.max(1, oc.categories.size)
+          Map("avg_prob_error" -> err,
+            "top_category_match" -> (if (sc.mostCommon == oc.mostCommon) 1.0 else 0.0))
+        }
+      case Datetime =>
+        for (od <- o.datetime; sd <- s.datetime) yield Map(
+          "mean_epoch_error" -> math.abs(od.epoch.mean - sd.epoch.mean),
+          "std_epoch_error" -> math.abs(od.epoch.std - sd.epoch.std))
+      case Unknown => None
     }
   }
 

@@ -34,8 +34,9 @@ object Curation {
     * (longer = harder) and its inverted quality percentile (noisier =
     * harder), then cut the [0,1) difficulty into `phases` equal
     * slices — phase 0 trains first. Percentiles come from
-    * [[graft.ops.Drift.percentRank]]'s windowless distributed kernel
-    * (distinct-value-bounded rank tables, no single-task window), so
+    * [[graft.ops.Drift.percentRankBy]]'s windowless distributed kernel
+    * (one distinct-value-bounded rank table for both columns, no
+    * single-task window), so
     * the assignment is deterministic, engine-portable, and survives
     * any corpus size. Output per doc: (id, n_tokens, quality, pr_len,
     * pr_quality, difficulty, phase). */
@@ -43,17 +44,28 @@ object Curation {
                        phases: Int = 3): DataFrame = {
     require(phases >= 2, s"phases must be >= 2, got $phases")
     // pinned once: the token-count/quality expression chain would
-    // otherwise re-evaluate through BOTH rank joins (the second rank
-    // pass re-reads the first's join output, which inlines the text
-    // scans again) — measured 4.8 s -> ~2 s at sf0.1
+    // otherwise re-evaluate in the rank scan and in BOTH rank joins,
+    // each inlining the text scans again — measured 4.8 s -> ~2 s at
+    // sf0.1
     val base = df.select(col(idCol).as("id"),
         TextAnalysis.tokenStatsEn(col(textCol)).as("__st"))
       .select(col("id"),
         col("__st").getField("n_tokens").cast("long").as("n_tokens"),
         round(TextAnalysis.qualityFromStats(col("__st")), 6).as("quality"))
       .localCheckpoint()
-    val ranked = Drift.percentRank(
-      Drift.percentRank(base, "n_tokens", "__prl"), "quality", "__prq")
+    // both columns rank in ONE keyed range scan over (column, value)
+    // pairs — rank within a column is the windowless percent_rank of
+    // that column; token counts rank as doubles, exact below 2^53 — and
+    // each takes its rank back from its own slice of the one table
+    val ranks = Drift.rankTableBy(base.select(explode(array(
+        struct(lit("__prl").as("c"), col("n_tokens").cast("double").as("v")),
+        struct(lit("__prq").as("c"), col("quality").as("v")))).as("p")).select("p.*"),
+      "c", "v", "__pr")
+    val ranked = Seq("__prl" -> "n_tokens", "__prq" -> "quality").foldLeft(base) {
+      case (in, (out, v)) =>
+        in.join(ranks.filter(col("__g") === out).select(col("__v"), col("__pr").as(out)),
+          col(v).cast("double") === col("__v"), "left").drop("__v")
+    }
     // The blend uses the UNROUNDED ranks: each is an exact rational
     // k/(n−1), so 0.5·a + 0.5·(1−b) = (k−j+n−1)/(2(n−1)) can never
     // sit exactly on a 6-decimal rounding midpoint (the denominator

@@ -152,6 +152,17 @@ object Drift {
                     outCol: String = "pct_rank"): DataFrame = {
     require(!df.columns.contains(outCol),
       s"input already has a column named '$outCol'")
+    df.join(rankTableBy(df, groupCol, valueCol, outCol),
+        df(groupCol) === col("__g") && df(valueCol) === col("__v"), "left")
+      .drop("__g", "__v")
+  }
+
+  /** [[percentRankBy]]'s rank table: one row (__g, __v, `outCol`) per
+    * distinct non-null (group, value), marked for broadcast when small.
+    * A caller that ranks several columns of one frame ranks them as
+    * groups of one (column, value) frame and looks each up here. */
+  private[graft] def rankTableBy(df: DataFrame, groupCol: String, valueCol: String,
+                                 outCol: String): DataFrame = {
     val counts = df
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(valueCol).as("__v"))
@@ -168,9 +179,7 @@ object Drift {
           (col("__cum") - col("__cnt")).cast("double") /
             (col("__gt") - 1L).cast("double"))
           .otherwise(lit(0.0)).as(outCol))
-    df.join(maybeBroadcastRank(ranked, cum.total.rows),
-        df(groupCol) === col("__g") && df(valueCol) === col("__v"), "left")
-      .drop("__g", "__v")
+    maybeBroadcastRank(ranked, cum.total.rows)
   }
 
   /** Pearson chi-square test of independence between two categorical

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.TextStats
+import graft.engine.{Profiler, TextStats}
 
 /** Text-column profiling in embedding space
   * (`calculate_text_statistics`, `Latanova_v1.py:194-226`).
@@ -225,6 +225,7 @@ object TextProfiler {
     // time; corpora repeat tokens constantly, so a capped per-partition
     // cache removes almost all of it), and fold rows into ONE local
     // accumulator so only P accumulators ever serialize.
+    // Below d = 1024 the rows accumulate in the partitions they arrive in.
     // Wide accumulators trade compute parallelism against the bytes the
     // tree reduction must serialize (P × d²/2 doubles): at d=3200 each
     // accumulating partition ships a 41 MB triangle, so partition count
@@ -238,26 +239,21 @@ object TextProfiler {
     // 16 parts, sf1 ratio ×4.9) — √n picks both regimes correctly and
     // keeps ship volume growing sublinearly on a real cluster. The
     // count is one narrow scan, trivial next to the d² row work.
-    val accParts = {
-      val cores = spark.sparkContext.defaultParallelism
-      if (d < 1024) math.max(2, cores / 2)
-      else {
-        // LIMIT-bounded sizing probe (the auto-gate discipline): scans
-        // at most 131072 rows at ANY corpus size; past the cap
-        // √(131072/20) ≈ 81 ≥ any local core count, so huge corpora
-        // size straight to all cores without a full count
-        val nRows = entries.limit(131072).count()
-        math.min(cores.toLong,
-          math.max(2L, math.round(math.sqrt(nRows / 20.0)))).toInt
-      }
+    val rdd = if (d < 1024) entries.rdd else {
+      // LIMIT-bounded sizing probe (the auto-gate discipline): scans
+      // at most 131072 rows at ANY corpus size; past the cap
+      // √(131072/20) ≈ 81 ≥ any local core count, so huge corpora
+      // size straight to all cores without a full count
+      val nRows = entries.limit(131072).count()
+      val accParts = math.min(spark.sparkContext.defaultParallelism.toLong,
+        math.max(2L, math.round(math.sqrt(nRows / 20.0)))).toInt
+      val rdd0 = entries.rdd
+      // repartition, not coalesce: a single-file table arrives as ONE
+      // partition and coalesce cannot raise parallelism — the whole
+      // accumulate would run on one core (measured: 17 s of a 21 s wide
+      // profile). The row shuffle is trivial next to the d² work.
+      if (rdd0.getNumPartitions != accParts) rdd0.repartition(accParts) else rdd0
     }
-    val rdd0 = entries.rdd
-    // repartition, not coalesce: a single-file table arrives as ONE
-    // partition and coalesce cannot raise parallelism — the whole
-    // accumulate would run on one core (measured: 17 s of a 21 s wide
-    // profile). The row shuffle is trivial next to the d² work.
-    val rdd = if (d >= 1024 && rdd0.getNumPartitions != accParts)
-      rdd0.repartition(accParts) else rdd0
     val acc = rdd
       .mapPartitions { it =>
         val m = bcModel.value
@@ -329,7 +325,6 @@ object TextProfiler {
     val logDet = chol.map(l => 2.0 * (0 until d).map(j => math.log(l(j)(j))).sum)
       .getOrElse(Double.NaN)
 
-    val raw = entries.limit(rawSampleCap).collect().map(_.getString(0)).toSeq
     Some(TextStats(
       dim = d,
       mean = mean, std = std,
@@ -341,7 +336,7 @@ object TextProfiler {
       covLogDet = logDet,
       chol = chol,
       count = acc.n,
-      rawSample = raw))
+      rawSample = Profiler.rawSample(df, textCol, rawSampleCap)))
   }
 }
 

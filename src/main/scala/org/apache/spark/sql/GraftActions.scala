@@ -45,12 +45,6 @@ object GraftActions {
     (x.asInstanceOf[A], y.asInstanceOf[B])
   }
 
-  /** [[all]] over three branches of different result types. */
-  def together[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val Seq(x, y, z) = all(Seq(() => a, () => b, () => c))
-    (x.asInstanceOf[A], y.asInstanceOf[B], z.asInstanceOf[C])
-  }
-
   private def attempt[T](body: => T): Either[Throwable, T] =
     try Right(body) catch { case t: Throwable => Left(t) }
 

@@ -111,6 +111,80 @@ class SyntheticPipelineSpec extends SparkSpec {
       assert(p.rawSample === Profiler.rawSample(contacts.na.drop("any"), c, cfg.rawSampleCap))
     }
     assert(jobs <= ContactsJobBudget, s"profileTable ran $jobs Spark jobs")
+    // a cap ≤ 0 asks for no sample: no LIMIT collect runs
+    assert(withJobCount(Profiler.rawSample(contacts, "c_email", 0)) === ((Seq.empty, 0)))
+  }
+
+  /** A table with every column type of the reference's fixture, built
+    * in the spec so the text-on path (`run`, validate's embedding-space
+    * arm, the vocab decode) runs on any host: an id, an email, a phone,
+    * multi-word text distinct per row, a yes/no string, a 3-value
+    * categorical and an ISO-date string. */
+  private lazy val mixed = {
+    import org.apache.spark.sql.functions._
+    val words = typedLit(Seq("quick", "late", "broken", "great", "slow", "fine", "odd"))
+    spark.range(300).select(
+      col("id").as("m_id"),
+      concat(lit("user"), col("id"), lit("@example.com")).as("m_email"),
+      format_string("+1 (555) %03d-%04d", col("id") % 1000, col("id") * 37 % 10000)
+        .as("m_phone"),
+      concat_ws(" ", element_at(words, (col("id") % 7 + 1).cast("int")), lit("delivery"),
+        element_at(words, (col("id") * 3 % 7 + 1).cast("int")), lit("order"),
+        col("id").cast("string")).as("m_note"),
+      when(col("id") % 3 === 0, "Yes").otherwise("No").as("m_vip"),
+      element_at(typedLit(Seq("basic", "plus", "pro")), (col("id") % 3 + 1).cast("int"))
+        .as("m_plan"),
+      date_format(date_add(lit("2021-01-01").cast("date"), (col("id") * 7 % 365).cast("int")),
+        "yyyy-MM-dd").as("m_joined"))
+  }
+  private val mixedCfg = SyntheticPipeline.Config(
+    detector = DetectorConfig(strictFormats = true), nSamples = 200, seed = 7,
+    maxTokens = 4, embedDim = 8)
+  private lazy val mixedResult = SyntheticPipeline.run(mixed, mixedCfg)
+
+  test("run with text columns on: an in-spec table of every type") {
+    import SemanticType._
+    import org.apache.spark.sql.types.{LongType, StringType}
+    assert(mixedResult.profiles.map { case (n, p) => n -> p.semanticType } === Map(
+      "m_id" -> Integer, "m_email" -> Email, "m_phone" -> Phone, "m_note" -> Text,
+      "m_vip" -> Boolean, "m_plan" -> Categorical, "m_joined" -> Datetime))
+    val schema = mixedResult.synthetic.schema
+    assert(schema.fieldNames.toSeq === mixed.columns.sorted.toSeq)
+    for (f <- schema.fields)
+      assert(f.dataType === (if (f.name == "m_id") LongType else StringType), f.name)
+    assert(mixedResult.synthetic.count() === mixedCfg.nSamples)
+    assert(mixedResult.validation.keySet === mixedResult.profiles.keySet)
+    for (c <- Seq("m_note", "m_email", "m_phone")) {
+      val v = mixedResult.validation(c)
+      for (k <- Seq("mean_error", "std_error", "skew_error", "kurt_error"))
+        assert(v.contains(k) && !v(k).isNaN, s"$c missing/NaN $k")
+    }
+  }
+
+  /** Spark jobs validate starts on the generated mixed frame, as
+    * measured: the scalar profile's two actions and the categorical
+    * count, then one tree-aggregate per text/email/phone column. The
+    * synthetic profiles ask for no raw sample: 14 when each of those
+    * three columns also ran a LIMIT collect. */
+  private val MixedValidateJobBudget = 11
+
+  test("validate on the generated mixed frame stays within its Spark job budget") {
+    val synth = SyntheticPipeline.generate(spark, mixedResult.profiles, mixedCfg,
+      vocabSource = Some(mixed)).cache()
+    try {
+      assert(synth.count() === mixedCfg.nSamples)
+      val (validation, jobs) = withJobCount(
+        SyntheticPipeline.validate(synth, mixedResult.profiles, mixedCfg))
+      assert(validation.keySet === mixedResult.profiles.keySet)
+      assert(jobs <= MixedValidateJobBudget, s"validate ran $jobs Spark jobs")
+      val (again, jobs2) = withJobCount(
+        SyntheticPipeline.validate(synth, mixedResult.profiles, mixedCfg))
+      // a text profile merges its partitions' sums in task completion
+      // order: the text metrics repeat up to rounding
+      for ((c, m) <- validation; (k, v) <- m)
+        assert(math.abs(again(c)(k) - v) <= 1e-9 * math.max(1.0, math.abs(v)), s"$c $k")
+      assert(jobs2 === jobs, s"validate ran $jobs, then $jobs2 Spark jobs")
+    } finally synth.unpersist()
   }
 
   /** The benchmark's orders table in small: two integer keys, two

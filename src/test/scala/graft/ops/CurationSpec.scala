@@ -75,6 +75,45 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  /** Docs of many lengths whose quality gates vary (short, heavy
+    * punctuation, no stopwords), so both ranked columns have ties and
+    * several distinct values. */
+  private lazy val rankedDocs = (1L to 200L).map { i =>
+    val text =
+      if (i % 7 == 0) "xqzwvk " * (i % 20 + 12).toInt
+      else if (i % 3 == 0) "fox jumps " * (i % 4 + 1).toInt
+      else (enText + " ") * (i % 9 + 1).toInt + (if (i % 5 == 0) " !!?? ;;,," * 40 else "")
+    (i, text.trim)
+  }.toDF("id", "text")
+
+  test("curriculumPhases ranks match the window percent_rank bit for bit") {
+    import org.apache.spark.sql.expressions.Window
+    val out = Curation.curriculumPhases(rankedDocs, "id", "text")
+    val byWindow = out
+      .withColumn("w_len", percent_rank().over(Window.orderBy("n_tokens")))
+      .withColumn("w_q", percent_rank().over(Window.orderBy("quality")))
+      .select(col("id"), round(col("w_len"), 6), round(col("w_q"), 6),
+        round(lit(0.5) * col("w_len") + lit(0.5) * (lit(1.0) - col("w_q")), 6))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    val got = out.select("id", "pr_len", "pr_quality", "difficulty")
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    assert(got.size === 200)
+    assert(got.values.map(_._1).toSet.size > 5 && got.values.map(_._2).toSet.size > 2)
+    assert(got === byWindow)
+  }
+
+  /** Spark jobs of one curriculumPhases collect, as measured: both
+    * columns rank in one range scan over (column, value) pairs (13 with
+    * one range scan and one join back per ranked column). */
+  private val CurriculumJobBudget = 10
+
+  test("curriculumPhases stays within its Spark job budget") {
+    val (rows, jobs) = withJobCount(
+      Curation.curriculumPhases(rankedDocs, "id", "text").collect())
+    assert(rows.length === 200)
+    assert(jobs <= CurriculumJobBudget, s"curriculumPhases ran $jobs Spark jobs")
+  }
+
   test("domainCap: registrable-domain grouping, score ranking, cap") {
     val docs = Seq(
       // foo.co.uk family: 3 docs across subdomains, cap 2 keeps the
